@@ -164,13 +164,14 @@ class GraphitiSpark:
         """
         have = pages.columns
         if self.tables is None:
-            self.tables = build_graph(self.spark, sf_dir="", pages=pages)
+            self.tables = GraphTables(pages)
             return self.tables
         old = self.tables
         new_urls = pages.select("url").distinct()
         retained_pages = old.pages.select(*have).join(new_urls, "url", "left_anti")
         combined = retained_pages.unionByName(pages.select(*have))
-        t = build_graph(self.spark, sf_dir="", pages=combined)
+        # the rebuild keeps the configuration the graph was built with
+        t = GraphTables(combined, ontology=old.ontology)
 
         # stage reuse: episodes + extraction of retained urls come from
         # the prior build's committed tables; only new pages are cleaned,
@@ -186,10 +187,12 @@ class GraphitiSpark:
             F.col("uuid").alias("episode_uuid")
         )
         retained_ex = old.extracted.join(drop_eps, "episode_uuid", "left_anti")
-        t.extracted = t._commit(
-            retained_ex.unionByName(extract_all(new_eps)), "extracted"
-        )
+        t.extracted = t._commit(retained_ex.unionByName(extract_all(new_eps)))
         self.tables = t
+        # communities (and their embedding index) describe the pre-ingest
+        # graph: drop them so community search rebuilds over the new one
+        self._comm = None
+        self._drop_comm_emb()
         # the rebuild derived nodes/edges from pages alone; replay the
         # non-page mutation log in chronological order so earlier
         # add_triplet / remove_episodes survive the rebuild (convergence

@@ -11,9 +11,10 @@ imports this table to *render* contradicting sentence pairs; the engine
 never imports generative corpus knowledge (the dependency points corpus ->
 engine, not the reverse).
 
-Users extend the ontology by registering predicates here: edges in the
-same class on the same canonical (src, dst) pair with opposite polarity
-contradict each other; the later-valid edge invalidates the earlier one.
+This table is the default `Ontology.contra` (ontology.py); callers change
+it by passing a custom Ontology. Edges in the same class on the same
+canonical (src, dst) pair with opposite polarity contradict each other;
+the later-valid edge invalidates the earlier one.
 """
 
 from __future__ import annotations

@@ -25,8 +25,6 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..contradictions import CONTRA_CLASS
-
 # deterministic "now" for expired_at stamps: derived from data, not wall
 # clock, so reruns are idempotent (reference uses utc_now() at
 # edge_operations.py:259; our batch equivalent must be reproducible).
@@ -119,6 +117,15 @@ def materialize_edges(
     )
 
 
+def _contra_map(spark, ontology) -> DataFrame:
+    """Broadcast (name, contra_class, polarity) table of the ontology's
+    contradiction classes."""
+    rows = [(p, c, pol) for p, (c, pol) in ontology.contra.items()]
+    return F.broadcast(
+        spark.createDataFrame(rows, "name string, contra_class string, polarity int")
+    )
+
+
 def edge_dup_candidates(
     edges: DataFrame,
     emb: DataFrame,
@@ -145,11 +152,7 @@ def edge_dup_candidates(
 
     ontology = ontology or DEFAULT
     cls = ontology.synonym_class_sql("name")
-    rows = [(p, c, pol) for p, (c, pol) in ontology.contra.items()]
-    spark = edges.sparkSession
-    cmap = F.broadcast(
-        spark.createDataFrame(rows, ["name", "contra_class", "polarity"])
-    )
+    cmap = _contra_map(edges.sparkSession, ontology)
     e = (
         edges.join(emb, "uuid")
         .join(cmap, "name", "left")
@@ -190,19 +193,21 @@ def edge_dup_candidates(
     )
 
 
-def invalidate_edges(edges: DataFrame, job_ts: datetime = JOB_TS) -> DataFrame:
+def invalidate_edges(
+    edges: DataFrame, ontology=None, job_ts: datetime = JOB_TS
+) -> DataFrame:
     """Batch bi-temporal invalidation over canonical edges.
 
-    For each edge in a contradiction class, invalid_at := the earliest
-    valid_at among opposite-polarity edges on the same canonical
-    (group, src, dst) pair that became valid strictly later; expired_at is
-    stamped when invalid_at is set. Edges outside any class pass through.
+    For each edge in a contradiction class of the ontology (`contra`),
+    invalid_at := the earliest valid_at among opposite-polarity edges on
+    the same canonical (group, src, dst) pair that became valid strictly
+    later; expired_at is stamped when invalid_at is set. Edges outside any
+    class pass through.
     """
-    rows = [(p, c, pol) for p, (c, pol) in CONTRA_CLASS.items()]
-    spark = edges.sparkSession
-    cmap = F.broadcast(
-        spark.createDataFrame(rows, ["name", "contra_class", "polarity"])
-    )
+    from ..ontology import DEFAULT
+
+    ontology = ontology or DEFAULT
+    cmap = _contra_map(edges.sparkSession, ontology)
     e = edges.join(cmap, "name", "left")
 
     classed = e.where(F.col("contra_class").isNotNull())

@@ -171,11 +171,35 @@ _SHINGLE_ARR = (
 _H32 = "cast(conv(substr(md5({x}), 1, 8), 16, 10) as bigint) % 2147483647"
 
 
+# one definition of the fuzzy-match configuration, shared by the one-shot
+# build (resolve_entities) and the incremental merge (plans/incremental.py):
+# incremental == one-shot holds only if both verify at the same Jaccard
+# threshold and drop the same over-populated buckets
+LSH_THRESHOLD = 0.6
+LSH_BUCKET_CAP = 1000
+BUCKET_KEY = ["group_id", "band", "bkey"]
+
+
+def bucket_sizes(bands: DataFrame) -> DataFrame:
+    """(group_id, band, bkey, n) population of each LSH bucket."""
+    return bands.groupBy(*BUCKET_KEY).agg(F.count(F.lit(1)).alias("n"))
+
+
+def capped_bands(
+    bands: DataFrame, bucket_n: DataFrame, max_bucket: int = LSH_BUCKET_CAP
+) -> DataFrame:
+    """Band rows whose bucket holds at most `max_bucket` members (a bucket
+    with k members contributes k(k-1)/2 join rows — pathological buckets
+    are template/boilerplate name families, not alias clusters; same cap
+    discipline as operators/dedup.minhash_candidates)."""
+    ok = bucket_n.where(F.col("n") <= max_bucket).select(*BUCKET_KEY)
+    return bands.join(ok, BUCKET_KEY)
+
+
 def match_edges_lsh(
     entities: DataFrame,
-    threshold: float = 0.6,
-    max_bucket: int = 1000,
-    probe: DataFrame | None = None,
+    threshold: float = LSH_THRESHOLD,
+    max_bucket: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
     """Fuzzy match edges, ALL-JVM: MinHash-LSH banding over char-3-gram
     shingles of the normalized name (higher-order-function min-hash per
@@ -186,35 +210,11 @@ def match_edges_lsh(
     At crawl scale the input is the DISTINCT name table — orders of
     magnitude smaller than the mention stream — and the band/bucket key
     is the shuffle key. Two skew guards: buckets larger than
-    `max_bucket` are dropped BEFORE the self-join (a bucket with k
-    members contributes k(k-1)/2 join rows — pathological buckets are
-    template/boilerplate name families, not alias clusters; same cap
-    discipline as operators/dedup.minhash_candidates), and AQE skew-join
-    splits the surviving hot buckets ('john smith').
-
-    `probe`: optional (uuid) frame — restrict candidates to pairs with at
-    least one member in the probe set by joining the PROBE side's bands
-    against the full band table, instead of the full self-join. This is
-    the incremental-merge path (plans/incremental.py): the full band
-    table is standing state, the probe side is O(new batch)."""
+    `max_bucket` are dropped BEFORE the self-join (capped_bands), and
+    AQE skew-join splits the surviving hot buckets ('john smith')."""
     bands = lsh_band_rows(entities)
-    ok = (
-        bands.groupBy("group_id", "band", "bkey")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") <= max_bucket)
-        .select("group_id", "band", "bkey")
-    )
-    bands = bands.join(ok, ["group_id", "band", "bkey"])
-    left = bands
-    if probe is not None:
-        left = bands.join(
-            probe.select(F.col(probe.columns[0]).alias("uuid")),
-            "uuid",
-            "left_semi",
-        )
-    return lsh_verify_pairs(
-        left, bands, threshold=threshold, symmetric=probe is None
-    )
+    bands = capped_bands(bands, bucket_sizes(bands), max_bucket)
+    return lsh_verify_pairs(bands, bands, threshold=threshold)
 
 
 def lsh_band_rows(entities: DataFrame) -> DataFrame:
@@ -250,7 +250,7 @@ def lsh_band_rows(entities: DataFrame) -> DataFrame:
 def lsh_verify_pairs(
     left: DataFrame,
     right: DataFrame,
-    threshold: float = 0.6,
+    threshold: float = LSH_THRESHOLD,
     symmetric: bool = True,
 ) -> DataFrame:
     """Band-bucket join + exact-Jaccard verify over two band-row frames
@@ -392,9 +392,15 @@ def connected_components(
     return labels
 
 
-def resolve_entities(
-    mentions: DataFrame, use_lsh: bool = True, lsh_threshold: float = 0.6
-) -> tuple[DataFrame, DataFrame]:
+def canonical_name():
+    """Aggregate picking an alias cluster's canonical display name from its
+    `name` column: shortest, then lexicographic (deterministic analogue of
+    the LLM "pick the best full name" in dedupe_nodes.py:47-91). The
+    one-shot build and the incremental merge both name nodes with it."""
+    return F.min_by("name", F.concat(F.lpad(F.length("name"), 4, "0"), F.col("name")))
+
+
+def resolve_entities(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Returns (nodes, uuid_map).
 
     nodes: canonical entity table (uuid, name, group_id, labels, n_aliases,
@@ -403,28 +409,17 @@ def resolve_entities(
     """
     ents = distinct_entities(mentions).cache()
 
-    star = match_edges_exact(ents)
-    if use_lsh:
-        star = star.union(match_edges_lsh(ents, threshold=lsh_threshold))
-        comp = connected_components(star, ents.select(F.col("uuid").alias("id")))
-        mapped = ents.join(
-            comp.withColumnRenamed("id", "uuid"), "uuid", "left"
-        ).withColumn("canon_uuid", F.coalesce("component", "uuid"))
-    else:
-        # exact blocking: component = min uuid per (group_id, norm_name) —
-        # single shuffle, no iteration needed
-        w = Window.partitionBy("group_id", "norm_name")
-        mapped = ents.withColumn("canon_uuid", F.min("uuid").over(w))
+    star = match_edges_exact(ents).union(match_edges_lsh(ents))
+    comp = connected_components(star, ents.select(F.col("uuid").alias("id")))
+    mapped = ents.join(
+        comp.withColumnRenamed("id", "uuid"), "uuid", "left"
+    ).withColumn("canon_uuid", F.coalesce("component", "uuid"))
 
     uuid_map = mapped.select("group_id", "name", "norm_name", "uuid", "canon_uuid")
-
-    # canonical display name: shortest, then lexicographic (deterministic
-    # analogue of the LLM "pick the best full name" in dedupe_nodes.py:47-91)
-    name_key = F.concat(F.lpad(F.length("name"), 4, "0"), F.col("name"))
     nodes = (
         mapped.groupBy("group_id", "canon_uuid")
         .agg(
-            F.min_by("name", name_key).alias("name"),
+            canonical_name().alias("name"),
             F.array_sort(F.collect_set("label")).alias("labels"),
             F.count(F.lit(1)).alias("n_aliases"),
         )

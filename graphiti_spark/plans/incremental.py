@@ -42,22 +42,23 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..operators.episodes import build_episodes
-from ..operators.extract import attach_labels, extract_all, split_extracted
 from ..operators.materialize import (
     invalidate_edges,
     materialize_edges,
     resolve_edge_pointers,
 )
 from ..operators.resolve import (
+    BUCKET_KEY,
+    bucket_sizes,
+    canonical_name,
+    capped_bands,
     connected_components,
     distinct_entities,
     lsh_band_rows,
     lsh_verify_pairs,
     match_edges_exact,
 )
-
-LSH_MAX_BUCKET = 1000  # same boilerplate-guard cap as match_edges_lsh
+from .pipeline import GraphTables
 
 
 @dataclass
@@ -70,22 +71,13 @@ class GraphState:
     bucket_n: DataFrame  # (group_id, band, bkey, n) bucket populations
 
     def names(self) -> DataFrame:
-        """Canonical display name per canon uuid: shortest, then
-        lexicographic, over the alias cluster (dedupe_nodes.py:47-91
-        deterministic analogue — same rule as resolve_entities)."""
-        key = F.concat(F.lpad(F.length("name"), 4, "0"), F.col("name"))
+        """Canonical display name per canon uuid over the alias cluster
+        (the same rule as resolve_entities)."""
         return (
             self.ents.join(self.canon, "uuid")
             .groupBy("canon_uuid")
-            .agg(F.min_by("name", key).alias("node_name"))
+            .agg(canonical_name().alias("node_name"))
         )
-
-
-def _extract_batch(pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-    extracted = extract_all(build_episodes(pages))
-    triples_raw, spans = split_extracted(extracted)
-    mentions = attach_labels(spans, triples_raw)
-    return triples_raw, mentions
 
 
 def _uuid_map(ents: DataFrame, canon: DataFrame) -> DataFrame:
@@ -97,40 +89,30 @@ def _uuid_map(ents: DataFrame, canon: DataFrame) -> DataFrame:
 _PAIR = ["group_id", "source_node_uuid", "target_node_uuid"]
 
 
-_BKT = ["group_id", "band", "bkey"]
-
-
-def _capped(bands: DataFrame, bucket_n: DataFrame) -> DataFrame:
-    ok = bucket_n.where(F.col("n") <= LSH_MAX_BUCKET).select(*_BKT)
-    return bands.join(ok, _BKT)
-
-
-def initial_state(pages: DataFrame, lsh_threshold: float = 0.6) -> GraphState:
+def initial_state(pages: DataFrame, ontology=None) -> GraphState:
     """Bootstrap: the plain batch pipeline, but keeping the skinny state
     tables the incremental merges fold into — including the LSH band
     index and its bucket-population counts, so later merges never
-    re-block the standing universe."""
-    triples_raw, mentions = _extract_batch(pages)
-    ents = distinct_entities(mentions).select(
+    re-block the standing universe. Extraction and labelling are the
+    batch pipeline's own stages (GraphTables)."""
+    t = GraphTables(pages, ontology)
+    ents = distinct_entities(t.mentions_raw).select(
         "group_id", "name", "norm_name", "uuid"
     )
     bands = lsh_band_rows(ents).localCheckpoint(eager=True)
-    bucket_n = (
-        bands.groupBy(*_BKT).agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    capped = _capped(bands, bucket_n)
-    star = match_edges_exact(ents).union(
-        lsh_verify_pairs(capped, capped, threshold=lsh_threshold)
-    )
+    bucket_n = bucket_sizes(bands).localCheckpoint(eager=True)
+    capped = capped_bands(bands, bucket_n)
+    star = match_edges_exact(ents).union(lsh_verify_pairs(capped, capped))
     comp = connected_components(star, ents.select(F.col("uuid").alias("id")))
     canon = (
         ents.join(comp.withColumnRenamed("id", "uuid"), "uuid", "left")
         .select("uuid", F.coalesce("component", "uuid").alias("canon_uuid"))
     )
-    raw = resolve_edge_pointers(triples_raw, _uuid_map(ents, canon))
+    raw = resolve_edge_pointers(t.triples_raw, _uuid_map(ents, canon))
     raw = raw.localCheckpoint(eager=True)  # the staged triple log
-    edges = invalidate_edges(materialize_edges(raw)).localCheckpoint(eager=True)
+    edges = invalidate_edges(
+        materialize_edges(raw, ontology), ontology
+    ).localCheckpoint(eager=True)
     return GraphState(ents=ents.localCheckpoint(eager=True),
                       canon=canon.localCheckpoint(eager=True),
                       raw=raw, edges=edges,
@@ -138,14 +120,14 @@ def initial_state(pages: DataFrame, lsh_threshold: float = 0.6) -> GraphState:
 
 
 def merge_batch(
-    state: GraphState, pages: DataFrame, lsh_threshold: float = 0.6
+    state: GraphState, pages: DataFrame, ontology=None
 ) -> GraphState:
-    """Merge one new page batch into the standing graph state."""
-    spark = pages.sparkSession
-    triples_raw, mentions = _extract_batch(pages)
+    """Merge one new page batch into the standing graph state. `ontology`
+    must be the one the state was built with."""
+    t = GraphTables(pages, ontology)
 
     # -- 1. delta entity resolution ------------------------------------
-    batch_ents = distinct_entities(mentions).select(
+    batch_ents = distinct_entities(t.mentions_raw).select(
         "group_id", "name", "norm_name", "uuid"
     )
     new_ents = batch_ents.join(
@@ -170,19 +152,14 @@ def merge_batch(
     # pair from that bucket exactly like the batch path's bucket drop.
     new_bands = lsh_band_rows(new_ents).localCheckpoint(eager=True)
     bucket_n = (
-        state.bucket_n.unionByName(
-            new_bands.groupBy(*_BKT).agg(F.count(F.lit(1)).alias("n"))
-        )
-        .groupBy(*_BKT)
+        state.bucket_n.unionByName(bucket_sizes(new_bands))
+        .groupBy(*BUCKET_KEY)
         .agg(F.sum("n").alias("n"))
         .localCheckpoint(eager=True)
     )
     bands_all = state.bands.unionByName(new_bands)
     lsh_delta = lsh_verify_pairs(
-        _capped(new_bands, bucket_n),
-        bands_all,
-        threshold=lsh_threshold,
-        symmetric=False,
+        capped_bands(new_bands, bucket_n), bands_all, symmetric=False
     )
     delta_edges = exact_join.union(exact_intra).union(lsh_delta)
 
@@ -228,7 +205,7 @@ def merge_batch(
     ).localCheckpoint(eager=True)
 
     # -- 2. touched-pair recompaction ----------------------------------
-    new_raw = resolve_edge_pointers(triples_raw, _uuid_map(ents_all, canon_all))
+    new_raw = resolve_edge_pointers(t.triples_raw, _uuid_map(ents_all, canon_all))
 
     remap = F.broadcast(delta_map)  # old canon -> new canon, tiny
     prev_raw = (
@@ -265,7 +242,7 @@ def merge_batch(
     )
 
     raw_touched = raw_all.join(touched, _PAIR, "left_semi")
-    redone = invalidate_edges(materialize_edges(raw_touched))
+    redone = invalidate_edges(materialize_edges(raw_touched, ontology), ontology)
 
     prev_edges = (
         state.edges.join(

@@ -19,8 +19,9 @@ redesign the north rule asks for.
 Layout under `root_dir`:
     staged/extracted/range=<k>/   combined extraction output per range
     metrics/                      lineage rows (parquet append)
-Compaction (resolution/dedup/invalidation) runs over staged/extracted/*
-exactly like streaming.staged_to_graph.
+Compaction (resolution/dedup/invalidation) is the batch pipeline's: a
+`plans.pipeline.GraphTables` whose `extracted` stage is the committed
+staged/extracted table (see jobs/build_graph_job.py).
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.episodes import build_episodes
-from ..operators.extract import attach_labels, extract_all, split_extracted
+from ..operators.extract import extract_all
 from ..sources.pages import build_pages
 
 METRICS_SCHEMA = (
@@ -147,26 +148,3 @@ def run_partitioned(
         results.append(run_range(spark, sf_dir, root_dir, k, n_ranges, replicate))
         processed += 1
     return results
-
-
-def compact(spark: SparkSession, root_dir: str):
-    """Staged per-range extraction -> resolved graph tables (same
-    compaction as streaming.staged_to_graph; reads every committed
-    range)."""
-    from ..operators.materialize import (
-        build_mention_edges,
-        invalidate_edges,
-        materialize_edges,
-        resolve_edge_pointers,
-    )
-    from ..operators.resolve import resolve_entities
-
-    extracted = spark.read.parquet(f"{root_dir}/staged/extracted")
-    triples_raw, spans = split_extracted(extracted)
-    mentions_raw = attach_labels(spans, triples_raw)
-    nodes, uuid_map = resolve_entities(mentions_raw)
-    edges = invalidate_edges(
-        materialize_edges(resolve_edge_pointers(triples_raw, uuid_map))
-    )
-    mention_edges = build_mention_edges(mentions_raw, uuid_map)
-    return nodes, edges, mention_edges

@@ -34,17 +34,6 @@ from ..operators.resolve import resolve_entities
 from ..sources.pages import build_pages
 
 
-def _materialize(df: DataFrame, root: str, name: str) -> DataFrame:
-    """Stage commit: write the stage output to parquet and read it back.
-    This is the single-job stand-in for the Iceberg stage tables of the
-    production design (SURVEY.md §4 checkpoint/lineage): every downstream
-    consumer reads the committed table instead of re-running the lineage,
-    and a restarted job resumes from the last committed stage."""
-    path = f"{root}/{name}"
-    df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
-
-
 class GraphTables:
     """Lazy stage container for the construction DAG.
 
@@ -53,23 +42,19 @@ class GraphTables:
         pages -> episodes -> extracted -> {triples_raw, mentions_raw}
               -> {nodes, uuid_map} -> edges -> mention_edges
 
-    Assigning to a stage attribute overrides it (the API mutation paths —
-    remove_episodes / add_triplet — rewrite tables in place). Stages that
-    are never read are never computed, so e.g. `t.episodes` runs one page
-    scan, not the full resolution."""
+    Assigning to a stage attribute overrides it: the API mutation paths
+    (remove_episodes / add_triplet) rewrite tables in place, and the
+    staged entry paths (the resumable lineage job, the streaming ingest,
+    the incremental merge) hand in a committed `extracted` table with
+    `pages=None`. Every entry path thus compacts through the same stage
+    builders under the same ontology. Stages that are never read are
+    never computed, so e.g. `t.episodes` runs one page scan, not the full
+    resolution."""
 
-    def __init__(
-        self,
-        pages: DataFrame,
-        use_lsh: bool = True,
-        materialize_dir: str | None = None,
-        ontology=None,
-    ):
+    def __init__(self, pages: DataFrame | None, ontology=None):
         from ..ontology import DEFAULT
 
         self.pages = pages
-        self._use_lsh = use_lsh
-        self._materialize_dir = materialize_dir
         self.ontology = ontology or DEFAULT
 
     # -- stage builders (each runs at most once per instance) --------------
@@ -81,44 +66,21 @@ class GraphTables:
         # Extraction runs ONCE as a combined pass (triples + mention spans
         # in a single whole-stage-codegen projection — episode content is
         # scanned one time). Its skinny output is the fan-out point of the
-        # DAG: committed to parquet when materialize_dir is given (the
-        # Iceberg stage-table pattern, resumable via plans/lineage.py),
-        # else persisted. Without this the multi-consumer lazy DAG
-        # re-executes the extraction ~3x (measured 33s vs 13s at 2.25M
+        # DAG, so it is committed: without a commit the multi-consumer lazy
+        # DAG re-executes the extraction ~3x (measured 33s vs 13s at 2.25M
         # sentences on local[32]).
-        extracted = extract_all(self.episodes)
-        if self._materialize_dir:
-            return _materialize(extracted, self._materialize_dir, "extracted")
-        # DISK_ONLY + spark.local.dir on tmpfs = a shared-memory row store
-        # without the columnar-encode CPU of the default MEMORY_AND_DISK
-        # cache (measured 14.5s vs 20.8s for the flagship at 2.25M
-        # sentences, local[32])
-        from pyspark import StorageLevel
+        return self._commit(extract_all(self.episodes))
 
-        return extracted.persist(StorageLevel.DISK_ONLY)
-
-    def _commit(self, df: DataFrame, name: str) -> DataFrame:
+    def _commit(self, df: DataFrame) -> DataFrame:
         """Stage commit for a fan-out table consumed by several downstream
         subplans — often more than once inside a single action (e.g.
         triples_view references `edges` directly AND through the node
-        summaries/attributes derivations, ~5 subplan copies). With
-        materialize_dir this is a parquet stage table (the Iceberg
-        pattern — at crawl scale the only option). WITHOUT it the copies
-        are left to physical-plan exchange reuse: the identical shuffle
-        subtrees dedup into ReusedExchange nodes, so the stage computes
-        once per action with NO cache barrier — measured 39s vs 61s for
-        the sf0.1 flagship versus a persist() here (the cache's columnar
-        encode + its hard materialization barrier cost more than the
-        exchange reuse saves)."""
-        if self._materialize_dir:
-            return _materialize(df, self._materialize_dir, name)
-        import os
-
-        mode = os.environ.get("SPARK_GRAFT_STAGE_COMMIT", "checkpoint")
-        if mode == "none":
-            return df
-        if mode == "persist":
-            return df.persist()
+        summaries/attributes derivations, ~5 subplan copies). An eager
+        localCheckpoint writes the stage once and truncates its lineage:
+        downstream stages read the committed rows, the in-session
+        analogue of an Iceberg stage table. Round-5 measurements rejected
+        the alternatives (no commit, relying on exchange reuse; or
+        persist()) as 3-5x slower on the throughput probe."""
         return df.localCheckpoint(eager=True)
 
     def _build_triples_raw(self) -> DataFrame:
@@ -130,13 +92,11 @@ class GraphTables:
         # attach_labels projection over the 2x-exploded extraction
         # (measured ~3.5s per extra run at sf0.1 x20)
         triples_raw, spans = split_extracted(self.extracted)
-        return self._commit(
-            attach_labels(spans, triples_raw, self.ontology), "mentions_raw"
-        )
+        return self._commit(attach_labels(spans, triples_raw, self.ontology))
 
     def _resolve(self) -> tuple[DataFrame, DataFrame]:
         """Entity resolution — runs once; caches BOTH outputs."""
-        nodes, uuid_map = resolve_entities(self.mentions_raw, use_lsh=self._use_lsh)
+        nodes, uuid_map = resolve_entities(self.mentions_raw)
         self.uuid_map = uuid_map
         self._base_nodes = nodes
         return nodes, uuid_map
@@ -157,8 +117,8 @@ class GraphTables:
         # 425k-row materialize groupBy executed ~3x (measured 7.2s -> 3.7s
         # at sf0.1 x20 with the intermediate commit)
         resolved = resolve_edge_pointers(self.triples_raw, self.uuid_map)
-        mat = self._commit(materialize_edges(resolved, self.ontology), "edges_raw")
-        return self._commit(invalidate_edges(mat), "edges")
+        mat = self._commit(materialize_edges(resolved, self.ontology))
+        return self._commit(invalidate_edges(mat, self.ontology))
 
     def _build_nodes(self) -> DataFrame:
         # final node table: content-derived summary (X15 — identity
@@ -169,9 +129,7 @@ class GraphTables:
         from ..operators.summaries import with_summaries
 
         base, edges = self._base_nodes, self.edges
-        return self._commit(
-            with_attributes(with_summaries(base, edges), edges), "nodes"
-        )
+        return self._commit(with_attributes(with_summaries(base, edges), edges))
 
     def _build_mention_edges(self) -> DataFrame:
         return build_mention_edges(self.mentions_raw, self.uuid_map)
@@ -266,10 +224,8 @@ class GraphTables:
 def build_graph(
     spark: SparkSession,
     sf_dir: str,
-    use_lsh: bool = True,
     pages: DataFrame | None = None,
     replicate: int = 1,
-    materialize_dir: str | None = None,
     ontology=None,
 ) -> GraphTables:
     """Declare the construction DAG over the input pages. Returns
@@ -277,16 +233,9 @@ def build_graph(
     (ontology.Ontology) customizes entity labels, predicate synonym
     classes (edge dedup) and contradictions — the reference's
     entity_types extension point (graphiti.py:264)."""
-    pages = (
-        pages
-        if pages is not None
-        else build_pages(
-            spark, sf_dir, replicate=replicate, with_html=materialize_dir is None
-        )
-    )
-    return GraphTables(
-        pages, use_lsh=use_lsh, materialize_dir=materialize_dir, ontology=ontology
-    )
+    if pages is None:
+        pages = build_pages(spark, sf_dir, replicate=replicate)
+    return GraphTables(pages, ontology=ontology)
 
 
 def triples_view(tables: GraphTables) -> DataFrame:

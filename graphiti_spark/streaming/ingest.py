@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.episodes import build_episodes
-from ..operators.extract import attach_labels, extract_all, split_extracted
+from ..operators.extract import extract_all
 from ..schemas import PAGES
 
 
@@ -41,8 +41,10 @@ def process_batch(batch_df: DataFrame, out_dir: str) -> None:
     """One micro-batch: pages -> episodes -> combined extraction ->
     append episodes + raw triples + mentions to the staging tables.
     Entity resolution / dedup / invalidation run as the periodic batch
-    compaction job over the staged tables (the lambda-style split the
-    reference's bulk path also uses, graphiti.py:493-604)."""
+    compaction over the staged tables (the lambda-style split the
+    reference's bulk path also uses, graphiti.py:493-604): a
+    `plans.pipeline.GraphTables(None)` whose `extracted` stage is assigned
+    the staged `{out_dir}/extracted` table."""
     episodes = build_episodes(batch_df)
     extracted = extract_all(episodes)
     episodes.write.mode("append").parquet(f"{out_dir}/episodes")
@@ -73,35 +75,13 @@ def run_ingest(
     return writer.start()
 
 
-def staged_to_graph(spark: SparkSession, out_dir: str):
-    """The compaction step: staged episodes/extraction -> resolved graph
-    tables (same operators as the batch pipeline)."""
-    from ..operators.materialize import (
-        build_mention_edges,
-        invalidate_edges,
-        materialize_edges,
-        resolve_edge_pointers,
-    )
-    from ..operators.resolve import resolve_entities
-
-    extracted = spark.read.parquet(f"{out_dir}/extracted")
-    triples_raw, spans = split_extracted(extracted)
-    mentions_raw = attach_labels(spans, triples_raw)
-    nodes, uuid_map = resolve_entities(mentions_raw)
-    edges = invalidate_edges(
-        materialize_edges(resolve_edge_pointers(triples_raw, uuid_map))
-    )
-    mention_edges = build_mention_edges(mentions_raw, uuid_map)
-    return nodes, edges, mention_edges
-
-
 class IncrementalMaintainer:
     """foreachBatch sink that folds every micro-batch of pages into a
     STANDING graph via plans/incremental.merge_batch — continuous KG
     maintenance, the streaming twin of graphiti's add_episode loop.
-    Unlike process_batch + staged_to_graph (stage now, compact later),
-    the maintained graph is query-ready after every trigger, and each
-    trigger does only delta work: contracted-CC entity resolution over
+    Unlike process_batch + a GraphTables compaction (stage now, compact
+    later), the maintained graph is query-ready after every trigger, and
+    each trigger does only delta work: contracted-CC entity resolution over
     the batch's new names and touched-pair edge recompaction
     (plans/incremental.py). In-session the state tables are checkpointed
     DataFrames; at scale they are Iceberg tables and the fold's commits
@@ -110,9 +90,9 @@ class IncrementalMaintainer:
     the same one-shot batch result (pinned by the equality tests), so
     redelivery and reordering are safe."""
 
-    def __init__(self, lsh_threshold: float = 0.6):
+    def __init__(self, ontology=None):
         self.state = None
-        self.lsh_threshold = lsh_threshold
+        self.ontology = ontology
 
     def __call__(self, batch_df: DataFrame, _epoch_id: int) -> None:
         from ..plans import incremental
@@ -120,12 +100,10 @@ class IncrementalMaintainer:
         if batch_df.isEmpty():
             return
         if self.state is None:
-            self.state = incremental.initial_state(
-                batch_df, lsh_threshold=self.lsh_threshold
-            )
+            self.state = incremental.initial_state(batch_df, self.ontology)
         else:
             self.state = incremental.merge_batch(
-                self.state, batch_df, lsh_threshold=self.lsh_threshold
+                self.state, batch_df, self.ontology
             )
 
 

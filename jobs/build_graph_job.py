@@ -43,7 +43,8 @@ def main() -> None:
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args()
 
-    from graphiti_spark.plans.lineage import compact, run_partitioned
+    from graphiti_spark.plans.lineage import run_partitioned
+    from graphiti_spark.plans.pipeline import GraphTables
     from graphiti_spark.session import get_spark
 
     spark = get_spark(
@@ -58,9 +59,11 @@ def main() -> None:
         spark, args.input, args.output, n_ranges=args.n_ranges,
         replicate=args.replicate,
     )
-    nodes, edges, mention_edges = compact(spark, args.output)
+    # compaction: the batch pipeline's stages over the committed ranges
+    t = GraphTables(None)
+    t.extracted = spark.read.parquet(f"{args.output}/staged/extracted")
     for name, df in (
-        ("nodes", nodes), ("edges", edges), ("mentions", mention_edges)
+        ("nodes", t.nodes), ("edges", t.edges), ("mentions", t.mention_edges)
     ):
         df.write.mode("overwrite").parquet(f"{args.output}/graph/{name}")
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from graphiti_spark.plans import incremental
-from graphiti_spark.plans.pipeline import build_graph, triples_view
+from graphiti_spark.plans.pipeline import triples_view
 from graphiti_spark.sources.pages import build_pages
 
 
@@ -18,15 +18,14 @@ def _triples_pdf(df):
     return df.select(*cols).toPandas().sort_values(cols[:6]).reset_index(drop=True)
 
 
-def test_incremental_equals_batch(spark, sf_dir):
+def test_incremental_equals_batch(spark, sf_dir, graph):
     pages = build_pages(spark, sf_dir)
     st = incremental.initial_state(pages.where(F.col("doc_id") % 2 == 0))
     st = incremental.merge_batch(st, pages.where(F.col("doc_id") % 2 == 1))
     inc = _triples_pdf(incremental.incremental_triples(st))
 
-    t = build_graph(spark, sf_dir)
     bat = _triples_pdf(
-        triples_view(t).withColumn(
+        triples_view(graph).withColumn(
             "n_episodes", F.size("episodes").cast("long")
         )
     )

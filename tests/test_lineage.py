@@ -8,17 +8,13 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from graphiti_spark.plans.lineage import (
-    compact,
-    completed_ranges,
-    run_partitioned,
-)
-from graphiti_spark.plans.pipeline import build_graph
+from graphiti_spark.plans.lineage import completed_ranges, run_partitioned
+from graphiti_spark.plans.pipeline import GraphTables, triples_view
 
 N_RANGES = 4
 
 
-def test_crash_resume_equals_batch(spark, sf_dir, tmp_path):
+def test_crash_resume_equals_batch(spark, sf_dir, graph, tmp_path):
     root = str(tmp_path / "job")
 
     # crash after 2 of 4 ranges
@@ -35,13 +31,21 @@ def test_crash_resume_equals_batch(spark, sf_dir, tmp_path):
     again = run_partitioned(spark, sf_dir, root, n_ranges=N_RANGES)
     assert again == []
 
-    # compacted graph == one-shot batch pipeline
-    _, edges, _ = compact(spark, root)
-    batch = build_graph(spark, sf_dir)
+    # compacted graph == one-shot batch pipeline: the same stages over the
+    # committed ranges, nodes (summaries, attributes) included
+    t = GraphTables(None)
+    t.extracted = spark.read.parquet(f"{root}/staged/extracted")
     key = ["group_id", "source_node_uuid", "name", "target_node_uuid"]
-    a, b = edges.select(*key), batch.edges.select(*key)
+    a, b = t.edges.select(*key), graph.edges.select(*key)
     assert a.count() == b.count()
     assert a.exceptAll(b).count() == 0
+    nodes = [
+        g.nodes.withColumn("attributes", F.array_sort(F.map_entries("attributes")))
+        for g in (t, graph)
+    ]
+    assert nodes[0].count() == nodes[1].count()
+    assert nodes[0].exceptAll(nodes[1]).count() == 0
+    assert triples_view(t).exceptAll(triples_view(graph)).count() == 0
 
 
 def test_metrics_rows_recorded(spark, sf_dir, tmp_path):

@@ -180,9 +180,14 @@ def test_y4m_codec_roundtrip():
 def test_streaming_ingest_roundtrip(spark, sf_dir, tmp_path):
     """File-stream pages -> foreachBatch extraction -> staged tables ->
     compaction produces the same triples as the batch pipeline."""
-    from graphiti_spark.plans.pipeline import build_graph
+    from graphiti_spark.plans.pipeline import GraphTables, build_graph
     from graphiti_spark.sources.pages import build_pages
-    from graphiti_spark.streaming.ingest import run_ingest, staged_to_graph
+    from graphiti_spark.streaming.ingest import run_ingest
+
+    def staged_edges():
+        t = GraphTables(None)
+        t.extracted = spark.read.parquet(f"{out_dir}/extracted")
+        return t.edges
 
     pages_dir = str(tmp_path / "pages")
     out_dir = str(tmp_path / "staged")
@@ -194,7 +199,7 @@ def test_streaming_ingest_roundtrip(spark, sf_dir, tmp_path):
     q = run_ingest(spark, pages_dir, out_dir, ckpt, available_now=True)
     q.awaitTermination(120)
 
-    nodes, edges, mention_edges = staged_to_graph(spark, out_dir)
+    edges = staged_edges()
     batch = build_graph(spark, sf_dir, pages=spark.read.parquet(pages_dir))
     a = edges.select("group_id", "source_node_uuid", "name", "target_node_uuid")
     b = batch.edges.select("group_id", "source_node_uuid", "name", "target_node_uuid")
@@ -204,7 +209,7 @@ def test_streaming_ingest_roundtrip(spark, sf_dir, tmp_path):
     # idempotent re-delivery: restart with same checkpoint adds nothing
     q2 = run_ingest(spark, pages_dir, out_dir, ckpt, available_now=True)
     q2.awaitTermination(120)
-    _, edges2, _ = staged_to_graph(spark, out_dir)
+    edges2 = staged_edges()
     assert edges2.count() == edges.count()
 
 

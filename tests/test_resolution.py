@@ -60,7 +60,7 @@ def test_jaccard_shingles():
 def test_lsh_equals_exact_on_corpus(spark, graph):
     """On this corpus all true aliases share a normalized name, so the LSH
     path must produce the same canonicalization as exact blocking."""
-    nodes_lsh, um_lsh = resolve_entities(graph.mentions_raw, use_lsh=True)
+    nodes_lsh, um_lsh = resolve_entities(graph.mentions_raw)
     um_exact = graph.uuid_map.toPandas()
     lsh = um_lsh.toPandas()
     a = um_exact.set_index("uuid")["canon_uuid"]
@@ -98,7 +98,7 @@ def test_lsh_finds_typo_variants(spark):
         "episode_uuid string, group_id string, name string, norm_name string,"
         " label string, valid_at timestamp",
     )
-    nodes, um = resolve_entities(mentions, use_lsh=True, lsh_threshold=0.7)
+    nodes, um = resolve_entities(mentions)
     m = um.toPandas().set_index("name")["canon_uuid"]
     assert m["Alice Johnson"] == m["Alice Johnsonn"]
     assert m["Bob Hartley"] != m["Alice Johnson"]

@@ -1,7 +1,6 @@
 """Profile the throughput probe's fixed latency (VERDICT r4 #6): run ONE
 flagship-DAG probe attempt (build_graph at sf0.1 x20 + triples_view count)
-under a given stage-commit mode with the event log on, then decompose the
-wall time into
+with the event log on, then decompose the wall time into
 
   - per-job execution time (first task launch -> job end),
   - job scheduling latency (job submit -> first task launch),
@@ -9,18 +8,15 @@ wall time into
     Python/driver-side planning, createDataFrame, analysis),
 
 and print the top contributors. This is the measurement tool behind the
-"chase the ~8-12s fixed latency" item; compare modes with
+"chase the ~8-12s fixed latency" item:
 
-  python tools/probe_profile.py checkpoint
-  python tools/probe_profile.py none
-  python tools/probe_profile.py persist
+  python tools/probe_profile.py [sf_dir]   # default: bench.py's DEFAULT_SF
 
-(each runs in-process; invoke in separate shells for clean JVMs).
+(runs in-process; invoke in a separate shell for a clean JVM).
 """
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import sys
@@ -31,20 +27,20 @@ sys.path.insert(0, REPO)
 
 
 def main() -> None:
-    mode = sys.argv[1] if len(sys.argv) > 1 else "checkpoint"
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    evdir = f"/tmp/probe-profile-{mode}"
+    from bench import DEFAULT_SF
+
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF
+    evdir = "/tmp/probe-profile"
     import shutil
 
     shutil.rmtree(evdir, ignore_errors=True)
     os.makedirs(evdir, exist_ok=True)
     os.environ["SPARK_GRAFT_EVENTLOG"] = evdir
-    os.environ["SPARK_GRAFT_STAGE_COMMIT"] = mode
 
     from graphiti_spark.session import get_spark
     from graphiti_spark.plans.pipeline import build_graph, triples_view
 
-    spark = get_spark(app_name=f"probe-{mode}")
+    spark = get_spark(app_name="probe-profile")
     spark.sparkContext.setLogLevel("ERROR")
     # warm-up exactly like bench.py
     triples_view(build_graph(spark, "/root/testdata/sf0.001")).count()
@@ -87,21 +83,14 @@ def main() -> None:
                                  or props.get("callSite.short")
                                  or (names[-1] if names else ""))[:90],
                     }
-                elif e == "SparkListenerTaskStart":
-                    pass
                 elif e == "SparkListenerJobEnd":
                     if ev["Job ID"] in jobs:
                         jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-                elif e == "SparkListenerStageSubmitted":
-                    pass
                 elif e == "SparkListenerTaskEnd":
-                    ti = ev.get("Task Info", {})
-                    sid = ev["Stage ID"]
-                    for j in jobs.values():
-                        j.setdefault("_stages", set())
-                    # attribute by time instead: record min launch per window
-                    # (cheap approximation: earliest task launch after submit)
-                    lt = ti.get("Launch Time")
+                    # attribute by time: earliest task launch inside each
+                    # job's [submit, end] window (an approximation when
+                    # jobs overlap)
+                    lt = ev.get("Task Info", {}).get("Launch Time")
                     for j in jobs.values():
                         if j["submit"] is not None and lt is not None and \
                                 lt >= j["submit"] and (
@@ -130,7 +119,7 @@ def main() -> None:
     gaps.sort(reverse=True)
     by_dur = sorted(seq, key=lambda j: -(j["end"] - j["submit"]))
     print(json.dumps({
-        "mode": mode, "wall_sec": round(wall, 3), "n_canonical": n,
+        "wall_sec": round(wall, 3), "n_canonical": n,
         "n_raw": raw, "n_jobs": len(seq),
         "exec_sec_all_jobs": round(exec_ms / 1000, 3),
         "sched_sec": round(sched_ms / 1000, 3),
