@@ -44,6 +44,7 @@ HEADLINE = [
 
 def run_bench(sf_dir: str, cpus: int, names: list[str]) -> dict:
     from graphiti_spark import registry
+    from graphiti_spark.queries import shared
     from graphiti_spark.session import get_spark
 
     host_state = _host_state()  # captured BEFORE any work starts
@@ -59,7 +60,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str]) -> dict:
     from graphiti_spark.plans.pipeline import build_graph as _bg, triples_view as _tv
 
     _tv(_bg(spark, "/root/testdata/sf0.001")).count()
-    registry._GRAPH_CACHE.clear()
+    shared._GRAPH_CACHE.clear()
     spark.catalog.clearCache()
 
     timings: dict[str, float] = {}
@@ -82,7 +83,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str]) -> dict:
             attempts = []
             raw = 0
             for _ in range(2):
-                registry._GRAPH_CACHE.clear()
+                shared._GRAPH_CACHE.clear()
                 spark.catalog.clearCache()
                 t0 = time.perf_counter()
                 t = build_graph(spark, sf_dir, replicate=20)
@@ -96,7 +97,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str]) -> dict:
                 "raw_triples_per_sec": round(raw / dt, 1),
                 "throughput_attempts": attempts,
             }
-            registry._GRAPH_CACHE.clear()
+            shared._GRAPH_CACHE.clear()
             spark.catalog.clearCache()
             continue
         if name == "kg_build":
@@ -107,7 +108,7 @@ def run_bench(sf_dir: str, cpus: int, names: list[str]) -> dict:
             # driver's own correctness runner shares the built graph across
             # queries the same way.
             t0 = time.perf_counter()
-            t = registry._graph(spark, sf_dir)
+            t = shared._graph(spark, sf_dir)
             t.edges.count(), t.nodes.count(), t.mention_edges.count()
             timings[name] = round(time.perf_counter() - t0, 3)
             continue

@@ -130,12 +130,12 @@ class GraphitiSpark:
         # expressions etc.) per action: measured 123s -> ~5s for a
         # cross-encoder search at sf0.001. The production analogue is
         # exactly this: the DAG's outputs live as Iceberg tables, read
-        # not replanned.
-        for name in ("episodes", "nodes", "edges", "mention_edges"):
-            setattr(
-                self.tables, name,
-                getattr(self.tables, name).localCheckpoint(eager=True),
-            )
+        # not replanned. nodes and edges are already committed by
+        # GraphTables when first read, so reading them is enough.
+        t = self.tables
+        t.episodes = t.episodes.localCheckpoint(eager=True)
+        t.nodes, t.edges
+        t.mention_edges = t.mention_edges.localCheckpoint(eager=True)
         self._comm = None
         self._drop_comm_emb()
         self._mutation_log = []
@@ -453,11 +453,13 @@ class GraphitiSpark:
                 .persist()
             )
             if config.reranker == "cross_encoder_learned":
-                from .operators.ce_learned import learned_ce_rank, train_weights
+                from .operators.ce_learned import (
+                    learned_ce_rank,
+                    sample_passages_df,
+                    train_weights,
+                )
 
-                sample = [
-                    r["text"] for r in cand_corpus.orderBy("uuid").collect()
-                ]
+                sample = sample_passages_df(cand_corpus, "uuid", "text", cap=200)
                 ce = learned_ce_rank(
                     cand_corpus, qs, "uuid", "text",
                     weights=train_weights(sample), k=10**9,

@@ -118,6 +118,24 @@ def sample_passages(rows: list[tuple[int, str]], cap: int = 200) -> list[str]:
     return [t for _, t in rows[::stride]][:cap]
 
 
+def sample_passages_df(
+    df: DataFrame, id_col: str, text_col: str, cap: int = 200
+) -> list[str]:
+    """sample_passages over a DataFrame with unique ids, selected in Spark
+    so only the <= cap sampled rows reach the driver: the rows at id rank
+    i with i % stride == 0 and i < cap * stride are exactly the ones
+    sample_passages keeps. The rank window is global, so `df` must be a
+    bounded set (e.g. a search's candidates), not a corpus."""
+    stride = max(1, df.count() // cap)
+    i = F.row_number().over(Window.orderBy(id_col)) - 1
+    rows = (
+        df.select(id_col, text_col, i.alias("i"))
+        .where((F.col("i") % stride == 0) & (F.col("i") < cap * stride))
+        .collect()
+    )
+    return sample_passages([(r[id_col], r[text_col]) for r in rows], cap=cap)
+
+
 def learned_ce_rank(
     corpus: DataFrame,
     queries: DataFrame,

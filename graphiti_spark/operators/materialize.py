@@ -142,7 +142,7 @@ def edge_dup_candidates(
     X10, never merge targets).
 
     emb: (uuid, emb array<bigint>) — milli-quantized fact embeddings (the
-    persisted embedding-table pattern of registry_search.py). The join is
+    persisted embedding-table pattern of queries/search.py). The join is
     blocked on the pair key, exactly the reference's candidate fetch
     "between the same nodes" — never an all-pairs similarity join; at
     crawl scale the per-pair block is tiny and the shuffle key is the

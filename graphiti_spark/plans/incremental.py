@@ -208,20 +208,17 @@ def merge_batch(
     new_raw = resolve_edge_pointers(t.triples_raw, _uuid_map(ents_all, canon_all))
 
     remap = F.broadcast(delta_map)  # old canon -> new canon, tiny
-    prev_raw = (
-        state.raw.join(
-            remap.withColumnRenamed("id", "source_node_uuid"),
-            "source_node_uuid", "left",
-        )
-        .withColumn("source_node_uuid", F.coalesce("component", "source_node_uuid"))
-        .drop("component")
-        .join(
-            remap.withColumnRenamed("id", "target_node_uuid"),
-            "target_node_uuid", "left",
-        )
-        .withColumn("target_node_uuid", F.coalesce("component", "target_node_uuid"))
-        .drop("component")
-    )
+
+    def remap_endpoints(df: DataFrame) -> DataFrame:
+        for col in ("source_node_uuid", "target_node_uuid"):
+            df = (
+                df.join(remap.withColumnRenamed("id", col), col, "left")
+                .withColumn(col, F.coalesce("component", col))
+                .drop("component")
+            )
+        return df
+
+    prev_raw = remap_endpoints(state.raw)
     raw_all = prev_raw.unionByName(new_raw).localCheckpoint(eager=True)
 
     # pairs touched by new rows, or containing a merge-target canon
@@ -244,20 +241,7 @@ def merge_batch(
     raw_touched = raw_all.join(touched, _PAIR, "left_semi")
     redone = invalidate_edges(materialize_edges(raw_touched, ontology), ontology)
 
-    prev_edges = (
-        state.edges.join(
-            remap.withColumnRenamed("id", "source_node_uuid"),
-            "source_node_uuid", "left",
-        )
-        .withColumn("source_node_uuid", F.coalesce("component", "source_node_uuid"))
-        .drop("component")
-        .join(
-            remap.withColumnRenamed("id", "target_node_uuid"),
-            "target_node_uuid", "left",
-        )
-        .withColumn("target_node_uuid", F.coalesce("component", "target_node_uuid"))
-        .drop("component")
-    )
+    prev_edges = remap_endpoints(state.edges)
     kept = prev_edges.join(touched, _PAIR, "left_anti")
     edges = kept.unionByName(redone).localCheckpoint(eager=True)
 

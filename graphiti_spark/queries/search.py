@@ -1,16 +1,26 @@
-"""Search-operator queries (SURVEY.md §2.9) + DuckDB oracles.
-
-Split from registry.py for readability; registry.py merges these dicts.
-"""
+"""Search-operator queries (SURVEY.md §2.9): BM25, RRF, MMR, cross-encoder
+reranking, similarity, graph-distance and filtered search, BFS and
+time-travel traversal, and the landmark centralities and label
+propagation they build on."""
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import corpus
-from .operators import search
+from .. import corpus
+from ..operators import search
+from ..operators.docs import read_documents
+from .kg import q_kg_triples
+from .shared import (
+    ORACLE_SCRATCH,
+    _EDS_CTES,
+    _LABELS_CTES,
+    _TRIPLES_SELECT,
+    _graph,
+    _kg_sql,
+    _oracle_sf_dir,
+    communities_ctes,
+)
 
 # Fixed query workload over the documents table's vocabulary.
 DOC_QUERIES = [
@@ -25,15 +35,11 @@ REF_TIME = "2024-01-02 00:00:00"
 BFS_SEED_PREFIX = "A"
 
 
-def _documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def q_search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1-Q3 analogue: BM25 fulltext top-10 over documents.text for the
     fixed query workload."""
     qs = search.make_queries_df(spark, DOC_QUERIES)
-    return search.bm25_topk(_documents(spark, sf_dir), qs, "doc_id", "text", k=10)
+    return search.bm25_topk(read_documents(spark, sf_dir), qs, "doc_id", "text", k=10)
 
 
 def q_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -42,7 +48,7 @@ def q_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     and first relevant rank — the integer core of MRR/recall@k. The
     QA leg that catches a scoring regression the ranking oracle alone
     would show only as a diff."""
-    docs = _documents(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     qs = search.make_queries_df(spark, DOC_QUERIES)
     run = search.bm25_topk(docs, qs, "doc_id", "text", k=10)
     return search.ir_eval(docs, qs, run, "doc_id", "text", k=10)
@@ -51,7 +57,7 @@ def q_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q11: RRF fusion of the BM25 ranking with a recency ranking
     (doc_id desc), top-10."""
-    docs = _documents(spark, sf_dir)
+    docs = read_documents(spark, sf_dir)
     qs = search.make_queries_df(spark, DOC_QUERIES)
     ft = search.bm25_topk(docs, qs, "doc_id", "text", k=20)
     # orderBy().limit() -> TakeOrderedAndProject (per-partition top-k +
@@ -74,12 +80,6 @@ def q_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _graph(spark: SparkSession, sf_dir: str):
-    from . import registry
-
-    return registry._graph(spark, sf_dir)
-
-
 def q_kg_retrieve_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S9/W1: last-3 episodes per group_id before the reference time,
     chronological."""
@@ -96,7 +96,7 @@ def q_kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose name starts with the seed prefix; returns minimal hop depth.
     Keys are (group_id|name) — names are canonical within a group."""
     t = _graph(spark, sf_dir)
-    from .plans.pipeline import triples_view
+    from ..plans.pipeline import triples_view
 
     tv = triples_view(t)
     edges = tv.select(
@@ -120,7 +120,7 @@ def q_kg_bfs_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 proper: the DISTINCT canonical edges on any <=2-hop undirected
     path from the seed nodes (edge-returning BFS, search_utils.py:277-329)."""
     t = _graph(spark, sf_dir)
-    from .plans.pipeline import triples_view
+    from ..plans.pipeline import triples_view
 
     tv = triples_view(t)
     edges = tv.select(
@@ -180,9 +180,7 @@ DATE_HI = "2024-01-02 00:00:00"
 def q_kg_edge_date_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2: OR-of-ANDs temporal predicate over canonical edges:
     (valid_at >= lo AND invalid_at IS NULL) OR (invalid_at <= hi)."""
-    from . import registry
-
-    tv = registry.q_kg_triples(spark, sf_dir)
+    tv = q_kg_triples(spark, sf_dir)
     return search.edge_date_filter(
         tv,
         [
@@ -350,8 +348,6 @@ SELECT group_id, uuid, url, chunk_idx, valid_at FROM lastn WHERE rn <= 3"""
 
 
 def _kg_eds_sql() -> str:
-    from .registry import _EDS_CTES
-
     return (
         corpus.sql_pages_cte()
         + ","
@@ -404,8 +400,8 @@ def q_kg_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(depth) — the linear-cost estimator for the all-pairs quantity
     no web-scale graph can afford exactly."""
     t = _graph(spark, sf_dir)
-    from .operators.centrality import landmark_closeness
-    from .plans.pipeline import triples_view
+    from ..operators.centrality import landmark_closeness
+    from ..plans.pipeline import triples_view
 
     tv = triples_view(t)
     edges = tv.select(
@@ -464,8 +460,8 @@ def q_kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-quantized dependency accumulation backward over the
     shortest-path DAG."""
     t = _graph(spark, sf_dir)
-    from .operators.centrality import landmark_betweenness
-    from .plans.pipeline import triples_view
+    from ..operators.centrality import landmark_betweenness
+    from ..plans.pipeline import triples_view
 
     tv = triples_view(t)
     edges = tv.select(
@@ -565,8 +561,8 @@ def q_kg_type_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth vs inference — the standard KG-completion mask-and-score
     shape, gated exactly."""
     t = _graph(spark, sf_dir)
-    from .operators.communities import propagate_labels
-    from .plans.pipeline import triples_view
+    from ..operators.communities import propagate_labels
+    from ..plans.pipeline import triples_view
 
     tv = triples_view(t)
     edges = tv.select(
@@ -599,8 +595,6 @@ def q_kg_type_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_type_propagation() -> str:
-    from .registry import _LABELS_CTES
-
     nibbles = ", ".join(f"'{n}'" for n in _MASK_NIBBLES)
     parts = [f"""
 {_LABELS_CTES.strip()},
@@ -666,7 +660,7 @@ def q_kg_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-Jaccard LSH can miss; each twin sorts adjacent to its
     source and surfaces as a lev=1 pair."""
     t = _graph(spark, sf_dir)
-    from .operators.resolve import sorted_neighborhood_pairs
+    from ..operators.resolve import sorted_neighborhood_pairs
 
     base = t.nodes.select("group_id", "name")
     twins = base.where(F.length("name") >= 10).select(
@@ -714,15 +708,11 @@ ASOF_TS = "2024-01-01 12:00:00"
 def q_kg_asof_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bi-temporal point-in-time view: the canonical triples the graph
     held true at ASOF_TS (valid_at <= t, not yet invalidated at t)."""
-    from . import registry
-
-    tv = registry.q_kg_triples(spark, sf_dir)
+    tv = q_kg_triples(spark, sf_dir)
     return search.asof_snapshot(tv, ASOF_TS)
 
 
 def _sql_kg_asof_snapshot() -> str:
-    from .registry import _TRIPLES_SELECT, _kg_sql
-
     body = f"""
 , final AS ({_TRIPLES_SELECT})
 SELECT * FROM final
@@ -742,9 +732,7 @@ def q_kg_bfs_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     a partition-prunable predicate pushed onto the edge scan, then each
     hop is one co-partitioned join + min-agg."""
     t = _graph(spark, sf_dir)
-    from . import registry
-
-    tv = registry.q_kg_triples(spark, sf_dir)
+    tv = q_kg_triples(spark, sf_dir)
     snap = search.asof_snapshot(tv, ASOF_TS)
     edges = snap.select(
         F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
@@ -765,8 +753,6 @@ def q_kg_bfs_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_bfs_asof() -> str:
-    from .registry import _TRIPLES_SELECT, _kg_sql
-
     seed = BFS_SEED_PREFIX
     body = f"""
 , final AS ({_TRIPLES_SELECT}),
@@ -804,8 +790,6 @@ FROM allhops GROUP BY 1, 2"""
 
 
 def _sql_kg_edge_date_filter() -> str:
-    from .registry import _TRIPLES_SELECT, _kg_sql
-
     body = f"""
 , final AS ({_TRIPLES_SELECT})
 SELECT * FROM final
@@ -825,10 +809,9 @@ EDGE_QUERIES = [
 def q_kg_edge_fulltext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 proper: BM25 fulltext over the canonical edges' fact text
     (search_utils.py:146-197), doc key = group|subj|pred|obj."""
-    from . import registry
-    from .plans.pipeline import triples_view
+    from ..plans.pipeline import triples_view
 
-    t = registry._graph(spark, sf_dir)
+    t = _graph(spark, sf_dir)
     corpus_df = triples_view(t).select(
         F.concat_ws("|", "group_id", "subj", "pred", "obj").alias("edge_key"),
         F.col("fact"),
@@ -851,6 +834,7 @@ FROM ranked WHERE rank <= 10"""
 
 NAME_QUERIES = ["alice johnson", "acme corp", "helios energy", "paris"]
 
+
 # Quantized-embedding similarity: the L2-normalized 1024-dim hashing
 # embeddings are quantized to integer milli-units and written to a parquet
 # view that BOTH engines read — the Spark query scores with an exact
@@ -859,7 +843,6 @@ NAME_QUERIES = ["alice johnson", "acme corp", "helios energy", "paris"]
 # double). Integer quantization is also the realistic 100-TB pattern
 # (int8/int16-quantized ANN); min_score and ranking live in the exact
 # integer domain so the gate is bit-stable.
-ORACLE_SCRATCH = "/dev/shm/graphiti_spark_oracle"
 SIM_MIN_SCORE_Q = 200_000  # 0.2 cosine at milli-quantization (1e3 * 1e3)
 MMR_K = 5
 
@@ -885,7 +868,7 @@ def _write_node_embeddings(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     shared parquet inputs of the similarity/MMR queries and their oracles
     (the 'embeddings table' of the production design — at scale this is a
     persisted Iceberg table, not a per-query recompute)."""
-    from .functions.embed import embed_texts, with_embedding
+    from ..functions.embed import embed_texts, with_embedding
 
     nodes_path, queries_path = node_emb_paths(sf_dir)
     t = _graph(spark, sf_dir)
@@ -990,7 +973,7 @@ scored AS (
 )"""
 
 
-def _sql_kg_node_similarity(sf_dir: str) -> str:
+def _node_similarity_sql(sf_dir: str) -> str:
     return f"""
 WITH {_sim_oracle_ctes(sf_dir).lstrip()},
 ranked AS (
@@ -1002,7 +985,7 @@ SELECT query_id, CAST(rank AS BIGINT) AS rank, uuid, score_q
 FROM ranked WHERE rank <= 5"""
 
 
-def _sql_kg_mmr(sf_dir: str) -> str:
+def _mmr_sql(sf_dir: str) -> str:
     """Greedy MMR unrolled to MMR_K selection steps: step i picks, per
     query, the remaining candidate maximizing rel - max(dot to chosen),
     ties by uuid asc — the exact integer recurrence of q_kg_mmr."""
@@ -1064,8 +1047,6 @@ def q_kg_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_filtered_search() -> str:
-    from .registry import _kg_sql
-
     body = (
         """
 , labs AS (
@@ -1103,14 +1084,14 @@ def q_search_cross_encoder(spark: SparkSession, sf_dir: str) -> DataFrame:
     idf-weighted distinct-term overlap with symmetric length
     normalization (operators/cross_encoder.py), reference surface
     cross_encoder/client.py:28-40."""
-    from .operators.cross_encoder import cross_encoder_rank
+    from ..operators.cross_encoder import cross_encoder_rank
 
     qs = search.make_queries_df(spark, DOC_QUERIES)
-    return cross_encoder_rank(_documents(spark, sf_dir), qs, "doc_id", "text", k=10)
+    return cross_encoder_rank(read_documents(spark, sf_dir), qs, "doc_id", "text", k=10)
 
 
 def _sql_search_cross_encoder() -> str:
-    from .operators.cross_encoder import sql_cross_encoder
+    from ..operators.cross_encoder import sql_cross_encoder
 
     ctes = sql_cross_encoder(
         "SELECT doc_id AS doc, text FROM documents", _queries_values()
@@ -1128,7 +1109,7 @@ def _ce_training_sample(sf_dir: str) -> list[str]:
     and therefore the trained integer weights — are byte-identical."""
     import duckdb
 
-    from .operators.ce_learned import sample_passages
+    from ..operators.ce_learned import sample_passages
 
     rows = duckdb.connect().execute(
         f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet' "
@@ -1141,7 +1122,7 @@ _CE_WEIGHTS_CACHE: dict[str, list[int]] = {}
 
 
 def _ce_weights(sf_dir: str) -> list[int]:
-    from .operators.ce_learned import train_weights
+    from ..operators.ce_learned import train_weights
 
     if sf_dir not in _CE_WEIGHTS_CACHE:
         _CE_WEIGHTS_CACHE[sf_dir] = train_weights(_ce_training_sample(sf_dir))
@@ -1155,17 +1136,17 @@ def q_search_ce_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample, then applied distributed (operators/ce_learned.py). The
     sanctioned idf-overlap stand-in remains the default Q13; this is the
     learned upgrade under the same exact gate."""
-    from .operators.ce_learned import learned_ce_rank
+    from ..operators.ce_learned import learned_ce_rank
 
     qs = search.make_queries_df(spark, DOC_QUERIES)
     return learned_ce_rank(
-        _documents(spark, sf_dir), qs, "doc_id", "text",
+        read_documents(spark, sf_dir), qs, "doc_id", "text",
         weights=_ce_weights(sf_dir), k=10,
     )
 
 
 def _sql_search_ce_learned() -> str:
-    from .operators.ce_learned import sql_learned_ce
+    from ..operators.ce_learned import sql_learned_ce
 
     ctes = sql_learned_ce(
         "SELECT doc_id AS doc, text FROM documents",
@@ -1197,9 +1178,9 @@ def q_kg_edge_dedup_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
     set (per raw predicate), i.e. the candidate surface the pipeline's
     materialize_edges collapses (reference search_utils.py:702-740 +
     edge_operations.py:151-192)."""
-    from .functions.embed import with_embedding
-    from .ontology import Ontology
-    from .operators.materialize import (
+    from ..functions.embed import with_embedding
+    from ..ontology import Ontology
+    from ..operators.materialize import (
         edge_dup_candidates,
         materialize_edges,
         resolve_edge_pointers,
@@ -1226,8 +1207,6 @@ def q_kg_edge_dedup_similar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_edge_dedup_similar() -> str:
-    from .registry import _kg_sql
-
     path = fact_emb_path(_oracle_sf_dir())
     body = f"""
 , raw AS (
@@ -1272,7 +1251,7 @@ def q_kg_node_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance to a center node (search_utils.py:758-795) — center-adjacent
     hits first, unreachable last. Keys are (group|canon_name), matching
     the BFS queries."""
-    from .plans.pipeline import triples_view
+    from ..plans.pipeline import triples_view
 
     t = _graph(spark, sf_dir)
     tv = triples_view(t)
@@ -1298,8 +1277,6 @@ def q_kg_node_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_node_distance() -> str:
-    from .registry import _kg_sql
-
     body = (
         f"""
 , ncorp AS (SELECT DISTINCT group_id || '|' || canon_name AS doc,
@@ -1353,8 +1330,6 @@ def q_kg_mentions_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_mentions_rerank() -> str:
-    from .registry import _kg_sql
-
     body = (
         """
 , canonu AS (
@@ -1398,8 +1373,8 @@ def q_kg_community_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q6 under the exact gate: cosine similarity over community-name
     embeddings (search_utils.py:549-579) — the quantized shared-parquet
     pattern of kg_node_similarity applied to the LPA community table."""
-    from .functions.embed import embed_texts, with_embedding
-    from .operators.communities import build_communities
+    from ..functions.embed import embed_texts, with_embedding
+    from ..operators.communities import build_communities
 
     t = _graph(spark, sf_dir)
     comm, _ = build_communities(t.nodes, t.edges)
@@ -1436,8 +1411,6 @@ def q_kg_community_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_community_similarity() -> str:
-    from .registry import _kg_sql, communities_ctes
-
     cpath, qpath = comm_emb_paths(_oracle_sf_dir())
     body = (
         communities_ctes()
@@ -1469,7 +1442,7 @@ COMM_QUERIES = ["alice johnson community", "acme corp", "paris community of"]
 def q_kg_community_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3: community fulltext search (search_utils.py:496-529) — BM25 over
     the LPA community names."""
-    from .operators.communities import build_communities
+    from ..operators.communities import build_communities
 
     t = _graph(spark, sf_dir)
     comm, _ = build_communities(t.nodes, t.edges)
@@ -1478,8 +1451,6 @@ def q_kg_community_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_kg_community_search() -> str:
-    from .registry import _kg_sql, communities_ctes
-
     body = (
         communities_ctes()
         + ",\n"
@@ -1491,76 +1462,12 @@ FROM ranked WHERE rank <= 5"""
     return _kg_sql(body, with_eds=True)
 
 
-# The similarity/MMR oracles read the shared quantized-embedding parquet
-# written by their Spark twins; the driver's gate runs at sf0.01 (its
-# DuckDB views are registered for that scale), overridable for local runs.
-def _oracle_sf_dir() -> str:
-    import os
-
-    return os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
+def _sql_kg_node_similarity() -> str:
+    return _node_similarity_sql(_oracle_sf_dir())
 
 
-def _sql_kg_node_similarity_env() -> str:
-    return _sql_kg_node_similarity(_oracle_sf_dir())
-
-
-def _sql_kg_mmr_env() -> str:
-    return _sql_kg_mmr(_oracle_sf_dir())
-
-
-SEARCH_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "kg_filtered_search": q_kg_filtered_search,
-    "kg_edge_dedup_similar": q_kg_edge_dedup_similar,
-    "kg_node_distance": q_kg_node_distance,
-    "kg_mentions_rerank": q_kg_mentions_rerank,
-    "kg_community_similarity": q_kg_community_similarity,
-    "search_cross_encoder": q_search_cross_encoder,
-    "search_ce_learned": q_search_ce_learned,
-    "kg_community_search": q_kg_community_search,
-    "kg_bfs_edges": q_kg_bfs_edges,
-    "kg_edge_fulltext": q_kg_edge_fulltext,
-    "kg_node_similarity": q_kg_node_similarity,
-    "kg_mmr": q_kg_mmr,
-    "search_bm25": q_search_bm25,
-    "search_eval": q_search_eval,
-    "search_rrf": q_search_rrf,
-    "kg_retrieve_episodes": q_kg_retrieve_episodes,
-    "kg_bfs": q_kg_bfs,
-    "kg_edge_date_filter": q_kg_edge_date_filter,
-    "kg_asof_snapshot": q_kg_asof_snapshot,
-    "kg_bfs_asof": q_kg_bfs_asof,
-    "kg_closeness": q_kg_closeness,
-    "kg_betweenness": q_kg_betweenness,
-    "kg_sorted_neighborhood": q_kg_sorted_neighborhood,
-    "kg_type_propagation": q_kg_type_propagation,
-}
-
-SEARCH_ORACLES: dict[str, Callable[[], str]] = {
-    "kg_filtered_search": _sql_kg_filtered_search,
-    "kg_edge_dedup_similar": _sql_kg_edge_dedup_similar,
-    "kg_node_distance": _sql_kg_node_distance,
-    "kg_mentions_rerank": _sql_kg_mentions_rerank,
-    "kg_community_similarity": _sql_kg_community_similarity,
-    "search_cross_encoder": _sql_search_cross_encoder,
-    "search_ce_learned": _sql_search_ce_learned,
-    "kg_community_search": _sql_kg_community_search,
-    "kg_bfs_edges": _sql_kg_bfs_edges,
-    "kg_node_similarity": _sql_kg_node_similarity_env,
-    "kg_mmr": _sql_kg_mmr_env,
-    "kg_edge_fulltext": _sql_kg_edge_fulltext,
-    "search_bm25": _sql_search_bm25,
-    "search_eval": _sql_search_eval,
-    "search_rrf": _sql_search_rrf,
-    "kg_retrieve_episodes": _sql_kg_retrieve_episodes,
-    "kg_bfs": _sql_kg_bfs,
-    "kg_edge_date_filter": _sql_kg_edge_date_filter,
-    "kg_asof_snapshot": _sql_kg_asof_snapshot,
-    "kg_bfs_asof": _sql_kg_bfs_asof,
-    "kg_closeness": _sql_kg_closeness,
-    "kg_betweenness": _sql_kg_betweenness,
-    "kg_sorted_neighborhood": _sql_kg_sorted_neighborhood,
-    "kg_type_propagation": _sql_kg_type_propagation,
-}
+def _sql_kg_mmr() -> str:
+    return _mmr_sql(_oracle_sf_dir())
 
 
 # --- pseudo-relevance feedback (RM3-lite query expansion) ------------------
@@ -1576,7 +1483,7 @@ def q_search_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     postings table across both passes."""
     qs = search.make_queries_df(spark, DOC_QUERIES)
     return search.bm25_prf_topk(
-        _documents(spark, sf_dir), qs, "doc_id", "text",
+        read_documents(spark, sf_dir), qs, "doc_id", "text",
         fb_k=PRF_FB_K, n_exp=PRF_N_EXP, k=PRF_K,
     )
 
@@ -1634,7 +1541,3 @@ ranked2 AS (
 )
 SELECT query_id, CAST(rank AS BIGINT) AS rank, doc AS doc_id, score_u
 FROM ranked2 WHERE rank <= {PRF_K}"""
-
-
-SEARCH_QUERIES["search_prf"] = q_search_prf
-SEARCH_ORACLES["search_prf"] = _sql_search_prf

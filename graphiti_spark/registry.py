@@ -1,7634 +1,30 @@
-"""Driver-facing query registry: every implemented operator exposed as a
-(spark, sf_dir) -> DataFrame callable plus, where SQL-expressible, the
-equivalent DuckDB oracle SQL over the driver's pre-registered parquet views
-(`documents`, `embeddings`, ...).
-
-Column names and integer widths are aligned on both sides (everything
-integral is BIGINT; ratios are exact integer micro-units) so the driver's
-order-insensitive value-hash comparison is bit-exact.
-"""
+"""Driver-facing query registry, built by convention: every `q_<name>`
+function defined in a family module of `graphiti_spark.queries` is the
+query `<name>`, and that module's `_sql_<name>` is its DuckDB oracle."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-from . import corpus
-from .operators import ann, docs
-from .operators import docs as docs_mod
-from .operators.materialize import JOB_TS
-from .plans.pipeline import GraphTables, build_graph, triples_view
+from .queries import ann, docs, events, graph, kg, media, search
 
-# ---------------------------------------------------------------------------
-# KG pipeline queries (memoized per sf_dir — the driver runs queries one by
-# one against the same SparkSession).
-# ---------------------------------------------------------------------------
 
-_GRAPH_CACHE: dict[str, GraphTables] = {}
+def _collect(mod):
+    for attr, fn in vars(mod).items():
+        if attr.startswith("q_") and getattr(fn, "__module__", None) == mod.__name__:
+            name = attr[2:]
+            oracle = getattr(mod, f"_sql_{name}", None)
+            if oracle is None:
+                raise ImportError(f"query {name} has no oracle _sql_{name} in {mod.__name__}")
+            yield name, fn, oracle
 
 
-def _graph(spark: SparkSession, sf_dir: str) -> GraphTables:
-    if sf_dir not in _GRAPH_CACHE:
-        _GRAPH_CACHE[sf_dir] = build_graph(spark, sf_dir)
-    return _GRAPH_CACHE[sf_dir]
-
-
-def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flagship deliverable: deduplicated canonical (subj, pred, obj)
-    triples with bi-temporal validity."""
-    t = _graph(spark, sf_dir)
-    return triples_view(t).select(
-        "group_id",
-        "subj",
-        "pred",
-        "obj",
-        "fact",
-        "valid_at",
-        "invalid_at",
-        F.size("episodes").cast("long").alias("n_episodes"),
-    )
-
-
-def q_kg_contradictions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Invalidated edges only — the temporal-invalidation contract
-    (X10-X12; reference tests test_edge_operations.py:95-237)."""
-    return (
-        q_kg_triples(spark, sf_dir)
-        .where(F.col("invalid_at").isNotNull())
-        .withColumn("expired_at", F.lit(JOB_TS))
-    )
-
-
-def q_kg_triple_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG-embedding training export (TransE/DistMult-style): every
-    canonical (subj, pred, obj) positive plus ONE deterministic
-    tail-corrupted negative — obj replaced by the group's node at index
-    md5(subj|pred|obj) % n_nodes (skipping a collision with the true
-    tail by +1 mod n). Negative sampling is THE data product KG-embedding
-    trainers consume; determinism (hash-indexed, not random) is what
-    puts it under the exact-match oracle gate. Plan: nodes rank once per
-    group (partitioned window over the entity table), edges join the
-    rank table on (group_id, idx) — one co-partitioned join, both sides
-    keyed by group, no broadcast assumptions at entity scale."""
-    t = _graph(spark, sf_dir)
-    tri = triples_view(t).select("group_id", "subj", "pred", "obj")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("group_id").orderBy("name")
-    nodes = (
-        t.nodes.select("group_id", "name").distinct()
-        .withColumn("idx", F.row_number().over(w) - 1)
-    )
-    counts = nodes.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_nodes"))
-    key = F.expr(
-        "cast(conv(substr(md5(subj || '|' || pred || '|' || obj), 1, 15), 16, 10)"
-        " as bigint)"
-    )
-    edges = tri.join(counts, "group_id").withColumn(
-        "idx", (key % F.col("n_nodes")).cast("int")
-    )
-    neg = (
-        edges.join(nodes, ["group_id", "idx"])
-        .withColumn(
-            "neg_obj",
-            F.col("name"),
-        )
-    )
-    # collision with the true tail -> deterministic +1 mod n re-pick
-    coll = (
-        neg.where(F.col("neg_obj") == F.col("obj"))
-        .select(
-            "group_id", "subj", "pred", "obj",
-            ((F.col("idx") + 1) % F.col("n_nodes")).cast("int").alias("idx"),
-        )
-        .join(nodes, ["group_id", "idx"])
-        .withColumn("neg_obj", F.col("name"))
-    )
-    keep = ["group_id", "subj", "pred", "obj", "neg_obj"]
-    fixed = (
-        neg.where(F.col("neg_obj") != F.col("obj"))
-        .select(*keep)
-        .unionByName(coll.select(*keep))
-    )
-    pos = tri.select(
-        "group_id", "subj", "pred", "obj", F.lit("pos").alias("label")
-    )
-    negs = fixed.select(
-        "group_id", "subj", "pred",
-        F.col("neg_obj").alias("obj"), F.lit("neg").alias("label"),
-    )
-    return pos.unionByName(negs)
-
-
-def _sql_kg_triple_negatives() -> str:
-    body = """
-, final AS (SELECT DISTINCT e.group_id, e.subj, e.pred, e.obj FROM eds e),
-names AS (
-  SELECT group_id, name,
-         row_number() OVER (PARTITION BY group_id ORDER BY name) - 1 AS idx
-  FROM (SELECT DISTINCT group_id, canon_name AS name FROM canon)
-),
-cnt AS (SELECT group_id, count(*) AS n_nodes FROM names GROUP BY 1),
-keyed AS (
-  SELECT f.*, c.n_nodes,
-         CAST(('0x' || substr(md5(f.subj || '|' || f.pred || '|' || f.obj), 1, 15))::UBIGINT
-              % c.n_nodes AS INT) AS idx
-  FROM final f JOIN cnt c USING (group_id)
-),
-pick AS (
-  SELECT k.group_id, k.subj, k.pred, k.obj,
-         CASE WHEN n1.name = k.obj THEN n2.name ELSE n1.name END AS neg_obj
-  FROM keyed k
-  JOIN names n1 ON n1.group_id = k.group_id AND n1.idx = k.idx
-  JOIN names n2 ON n2.group_id = k.group_id
-              AND n2.idx = (k.idx + 1) % k.n_nodes
-)
-SELECT group_id, subj, pred, obj, 'pos' AS label FROM final
-UNION ALL
-SELECT group_id, subj, pred, neg_obj AS obj, 'neg' AS label FROM pick"""
-    return _kg_sql(body, with_eds=True)
-
-
-SNAP_T1, SNAP_T2 = "2024-01-05 00:00:00", "2024-01-20 00:00:00"
-
-
-def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal snapshot DIFF between two as-of times — the 'what changed
-    in the graph this week' product of the bi-temporal model (W3/W4 +
-    J10): an edge is active at T iff valid_at <= T < coalesce(invalid_at,
-    +inf); edges whose activity flips between T1 and T2 emit one row
-    ('added' or 'removed'). No join, no shuffle beyond the base edge
-    read: both memberships evaluate in ONE projection over the canonical
-    edge table and the flip test is a filter — the plan a 100 TB history
-    table wants (partition-pruned by valid_at, then map-only)."""
-    t = _graph(spark, sf_dir)
-    tri = triples_view(t)
-    a1 = (
-        (F.col("valid_at") <= F.lit(SNAP_T1).cast("timestamp"))
-        & (F.col("invalid_at").isNull()
-           | (F.col("invalid_at") > F.lit(SNAP_T1).cast("timestamp")))
-    )
-    a2 = (
-        (F.col("valid_at") <= F.lit(SNAP_T2).cast("timestamp"))
-        & (F.col("invalid_at").isNull()
-           | (F.col("invalid_at") > F.lit(SNAP_T2).cast("timestamp")))
-    )
-    return (
-        tri.withColumn("_a1", a1).withColumn("_a2", a2)
-        .where(F.col("_a1") != F.col("_a2"))
-        .select(
-            "group_id",
-            "subj",
-            "pred",
-            "obj",
-            F.when(F.col("_a2"), F.lit("added"))
-            .otherwise(F.lit("removed"))
-            .alias("change"),
-            "valid_at",
-            "invalid_at",
-        )
-    )
-
-
-def _sql_kg_snapshot_diff() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-flags AS (
-  SELECT *,
-         (valid_at <= TIMESTAMP '{SNAP_T1}'
-          AND (invalid_at IS NULL OR invalid_at > TIMESTAMP '{SNAP_T1}')) AS a1,
-         (valid_at <= TIMESTAMP '{SNAP_T2}'
-          AND (invalid_at IS NULL OR invalid_at > TIMESTAMP '{SNAP_T2}')) AS a2
-  FROM final
-)
-SELECT group_id, subj, pred, obj,
-       CASE WHEN a2 THEN 'added' ELSE 'removed' END AS change,
-       valid_at, invalid_at
-FROM flags WHERE a1 <> a2"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_episodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Clean+chunk stage output (S12): one row per episode chunk."""
-    t = _graph(spark, sf_dir)
-    return t.episodes.select(
-        "uuid",
-        "url",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        "group_id",
-        F.length("content").cast("long").alias("n_chars"),
-        "valid_at",
-    )
-
-
-def q_kg_episode_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """episodes.entity_edges materialized (reference nodes.py:137-140;
-    set by graphiti.py:467 after edge resolution): per episode, the
-    sorted list of resolved fact-edge uuids whose provenance includes
-    it, inverted from the edges' episodes arrays (one explode + one
-    partial-agg'd groupBy on the skinny uuid projection). Fact-free
-    episodes keep an empty list — the left join is part of the
-    contract."""
-    t = _graph(spark, sf_dir)
-    return t.episode_facts.select(
-        "uuid",
-        "url",
-        F.col("chunk_idx").cast("long").alias("chunk_idx"),
-        F.size("entity_edges").cast("long").alias("n_facts"),
-        F.array_join("entity_edges", ",").alias("fact_uuids"),
-    )
-
-
-def q_kg_incremental_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """graphiti's add_episode loop at batch scale (plans/incremental.py):
-    bootstrap the graph on the even-doc_id half of the corpus, then merge
-    the odd half as a second batch — delta entity resolution by component
-    contraction (CC runs on O(batch) contracted supernodes) and
-    touched-pair-only edge recompaction (untouched edges pass through
-    byte-identical). The oracle is kg_triples' one-shot batch SQL:
-    incremental == batch is the contract, hash-exact."""
-    from .plans import incremental
-    from .sources.pages import build_pages
-
-    pages = build_pages(spark, sf_dir)
-    st = incremental.initial_state(pages.where(F.col("doc_id") % 2 == 0))
-    st = incremental.merge_batch(st, pages.where(F.col("doc_id") % 2 == 1))
-    return incremental.incremental_triples(st)
-
-
-_LINEAGE_ROOTS: dict[str, str] = {}
-
-
-def q_kg_lineage_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """North-rule resumability surface made oracle-checkable: run the
-    partition-range checkpointed extraction (plans/lineage.py — the
-    batch redesign of the reference's per-call LLM response cache,
-    graphiti_core/llm_client/client.py:85-95) over 8 doc_id ranges into
-    a scratch dir, then return the committed per-range lineage rows
-    (range_id, row_count, content checksum). The oracle recomputes both
-    numbers per range from the generative SQL — raw triples plus
-    per-episode deduped mention spans for docs with doc_id % 8 = k — so
-    a hash-exact match proves the checkpoint/resume path emits exactly
-    the rows the one-shot batch plan does, range by range, with an
-    order-independent checksum any ANSI engine can audit."""
-    import tempfile
-
-    from .plans import lineage
-
-    if sf_dir not in _LINEAGE_ROOTS:
-        root = tempfile.mkdtemp(prefix="kg_lineage_")
-        lineage.run_partitioned(spark, sf_dir, root, n_ranges=8)
-        _LINEAGE_ROOTS[sf_dir] = root
-    m = spark.read.parquet(f"{_LINEAGE_ROOTS[sf_dir]}/metrics")
-    return m.select(
-        F.col("range_id").cast("long").alias("range_id"),
-        "stage",
-        F.col("row_count").cast("long").alias("row_count"),
-        F.col("checksum").cast("long").alias("checksum"),
-    )
-
-
-def q_kg_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Canonical entity nodes after resolution (X5/X7 + A8)."""
-    t = _graph(spark, sf_dir)
-    return t.nodes.select(
-        "group_id",
-        "name",
-        F.array_join(F.col("labels"), "/").alias("labels_str"),
-        F.col("n_aliases").cast("long").alias("n_aliases"),
-    )
-
-
-def q_kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MENTIONS provenance rollup (X14 + A2): episode-mention count per
-    canonical entity."""
-    t = _graph(spark, sf_dir)
-    counts = t.mention_edges.groupBy("entity_uuid").agg(
-        F.count(F.lit(1)).alias("n_mentions")
-    )
-    names = t.nodes.select(F.col("uuid").alias("entity_uuid"), "group_id", "name")
-    return counts.join(names, "entity_uuid").select(
-        "group_id", "name", F.col("n_mentions").cast("long").alias("n_mentions")
-    )
-
-
-def q_kg_node_summaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-derived node summaries (X15): identity sentence + the
-    node's K earliest facts, the deterministic analogue of the
-    reference's <=500-word LLM summary (prompts/summarize_nodes.py:48-125,
-    node_operations.py:357-376). Built once at materialization time
-    (operators/summaries.py); this query just reads the column."""
-    t = _graph(spark, sf_dir)
-    return t.nodes.select("group_id", "name", "summary")
-
-
-def q_kg_episode_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """nodes_and_edges_by_episode (Q16/S8 provenance expansion,
-    reference graphiti.py:789-812) as a set query: for every episode in a
-    deterministic selection (uuid md5 starting 'a'), the number of
-    mentioned canonical entities and of fact edges carrying the episode
-    in their provenance array. Mention leg is a key join on the skinny
-    mention table; edge leg explodes the provenance array — both
-    partial-agg before the join back."""
-    t = _graph(spark, sf_dir)
-    eps = t.episodes.where(F.col("uuid").startswith("a")).select(
-        F.col("uuid").alias("episode_uuid")
-    )
-    nn = (
-        t.mention_edges.join(eps, "episode_uuid")
-        .groupBy("episode_uuid")
-        .agg(F.count_distinct("entity_uuid").alias("n_nodes"))
-    )
-    ee = (
-        t.edges.select(F.explode("episodes").alias("episode_uuid"), "uuid")
-        .join(eps, "episode_uuid")
-        .groupBy("episode_uuid")
-        .agg(F.count_distinct("uuid").alias("n_edges"))
-    )
-    return (
-        eps.join(nn, "episode_uuid", "left")
-        .join(ee, "episode_uuid", "left")
-        .select(
-            "episode_uuid",
-            F.coalesce("n_nodes", F.lit(0)).cast("long").alias("n_nodes"),
-            F.coalesce("n_edges", F.lit(0)).cast("long").alias("n_edges"),
-        )
-    )
-
-
-def q_kg_remove_episode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Provenance-aware episode removal (S11, graphiti.py:758-787): drop a
-    deterministic ~25% of episodes (uuid md5 starting 0-3), then emit the
-    surviving canonical edges with their remaining provenance counts.
-    Functional over the cached graph (operators/maintenance.py) — the
-    memoized tables are not mutated."""
-    from .operators.maintenance import remove_episodes_tables
-
-    t = _graph(spark, sf_dir)
-    removed = t.episodes.where(
-        F.substring("uuid", 1, 1).isin("0", "1", "2", "3")
-    ).select("uuid")
-    _eps, edges2, _men, _nodes = remove_episodes_tables(
-        t.episodes, t.edges, t.mention_edges, t.nodes, removed
-    )
-    subj = t.nodes.select(
-        F.col("uuid").alias("source_node_uuid"), F.col("name").alias("subj")
-    )
-    obj = t.nodes.select(
-        F.col("uuid").alias("target_node_uuid"), F.col("name").alias("obj")
-    )
-    return (
-        edges2.join(subj, "source_node_uuid")
-        .join(obj, "target_node_uuid")
-        .select(
-            "group_id",
-            "subj",
-            F.col("name").alias("pred"),
-            "obj",
-            F.size("episodes").cast("long").alias("n_episodes_left"),
-        )
-    )
-
-
-def q_kg_community_attach(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental community attach (X17, reference
-    community_operations.py:261-298): the plurality community among a
-    node's neighbors, weighted by edge count, ties toward the larger
-    community id — applied to every node with at least one neighbor (the
-    bulk form of determine_entity_community)."""
-    from .operators.communities import (
-        determine_entity_community,
-        label_propagation,
-    )
-
-    t = _graph(spark, sf_dir)
-    labels = label_propagation(t.nodes, t.edges)
-    att = determine_entity_community(None, labels, t.edges)
-    return att.join(
-        t.nodes.select("uuid", "name"), "uuid"
-    ).select("group_id", "name", F.col("community").cast("long").alias("community"))
-
-
-# add_triplet fixture (X18): two duplicate inserts (provenance merge), one
-# contradiction pair (invalidation re-run), one endpoint ("Dublin") that
-# resolves against the existing graph when present at the given sf
-_ADD_TRIPLETS = [
-    ("src0", "Test Alpha Labs", "BASED_IN", "Dublin",
-     "Test Alpha Labs is based in Dublin.", "2024-03-01 00:00:00", "ep-t1"),
-    ("src0", "Test Alpha Labs", "BASED_IN", "Dublin",
-     "Test Alpha Labs is based in Dublin.", "2024-03-01 00:00:00", "ep-t2"),
-    ("src0", "Test Person", "WORKS_AT", "Test Alpha Labs",
-     "Test Person works at Test Alpha Labs.", "2024-01-15 00:00:00", "ep-t3"),
-    ("src0", "Test Person", "NO_LONGER_WORKS_AT", "Test Alpha Labs",
-     "Test Person left Test Alpha Labs.", "2024-07-01 00:00:00", "ep-t4"),
-]
-
-
-def q_kg_add_triplet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """add_triplet (X18, reference graphiti.py:723-756): insert literal
-    triplets through the full path — endpoint resolution against the
-    canonical graph by normalized name, deterministic new-node minting,
-    (pair, pred) edge merge with provenance union, and a fresh
-    contradiction-invalidation pass — then emit the edges of the inserted
-    subjects. Functional: the memoized graph is not mutated."""
-    from .operators.triplet import add_triplets
-
-    t = _graph(spark, sf_dir)
-    trip = spark.createDataFrame(
-        _ADD_TRIPLETS,
-        "group_id string, subj_name string, pred string, obj_name string, "
-        "fact string, valid_at string, episode_uuid string",
-    ).withColumn("valid_at", F.to_timestamp("valid_at"))
-    nodes2, edges2 = add_triplets(t.nodes, t.edges, trip)
-    subj = nodes2.select(
-        F.col("uuid").alias("source_node_uuid"), F.col("name").alias("subj")
-    )
-    obj = nodes2.select(
-        F.col("uuid").alias("target_node_uuid"), F.col("name").alias("obj")
-    )
-    return (
-        edges2.join(subj, "source_node_uuid")
-        .join(obj, "target_node_uuid")
-        .where(
-            (F.col("group_id") == "src0")
-            & F.col("subj").isin("Test Alpha Labs", "Test Person")
-        )
-        .select(
-            "group_id",
-            "subj",
-            F.col("name").alias("pred"),
-            "obj",
-            "fact",
-            "valid_at",
-            "invalid_at",
-            F.size("episodes").cast("long").alias("n_episodes"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Document-pipeline queries (training-data ops over `documents`).
-# ---------------------------------------------------------------------------
-
-
-def q_doc_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = docs.token_stats(docs.read_documents(spark, sf_dir))
-    return out.select(
-        "doc_id", *[F.col(c).cast("long").alias(c) for c in out.columns[1:]]
-    )
-
-
-def q_doc_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact per-language token-count deciles (histogram-CDF plan — no
-    corpus-wide sort); the distribution profile curation thresholds are
-    read from."""
-    return docs.length_deciles(docs.read_documents(spark, sf_dir))
-
-
-def q_doc_stats_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dataset-card statistics at every (lang, source) granularity in one
-    rollup pass (single shuffle for all grouping sets)."""
-    return docs_mod.stats_rollup(docs.read_documents(spark, sf_dir))
-
-
-def q_kg_entity_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity time-ordered fact history (subject+object legs,
-    deterministic seq) — the entity biography view."""
-    from .operators.search import entity_timeline
-
-    return entity_timeline(q_kg_triples(spark, sf_dir))
-
-
-def q_doc_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = docs.quality_scores(docs.read_documents(spark, sf_dir))
-    return out.select(
-        "doc_id", *[F.col(c).cast("long").alias(c) for c in out.columns[1:]]
-    )
-
-
-def q_doc_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Char-trigram-profile language ID (Cavnar & Trenkle) over 10
-    alphabetic languages + CJK detection — the fastText-free classifier;
-    per-language scores + the argmax guess, all one codegen projection."""
-    out = docs.lang_id(docs.read_documents(spark, sf_dir))
-    score_cols = ["zh_score"] + [f"{lg}_score" for lg in docs.LANG_TRIGRAMS]
-    return out.select(
-        "doc_id",
-        "lang_declared",
-        *[F.col(c).cast("long").alias(c) for c in score_cols],
-        "lang_guess",
-    )
-
-
-def q_doc_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = docs.gopher_rules(docs.read_documents(spark, sf_dir))
-    return out.select(
-        "doc_id", *[F.col(c).cast("long").alias(c) for c in out.columns[1:]]
-    )
-
-
-def q_doc_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = docs.repetition_stats(docs.read_documents(spark, sf_dir))
-    longs = [
-        "n_words",
-        "n_distinct_words",
-        "dup_word_frac_u",
-        "top_bigram_n",
-        "top_bigram_frac_u",
-    ]
-    return out.select(
-        "doc_id",
-        *[F.col(c).cast("long").alias(c) for c in longs[:3]],
-        "top_bigram",
-        *[F.col(c).cast("long").alias(c) for c in longs[3:]],
-    )
-
-
-def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = docs.fingerprints(docs.read_documents(spark, sf_dir))
-    return out.select(
-        "doc_id", "fingerprint", F.col("n_norm_chars").cast("long").alias("n_norm_chars")
-    )
-
-
-def q_doc_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return docs.exact_dup_groups(docs.read_documents(spark, sf_dir)).select(
-        "fingerprint",
-        F.col("n_docs").cast("long").alias("n_docs"),
-        "canonical_doc_id",
-    )
-
-
-def q_doc_ngram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return docs.ngram_jaccard_pairs(docs.read_documents(spark, sf_dir)).select(
-        "doc_a",
-        "doc_b",
-        F.col("shared").cast("long").alias("shared"),
-        "jaccard_u",
-    )
-
-
-def q_doc_para_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style cross-document boilerplate removal over the cleaned
-    paragraph table (= the episodes stage: one row per non-empty
-    paragraph with its position)."""
-    t = _graph(spark, sf_dir)
-    out = docs_mod.boilerplate_dedup(
-        t.episodes.select("url", "chunk_idx", "content")
-    )
-    return out.select(
-        "url",
-        F.col("n_paras").cast("long").alias("n_paras"),
-        F.col("n_kept").cast("long").alias("n_kept"),
-        "kept_md5",
-    )
-
-
-def q_doc_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII scrub over `documents`. The synthetic corpus carries no PII,
-    so the query plants deterministic doc_id-derived emails / phone
-    numbers / IPv4 literals first (both sides construct the identical
-    augmented text), then counts + redacts them — the machinery under
-    test is the detection/redaction projection, not the seeding."""
-    d = docs.read_documents(spark, sf_dir)
-    did = F.col("doc_id")
-    aug = d.withColumn(
-        "text",
-        F.concat(
-            "text",
-            F.when(
-                did % 3 == 0,
-                F.concat(
-                    F.lit(" contact user"),
-                    did.cast("string"),
-                    F.lit("@example.com today"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 5 == 0,
-                F.concat(
-                    F.lit(" call 555-"),
-                    F.lpad((did % 1000).cast("string"), 3, "0"),
-                    F.lit("-"),
-                    F.lpad((did % 10000).cast("string"), 4, "0"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                did % 7 == 0,
-                F.concat(
-                    F.lit(" from 10.0."),
-                    (did % 256).cast("string"),
-                    F.lit("."),
-                    (did % 254 + 1).cast("string"),
-                ),
-            ).otherwise(F.lit("")),
-        ),
-    )
-    out = docs_mod.pii_scrub(aug)
-    return out.select(
-        "doc_id",
-        *[F.col(c).cast("long").alias(c) for c in ("n_emails", "n_phones", "n_ips")],
-        "redacted_md5",
-    )
-
-
-_URL_VARIANTS_SQL = """
-SELECT CAST(doc_id AS BIGINT) AS id,
-       'https://' || source || '.example.com/doc/' || doc_id AS url
-FROM documents
-UNION ALL
-SELECT doc_id + 1000000,
-       'HTTPS://WWW.' || upper(source) || '.EXAMPLE.COM:443/doc/' || doc_id
-         || '/?utm_source=feed&gclid=x123#frag'
-FROM documents WHERE doc_id < 50
-UNION ALL
-SELECT doc_id + 2000000,
-       'https://' || source || '.example.com/doc/' || doc_id || '?b=2&a=1'
-FROM documents WHERE doc_id >= 50 AND doc_id < 60"""
-
-
-def q_doc_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + url-level dedup (operators/urls.py) — the
-    crawl-frontier first pass: scheme/host case, www, default ports,
-    fragments, trailing slashes and tracking params collapse; surviving
-    params sort. Fixture: every document's url ∪ a full-noise variant of
-    the first 50 (case+www+:443+utm+fragment — canonicalizes INTO the
-    base url's group) ∪ an unordered-params variant of the next 10
-    (params survive sorted — its own group). One codegen projection +
-    one skinny groupBy on the canonical string."""
-    from .operators import urls as urls_mod
-
-    d = docs_mod.read_documents(spark, sf_dir).select("doc_id", "source")
-    base = d.select(
-        F.col("doc_id").cast("long").alias("id"),
-        F.expr("'https://' || source || '.example.com/doc/' || doc_id").alias("url"),
-    )
-    var1 = d.where("doc_id < 50").select(
-        (F.col("doc_id") + 1_000_000).cast("long").alias("id"),
-        F.expr(
-            "'HTTPS://WWW.' || upper(source) || '.EXAMPLE.COM:443/doc/'"
-            " || doc_id || '/?utm_source=feed&gclid=x123#frag'"
-        ).alias("url"),
-    )
-    var2 = d.where("doc_id >= 50 AND doc_id < 60").select(
-        (F.col("doc_id") + 2_000_000).cast("long").alias("id"),
-        F.expr(
-            "'https://' || source || '.example.com/doc/' || doc_id || '?b=2&a=1'"
-        ).alias("url"),
-    )
-    return urls_mod.url_dup_groups(
-        base.unionByName(var1).unionByName(var2)
-    )
-
-
-def _sql_doc_url_dedup() -> str:
-    from .operators.urls import sql_url_dup_groups
-
-    return sql_url_dup_groups(_URL_VARIANTS_SQL)
-
-
-CMS_TOPK = 20
-
-
-def q_doc_cms_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch frequency estimates for the corpus's top-20
-    tokens (operators/sketches.cms_*): the 4x256-counter sketch is
-    built from the full token stream (fixed size, sum-mergeable), the
-    heavy hitters are point-queried against it, and the exact counts
-    ride along so the guaranteed-overcount property is visible
-    (cms_est >= exact always; collisions only inflate)."""
-    from .operators import sketches
-
-    d = docs_mod.read_documents(spark, sf_dir)
-    toks = d.select(
-        F.explode(
-            F.expr(f"regexp_extract_all(lower(text), '{docs_mod.WORD}', 0)")
-        ).alias("tok")
-    )
-    counters = sketches.cms_counters(toks)
-    top = (
-        toks.groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("exact_cnt"))
-        .orderBy(F.col("exact_cnt").desc(), "tok")
-        .limit(CMS_TOPK)
-    )
-    est = sketches.cms_estimate(counters, top.select("tok"))
-    return top.join(est, "tok").select(
-        "tok",
-        F.col("exact_cnt").cast("long").alias("exact_cnt"),
-        "cms_est",
-        (F.col("cms_est") - F.col("exact_cnt")).cast("long").alias("overcount"),
-    )
-
-
-def _sql_doc_cms_topk() -> str:
-    from .operators.sketches import CMS_D, CMS_W
-
-    def pos(r: str, tok: str) -> str:
-        return (
-            f"CAST(('0x' || substr(md5({r} || ':' || {tok}), 1, 15))"
-            f" AS BIGINT) % {CMS_W}"
-        )
-
-    return f"""
-WITH toks AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-counters AS (
-  SELECT r, pos, count(*) AS c FROM (
-    SELECT rr.r AS r, {pos("rr.r", "tok")} AS pos
-    FROM toks CROSS JOIN range({CMS_D}) rr(r)
-  ) GROUP BY 1, 2
-),
-top AS (
-  SELECT tok, count(*) AS exact_cnt FROM toks GROUP BY 1
-  ORDER BY exact_cnt DESC, tok LIMIT {CMS_TOPK}
-),
-qpos AS (
-  SELECT t.tok, t.exact_cnt, rr.r AS r, {pos("rr.r", "t.tok")} AS pos
-  FROM top t CROSS JOIN range({CMS_D}) rr(r)
-),
-est AS (
-  SELECT q.tok, q.exact_cnt, min(c.c) AS cms_est
-  FROM qpos q JOIN counters c ON c.r = q.r AND c.pos = q.pos
-  GROUP BY 1, 2
-)
-SELECT tok, CAST(exact_cnt AS BIGINT) AS exact_cnt,
-       CAST(cms_est AS BIGINT) AS cms_est,
-       CAST(cms_est - exact_cnt AS BIGINT) AS overcount
-FROM est"""
-
-
-N_BPE_MERGES = 8
-
-
-def q_doc_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative BPE tokenizer training (operators/docs.bpe_merges):
-    N_BPE_MERGES full count->argmax->rewrite rounds over the
-    vocab-collapsed corpus; the output is the learned merge table."""
-    from .operators.docs import bpe_merges
-
-    return bpe_merges(
-        docs.read_documents(spark, sf_dir), n_merges=N_BPE_MERGES
-    )
-
-
-def _sql_doc_bpe_merges() -> str:
-    parts = [
-        r"""
-w AS (SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-      FROM documents),
-wc AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
-v0 AS (SELECT ' ' || regexp_replace(word, '(.)', '\1 ', 'g') AS w, cnt
-       FROM wc)"""
-    ]
-    for r in range(1, N_BPE_MERGES + 1):
-        parts.append(f"""
-p{r} AS (
-  SELECT p[1] AS a, p[2] AS b, CAST(sum(cnt) AS BIGINT) AS total
-  FROM (SELECT unnest(list_zip(ss[1:len(ss) - 1], ss[2:len(ss)])) AS p, cnt
-        FROM (SELECT list_filter(string_split(w, ' '), x -> x <> '') AS ss,
-                     cnt
-              FROM v{r - 1})
-        WHERE len(ss) >= 2)
-  GROUP BY 1, 2
-),
-b{r} AS (
-  SELECT CAST({r} AS BIGINT) AS round, a, b, total
-  FROM p{r} ORDER BY total DESC, a, b LIMIT 1
-)""")
-        if r < N_BPE_MERGES:
-            # greedy left-fold rewrite (mirror of the Spark aggregate):
-            # state is 'out<US>cur' in one string, US = chr(31)
-            parts.append(f"""
-v{r} AS (
-  SELECT fs[1] || CASE WHEN fs[2] = '' THEN '' ELSE ' ' || fs[2] END || ' '
-           AS w, cnt
-  FROM (
-    SELECT string_split(
-      list_reduce(
-        [chr(31)] || list_filter(string_split(v.w, ' '), x -> x <> ''),
-        (acc, x) -> CASE
-          WHEN split_part(acc, chr(31), 2) = b.a AND x = b.b
-            THEN split_part(acc, chr(31), 1) || ' ' || b.a || b.b || chr(31)
-          WHEN split_part(acc, chr(31), 2) = ''
-            THEN split_part(acc, chr(31), 1) || chr(31) || x
-          ELSE split_part(acc, chr(31), 1) || ' '
-               || split_part(acc, chr(31), 2) || chr(31) || x
-        END), chr(31)) AS fs, v.cnt AS cnt
-    FROM v{r - 1} v CROSS JOIN b{r} b
-  )
-)""")
-    union = " UNION ALL ".join(
-        f"SELECT * FROM b{r}" for r in range(1, N_BPE_MERGES + 1)
-    )
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT round, a AS lhs, b AS rhs, total FROM ({union})"""
-    )
-
-
-def q_doc_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source distinct-token cardinality via an engine-neutral
-    HyperLogLog (operators/sketches.py): md5-hash map, 256 max-registers
-    per source (partial-agg friendly, mergeable), exact-integer harmonic
-    sum, one final float64 division. The exact count rides along for
-    audit; at 100 TB only the registers move."""
-    from .operators import sketches
-
-    d = docs_mod.read_documents(spark, sf_dir)
-    toks = d.select(
-        "source",
-        F.explode(
-            F.expr(f"regexp_extract_all(lower(text), '{docs_mod.WORD}', 0)")
-        ).alias("tok"),
-    )
-    return sketches.hll_distinct(toks, "source", "tok")
-
-
-def _sql_doc_hll_distinct() -> str:
-    from .operators.sketches import HLL_M, RHO_MAX
-
-    alpha = f"(0.7213e0 / (1 + 1.079e0 / {HLL_M}))"
-    shift = f"(CAST(1 AS BIGINT) << {RHO_MAX})"
-    return f"""
-WITH toks AS (
-  SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-hashed AS (
-  SELECT source AS g,
-         CAST(('0x' || substr(md5(tok), 1, 15)) AS BIGINT) AS h
-  FROM toks
-),
-parts AS (SELECT g, h % {HLL_M} AS bucket, h // {HLL_M} AS w FROM hashed),
-regs AS (
-  SELECT g, bucket,
-         max(CASE WHEN w = 0 THEN {RHO_MAX}
-             ELSE {RHO_MAX} - length(bin(w)) END) AS M
-  FROM parts GROUP BY 1, 2
-),
-perg AS (
-  SELECT g,
-         CAST(sum(CAST(1 AS BIGINT) << ({RHO_MAX} - M)) AS BIGINT) AS s_present,
-         count(*) AS n_present,
-         sum(CASE WHEN M = 0 THEN 1 ELSE 0 END) AS zero_present
-  FROM regs GROUP BY 1
-),
-withraw AS (
-  SELECT g,
-         CAST(zero_present + ({HLL_M} - n_present) AS BIGINT) AS zeros,
-         {alpha} * {HLL_M} * {HLL_M} * CAST({shift} AS DOUBLE)
-           / CAST(s_present + ({HLL_M} - n_present) * {shift} AS DOUBLE) AS raw
-  FROM perg
-),
-est AS (
-  SELECT g, zeros,
-         CAST(CASE WHEN raw <= 2.5e0 * {HLL_M} AND zeros > 0
-              THEN floor({HLL_M} * ln({HLL_M} / CAST(zeros AS DOUBLE)))
-              ELSE floor(raw) END AS BIGINT) AS hll_q
-  FROM withraw
-),
-exact AS (
-  SELECT source AS g, CAST(count(DISTINCT tok) AS BIGINT) AS exact_distinct
-  FROM toks GROUP BY 1
-)
-SELECT e.g AS source, e.zeros, e.hll_q, x.exact_distinct
-FROM est e JOIN exact x ON x.g = e.g"""
-
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = ann.read_embeddings(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("qe")
-    )
-    c = emb.where(F.col("vec_id") >= 8).select(
-        F.col("vec_id").alias("c_id"), F.col("embedding").alias("ce")
-    )
-    return ann.brute_force_topk(q, c, k=5).select(
-        "q_id", F.col("rank").cast("long").alias("rank"), "c_id"
-    )
-
-
-IVF_CELLS, IVF_PROBE, IVF_ITERS, IVF_K = 8, 2, 2, 5
-_QZ = "transform(embedding, x -> cast(floor(cast(x as double) * 1000) as bigint))"
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN scale path end-to-end under the exact gate: deterministic
-    k-means centroid TRAINING (integer sum-vector centroids — cosine is
-    scale-invariant, so training never leaves exact arithmetic), IVF cell
-    assignment, n_probe cell pruning, exact-integer scoring inside probed
-    cells. Same query/candidate split as ann_topk, so recall is
-    measurable against it (pytest pins recall >= 0.8)."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.expr(_QZ).alias("emb")
-    )
-    c = emb.where(F.col("vec_id") >= 8).select(
-        F.col("vec_id").alias("c_id"), F.expr(_QZ).alias("emb")
-    )
-    out = ann.ivf_topk_trained(
-        q, c, n_cells=IVF_CELLS, n_probe=IVF_PROBE, k=IVF_K
-    )
-    return out.select(
-        "q_id", F.col("rank").cast("long").alias("rank"), "c_id",
-        F.col("score_q").cast("long").alias("score_q"),
-    )
-
-
-def q_ann_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality audit, oracle-visible: per-query recall@k of the IVF
-    path against the exact brute-force top-k (the number every ANN
-    deployment must publish before trading exactness for cell pruning).
-    pytest pins recall >= 0.8 in aggregate; this emits the per-query
-    numbers under the exact gate."""
-    ex = q_ann_topk(spark, sf_dir).select("q_id", "c_id")
-    iv = q_ann_ivf_topk(spark, sf_dir).select("q_id", "c_id")
-    k = ex.groupBy("q_id").agg(F.count(F.lit(1)).alias("k"))
-    hits = (
-        ex.join(iv, ["q_id", "c_id"], "left_semi")
-        .groupBy("q_id")
-        .agg(F.count(F.lit(1)).alias("n_hit"))
-    )
-    return (
-        k.join(hits, "q_id", "left")
-        .na.fill(0, ["n_hit"])
-        .select(
-            "q_id",
-            F.col("k").cast("long").alias("k"),
-            F.col("n_hit").cast("long").alias("n_hit"),
-            F.expr("(n_hit * 1000000) div k").cast("long").alias("recall_u"),
-        )
-    )
-
-
-def _sql_ann_ivf_recall() -> str:
-    return f"""
-SELECT ex.q_id,
-       CAST(count(*) AS BIGINT) AS k,
-       CAST(count(iv.c_id) AS BIGINT) AS n_hit,
-       CAST((count(iv.c_id) * 1000000) // count(*) AS BIGINT) AS recall_u
-FROM ({_sql_ann_topk()}) ex
-LEFT JOIN ({_sql_ann_ivf_topk()}) iv
-  ON iv.q_id = ex.q_id AND iv.c_id = ex.c_id
-GROUP BY ex.q_id"""
-
-
-PQ_M, PQ_CODES, PQ_ITERS, PQ_K = 16, 32, 2, 5
-EMB_DIM = 64
-
-
-def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN end-to-end under the exact gate: per-
-    subspace integer codebook training (one global TakeOrdered seed pass
-    shared by all m subspaces), code assignment, asymmetric-distance
-    top-k via per-query integer distance tables. The memory leg of the
-    ANN scale story: candidates are scored from m codes, never their
-    full vectors. Same query/candidate split as ann_topk so recall is
-    measurable against it (pytest pins it)."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.expr(_QZ).alias("emb")
-    )
-    c = emb.where(F.col("vec_id") >= 8).select(
-        F.col("vec_id").alias("c_id"), F.expr(_QZ).alias("emb")
-    )
-    out = ann.pq_topk(
-        q, c, dim=EMB_DIM, m=PQ_M, n_codes=PQ_CODES, n_iter=PQ_ITERS, k=PQ_K
-    )
-    return out.select(
-        "q_id",
-        F.col("rank").cast("long").alias("rank"),
-        "c_id",
-        F.col("adist2").cast("long").alias("adist2"),
-    )
-
-
-def _duck_d2(a: str, b: str) -> str:
-    """Exact integer squared-L2 via three inner products (SQL mirror of
-    operators/ann._L2_INT)."""
-    return (
-        f"CAST(list_inner_product({a}, {a})"
-        f" - 2 * list_inner_product({a}, {b})"
-        f" + list_inner_product({b}, {b}) AS BIGINT)"
-    )
-
-
-def _pq_sql_parts(
-    m: int, n_codes: int, iters: int, dim: int, src: str = "cand"
-) -> tuple[list[str], str, str]:
-    """SQL mirror of operators/ann.pq_codebooks + _pq_assign over an
-    in-scope CTE `src`(c_id, emb): one md5-bounded seed pass shared by
-    all m subspaces, `iters` exact integer-mean Lloyd rounds (sum //
-    count — truncation division on both engines), final code
-    assignment. Returns (cte_parts, last_assignment_cte,
-    last_centroid_cte) — shared by the ann_pq_topk and ann_ivfpq_topk
-    oracles."""
-    ln = dim // m
-    sub = f"emb[t.s * {ln} + 1 : t.s * {ln} + {ln}]"
-    parts = [
-        f"""
-csub AS (SELECT c_id, t.s, {sub} AS sub FROM {src}, range({m}) t(s)),
-seed AS (
-  SELECT CAST(row_number() OVER (ORDER BY h) - 1 AS INT) AS code, emb
-  FROM (SELECT md5(CAST(c_id AS VARCHAR)) AS h, emb FROM {src}
-        ORDER BY h LIMIT {n_codes})
-),
-pc0 AS (SELECT code, t.s, {sub} AS cent FROM seed, range({m}) t(s))"""
-    ]
-    for i in range(1, iters + 2):
-        parts.append(f"""
-pa{i} AS (
-  SELECT c_id, s, sub, code FROM (
-    SELECT cs.c_id, cs.s, cs.sub, ct.code,
-           row_number() OVER (PARTITION BY cs.c_id, cs.s
-                              ORDER BY {_duck_d2("cs.sub", "ct.cent")} ASC, ct.code) AS rn
-    FROM csub cs JOIN pc{i - 1} ct ON ct.s = cs.s
-  ) WHERE rn = 1
-)""")
-        if i <= iters:
-            parts.append(f"""
-pc{i} AS (
-  SELECT s, code, list(CAST(mv AS BIGINT) ORDER BY pos) AS cent FROM (
-    SELECT s, code, pos, sum(v) // count(*) AS mv
-    FROM (SELECT s, code, unnest(sub) AS v, generate_subscripts(sub, 1) AS pos
-          FROM pa{i})
-    GROUP BY 1, 2, 3
-  ) GROUP BY 1, 2
-)""")
-    return parts, f"pa{iters + 1}", f"pc{iters}"
-
-
-def _sql_ann_pq_topk() -> str:
-    ln = EMB_DIM // PQ_M
-    parts = [
-        f"""
-cand AS (SELECT vec_id AS c_id, {_DUCK_QZ} AS emb FROM embeddings WHERE vec_id >= 8),
-qs AS (SELECT vec_id AS q_id, {_DUCK_QZ} AS emb FROM embeddings WHERE vec_id < 8)"""
-    ]
-    pq_parts, last_asg, last_cent = _pq_sql_parts(PQ_M, PQ_CODES, PQ_ITERS, EMB_DIM)
-    parts += pq_parts
-    parts.append(f"""
-qsub AS (SELECT q_id, t.s, emb[t.s * {ln} + 1 : t.s * {ln} + {ln}] AS sub
-         FROM qs, range({PQ_M}) t(s)),
-dtab AS (
-  SELECT q.q_id, ct.s, ct.code, {_duck_d2("q.sub", "ct.cent")} AS d2
-  FROM qsub q JOIN {last_cent} ct ON ct.s = q.s
-),
-approx AS (
-  SELECT d.q_id, a.c_id, CAST(sum(d.d2) AS BIGINT) AS adist2
-  FROM {last_asg} a JOIN dtab d ON d.s = a.s AND d.code = a.code
-  GROUP BY 1, 2
-)""")
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, adist2 FROM (
-  SELECT q_id, c_id, adist2,
-         row_number() OVER (PARTITION BY q_id ORDER BY adist2 ASC, c_id) AS rank
-  FROM approx
-) WHERE rank <= {PQ_K}"""
-    )
-
-
-IVFPQ_M, IVFPQ_CODES, IVFPQ_ITERS, IVFPQ_K = 16, 32, 1, 5
-
-
-def q_ann_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVFADC end-to-end under the exact gate (operators/ann.ivfpq_topk):
-    coarse IVF training + n_probe cell pruning composed with product
-    quantization of the RESIDUALS (vector minus its cell's integer mean
-    centroid) and per-probed-cell asymmetric distance tables — the
-    canonical FAISS IVFx,PQy billion-scale layout. Same query/candidate
-    split as ann_topk so recall is measurable against it (pytest pins
-    it)."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.expr(_QZ).alias("emb")
-    )
-    c = emb.where(F.col("vec_id") >= 8).select(
-        F.col("vec_id").alias("c_id"), F.expr(_QZ).alias("emb")
-    )
-    out = ann.ivfpq_topk(
-        q,
-        c,
-        dim=EMB_DIM,
-        n_cells=IVF_CELLS,
-        n_probe=IVF_PROBE,
-        ivf_iter=IVF_ITERS,
-        m=IVFPQ_M,
-        n_codes=IVFPQ_CODES,
-        pq_iter=IVFPQ_ITERS,
-        k=IVFPQ_K,
-    )
-    return out.select(
-        "q_id",
-        F.col("rank").cast("long").alias("rank"),
-        "c_id",
-        F.col("adist2").cast("long").alias("adist2"),
-    )
-
-
-def _sql_ann_ivfpq_topk() -> str:
-    cos = _duck_cos
-    parts = [
-        f"""
-cand AS (SELECT vec_id AS c_id, {_DUCK_QZ} AS emb FROM embeddings WHERE vec_id >= 8),
-qs AS (SELECT vec_id AS q_id, {_DUCK_QZ} AS emb FROM embeddings WHERE vec_id < 8)"""
-    ]
-    km_parts, last_asg, last_cent = _kmeans_sql_parts(IVF_CELLS, IVF_ITERS)
-    parts += km_parts
-    # residual encoding: integer mean centroid per cell (sum // count,
-    # truncation division on both engines), residual = emb - mean
-    parts.append(f"""
-cmean AS (
-  SELECT cell_id, pos, CAST(sum(v) // count(*) AS BIGINT) AS cv
-  FROM (SELECT cell_id, unnest(emb) AS v, generate_subscripts(emb, 1) AS pos
-        FROM {last_asg})
-  GROUP BY 1, 2
-),
-res AS (
-  SELECT x.c_id, x.cell_id, list(CAST(x.v - mn.cv AS BIGINT) ORDER BY x.pos) AS emb
-  FROM (SELECT c_id, cell_id, unnest(emb) AS v, generate_subscripts(emb, 1) AS pos
-        FROM {last_asg}) x
-  JOIN cmean mn ON mn.cell_id = x.cell_id AND mn.pos = x.pos
-  GROUP BY 1, 2
-)""")
-    pq_parts, pq_asg, pq_cent = _pq_sql_parts(
-        IVFPQ_M, IVFPQ_CODES, IVFPQ_ITERS, EMB_DIM, src="res"
-    )
-    parts += pq_parts
-    ln = EMB_DIM // IVFPQ_M
-    parts.append(f"""
-codesc AS (
-  SELECT a.c_id, r.cell_id, a.s, a.code
-  FROM {pq_asg} a JOIN (SELECT c_id, cell_id FROM res) r ON r.c_id = a.c_id
-),
-probe AS (
-  SELECT q_id, emb AS qemb, cell_id FROM (
-    SELECT q.q_id, q.emb, ct.cell_id,
-           row_number() OVER (PARTITION BY q.q_id
-                              ORDER BY {cos("q.emb", "ct.centroid")} DESC, ct.cell_id) AS rn
-    FROM qs q CROSS JOIN {last_cent} ct
-  ) WHERE rn <= {IVF_PROBE}
-),
-qres AS (
-  SELECT x.q_id, x.cell_id, list(CAST(x.v - mn.cv AS BIGINT) ORDER BY x.pos) AS emb
-  FROM (SELECT q_id, cell_id, unnest(qemb) AS v, generate_subscripts(qemb, 1) AS pos
-        FROM probe) x
-  JOIN cmean mn ON mn.cell_id = x.cell_id AND mn.pos = x.pos
-  GROUP BY 1, 2
-),
-qsub AS (SELECT q_id, cell_id, t.s, emb[t.s * {ln} + 1 : t.s * {ln} + {ln}] AS sub
-         FROM qres, range({IVFPQ_M}) t(s)),
-dtab AS (
-  SELECT q.q_id, q.cell_id, ct.s, ct.code, {_duck_d2("q.sub", "ct.cent")} AS d2
-  FROM qsub q JOIN {pq_cent} ct ON ct.s = q.s
-),
-approx AS (
-  SELECT d.q_id, c.c_id, CAST(sum(d.d2) AS BIGINT) AS adist2
-  FROM codesc c
-  JOIN dtab d ON d.cell_id = c.cell_id AND d.s = c.s AND d.code = c.code
-  GROUP BY 1, 2
-)""")
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, adist2 FROM (
-  SELECT q_id, c_id, adist2,
-         row_number() OVER (PARTITION BY q_id ORDER BY adist2 ASC, c_id) AS rank
-  FROM approx
-) WHERE rank <= {IVFPQ_K}"""
-    )
-
-
-def q_doc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topic clustering over the embedding corpus — deterministic k-means
-    (the exact-integer trainer of the IVF path) assigning every vector to
-    a cell, with cluster sizes. This is the cluster stage of
-    cluster-balanced curation / SemDeDup-style semantic dedup: downstream
-    samples per-cluster or prunes within clusters. Scale: training
-    touches the corpus n_iter+1 times but shuffles only n_cells sum
-    vectors; assignment is one broadcast of the centroid table."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    cand = emb.select(F.col("vec_id").alias("c_id"), F.expr(_QZ).alias("emb"))
-    cents = ann.train_centroids(cand, n_cells=IVF_CELLS, n_iter=IVF_ITERS)
-    asg = ann.assign_cells(cand, cents)
-    sizes = asg.groupBy("cell_id").agg(F.count(F.lit(1)).alias("n"))
-    return asg.join(sizes, "cell_id").select(
-        F.col("c_id").cast("long").alias("vec_id"),
-        F.col("cell_id").cast("long").alias("cell_id"),
-        F.col("n").cast("long").alias("cluster_size"),
-    )
-
-
-def _sql_doc_clusters() -> str:
-    parts = [f"cand AS (SELECT vec_id AS c_id, {_DUCK_QZ} AS emb FROM embeddings)"]
-    km_parts, last_asg, _ = _kmeans_sql_parts(IVF_CELLS, IVF_ITERS)
-    parts += km_parts
-    parts.append(
-        f"sizes AS (SELECT cell_id, count(*) AS n FROM {last_asg} GROUP BY 1)"
-    )
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT a.c_id AS vec_id, CAST(a.cell_id AS BIGINT) AS cell_id,
-       CAST(s.n AS BIGINT) AS cluster_size
-FROM {last_asg} a JOIN sizes s USING (cell_id)"""
-    )
-
-
-def _duck_cos(a: str, b: str) -> str:
-    emb_d = "list_transform({v}, x -> CAST(x AS DOUBLE))"
-    ad, bd = emb_d.format(v=a), emb_d.format(v=b)
-    return (
-        f"(list_inner_product({ad}, {bd})"
-        f" / (sqrt(list_inner_product({ad}, {ad}))"
-        f" * sqrt(list_inner_product({bd}, {bd}))))"
-    )
-
-
-_DUCK_QZ = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 1000) AS BIGINT))"
-
-
-def _kmeans_sql_parts(n_cells: int, iters: int) -> tuple[list[str], str, str]:
-    """SQL mirror of operators/ann.train_centroids + assign_cells over an
-    in-scope CTE `cand(c_id, emb)`: min-n_cells-by-md5(c_id) seeds (the
-    bounded deterministic sample — Spark side is a TakeOrderedAndProject,
-    never a global sort), `iters` exact integer-sum Lloyd rounds, final
-    assignment. Returns (cte_parts, last_assignment_cte,
-    last_centroid_cte) — shared by the ann_ivf_topk and doc_embcos_dedup
-    oracles."""
-    parts = [f"""
-cent0 AS (
-  SELECT CAST(row_number() OVER (ORDER BY h) - 1 AS INT) AS cell_id,
-         emb AS centroid
-  FROM (SELECT md5(CAST(c_id AS VARCHAR)) AS h, emb FROM cand
-        ORDER BY h LIMIT {n_cells})
-)"""]
-    for i in range(1, iters + 2):
-        parts.append(f"""
-asg{i} AS (
-  SELECT c_id, emb, cell_id FROM (
-    SELECT c.c_id, c.emb, ct.cell_id,
-           row_number() OVER (PARTITION BY c.c_id
-                              ORDER BY {_duck_cos("c.emb", "ct.centroid")} DESC, ct.cell_id) AS rn
-    FROM cand c CROSS JOIN cent{i - 1} ct
-  ) WHERE rn = 1
-)""")
-        if i <= iters:
-            parts.append(f"""
-cent{i} AS (
-  SELECT cell_id, list(CAST(sv AS BIGINT) ORDER BY pos) AS centroid FROM (
-    SELECT cell_id, pos, sum(v) AS sv
-    FROM (SELECT cell_id, unnest(emb) AS v, generate_subscripts(emb, 1) AS pos
-          FROM asg{i})
-    GROUP BY 1, 2
-  ) GROUP BY 1
-)""")
-    return parts, f"asg{iters + 1}", f"cent{iters}"
-
-
-def _sql_ann_ivf_topk() -> str:
-    cos = _duck_cos
-    parts = [f"""
-cand AS (SELECT vec_id AS c_id, {_DUCK_QZ} AS emb FROM embeddings WHERE vec_id >= 8),
-qs AS (SELECT vec_id AS q_id, {_DUCK_QZ} AS emb FROM embeddings WHERE vec_id < 8)"""]
-    km_parts, last_asg, last_cent = _kmeans_sql_parts(IVF_CELLS, IVF_ITERS)
-    parts += km_parts
-    parts.append(f"""
-probe AS (
-  SELECT q_id, emb AS qemb, cell_id FROM (
-    SELECT q.q_id, q.emb, ct.cell_id,
-           row_number() OVER (PARTITION BY q.q_id
-                              ORDER BY {cos("q.emb", "ct.centroid")} DESC, ct.cell_id) AS rn
-    FROM qs q CROSS JOIN {last_cent} ct
-  ) WHERE rn <= {IVF_PROBE}
-),
-scored AS (
-  SELECT p.q_id, a.c_id, CAST(list_inner_product(a.emb, p.qemb) AS BIGINT) AS score_q
-  FROM {last_asg} a JOIN probe p ON p.cell_id = a.cell_id
-)""")
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT q_id, CAST(rank AS BIGINT) AS rank, c_id, score_q FROM (
-  SELECT q_id, c_id, score_q,
-         row_number() OVER (PARTITION BY q_id ORDER BY score_q DESC, c_id) AS rank
-  FROM scored
-) WHERE rank <= {IVF_K}"""
-    )
-
-
-EMBCOS_MIN_Q = 900_000  # 0.9 cosine at milli-quantization (~1e6 scale)
-EMBCOS_MAX_CELL = 100_000  # per-cell population cap (quadratic guard)
-
-
-def _sql_cell_cap(last_asg: str, max_cell: int = EMBCOS_MAX_CELL) -> str:
-    """SQL mirror of operators/ann._cap_cells: cells above max_cell are
-    excluded before the same-cell self-join."""
-    return f"""
-okcell AS (SELECT cell_id FROM {last_asg} GROUP BY 1
-           HAVING count(*) <= {max_cell})"""
-
-
-def q_doc_embcos_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-cosine near-dup under the exact gate: the embeddings
-    table ∪ deterministic perturbed twins (vec_id + 1_000_000, two
-    coordinates nudged ±50 milli-units — the embedding analogue of
-    _docs_with_near_dups), IVF-cell blocked, exact-integer verified.
-    The base corpus has NO pair above 0.48 cosine, so every emitted pair
-    is a planted twin caught by the blocking+verify path."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    base = emb.select(
-        F.col("vec_id").cast("long").alias("id"), F.expr(_QZ).alias("emb")
-    )
-    pert = base.select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr(
-            "transform(emb, (x, i) -> x + CASE"
-            " WHEN i = cast(id % 64 as int) THEN 50L"
-            " WHEN i = cast((id * 7 + 3) % 64 as int) THEN -50L"
-            " ELSE 0L END)"
-        ).alias("emb"),
-    )
-    pairs = ann.embcos_dedup_pairs(
-        base.unionByName(pert),
-        n_cells=IVF_CELLS,
-        min_score_q=EMBCOS_MIN_Q,
-        max_cell=EMBCOS_MAX_CELL,
-    )
-    return pairs.select(
-        "id_a", "id_b", F.col("score_q").cast("long").alias("score_q")
-    )
-
-
-def _sql_doc_embcos_dedup() -> str:
-    parts = [f"""
-base AS (SELECT CAST(vec_id AS BIGINT) AS id, {_DUCK_QZ} AS emb FROM embeddings),
-pert AS (
-  SELECT id + 1000000 AS id,
-         list(CASE WHEN pos - 1 = id % 64 THEN v + 50
-                   WHEN pos - 1 = (id * 7 + 3) % 64 THEN v - 50
-                   ELSE v END ORDER BY pos) AS emb
-  FROM (SELECT id, unnest(emb) AS v, generate_subscripts(emb, 1) AS pos FROM base)
-  GROUP BY id
-),
-cand AS (SELECT id AS c_id, emb FROM base UNION ALL SELECT id AS c_id, emb FROM pert)"""]
-    km_parts, last_asg, _ = _kmeans_sql_parts(IVF_CELLS, IVF_ITERS)
-    parts += km_parts
-    parts.append(_sql_cell_cap(last_asg))
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT a.c_id AS id_a, b.c_id AS id_b,
-       CAST(list_inner_product(a.emb, b.emb) AS BIGINT) AS score_q
-FROM {last_asg} a JOIN okcell USING (cell_id) JOIN {last_asg} b
-  ON a.cell_id = b.cell_id AND a.c_id < b.c_id
-WHERE CAST(list_inner_product(a.emb, b.emb) AS BIGINT) >= {EMBCOS_MIN_Q}"""
-    )
-
-
-def q_doc_embcos_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup DECISION for the EMBEDDING family (SemDeDup-style):
-    verified embedding-cosine near-dup pairs close transitively
-    (connected components, min-label survivor) and every affected vector
-    gets a (canonical_id, keep) assignment — completing the
-    pairs -> drop-list story that doc_dup_clusters provides for MinHash.
-    The pair graph is tiny relative to the corpus (only planted twins
-    pass the 0.9 gate), so the CC runs on the skinny edge list only."""
-    from .operators.resolve import connected_components
-
-    pairs = q_doc_embcos_dedup(spark, sf_dir)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    comp = connected_components(edges, verts)
-    return comp.select(
-        F.col("id").cast("long").alias("vec_id"),
-        F.col("component").cast("long").alias("canonical_id"),
-        F.when(F.col("id") == F.col("component"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("keep"),
-    )
-
-
-def _sql_doc_embcos_clusters() -> str:
-    base = _sql_doc_embcos_dedup()
-    rounds = []
-    for k in range(1, 7):  # 6 min-propagation rounds >= twin-graph diameter
-        prev = f"c{k - 1}"
-        rounds.append(f"""
-c{k} AS MATERIALIZED (
-  SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-  FROM {prev} l
-  LEFT JOIN e2 ON e2.a = l.id
-  LEFT JOIN {prev} n ON n.id = e2.b
-  GROUP BY l.id, l.comp
-)""")
-    return f"""
-WITH pairs AS MATERIALIZED (SELECT id_a, id_b FROM ({base}) q),
-e2 AS (SELECT id_a AS a, id_b AS b FROM pairs
-       UNION ALL SELECT id_b, id_a FROM pairs),
-v AS (SELECT DISTINCT a AS id FROM e2),
-c0 AS (SELECT id, id AS comp FROM v),{",".join(rounds)}
-SELECT id AS vec_id, comp AS canonical_id,
-       CAST(CASE WHEN id = comp THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM c6"""
-
-
-SPLIT_VAL_PCT, SPLIT_TEST_PCT = 5, 5  # % of corpus per held-out split
-
-
-def q_doc_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test assignment — the LAST stage of every
-    training-data pipeline: split by hash of the document identity (NOT
-    by position, so the assignment is stable under corpus reshuffles /
-    re-ingest), stratified per language so small strata keep their
-    proportions. bucket = first 15 hex digits of md5(lang|doc_id) mod
-    100 — pure projection, no shuffle, identical in any engine."""
-    d = docs_mod.read_documents(spark, sf_dir)
-    bucket = F.expr(
-        "cast(conv(substr(md5(lang || '|' || doc_id), 1, 15), 16, 10)"
-        " as bigint) % 100"
-    )
-    return d.withColumn("_b", bucket).select(
-        "doc_id",
-        "lang",
-        F.col("_b").cast("long").alias("bucket"),
-        F.when(F.col("_b") < SPLIT_VAL_PCT, F.lit("val"))
-        .when(F.col("_b") < SPLIT_VAL_PCT + SPLIT_TEST_PCT, F.lit("test"))
-        .otherwise(F.lit("train"))
-        .alias("split"),
-    )
-
-
-def _sql_doc_split() -> str:
-    return f"""
-SELECT doc_id, lang, CAST(b AS BIGINT) AS bucket,
-       CASE WHEN b < {SPLIT_VAL_PCT} THEN 'val'
-            WHEN b < {SPLIT_VAL_PCT + SPLIT_TEST_PCT} THEN 'test'
-            ELSE 'train' END AS split
-FROM (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5(lang || '|' || doc_id), 1, 15))::UBIGINT % 100 AS b
-  FROM documents
-)"""
-
-
-CONTRA_POS_Q, CONTRA_NEG_Q = 900_000, 400_000
-
-
-def q_emb_contrastive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contrastive pair export over the twin-planted embedding corpus:
-    same-IVF-cell positives (score >= 0.9) and hard negatives
-    (score <= 0.4), mid-band dropped — the training-data product of the
-    dedup stack."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    base = emb.select(
-        F.col("vec_id").cast("long").alias("id"), F.expr(_QZ).alias("emb")
-    )
-    pert = base.select(
-        (F.col("id") + 1_000_000).alias("id"),
-        F.expr(
-            "transform(emb, (x, i) -> x + CASE"
-            " WHEN i = cast(id % 64 as int) THEN 50L"
-            " WHEN i = cast((id * 7 + 3) % 64 as int) THEN -50L"
-            " ELSE 0L END)"
-        ).alias("emb"),
-    )
-    return ann.contrastive_pairs(
-        base.unionByName(pert),
-        n_cells=IVF_CELLS,
-        pos_q=CONTRA_POS_Q,
-        neg_q=CONTRA_NEG_Q,
-        max_cell=EMBCOS_MAX_CELL,
-    )
-
-
-def _sql_emb_contrastive() -> str:
-    parts = [f"""
-base AS (SELECT CAST(vec_id AS BIGINT) AS id, {_DUCK_QZ} AS emb FROM embeddings),
-pert AS (
-  SELECT id + 1000000 AS id,
-         list(CASE WHEN pos - 1 = id % 64 THEN v + 50
-                   WHEN pos - 1 = (id * 7 + 3) % 64 THEN v - 50
-                   ELSE v END ORDER BY pos) AS emb
-  FROM (SELECT id, unnest(emb) AS v, generate_subscripts(emb, 1) AS pos FROM base)
-  GROUP BY id
-),
-cand AS (SELECT id AS c_id, emb FROM base UNION ALL SELECT id AS c_id, emb FROM pert)"""]
-    km_parts, last_asg, _ = _kmeans_sql_parts(IVF_CELLS, IVF_ITERS)
-    parts += km_parts
-    parts.append(_sql_cell_cap(last_asg))
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + f"""
-SELECT id_a, id_b, score_q,
-       CASE WHEN score_q >= {CONTRA_POS_Q} THEN 'pos' ELSE 'neg' END AS label
-FROM (
-  SELECT a.c_id AS id_a, b.c_id AS id_b,
-         CAST(list_inner_product(a.emb, b.emb) AS BIGINT) AS score_q
-  FROM {last_asg} a JOIN okcell USING (cell_id) JOIN {last_asg} b
-    ON a.cell_id = b.cell_id AND a.c_id < b.c_id
-)
-WHERE score_q >= {CONTRA_POS_Q} OR score_q <= {CONTRA_NEG_Q}"""
-    )
-
-
-def _docs_with_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents ∪ deterministic perturbed copies of the first 50 docs
-    (doc_id + 1_000_000, one appended sentence) — the fixture that makes
-    near-dup detection observable on an otherwise-unique corpus."""
-    docs = docs_mod.read_documents(spark, sf_dir).select("doc_id", "text")
-    dups = docs.where(F.col("doc_id") < 50).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" appended near duplicate marker")).alias("text"),
-    )
-    return docs.unionByName(dups)
-
-
-PAGE_CURSOR = "d0"
-PAGE_LIMIT = 50
-
-
-def q_kg_nodes_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7: keyset-paginated partition scan — nodes of two group_ids with a
-    uuid-descending cursor and LIMIT (nodes.py:214-252 pagination shape:
-    `WHERE uuid < $cursor ORDER BY uuid DESC LIMIT n`)."""
-    t = _graph(spark, sf_dir)
-    return (
-        t.nodes.where(F.col("group_id").isin("src0", "src1"))
-        .where(F.col("uuid") < PAGE_CURSOR)
-        .orderBy(F.desc("uuid"))
-        .limit(PAGE_LIMIT)
-        .select("group_id", "uuid", "name")
-    )
-
-
-def q_kg_edges_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 for fact edges (edges.py:295-339): the same keyset pagination
-    shape as q_kg_nodes_page over the canonical edge table — uuid-
-    descending cursor + LIMIT, a single TakeOrderedAndProject."""
-    t = _graph(spark, sf_dir)
-    return (
-        t.edges.where(F.col("group_id").isin("src0", "src1"))
-        .where(F.col("uuid") < PAGE_CURSOR)
-        .orderBy(F.desc("uuid"))
-        .limit(PAGE_LIMIT)
-        .select("group_id", "uuid", F.col("name").alias("pred"))
-    )
-
-
-def _sql_kg_edges_page() -> str:
-    body = f"""
-SELECT group_id, uuid, pred FROM eds
-WHERE group_id IN ('src0', 'src1') AND uuid < '{PAGE_CURSOR}'
-ORDER BY uuid DESC LIMIT {PAGE_LIMIT}"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_episodes_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 for episodes (nodes.py:214-252): keyset pagination over the
-    episode table."""
-    t = _graph(spark, sf_dir)
-    return (
-        t.episodes.where(F.col("group_id").isin("src0", "src1"))
-        .where(F.col("uuid") < PAGE_CURSOR)
-        .orderBy(F.desc("uuid"))
-        .limit(PAGE_LIMIT)
-        .select("group_id", "uuid", "url",
-                F.col("chunk_idx").cast("long").alias("chunk_idx"))
-    )
-
-
-def _sql_kg_episodes_page() -> str:
-    ctes = corpus.sql_pages_cte()
-    return (
-        "WITH "
-        + ctes.lstrip()
-        + f""",
-chunks AS (
-  SELECT url, group_id, warc_ts,
-         unnest(string_split(clean_text, chr(10) || chr(10))) AS content,
-         generate_subscripts(string_split(clean_text, chr(10) || chr(10)), 1) AS i
-  FROM pages_g
-),
-eps AS (
-  SELECT md5(url || '|' || (i - 1)) AS uuid, url, CAST(i - 1 AS BIGINT) AS chunk_idx,
-         group_id
-  FROM chunks WHERE length(content) > 0
-)
-SELECT group_id, uuid, url, chunk_idx FROM eps
-WHERE group_id IN ('src0', 'src1') AND uuid < '{PAGE_CURSOR}'
-ORDER BY uuid DESC LIMIT {PAGE_LIMIT}"""
-    )
-
-
-def q_kg_mentions_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 for MENTIONS episodic edges (edges.py:141-178): keyset
-    pagination over the mention-edge table — with nodes/edges/episodes/
-    communities this completes cursor paging across all stored models."""
-    t = _graph(spark, sf_dir)
-    return (
-        t.mention_edges.where(F.col("group_id").isin("src0", "src1"))
-        .where(F.col("uuid") < PAGE_CURSOR)
-        .orderBy(F.desc("uuid"))
-        .limit(PAGE_LIMIT)
-        .select("group_id", "uuid", "episode_uuid", "entity_uuid")
-    )
-
-
-def _sql_kg_mentions_page() -> str:
-    # mention edge uuid = md5('mention|' episode_uuid '|' entity_uuid),
-    # episode uuid = md5(url '|' para_idx), entity uuid = min md5 over the
-    # canonical alias group (operators/materialize.py build_mention_edges)
-    body = f"""
-, canonu AS (
-  SELECT e.group_id, c.canon_name AS name,
-         min(md5('node|' || e.group_id || '|' || e.name)) AS uuid
-  FROM ents e JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  GROUP BY 1, 2
-),
-ment_edges AS (
-  SELECT DISTINCT m.group_id,
-         md5(m.url || '|' || m.para_idx) AS episode_uuid,
-         cu.uuid AS entity_uuid
-  FROM mentions_g m
-  JOIN canon c ON c.group_id = m.group_id AND c.base = m.base
-  JOIN canonu cu ON cu.group_id = m.group_id AND cu.name = c.canon_name
-)
-SELECT group_id,
-       md5('mention|' || episode_uuid || '|' || entity_uuid) AS uuid,
-       episode_uuid, entity_uuid
-FROM ment_edges
-WHERE group_id IN ('src0', 'src1')
-  AND md5('mention|' || episode_uuid || '|' || entity_uuid) < '{PAGE_CURSOR}'
-ORDER BY uuid DESC LIMIT {PAGE_LIMIT}"""
-    return _kg_sql(body)
-
-
-def q_kg_communities_page(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S7 for communities (nodes.py:467-502): keyset pagination over the
-    LPA community table."""
-    from .operators.communities import build_communities
-
-    t = _graph(spark, sf_dir)
-    communities, _ = build_communities(t.nodes, t.edges)
-    return (
-        communities.where(F.col("group_id").isin("src0", "src1"))
-        .where(F.col("uuid") < PAGE_CURSOR)
-        .orderBy(F.desc("uuid"))
-        .limit(PAGE_LIMIT)
-        .select("group_id", "uuid", "name",
-                F.col("n_members").cast("long").alias("n_members"))
-    )
-
-
-def _sql_kg_communities_page() -> str:
-    body = (
-        communities_ctes()
-        + f"""
-SELECT group_id, uuid, name, CAST(n_members AS BIGINT) AS n_members
-FROM comm
-WHERE group_id IN ('src0', 'src1') AND uuid < '{PAGE_CURSOR}'
-ORDER BY uuid DESC LIMIT {PAGE_LIMIT}"""
-    )
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_alias_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X5/X7 under the oracle gate: the fuzzy-resolution outcome itself —
-    every canonical entity with its resolved alias surface forms (typos
-    via MinHash-LSH + Jaccard + connected components; honorifics and
-    corporate suffixes via exact-norm blocking). The oracle knows the
-    alias clusters generatively, so this row set IS the resolution truth."""
-    t = _graph(spark, sf_dir)
-    canon_names = t.nodes.select(
-        F.col("uuid").alias("canon_uuid"), F.col("name").alias("name")
-    )
-    return (
-        t.uuid_map.groupBy("group_id", "canon_uuid")
-        .agg(
-            F.array_join(F.array_sort(F.collect_set("name")), ",").alias("aliases"),
-            F.countDistinct("name").cast("long").alias("n_aliases"),
-        )
-        .join(canon_names, "canon_uuid")
-        .where(F.col("n_aliases") > 1)
-        .select("group_id", "name", "n_aliases", "aliases")
-    )
-
-
-def _sql_kg_alias_resolution() -> str:
-    body = """
-SELECT e.group_id, c.canon_name AS name,
-       count(DISTINCT e.name) AS n_aliases,
-       string_agg(DISTINCT e.name, ',' ORDER BY e.name) AS aliases
-FROM ents e
-JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-GROUP BY 1, 2
-HAVING count(DISTINCT e.name) > 1"""
-    return _kg_sql(body)
-
-
-def q_kg_node_attributes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X2/F14: derived typed attributes per canonical node (lead_since /
-    last_visited / hq), rendered as a sorted k=v list for the exact-match
-    gate."""
-    t = _graph(spark, sf_dir)
-    return (
-        t.nodes.where(F.size(F.map_keys("attributes")) > 0)
-        .select(
-            "group_id",
-            "name",
-            F.expr(
-                "array_join(array_sort(transform(map_entries(attributes),"
-                " e -> e.key || '=' || e.value)), ';')"
-            ).alias("attrs"),
-        )
-    )
-
-
-def _sql_kg_node_attributes() -> str:
-    body = """
-, kv AS (
-  SELECT group_id, subj AS name, 'lead_since' AS k,
-         CAST(min(year(valid_at)) AS VARCHAR) AS v
-  FROM eds WHERE pred = 'LEADS' GROUP BY 1, 2
-  UNION ALL
-  SELECT group_id, subj, 'last_visited', max(strftime(valid_at, '%Y-%m-%d'))
-  FROM eds WHERE pred = 'VISITED' GROUP BY 1, 2
-  UNION ALL
-  SELECT group_id, subj, 'hq', min(obj)
-  FROM eds WHERE pred = 'BASED_IN' GROUP BY 1, 2
-)
-SELECT group_id, name, string_agg(k || '=' || v, ';' ORDER BY k) AS attrs
-FROM kv GROUP BY 1, 2"""
-    return _kg_sql(body, with_eds=True)
-
-
-_NEAR_DUP_SQL = """
-SELECT doc_id, text FROM documents
-UNION ALL
-SELECT doc_id + 1000000 AS doc_id, text || ' appended near duplicate marker' AS text
-FROM documents WHERE doc_id < 50"""
-
-
-def q_doc_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, exact-Jaccard-verified. The md5-derived
-    hash family is bit-reproducible in DuckDB, so banding, bucket caps and
-    verification all sit under the exact-match oracle gate."""
-    from .operators.dedup import minhash_dedup_pairs
-
-    return minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir), threshold=0.5)
-
-
-def _sql_doc_minhash_dedup() -> str:
-    from .operators.dedup import sql_minhash_pairs
-
-    return sql_minhash_pairs(_NEAR_DUP_SQL, threshold=0.5)
-
-
-def q_doc_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch-estimator calibration audit: for every LSH candidate pair,
-    the MinHash Jaccard ESTIMATE (matching signature positions / 64, the
-    unbiased estimator the banding implicitly relies on) next to the
-    EXACT shingle Jaccard, plus the signed error — all integer
-    micro-units. This is the 'measure, don't guess' leg of the dedup
-    stack: it quantifies how far the 64-hash sketch drifts from truth on
-    the pairs the pipeline actually adjudicates. One signature join on
-    the candidate list (signatures are 64 longs/doc), one skinny shingle
-    join for truth — never all-pairs."""
-    from .operators.dedup import (
-        N_HASHES,
-        doc_shingle_rows,
-        minhash_candidates,
-        minhash_signatures,
-    )
-
-    docs = _docs_with_near_dups(spark, sf_dir)
-    cands = minhash_candidates(docs)
-    arr = minhash_signatures(docs).select(
-        "doc_id",
-        F.array(*[F.col(f"mh{i}") for i in range(N_HASHES)]).alias("sig"),
-    )
-    est = (
-        cands.join(
-            arr.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sa")),
-            "doc_a",
-        )
-        .join(
-            arr.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sb")),
-            "doc_b",
-        )
-        .withColumn(
-            "matches",
-            F.expr(
-                "aggregate(zip_with(sa, sb, (x, y) -> IF(x = y, 1L, 0L)),"
-                " 0L, (s, x) -> s + x)"
-            ),
-        )
-        .select("doc_a", "doc_b", "matches")
-    )
-    sh = doc_shingle_rows(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    shared = (
-        cands.join(sh.select(F.col("doc_id").alias("doc_a"), "shingle"), "doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"), "shingle"), ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("shared"))
-    )
-    return (
-        est.join(shared, ["doc_a", "doc_b"], "left")
-        .na.fill(0, ["shared"])
-        .join(sizes.select(F.col("doc_id").alias("doc_a"),
-                           F.col("n_sh").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"),
-                           F.col("n_sh").alias("nb")), "doc_b")
-        .select(
-            F.col("doc_a").cast("long").alias("doc_a"),
-            F.col("doc_b").cast("long").alias("doc_b"),
-            F.expr(f"(matches * 1000000) div {N_HASHES}").cast("long").alias("est_u"),
-            F.expr("(shared * 1000000) div (na + nb - shared)")
-            .cast("long").alias("jac_u"),
-            (F.expr(f"(matches * 1000000) div {N_HASHES}")
-             - F.expr("(shared * 1000000) div (na + nb - shared)"))
-            .cast("long").alias("err_u"),
-        )
-    )
-
-
-def _sql_doc_minhash_calibration() -> str:
-    from .operators.dedup import _A, _B, _P, LSH_ROWS, N_HASHES
-    from .operators.dedup import sql_shingles_cte
-
-    consts = ", ".join(
-        f"({i}, {int(_A[i])}, {int(_B[i])})" for i in range(N_HASHES)
-    )
-    return f"""
-WITH {sql_shingles_cte(_NEAR_DUP_SQL).lstrip()},
-hs AS (
-  SELECT doc_id, ('0x' || substr(md5(shingle), 1, 8))::BIGINT AS h FROM sh
-),
-consts(i, a, b) AS (VALUES {consts}),
-mh AS (
-  SELECT doc_id, c.i, min((c.a * (h % {_P}) + c.b) % {_P}) AS v
-  FROM hs CROSS JOIN consts c GROUP BY 1, 2
-),
-bands AS (
-  SELECT doc_id, i // {LSH_ROWS} AS band,
-         string_agg(CAST(v AS VARCHAR), '|' ORDER BY i) AS bkey
-  FROM mh GROUP BY 1, 2
-),
-ok AS (SELECT band, bkey FROM bands GROUP BY 1, 2 HAVING count(*) <= 1000),
-b2 AS (SELECT bands.* FROM bands JOIN ok USING (band, bkey)),
-cands AS (
-  SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
-  FROM b2 l JOIN b2 r ON l.band = r.band AND l.bkey = r.bkey AND l.doc_id < r.doc_id
-),
-m AS (
-  SELECT c.doc_a, c.doc_b,
-         sum(CASE WHEN ma.v = mb.v THEN 1 ELSE 0 END) AS matches
-  FROM cands c
-  JOIN mh ma ON ma.doc_id = c.doc_a
-  JOIN mh mb ON mb.doc_id = c.doc_b AND mb.i = ma.i
-  GROUP BY 1, 2
-),
-shr AS (
-  SELECT c.doc_a, c.doc_b, count(*) AS shared
-  FROM cands c
-  JOIN sh sa ON sa.doc_id = c.doc_a
-  JOIN sh sb ON sb.doc_id = c.doc_b AND sb.shingle = sa.shingle
-  GROUP BY 1, 2
-)
-SELECT m.doc_a, m.doc_b,
-       CAST((m.matches * 1000000) // {N_HASHES} AS BIGINT) AS est_u,
-       CAST((coalesce(s.shared, 0) * 1000000)
-         // (za.n_sh + zb.n_sh - coalesce(s.shared, 0)) AS BIGINT) AS jac_u,
-       CAST((m.matches * 1000000) // {N_HASHES}
-         - (coalesce(s.shared, 0) * 1000000)
-           // (za.n_sh + zb.n_sh - coalesce(s.shared, 0)) AS BIGINT) AS err_u
-FROM m
-LEFT JOIN shr s ON s.doc_a = m.doc_a AND s.doc_b = m.doc_b
-JOIN sizes za ON za.doc_id = m.doc_a
-JOIN sizes zb ON zb.doc_id = m.doc_b"""
-
-
-PFX_TAU_NUM, PFX_TAU_DEN = 4, 5
-
-
-def q_doc_prefix_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT set-similarity self-join via prefix filtering
-    (operators/dedup.prefix_filter_pairs) over the near-dup fixture:
-    guaranteed-complete Jaccard >= 0.8 pairs — the deterministic
-    counterpart to the probabilistic MinHash path on the same corpus."""
-    from .operators.dedup import prefix_filter_pairs
-
-    return prefix_filter_pairs(
-        _docs_with_near_dups(spark, sf_dir),
-        tau_num=PFX_TAU_NUM,
-        tau_den=PFX_TAU_DEN,
-    )
-
-
-def _sql_doc_prefix_join() -> str:
-    n, d = PFX_TAU_NUM, PFX_TAU_DEN
-    return f"""
-WITH src AS ({_NEAR_DUP_SQL}),
-dt AS (
-  SELECT DISTINCT doc_id,
-         unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM src
-),
-dfq AS (SELECT tok, count(*) AS df FROM dt GROUP BY 1),
-r AS (
-  SELECT t.doc_id, t.tok,
-         row_number() OVER (PARTITION BY t.doc_id ORDER BY f.df, t.tok) AS rn,
-         count(*) OVER (PARTITION BY t.doc_id) AS sz
-  FROM dt t JOIN dfq f ON f.tok = t.tok
-),
-pre AS (
-  SELECT doc_id, tok, sz FROM r
-  WHERE rn <= sz - (({n} * sz + {d} - 1) // {d}) + 1
-),
-cand AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         a.sz AS sz_a, b.sz AS sz_b
-  FROM pre a JOIN pre b ON b.tok = a.tok AND b.doc_id > a.doc_id
-  WHERE b.sz * {d} >= a.sz * {n} AND a.sz * {d} >= b.sz * {n}
-),
-inter AS (
-  SELECT c.doc_a, c.doc_b, c.sz_a, c.sz_b, count(*) AS inter_sz
-  FROM cand c
-  JOIN dt x ON x.doc_id = c.doc_a
-  JOIN dt y ON y.doc_id = c.doc_b AND y.tok = x.tok
-  GROUP BY 1, 2, 3, 4
-)
-SELECT doc_a, doc_b, CAST(inter_sz AS BIGINT) AS inter_sz,
-       CAST((1000000 * inter_sz) // (sz_a + sz_b - inter_sz) AS BIGINT)
-         AS jaccard_u
-FROM inter
-WHERE (1000000 * inter_sz) // (sz_a + sz_b - inter_sz)
-      >= (1000000 * {n}) // {d}"""
-
-
-def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The dedup DECISION: verified MinHash near-dup pairs are closed
-    transitively (connected components, min-label = canonical survivor)
-    and every affected doc gets a (canonical_doc_id, keep) assignment —
-    the step that turns pairwise similarity into the actual drop list a
-    training-data pipeline executes. Reuses the engine's
-    connected_components (F16) over the pair list; at crawl scale the
-    pair graph is tiny relative to the corpus (only near-dups appear)."""
-    from .operators.dedup import minhash_dedup_pairs
-    from .operators.resolve import connected_components
-
-    pairs = minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir), threshold=0.5)
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    comp = connected_components(edges, verts)
-    return comp.select(
-        F.col("id").cast("long").alias("doc_id"),
-        F.col("component").cast("long").alias("canonical_doc_id"),
-        F.when(F.col("id") == F.col("component"), 1)
-        .otherwise(0)
-        .cast("long")
-        .alias("keep"),
-    )
-
-
-def _sql_doc_dup_clusters() -> str:
-    from .operators.dedup import sql_minhash_pairs
-
-    base = sql_minhash_pairs(_NEAR_DUP_SQL, threshold=0.5)
-    rounds = []
-    for k in range(1, 7):  # 6 min-propagation rounds >= pair-graph diameter
-        prev = f"c{k - 1}"
-        rounds.append(f"""
-c{k} AS MATERIALIZED (
-  SELECT l.id, least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-  FROM {prev} l
-  LEFT JOIN e2 ON e2.a = l.id
-  LEFT JOIN {prev} n ON n.id = e2.b
-  GROUP BY l.id, l.comp
-)""")
-    return f"""
-WITH pairs AS MATERIALIZED (SELECT doc_a, doc_b FROM ({base}) q),
-e2 AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-       UNION ALL SELECT doc_b, doc_a FROM pairs),
-v AS (SELECT DISTINCT a AS id FROM e2),
-c0 AS (SELECT id, id AS comp FROM v),{",".join(rounds)}
-SELECT id AS doc_id, comp AS canonical_doc_id,
-       CAST(CASE WHEN id = comp THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM c6"""
-
-
-def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via 16-bit chunk blocking (pigeonhole) +
-    full Hamming verify — oracle-gated like the MinHash path."""
-    from .operators.dedup import simhash_near_pairs
-
-    return simhash_near_pairs(_docs_with_near_dups(spark, sf_dir), max_hamming=6)
-
-
-def _sql_doc_simhash_pairs() -> str:
-    from .operators.dedup import sql_simhash_pairs
-
-    return sql_simhash_pairs(_NEAR_DUP_SQL, max_hamming=6)
-
-
-def q_kg_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X16: label-propagation communities over the canonical entity graph.
-    Oracle-gated: the engine iterates sync LPA (plurality label, larger-id
-    tie-break, monotone max update) to its fixpoint; the DuckDB oracle
-    unrolls the same recurrence for LPA_ORACLE_ROUNDS rounds — the update
-    is idempotent once converged, so any round count >= the measured
-    convergence (9 at sf0.001/sf0.01) yields the identical fixpoint."""
-    from .operators.communities import build_communities
-
-    t = _graph(spark, sf_dir)
-    communities, members = build_communities(t.nodes, t.edges)
-    return communities.select(
-        "uuid", "name", "group_id", F.col("n_members").cast("long").alias("n_members")
-    )
-
-
-LPA_ORACLE_ROUNDS = 12
-
-
-def communities_ctes() -> str:
-    """CTE chain (append after the eds chain) ending in
-    `comm(uuid, name, group_id, n_members)` — the unrolled-LPA community
-    table shared by the kg_communities oracle and community search."""
-    rounds = []
-    for r in range(1, LPA_ORACLE_ROUNDS + 1):
-        prev = f"l{r - 1}"
-        rounds.append(f"""
-c{r} AS (
-  SELECT group_id, uuid, nbr_comm AS candidate FROM (
-    SELECT p.group_id, p.uuid, l.community AS nbr_comm,
-           row_number() OVER (PARTITION BY p.group_id, p.uuid
-                              ORDER BY sum(p.edge_count) DESC, l.community DESC) AS rn
-    FROM proj p JOIN {prev} l ON l.group_id = p.group_id AND l.uuid = p.nbr
-    GROUP BY p.group_id, p.uuid, l.community
-  ) WHERE rn = 1
-),
-l{r} AS MATERIALIZED (
-  SELECT l.group_id, l.uuid,
-         greatest(coalesce(c.candidate, -1), l.community) AS community
-  FROM {prev} l LEFT JOIN c{r} c ON c.group_id = l.group_id AND c.uuid = l.uuid
-)""")
-    body = f"""
-, canonu AS (
-  SELECT e.group_id, c.canon_name,
-         min(md5('node|' || e.group_id || '|' || e.name)) AS uuid
-  FROM ents e JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  GROUP BY 1, 2
-),
-ce AS (
-  SELECT DISTINCT e.group_id, su.uuid AS src, ou.uuid AS dst, e.pred
-  FROM eds e
-  JOIN canonu su ON su.group_id = e.group_id AND su.canon_name = e.subj
-  JOIN canonu ou ON ou.group_id = e.group_id AND ou.canon_name = e.obj
-),
-proj AS MATERIALIZED (
-  SELECT group_id, uuid, nbr, count(*) AS edge_count
-  FROM (SELECT group_id, src AS uuid, dst AS nbr FROM ce
-        UNION ALL SELECT group_id, dst, src FROM ce)
-  WHERE uuid <> nbr GROUP BY 1, 2, 3
-),
-l0 AS MATERIALIZED (
-  SELECT group_id, uuid,
-         row_number() OVER (PARTITION BY group_id ORDER BY uuid) - 1 AS community
-  FROM (SELECT DISTINCT group_id, uuid FROM canonu)
-),{",".join(rounds)},
-agg AS (
-  SELECT l.group_id, l.community, min(l.uuid) AS anchor_uuid,
-         min(n.canon_name) AS anchor_name, count(*) AS n_members
-  FROM l{LPA_ORACLE_ROUNDS} l
-  JOIN canonu n ON n.group_id = l.group_id AND n.uuid = l.uuid
-  GROUP BY 1, 2
-),
-comm AS (
-  SELECT md5('community|' || group_id || '|' || anchor_uuid) AS uuid,
-         anchor_name || ' community of ' || n_members AS name,
-         group_id, n_members
-  FROM agg
-)"""
-    return body
-
-
-def q_kg_community_members(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 (communities by nodes, community_operations.py:36-50): the full
-    community membership table — every canonical entity with its
-    community uuid."""
-    from .operators.communities import build_communities
-
-    t = _graph(spark, sf_dir)
-    _, members = build_communities(t.nodes, t.edges)
-    return members.join(
-        t.nodes.select(F.col("uuid").alias("entity_uuid"), "name"), "entity_uuid"
-    ).select("group_id", "community_uuid", "name")
-
-
-def _sql_kg_community_members() -> str:
-    n = LPA_ORACLE_ROUNDS
-    body = communities_ctes() + f"""
-SELECT l.group_id,
-       md5('community|' || l.group_id || '|' || a.anchor_uuid) AS community_uuid,
-       n.canon_name AS name
-FROM l{n} l
-JOIN agg a ON a.group_id = l.group_id AND a.community = l.community
-JOIN canonu n ON n.group_id = l.group_id AND n.uuid = l.uuid"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_community_attach() -> str:
-    n = LPA_ORACLE_ROUNDS
-    body = communities_ctes() + f"""
-, att AS (
-  SELECT group_id, uuid, nbr_comm AS community FROM (
-    SELECT p.group_id, p.uuid, l.community AS nbr_comm,
-           row_number() OVER (PARTITION BY p.group_id, p.uuid
-                              ORDER BY sum(p.edge_count) DESC, l.community DESC) AS rn
-    FROM proj p JOIN l{n} l ON l.group_id = p.group_id AND l.uuid = p.nbr
-    GROUP BY p.group_id, p.uuid, l.community
-  ) WHERE rn = 1
-)
-SELECT a.group_id, n.canon_name AS name, a.community
-FROM att a JOIN canonu n ON n.group_id = a.group_id AND n.uuid = a.uuid"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_communities() -> str:
-    return _kg_sql(
-        communities_ctes() + "\nSELECT uuid, name, group_id, n_members FROM comm",
-        with_eds=True,
-    )
-
-
-def q_doc_unigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-unigram-LM scoring (deterministic perplexity-filter
-    stand-in): rare-token counts + integer-exact average token
-    probability vs the corpus LM."""
-    out = docs_mod.unigram_lm_scores(docs.read_documents(spark, sf_dir))
-    return out.select(
-        "doc_id", *[F.col(c).cast("long").alias(c) for c in out.columns[1:]]
-    )
-
-
-def q_doc_cluster_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Topic labels for the semantic clusters: top-5 distinctive terms
-    per k-means cell by the integer cross-product keyness score
-    (c-TF-IDF analogue) — the human-readable face of doc_clusters.
-    Reuses the exact-integer IVF trainer for assignments; the term
-    rollup is one (cell, token) shuffle; top-k window is partitioned
-    by cell, never global."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    cand = emb.select(F.col("vec_id").alias("c_id"), F.expr(_QZ).alias("emb"))
-    cents = ann.train_centroids(cand, n_cells=IVF_CELLS, n_iter=IVF_ITERS)
-    asg = ann.assign_cells(cand, cents).select(
-        F.col("c_id").alias("vec_id"), "cell_id"
-    )
-    return docs_mod.cluster_topics(
-        docs.read_documents(spark, sf_dir), asg, k=5
-    )
-
-
-def q_doc_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 TF-IDF keywords per document, integer weights, term-string
-    tiebreak."""
-    out = docs_mod.tfidf_terms(docs.read_documents(spark, sf_dir), k=3)
-    longs = ["tf", "df", "weight_u", "rank"]
-    return out.select(
-        "doc_id", "term", *[F.col(c).cast("long").alias(c) for c in longs]
-    )
-
-
-def q_doc_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source unigram distribution-shift audit vs the global corpus
-    (operators/docs.source_drift): chi-square-style drift score over the
-    top-200 global terms, exact integer micro-probabilities."""
-    return docs_mod.source_drift(docs.read_documents(spark, sf_dir))
-
-
-def _sql_doc_source_drift() -> str:
-    return """
-WITH toks AS (
-  SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-st AS (SELECT source, tok, count(*) AS o FROM toks GROUP BY 1, 2),
-gt AS (SELECT tok, sum(o) AS g FROM st GROUP BY 1),
-vocab AS (SELECT tok, g FROM gt ORDER BY g DESC, tok ASC LIMIT 200),
-gtot AS (SELECT sum(g) AS gt FROM vocab),
-stot AS (
-  SELECT s.source, sum(s.o) AS s_total
-  FROM st s JOIN vocab v ON v.tok = s.tok GROUP BY 1
-),
-per AS (
-  SELECT t.source, t.s_total, v.g, g2.gt, coalesce(s.o, 0) AS o
-  FROM stot t CROSS JOIN vocab v CROSS JOIN gtot g2
-  LEFT JOIN st s ON s.source = t.source AND s.tok = v.tok
-),
-x AS (
-  SELECT source, s_total, o,
-         (o * 1000000) // s_total AS po_u,
-         (g * 1000000) // gt AS pg_u
-  FROM per
-)
-SELECT source,
-       CAST(max(s_total) AS BIGINT) AS n_tokens,
-       CAST(sum(((po_u - pg_u) * (po_u - pg_u)) // greatest(pg_u, 1)) AS BIGINT)
-         AS drift_u,
-       CAST(count(CASE WHEN o = 0 THEN 1 END) AS BIGINT) AS n_missing
-FROM x GROUP BY 1"""
-
-
-def q_doc_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Word-10-gram exact-substring duplication per document (Lee et al.
-    2022 fixed-window form)."""
-    out = docs_mod.substring_dup_stats(docs.read_documents(spark, sf_dir), k=10)
-    return out.select(
-        "doc_id", *[F.col(c).cast("long").alias(c) for c in out.columns[1:]]
-    )
-
-
-# data-mixing rates (micro-units) for the doc_mix_sample query: keep all
-# English, half of the mid-resource languages, a quarter of zh
-MIX_RATES_U = {"en": 1_000_000, "de": 500_000, "fr": 500_000, "es": 500_000,
-               "zh": 250_000}
-DECON_MOD = 7  # deterministic stand-in benchmark set: doc_id % 7 == 0
-DECON_K = 8
-
-
-def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination (GPT-3 appendix-C style word-8-gram
-    overlap vs an eval set). The benchmark here is a deterministic subset
-    of the corpus (doc_id % 7 == 0) standing in for a real eval suite;
-    in production it is the actual benchmark table, broadcast."""
-    d = docs.read_documents(spark, sf_dir)
-    return docs_mod.decontaminate(
-        d, d.where(F.col("doc_id") % DECON_MOD == 0), k=DECON_K
-    )
-
-
-def q_doc_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified data-mixing sample: deterministic md5-hash keep/drop per
-    language stratum (keep-all en, 50% de/fr/es, 25% zh) — one shuffle-free
-    codegen projection; emits the decision for every doc for auditing."""
-    return docs_mod.mix_sample(
-        docs.read_documents(spark, sf_dir), MIX_RATES_U, default_rate_u=100_000
-    )
-
-
-def q_doc_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCNet head/middle/tail split: per-language exact LM-score terciles
-    (histogram-CDF plan), bucket label per doc."""
-    return docs_mod.lm_buckets(docs.read_documents(spark, sf_dir))
-
-
-def q_doc_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-training inner loop: corpus-weighted adjacent-symbol-pair
-    counts over the vocab-sized word-frequency table (rank-1 = the next
-    merge)."""
-    return docs_mod.bpe_pair_counts(docs.read_documents(spark, sf_dir))
-
-
-def q_doc_rag_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window chunk spans (RAG / training-window export): 64-token
-    chunks every 48 tokens, last chunk clipped; span table only —
-    shuffle-free explode."""
-    from .operators.docs import rag_chunks
-
-    return rag_chunks(docs.read_documents(spark, sf_dir))
-
-
-def q_doc_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram-LM perplexity-filter scoring with a held-out split (LM from
-    even doc_ids, scored over all — unseen-bigram smoothing exercised)."""
-    from .operators.docs import bigram_lm_scores
-
-    return bigram_lm_scores(docs.read_documents(spark, sf_dir))
-
-
-def q_doc_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR-style hashed-unigram importance weights against the English
-    slice as the target distribution (integer-quantized log-ratio
-    stand-in; Xie et al. 2023)."""
-    from .operators.docs import dsir_weights
-
-    return dsir_weights(docs.read_documents(spark, sf_dir))
-
-
-def q_evt_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-type Markov transition matrix with integer-exact transition
-    probabilities (one per-user window + vocab-sized agg)."""
-    from .operators.events import type_transitions
-
-    from .operators import events as ev
-
-    return type_transitions(ev.read_events(spark, sf_dir))
-
-
-def q_evt_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily volume anomaly ratios per event type (n vs the type's mean
-    daily volume, micro-units; >=2x flagged as spike)."""
-    from .operators.events import daily_anomalies
-
-    from .operators import events as ev
-
-    return daily_anomalies(ev.read_events(spark, sf_dir))
-
-
-def q_evt_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Last-touch attribution (as-of join): every purchase matched to
-    the user's most recent at-or-before view — one window per user, no
-    range join (DuckDB oracle uses LATERAL top-1, the ASOF semantics)."""
-    from .operators import events as ev
-
-    return ev.last_touch_attribution(ev.read_events(spark, sf_dir))
-
-
-def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing (MOSS) local-fingerprint near-dup pairs: shared
-    window-minimum gram hashes with the winnow-set Jaccard (guaranteed
-    detection of shared runs >= w+k-1 tokens at ~2/(w+1) storage)."""
-    return docs_mod.winnow_pairs(docs.read_documents(spark, sf_dir))
-
-
-def q_doc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation audit: keep + first-failing-stage reason per
-    doc (dedup -> Gopher -> language agreement -> stratified mixing)."""
-    return docs_mod.curation_decision(
-        docs.read_documents(spark, sf_dir), MIX_RATES_U, default_rate_u=100_000
-    )
-
-
-def q_doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GPT-style sequence packing: concat docs (doc_id order, +1 EOS each)
-    into 2048-token blocks; per doc its stream offset and block span,
-    via a distributed two-level prefix sum (never one global window over
-    the corpus)."""
-    return docs_mod.pack_blocks(docs.read_documents(spark, sf_dir), 2048)
-
-
-def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group integer PageRank + degrees over the canonical triple
-    graph — the batch entity-importance table (3 fixed iterations,
-    damping 0.85, exact integer micro-unit ranks)."""
-    from .operators.centrality import pagerank
-
-    return pagerank(q_kg_triples(spark, sf_dir), iters=3)
-
-
-def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank from the 'A'-prefixed seed entities (same
-    seed convention as the BFS queries): teleport mass returns to the
-    seeds only, so ranks measure graph proximity to the query set — the
-    smooth multi-hop form of the reference's node-distance rerank. Exact
-    integer micro-units, sparse frontier-growing rank vector."""
-    from .operators.centrality import personalized_pagerank
-
-    return personalized_pagerank(q_kg_triples(spark, sf_dir), seed_prefix="A")
-
-
-def q_kg_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMIE-style horn-rule mining: p1(x,y) ∧ p2(y,z) ⇒ p3(x,z) with
-    path-pair support and integer-confidence, hub middles fan-capped
-    deterministically (operators/rules.py)."""
-    from .operators.rules import mine_rules
-
-    return mine_rules(q_kg_triples(spark, sf_dir))
-
-
-def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trained bag-of-words quality classifier: add-1-smoothed
-    P(keep | token) weights learned on the Gopher-labeled train split
-    (same md5 hash buckets as doc_split, val/test held out), every doc
-    scored with them in integer micro-units."""
-    return docs_mod.quality_classifier(
-        docs.read_documents(spark, sf_dir),
-        holdout_pct=SPLIT_VAL_PCT + SPLIT_TEST_PCT,
-    )
-
-
-SNAP_PCT = 80  # old snapshot = first 80% of the crawl (warc_ts order)
-
-
-def q_kg_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph diff between two crawl snapshots: the full corpus vs
-    yesterday's crawl = the first SNAP_PCT% of pages in crawl order
-    (warc_ts is monotone in doc_id). Emits added / removed /
-    invalidated / provenance deltas per edge key — the time cut makes
-    every branch real: late pages add facts (added), contradict old
-    ones (invalidated: the old snapshot's fact was still valid), extend
-    provenance across the cut (provenance), and can shift the
-    alias-canonicalization pick so the old canonical key disappears
-    (removed). In production both snapshots are committed Iceberg
-    tables; here the old side rebuilds from the filtered page set (same
-    code path)."""
-    from .operators.maintenance import snapshot_diff
-    from .plans.pipeline import build_graph
-    from .sources.pages import build_pages
-
-    new = q_kg_triples(spark, sf_dir)
-    pages = build_pages(spark, sf_dir)
-    cutoff = pages.agg(
-        F.expr(f"max(doc_id) * {SNAP_PCT} div 100").alias("c")
-    )
-    pages_old = pages.join(F.broadcast(cutoff)).where(
-        F.col("doc_id") <= F.col("c")
-    ).drop("c")
-    t_old = build_graph(spark, sf_dir, pages=pages_old)
-    old = triples_view(t_old).select(
-        "group_id",
-        "subj",
-        "pred",
-        "obj",
-        "invalid_at",
-        F.size("episodes").cast("long").alias("n_episodes"),
-    )
-    return snapshot_diff(new, old)
-
-
-def q_kg_node_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S6+S8 under the oracle gate: keyed node lookup (names starting
-    A/B — the api takes uuids; the registry form selects the same set by
-    name so the oracle can pin it) -> all fact edges touching each node,
-    direction-tagged, exactly api.get_edges_by_node_uuid's
-    direction-agnostic union. Both legs are key semi-joins on the edge
-    table's endpoint columns — parquet/Iceberg stats prune the scan."""
-    t = _graph(spark, sf_dir)
-    sel = t.nodes.where(F.col("name").rlike("^[AB]")).select(
-        "uuid", F.col("name").alias("node_name")
-    )
-    names = t.nodes.select(
-        F.col("uuid").alias("other_uuid"), F.col("name").alias("other_name")
-    )
-    e = t.edges
-    out_leg = (
-        e.join(sel.withColumnRenamed("uuid", "source_node_uuid"), "source_node_uuid")
-        .join(names.withColumnRenamed("other_uuid", "target_node_uuid"), "target_node_uuid")
-        .select(
-            "group_id",
-            "node_name",
-            F.lit("out").alias("direction"),
-            F.col("name").alias("pred"),
-            "other_name",
-            "valid_at",
-        )
-    )
-    in_leg = (
-        e.join(sel.withColumnRenamed("uuid", "target_node_uuid"), "target_node_uuid")
-        .join(names.withColumnRenamed("other_uuid", "source_node_uuid"), "source_node_uuid")
-        .select(
-            "group_id",
-            "node_name",
-            F.lit("in").alias("direction"),
-            F.col("name").alias("pred"),
-            "other_name",
-            "valid_at",
-        )
-    )
-    return out_leg.unionByName(in_leg)
-
-
-def q_kg_shared_employer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Motif query (GraphFrames-style): colleague inference —
-    (a)-[WORKS_AT]->(org)<-[WORKS_AT]-(b), a < b, over CURRENTLY VALID
-    employment edges only (invalid_at null: superseded jobs don't make
-    colleagues). One self-equi-join co-partitioned on (group, org); the
-    org side is the aggregation key, so hot mega-org skew is the AQE
-    skew-join case, never a cartesian."""
-    from .operators.search import shared_affiliation
-
-    return shared_affiliation(q_kg_triples(spark, sf_dir), "WORKS_AT")
-
-
-def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle count + local clustering coefficient over the
-    undirected canonical graph (degree-ordered compact-forward
-    enumeration — each triangle produced once, wedge cost bounded
-    O(m^1.5) under power-law hubs)."""
-    from .operators.centrality import clustering_coefficients
-
-    return clustering_coefficients(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2-core of the canonical KG via iterative peeling — the dense
-    backbone once pendant single-fact chains peel away; per-round cost is
-    one co-partitioned degree agg + two semi-joins of the skinny edge
-    list (see operators/centrality.kcore scale notes)."""
-    from .operators.centrality import kcore
-
-    return kcore(q_kg_triples(spark, sf_dir), k=2)
-
-
-def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3-truss of the canonical KG (every surviving edge in >= 1
-    triangle of the surviving subgraph, peeled to fixpoint) — the
-    edge-level dense backbone: only mutually-corroborating fact
-    clusters remain (operators/centrality.ktruss)."""
-    from .operators.centrality import ktruss
-
-    return ktruss(q_kg_triples(spark, sf_dir), k=3)
-
-
-def _sql_kg_ktruss(rounds: int = 6) -> str:
-    # peel rounds unrolled mechanically (kcore-oracle pattern); the
-    # engine peels to fixpoint with an early-exit probe, so the gate
-    # holds whenever the graph converges within `rounds` — verified at
-    # test scale. MATERIALIZED keeps DuckDB from exponentially
-    # re-inlining the per-round chain.
-    ctes = """
-, und0 AS MATERIALIZED (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-)"""
-    for i in range(rounds + 1):
-        ctes += f""",
-tr{i} AS MATERIALIZED (
-  SELECT e1.group_id, e1.a AS x, e1.b AS y, e2.b AS z
-  FROM und{i} e1
-  JOIN und{i} e2 ON e2.group_id = e1.group_id AND e2.a = e1.b
-  JOIN und{i} e3 ON e3.group_id = e1.group_id AND e3.a = e1.a
-                AND e3.b = e2.b
-),
-sup{i} AS MATERIALIZED (
-  SELECT group_id, a, b, count(*) AS s FROM (
-    SELECT group_id, x AS a, y AS b FROM tr{i}
-    UNION ALL SELECT group_id, y, z FROM tr{i}
-    UNION ALL SELECT group_id, x, z FROM tr{i}
-  ) GROUP BY 1, 2, 3
-)"""
-        if i < rounds:
-            ctes += f""",
-und{i + 1} AS MATERIALIZED (
-  SELECT u.group_id, u.a, u.b FROM und{i} u
-  JOIN sup{i} s ON s.group_id = u.group_id AND s.a = u.a AND s.b = u.b
-  WHERE s.s >= 1
-)"""
-    body = (
-        ctes
-        + f"""
-SELECT u.group_id, u.a AS src, u.b AS dst, CAST(s.s AS BIGINT) AS support
-FROM und{rounds} u
-JOIN sup{rounds} s ON s.group_id = u.group_id AND s.a = u.a AND s.b = u.b"""
-    )
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Log2-bucketed degree distribution — the power-law diagnostic that
-    sizes skew handling; integer-exact buckets via bin() bit length."""
-    from .operators.centrality import degree_histogram
-
-    return degree_histogram(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_entity_cards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-entity profile rollup: role-tagged fact counts, currently-valid
-    count, first/last validity, dominant predicate (deterministic
-    tie-break) — entity-granularity dataset card."""
-    from .operators.centrality import entity_cards
-
-    return entity_cards(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_functional_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Post-build consistency sweep: subjects with 2+ concurrently-valid
-    objects under ontology-declared single-valued predicates."""
-    from .operators.maintenance import functional_violations
-    from .ontology import DEFAULT
-
-    return functional_violations(
-        q_kg_triples(spark, sf_dir), DEFAULT.functional
-    )
-
-
-def q_kg_predicate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-predicate ontology-induction stats (counts, distinct
-    subj/obj, integer functionality ratios)."""
-    from .operators.centrality import predicate_stats
-
-    return predicate_stats(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit, exercised for real: the node table is
-    deterministically corrupted (uuids starting 0/1/2 dropped, ~3/16 of
-    nodes) before auditing, so the dangling-reference counters fire on
-    every foreign key except the untouched episode refs."""
-    from .operators.maintenance import integrity_audit
-
-    t = _graph(spark, sf_dir)
-    corrupted = t.nodes.where(
-        ~F.substring("uuid", 1, 1).isin("0", "1", "2")
-    )
-    return integrity_audit(
-        corrupted, t.edges, t.mention_edges, t.episodes
-    )
-
-
-def q_ann_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Radius similarity search: all (query, candidate) pairs whose exact
-    integer inner product over milli-quantized vectors reaches the score
-    floor — the fixed-score dual of ann_topk."""
-    emb = ann.read_embeddings(spark, sf_dir)
-    q = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.expr(_QZ).alias("qemb")
-    )
-    c = emb.where(F.col("vec_id") >= 8).select(
-        F.col("vec_id").alias("c_id"), F.expr(_QZ).alias("emb")
-    )
-    return ann.range_search(q, c, min_score_q=ANN_RANGE_MIN_Q)
-
-
-ANN_RANGE_MIN_Q = 100_000  # cosine 0.1 in milli-quantized dot units
-
-
-def q_kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity co-mention pairs with integer-exact PMI lift — the
-    relation-discovery signal (high lift + no fact edge = extraction
-    gap). Self-join of the skinny mention table co-partitioned on
-    episode_uuid; fan-out bounded by entities-per-paragraph."""
-    from .operators.centrality import cooccurrence
-
-    t = _graph(spark, sf_dir)
-    return cooccurrence(t.mention_edges, t.nodes)
-
-
-def q_kg_fact_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal ops dashboard: per (group, day), facts becoming valid and
-    facts invalidated — the churn signal a production KG monitors for
-    extraction regressions and contradiction storms. Two skinny aggs +
-    one full-outer join on (group, day)."""
-    tv = q_kg_triples(spark, sf_dir)
-    new = tv.groupBy(
-        "group_id", F.date_format("valid_at", "yyyy-MM-dd").alias("day")
-    ).agg(F.count(F.lit(1)).alias("n_new"))
-    inv = (
-        tv.where(F.col("invalid_at").isNotNull())
-        .groupBy("group_id", F.date_format("invalid_at", "yyyy-MM-dd").alias("day"))
-        .agg(F.count(F.lit(1)).alias("n_invalidated"))
-    )
-    return new.join(inv, ["group_id", "day"], "full").select(
-        "group_id",
-        "day",
-        F.coalesce("n_new", F.lit(0)).cast("long").alias("n_new"),
-        F.coalesce("n_invalidated", F.lit(0)).cast("long").alias("n_invalidated"),
-    )
-
-
-def q_doc_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary head: top 50 terms by frequency with rank — the
-    Zipf sanity table a curation run eyeballs. Explode shuffles once on
-    the term key (map-side combined); ranking is a TakeOrderedAndProject
-    top-50 plus a 50-row collect_list — never a window over the
-    vocabulary."""
-    d = docs.read_documents(spark, sf_dir)
-    terms = d.select(
-        F.explode(F.expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias(
-            "term"
-        )
-    )
-    counts = terms.groupBy("term").agg(F.count(F.lit(1)).alias("cnt"))
-    # TakeOrderedAndProject top-50, then rank the 50 survivors in one
-    # bounded collect_list — no global single-partition window over the
-    # vocabulary
-    top = counts.orderBy(F.col("cnt").desc(), "term").limit(50)
-    return (
-        top.agg(
-            F.expr("array_sort(collect_list(struct(-cnt AS nc, term, cnt)))").alias(
-                "s"
-            )
-        )
-        .select(F.posexplode("s").alias("i", "x"))
-        .select(
-            F.col("x.term").alias("term"),
-            F.col("x.cnt").cast("long").alias("cnt"),
-            (F.col("i") + 1).cast("long").alias("rank"),
-        )
-    )
-
-
-def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weakly-connected components of the canonical entity graph per
-    group, with component sizes — the graph-hygiene diagnostic (one
-    giant component = healthy coverage; many shards = extraction gaps).
-    Reuses the engine's adaptive connected-components (local union-find
-    cutover under 1M edges, distributed min-label fixpoint above);
-    per-group isolation via a group-prefixed vertex key."""
-    from .operators.resolve import connected_components
-
-    tv = q_kg_triples(spark, sf_dir)
-    und = (
-        tv.select(
-            "group_id",
-            F.least("subj", "obj").alias("a"),
-            F.greatest("subj", "obj").alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    e = und.select(
-        F.concat_ws("|", "group_id", "a").alias("src"),
-        F.concat_ws("|", "group_id", "b").alias("dst"),
-    )
-    v = e.select(F.col("src").alias("id")).union(
-        e.select(F.col("dst").alias("id"))
-    ).distinct()
-    comp = connected_components(e, v)
-    out = comp.select(
-        F.expr("substring_index(id, '|', 1)").alias("group_id"),
-        F.expr("substr(id, length(substring_index(id, '|', 1)) + 2)").alias(
-            "name"
-        ),
-        F.expr(
-            "substr(component, length(substring_index(component, '|', 1)) + 2)"
-        ).alias("component"),
-    )
-    sizes = out.groupBy("group_id", "component").agg(
-        F.count(F.lit(1)).alias("comp_size")
-    )
-    return out.join(sizes, ["group_id", "component"]).select(
-        "group_id",
-        "name",
-        "component",
-        F.col("comp_size").cast("long").alias("comp_size"),
-    )
-
-
-def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strongly-connected components of the DIRECTED canonical fact
-    graph per group — directed cycles (rename loops, mutual-acquisition
-    contradictions, extraction errors) surface as scc_size > 1; the
-    directed dual of kg_components. Multi-pivot trim + FW-BW coloring
-    (centrality.scc): all rounds are skinny (group_id, name)
-    co-partitioned joins/aggs, no windows, no collects."""
-    from .operators.centrality import scc
-
-    return scc(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_triadic_closure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triadic-closure events: for every triangle in the dated
-    undirected fact graph, the edge that closed it and when — the
-    observed ground truth for the link-prediction scores
-    (kg_link_prediction / kg_link_pred_ra). Wedge-enumeration plan
-    family; closing edge picked by a branch-free greatest(struct)."""
-    from .operators.centrality import triadic_closure
-
-    return triadic_closure(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_graph_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group directed-graph shape telemetry: node/arc counts,
-    reciprocity numerator (mutual arc pairs), and the exact integer
-    moment sums behind degree assortativity — the build-over-build
-    drift dashboard. One row per group; every shuffle skinny."""
-    from .operators.centrality import graph_shape_stats
-
-    return graph_shape_stats(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity of the LPA community partition per group, as an
-    exact integer fraction (X16 quality metric)."""
-    from .operators.communities import modularity
-
-    t = _graph(spark, sf_dir)
-    return modularity(t.nodes, t.edges)
-
-
-def q_kg_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link-prediction candidates: non-adjacent entity pairs with >= 1
-    common neighbor + integer-exact neighborhood Jaccard (wedge
-    enumeration at the shared vertex — same plan family as triangle
-    counting; anti-join drops existing edges)."""
-    from .operators.centrality import link_prediction
-
-    return link_prediction(q_kg_triples(spark, sf_dir))
-
-
-def q_evt_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix over the events table (first-activity-day
-    cohorts x day offset, integer retention rate)."""
-    from .operators import events as ev
-
-    return ev.retention(ev.read_events(spark, sf_dir))
-
-
-WALK_LEN = 3
-
-
-def q_kg_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic random-walk corpus (DeepWalk/node2vec export): one
-    hash-driven walk of length WALK_LEN per vertex over the directed
-    canonical graph."""
-    from .operators.centrality import random_walks
-
-    return random_walks(q_kg_triples(spark, sf_dir), length=WALK_LEN)
-
-
-def q_kg_fact_confidence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Knowledge-fusion support stats per canonical edge (the
-    believability inputs of Dong et al.'s knowledge fusion: how many
-    independent observations, episodes, source pages, and how wide a
-    time spread back this fact): n_obs raw observations, n_episodes
-    distinct episodes, n_urls distinct source pages, span_days between
-    first and last observation. Same dedup key and donor rule as
-    materialize_edges, so rows are 1:1 with kg_triples edges. One
-    groupBy on the class-aggregated key after a skinny episode-url
-    join — no new shuffle shape beyond the build itself."""
-    from .ontology import DEFAULT
-    from .operators.materialize import resolve_edge_pointers
-
-    t = _graph(spark, sf_dir)
-    raw = resolve_edge_pointers(t.triples_raw, t.uuid_map)
-    raw = raw.join(
-        t.episodes.select(F.col("uuid").alias("episode_uuid"), "url"),
-        "episode_uuid",
-    )
-    raw = raw.withColumn(
-        "raw_uuid",
-        F.md5(F.concat_ws("|", F.lit("edge"), "episode_uuid", "sent_idx")),
-    ).withColumn(
-        "_vkey",
-        F.concat(
-            F.coalesce(
-                F.date_format("valid_at", "yyyy-MM-dd HH:mm:ss.SSSSSS"),
-                F.lit("9999"),
-            ),
-            F.col("raw_uuid"),
-        ),
-    )
-    keyed = raw.groupBy(
-        "group_id",
-        "source_node_uuid",
-        "target_node_uuid",
-        F.expr(DEFAULT.synonym_class_sql("pred")).alias("_class"),
-    ).agg(
-        F.min_by("pred", F.col("_vkey")).alias("pred"),
-        F.count(F.lit(1)).alias("n_obs"),
-        F.countDistinct("episode_uuid").alias("n_episodes"),
-        F.countDistinct("url").alias("n_urls"),
-        F.datediff(
-            F.max("valid_at").cast("date"), F.min("valid_at").cast("date")
-        ).alias("span_days"),
-    )
-    n = t.nodes.select(F.col("uuid").alias("nu"), F.col("name").alias("nn"))
-    return (
-        keyed.join(
-            n.withColumnRenamed("nu", "source_node_uuid")
-            .withColumnRenamed("nn", "subj"),
-            "source_node_uuid",
-        )
-        .join(
-            n.withColumnRenamed("nu", "target_node_uuid")
-            .withColumnRenamed("nn", "obj"),
-            "target_node_uuid",
-        )
-        .select(
-            "group_id", "subj", "pred", "obj",
-            F.col("n_obs").cast("long").alias("n_obs"),
-            F.col("n_episodes").cast("long").alias("n_episodes"),
-            F.col("n_urls").cast("long").alias("n_urls"),
-            F.col("span_days").cast("long").alias("span_days"),
-        )
-    )
-
-
-def _sql_kg_fact_confidence() -> str:
-    body = """
-, rawx AS (
-  SELECT t.group_id, cs.canon_name AS subj, t.pred, co.canon_name AS obj,
-         t.valid_at, t.url,
-         md5(t.url || '|' || t.para_idx) AS episode_uuid,
-         md5('edge|' || md5(t.url || '|' || t.para_idx) || '|' || t.sent_idx)
-           AS raw_uuid
-  FROM triples_g t
-  JOIN canon cs ON cs.group_id = t.group_id AND cs.base = t.subj_base
-  JOIN canon co ON co.group_id = t.group_id AND co.base = t.obj_base
-)
-SELECT group_id, subj,
-       arg_min(pred, strftime(valid_at, '%Y-%m-%d %H:%M:%S.%f') || raw_uuid)
-         AS pred,
-       obj,
-       count(*) AS n_obs,
-       count(DISTINCT episode_uuid) AS n_episodes,
-       count(DISTINCT url) AS n_urls,
-       CAST(date_diff('day', min(valid_at)::DATE, max(valid_at)::DATE)
-            AS BIGINT) AS span_days
-FROM rawx
-GROUP BY group_id, subj,
-         (CASE pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE pred END), obj"""
-    return _kg_sql(body)
-
-
-def q_kg_temporal_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-respecting 2-hop paths (temporal reachability): compositions
-    a -pred1-> b -pred2-> c where the second fact became valid at or
-    after the first (valid_at2 >= valid_at1) and a != c — the causal-
-    chain export of the dated fact graph (what temporal link-prediction
-    and event-ordering models train on; kg_metapaths counts schema
-    compositions, this materializes the temporally ADMISSIBLE instances).
-    One self-join on the (group, mid) key, partial-agg-free, pair output
-    bounded by in-deg x out-deg of the mid vertex."""
-    t = q_kg_triples(spark, sf_dir)
-    a = t.select(
-        "group_id", F.col("subj").alias("src"), F.col("pred").alias("pred1"),
-        F.col("obj").alias("mid"), F.col("valid_at").alias("t1"),
-    )
-    b = t.select(
-        "group_id", F.col("subj").alias("mid"), F.col("pred").alias("pred2"),
-        F.col("obj").alias("dst"), F.col("valid_at").alias("t2"),
-    )
-    return (
-        a.join(b, ["group_id", "mid"])
-        .where((F.col("t2") >= F.col("t1")) & (F.col("src") != F.col("dst")))
-        .select("group_id", "src", "pred1", "mid", "pred2", "dst", "t1", "t2")
-    )
-
-
-def _sql_kg_temporal_paths() -> str:
-    body = """
-SELECT a.group_id, a.subj AS src, a.pred AS pred1, a.obj AS mid,
-       b.pred AS pred2, b.obj AS dst, a.valid_at AS t1, b.valid_at AS t2
-FROM eds a
-JOIN eds b ON b.group_id = a.group_id AND b.subj = a.obj
-          AND b.valid_at >= a.valid_at AND b.obj <> a.subj"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_neighbor_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GraphSAGE-style 2-hop neighbor sampling (fanout 4,3) over the
-    undirected canonical graph — the distributed, deterministic GNN
-    minibatch export (operators/centrality.neighbor_sample)."""
-    from .operators.centrality import neighbor_sample
-
-    return neighbor_sample(q_kg_triples(spark, sf_dir))
-
-
-def _sql_kg_neighbor_sample() -> str:
-    u = lambda e: f"('0x' || substr(md5({e}), 1, 15))::UBIGINT"  # noqa: E731
-    body = f"""
-, und AS (
-  SELECT DISTINCT group_id, src, dst FROM (
-    SELECT group_id, subj AS src, obj AS dst FROM eds
-    UNION ALL
-    SELECT group_id, obj AS src, subj AS dst FROM eds
-  ) WHERE src <> dst
-),
-seeds AS (
-  SELECT DISTINCT group_id, src AS seed FROM und
-  WHERE {u("'seed|' || group_id || '|' || src")} % 5 = 0
-),
-h1 AS (
-  SELECT u.group_id, s.seed, u.dst,
-         ROW_NUMBER() OVER (PARTITION BY u.group_id, s.seed
-           ORDER BY {u("'h1|' || u.group_id || '|' || s.seed || '|' || u.dst")}, u.dst) AS pos
-  FROM seeds s JOIN und u ON u.group_id = s.group_id AND u.src = s.seed
-),
-h1k AS (SELECT * FROM h1 WHERE pos <= 4),
-h2 AS (
-  SELECT u.group_id, h.seed, u.src, u.dst,
-         ROW_NUMBER() OVER (PARTITION BY u.group_id, h.seed, u.src
-           ORDER BY {u("'h2|' || u.group_id || '|' || h.seed || '|' || u.src || '|' || u.dst")}, u.dst) AS pos
-  FROM h1k h JOIN und u ON u.group_id = h.group_id AND u.src = h.dst
-  WHERE u.dst <> h.seed
-),
-h2k AS (SELECT * FROM h2 WHERE pos <= 3)
-SELECT group_id, seed, CAST(1 AS BIGINT) AS hop, seed AS src, dst,
-       CAST(pos AS BIGINT) AS pos
-FROM h1k
-UNION ALL
-SELECT group_id, seed, CAST(2 AS BIGINT), src, dst, CAST(pos AS BIGINT)
-FROM h2k"""
-    return _kg_sql(body, with_eds=True)
-
-
-WALK_WINDOW = 2
-
-
-N2V_RET, N2V_ADJ, N2V_OUT = 25, 100, 200  # p=4, q=0.5 (DFS-leaning)
-
-
-def q_kg_node2vec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Second-order biased walk corpus (operators/centrality.
-    node2vec_walks): node2vec p/q transition weighting with the
-    deterministic hash roulette, length WALK_LEN, one walk per
-    vertex."""
-    from .operators.centrality import node2vec_walks
-
-    return node2vec_walks(
-        q_kg_triples(spark, sf_dir),
-        length=WALK_LEN,
-        w_ret=N2V_RET,
-        w_adj=N2V_ADJ,
-        w_out=N2V_OUT,
-    )
-
-
-def _sql_kg_node2vec() -> str:
-    rounds, unions = [], [
-        "SELECT group_id, start, CAST(0 AS BIGINT) AS step, node FROM t0"
-    ]
-    for s in range(1, WALK_LEN + 1):
-        r = f"('0x' || substr(md5('n2v:' || start || ':{s}'), 1, 8))::BIGINT"
-        rounds.append(f"""
-c{s} AS (
-  SELECT t.group_id, t.start, t.node, n.dst, n.pick,
-         CASE WHEN t.prev IS NULL THEN {N2V_ADJ}
-              WHEN n.dst = t.prev THEN {N2V_RET}
-              WHEN u.ua IS NOT NULL THEN {N2V_ADJ}
-              ELSE {N2V_OUT} END AS wt
-  FROM t{s - 1} t
-  JOIN nbrs n ON n.group_id = t.group_id AND n.src = t.node
-  LEFT JOIN und u ON u.group_id = t.group_id
-        AND u.ua = least(t.prev, n.dst) AND u.ub = greatest(t.prev, n.dst)
-),
-w{s} AS (
-  SELECT group_id, start, node, dst, wt,
-         sum(wt) OVER (PARTITION BY group_id, start ORDER BY pick
-                       ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(wt) OVER (PARTITION BY group_id, start) AS total
-  FROM c{s}
-),
-t{s} AS (
-  SELECT group_id, start, dst AS node, node AS prev
-  FROM w{s}
-  WHERE {r} % total >= cum - wt AND {r} % total < cum
-)""")
-        unions.append(
-            f"SELECT group_id, start, CAST({s} AS BIGINT), node FROM t{s}"
-        )
-    body = f"""
-, e AS (SELECT DISTINCT group_id, subj AS src, obj AS dst FROM eds),
-nbrs AS (
-  SELECT group_id, src, dst,
-         row_number() OVER (PARTITION BY group_id, src ORDER BY dst) AS pick
-  FROM e
-),
-und AS (SELECT DISTINCT group_id, least(src, dst) AS ua,
-               greatest(src, dst) AS ub FROM e),
-v AS (SELECT group_id, src AS name FROM e
-      UNION SELECT group_id, dst FROM e),
-t0 AS (SELECT group_id, name AS start, name AS node,
-              CAST(NULL AS VARCHAR) AS prev FROM v),{",".join(rounds)}
-{" UNION ALL ".join(unions)}"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_walk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skip-gram training pairs from the walk corpus (the DeepWalk
-    word2vec stage): (center, context) for walk positions within
-    WALK_WINDOW of each other, with pair counts — the direct input to a
-    node-embedding trainer. One self-join of the walk table
-    co-partitioned on (group, start); each walk is length WALK_LEN+1 so
-    the per-walk fan-out is a small constant."""
-    from .operators.centrality import random_walks
-
-    walks = random_walks(q_kg_triples(spark, sf_dir), length=WALK_LEN)
-    a, b = walks.alias("a"), walks.alias("b")
-    return (
-        a.join(b, ["group_id", "start"])
-        .where(
-            (F.col("a.step") != F.col("b.step"))
-            & (F.abs(F.col("a.step") - F.col("b.step")) <= WALK_WINDOW)
-        )
-        .groupBy(
-            "group_id",
-            F.col("a.node").alias("center"),
-            F.col("b.node").alias("context"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_pairs"))
-        .select(
-            "group_id",
-            "center",
-            "context",
-            F.col("n_pairs").cast("long").alias("n_pairs"),
-        )
-    )
-
-
-def q_evt_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization over the events table (30-min inactivity
-    gap) — the batch twin of the streaming stateful rollup."""
-    from .operators import events as ev
-
-    out = ev.sessionize(ev.read_events(spark, sf_dir))
-    return out.select(
-        "user_id",
-        F.col("session_idx").cast("long").alias("session_idx"),
-        F.col("n_events").cast("long").alias("n_events"),
-        "session_start",
-        "session_end",
-        F.col("sum_value_c").cast("long").alias("sum_value_c"),
-        F.col("n_types").cast("long").alias("n_types"),
-    )
-
-
-def q_evt_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows per event_type — the batch form
-    of the watermarked streaming window aggregation."""
-    from .operators import events as ev
-
-    out = ev.tumbling_windows(ev.read_events(spark, sf_dir), unit="hour")
-    return out.select(
-        "window_start",
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value_c").cast("long").alias("sum_value_c"),
-        F.col("n_users").cast("long").alias("n_users"),
-    )
-
-
-FUNNEL_STEPS = ["view", "click", "purchase"]
-
-
-def q_evt_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered-step funnel view->click->purchase: per user the earliest
-    step-k event strictly after their step-(k-1) event, plus
-    steps_completed — K-1 co-partitioned join+min stages, no per-user
-    sort."""
-    from .operators import events as ev
-
-    return ev.funnel(ev.read_events(spark, sf_dir), FUNNEL_STEPS)
-
-
-MEDIA_N = 120
-
-
-def media_phash_path(sf_dir: str) -> str:
-    import os
-
-    from .registry_search import ORACLE_SCRATCH
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"{ORACLE_SCRATCH}/{tag}/media_phash.parquet"
-
-
-def q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Image near-duplicate pairs over the deterministic media corpus:
-    REAL PNG decode -> perceptual hash (operators/multimodal) -> blocked
-    Hamming pair join. The decode-dependent phash table is materialized
-    to the oracle scratch (the persisted-feature-table pattern of the
-    similarity queries — DuckDB cannot decode PNG, so the oracle verifies
-    the pair logic over the same hashes while pytest pins the decode)."""
-    from .operators.multimodal import image_features, phash_near_pairs, synth_media
-
-    path = media_phash_path(sf_dir)
-    feats = image_features(synth_media(spark, MEDIA_N)).select("content_id", "phash")
-    feats.write.mode("overwrite").parquet(path)
-    return phash_near_pairs(spark.read.parquet(path), max_hamming=3).select(
-        "content_a", "content_b", "hamming"
-    )
-
-
-def _sql_media_phash_pairs() -> str:
-    # all-pairs over the 40-image scratch table — the pigeonhole blocking
-    # in the Spark plan is recall-lossless at hamming <= 3, so the oracle
-    # can afford the brute-force formulation
-    from .registry_search import _oracle_sf_dir
-
-    return f"""
-WITH f AS (SELECT * FROM read_parquet('{media_phash_path(_oracle_sf_dir())}/*.parquet'))
-SELECT a.content_id AS content_a, b.content_id AS content_b,
-       bit_count(xor(a.phash, b.phash)) AS hamming
-FROM f a JOIN f b ON a.content_id < b.content_id
-WHERE bit_count(xor(a.phash, b.phash)) <= 3"""
-
-
-def media_scene_path(sf_dir: str) -> str:
-    import os
-
-    from .registry_search import ORACLE_SCRATCH
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"{ORACLE_SCRATCH}/{tag}/media_scene_diffs.parquet"
-
-
-def q_media_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Video shot segmentation over the deterministic scene corpus: REAL
-    Y4M demux -> per-transition mean luma delta (integer milli-units) ->
-    threshold + per-clip scene rollup. The decode-dependent diff table is
-    persisted to the oracle scratch (persisted-feature-table pattern);
-    the oracle verifies the thresholding/rollup, pytest pins the decode
-    and the planted cut positions (frames 4 and 8)."""
-    from .operators.multimodal import frame_diffs, scene_cuts, synth_clips
-
-    path = media_scene_path(sf_dir)
-    diffs = frame_diffs(synth_clips(spark, MEDIA_N // 2))
-    diffs.write.mode("overwrite").parquet(path)
-    return scene_cuts(spark.read.parquet(path))
-
-
-def _sql_media_scene_cuts() -> str:
-    from .operators.multimodal import SCENE_CUT_MIN_U
-    from .registry_search import _oracle_sf_dir
-
-    return f"""
-WITH d AS (SELECT * FROM read_parquet('{media_scene_path(_oracle_sf_dir())}/*.parquet'))
-SELECT content_id,
-       CAST(count(*) AS BIGINT) AS n_transitions,
-       CAST(sum(CASE WHEN diff_u >= {SCENE_CUT_MIN_U} THEN 1 ELSE 0 END) AS BIGINT) AS n_cuts,
-       CAST(sum(CASE WHEN diff_u >= {SCENE_CUT_MIN_U} THEN 1 ELSE 0 END) + 1 AS BIGINT) AS n_scenes,
-       CAST(min(CASE WHEN diff_u >= {SCENE_CUT_MIN_U} THEN frame_idx END) AS BIGINT) AS first_cut_frame
-FROM d GROUP BY 1"""
-
-
-def media_audio_fp_path(sf_dir: str) -> str:
-    import os
-
-    from .registry_search import ORACLE_SCRATCH
-
-    tag = os.path.basename(sf_dir.rstrip("/"))
-    return f"{ORACLE_SCRATCH}/{tag}/media_audio_fp.parquet"
-
-
-def q_media_audio_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Acoustic-fingerprint exact dedup over the media corpus: REAL WAV
-    decode -> Shazam-style peak-pair fingerprint -> exact-match grouping
-    (operators/multimodal). Same persisted-feature-table oracle pattern
-    as media_phash_pairs: DuckDB verifies the grouping over the hashes
-    the Spark decode stage materialized."""
-    from .operators.multimodal import audio_dup_groups, audio_fingerprints, synth_media
-
-    path = media_audio_fp_path(sf_dir)
-    fps = audio_fingerprints(synth_media(spark, MEDIA_N)).select(
-        "content_id", "fingerprint"
-    )
-    fps.write.mode("overwrite").parquet(path)
-    return audio_dup_groups(spark.read.parquet(path)).select(
-        "fingerprint",
-        F.col("n_clips").cast("long").alias("n_clips"),
-        "canonical_id",
-    )
-
-
-def _sql_media_audio_dedup() -> str:
-    from .registry_search import _oracle_sf_dir
-
-    return f"""
-SELECT fingerprint, count(*) AS n_clips, min(content_id) AS canonical_id
-FROM read_parquet('{media_audio_fp_path(_oracle_sf_dir())}/*.parquet')
-WHERE fingerprint IS NOT NULL
-GROUP BY 1"""
-
-
-HITS_ITERS = 2
-
-
-def q_kg_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kleinberg HITS hubs & authorities over the canonical triple graph
-    (operators/centrality.hits): 2 exact-integer power iterations with
-    per-group max-normalization in micro-units — the PageRank
-    complement for KG curation (authorities = merge targets, hubs =
-    aggregator entities)."""
-    from .operators.centrality import hits
-
-    return hits(q_kg_triples(spark, sf_dir), iters=HITS_ITERS)
-
-
-def _sql_kg_hits() -> str:
-    rounds = []
-    for i in range(1, HITS_ITERS + 1):
-        p = i - 1
-        rounds.append(f"""
-ar{i} AS (
-  SELECT v.group_id, v.name, coalesce(s.s, 0) AS raw_u
-  FROM v LEFT JOIN (
-    SELECT e.group_id, e.dst AS name, sum(h.hub_u) AS s
-    FROM e JOIN h{p} h ON h.group_id = e.group_id AND h.name = e.src
-    GROUP BY 1, 2
-  ) s ON s.group_id = v.group_id AND s.name = v.name
-),
-am{i} AS (SELECT group_id, greatest(max(raw_u) // 1000000, 1) AS sc
-          FROM ar{i} GROUP BY 1),
-a{i} AS MATERIALIZED (
-  SELECT r.group_id, r.name, raw_u // sc AS auth_u
-  FROM ar{i} r JOIN am{i} USING (group_id)
-),
-hr{i} AS (
-  SELECT v.group_id, v.name, coalesce(s.s, 0) AS raw_u
-  FROM v LEFT JOIN (
-    SELECT e.group_id, e.src AS name, sum(a.auth_u) AS s
-    FROM e JOIN a{i} a ON a.group_id = e.group_id AND a.name = e.dst
-    GROUP BY 1, 2
-  ) s ON s.group_id = v.group_id AND s.name = v.name
-),
-hm{i} AS (SELECT group_id, greatest(max(raw_u) // 1000000, 1) AS sc
-          FROM hr{i} GROUP BY 1),
-h{i} AS MATERIALIZED (
-  SELECT r.group_id, r.name, raw_u // sc AS hub_u
-  FROM hr{i} r JOIN hm{i} USING (group_id)
-)""")
-    body = f"""
-, e AS (SELECT DISTINCT group_id, subj AS src, obj AS dst FROM eds),
-v AS (SELECT group_id, src AS name FROM e
-      UNION SELECT group_id, dst FROM e),
-h0 AS (SELECT group_id, name, CAST(1000000 AS BIGINT) AS hub_u FROM v),{",".join(rounds)}
-SELECT a.group_id, a.name,
-       CAST(a.auth_u AS BIGINT) AS auth_u,
-       CAST(h.hub_u AS BIGINT) AS hub_u
-FROM a{HITS_ITERS} a
-JOIN h{HITS_ITERS} h ON h.group_id = a.group_id AND h.name = a.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-WSP_SOURCES = 8
-WSP_ROUNDS = 4
-WSP_WEIGHTS = 9
-
-
-def q_kg_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded Bellman-Ford weighted shortest paths from 8 deterministic
-    landmark sources (operators/centrality.weighted_sssp): md5-derived
-    integer edge costs in [1,9], parallel predicates collapse to the
-    cheapest, 4 relaxation rounds = exact distances over <= 4-edge
-    paths."""
-    from .operators.centrality import weighted_sssp
-
-    return weighted_sssp(
-        q_kg_triples(spark, sf_dir),
-        n_sources=WSP_SOURCES,
-        rounds=WSP_ROUNDS,
-        n_weights=WSP_WEIGHTS,
-    )
-
-
-def _sql_kg_shortest_paths() -> str:
-    rounds = []
-    for i in range(1, WSP_ROUNDS + 1):
-        p = i - 1
-        rounds.append(f"""
-d{i} AS MATERIALIZED (
-  SELECT group_id, origin, name, min(d) AS d FROM (
-    SELECT group_id, origin, name, d FROM d{p}
-    UNION ALL
-    SELECT t.group_id, t.origin, e.dst AS name, t.d + e.w AS d
-    FROM d{p} t JOIN ew e ON e.group_id = t.group_id AND e.src = t.name
-  ) GROUP BY 1, 2, 3
-)""")
-    body = f"""
-, de AS (SELECT DISTINCT group_id, subj AS src, pred, obj AS dst FROM eds),
-ew AS (
-  SELECT group_id, src, dst,
-         min(('0x' || substr(md5(src || '|' || pred || '|' || dst), 1, 8))
-             ::BIGINT % {WSP_WEIGHTS} + 1) AS w
-  FROM de GROUP BY 1, 2, 3
-),
-v AS (SELECT group_id, src AS name FROM ew
-      UNION SELECT group_id, dst FROM ew),
-src AS (
-  SELECT group_id, name AS origin FROM v
-  ORDER BY md5('wsp:' || group_id || '|' || name) LIMIT {WSP_SOURCES}
-),
-d0 AS (SELECT group_id, origin, origin AS name, CAST(0 AS BIGINT) AS d
-       FROM src),{",".join(rounds)}
-SELECT group_id, origin, name, CAST(d AS BIGINT) AS dist_w
-FROM d{WSP_ROUNDS} WHERE d > 0"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_link_pred_ra(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resource-allocation link-prediction index (operators/centrality.
-    ra_link_prediction): non-adjacent pairs scored by
-    sum(1e6 div deg(z)) over common neighbors z — the hub-penalizing
-    upgrade to kg_link_prediction's Jaccard."""
-    from .operators.centrality import ra_link_prediction
-
-    return ra_link_prediction(q_kg_triples(spark, sf_dir))
-
-
-def _sql_kg_link_pred_ra() -> str:
-    body = """
-, und AS (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-),
-adj AS (
-  SELECT group_id, a AS v, b AS nbr FROM und
-  UNION ALL SELECT group_id, b, a FROM und
-),
-deg AS (SELECT group_id, v, count(*) AS deg FROM adj GROUP BY 1, 2),
-pairs AS (
-  SELECT e1.group_id, e1.nbr AS a, e2.nbr AS b,
-         count(*) AS common, sum(1000000 // d.deg) AS ra_u
-  FROM adj e1
-  JOIN deg d ON d.group_id = e1.group_id AND d.v = e1.v
-  JOIN adj e2 ON e2.group_id = e1.group_id AND e2.v = e1.v
-             AND e2.nbr > e1.nbr
-  GROUP BY 1, 2, 3
-)
-SELECT p.group_id, p.a AS name_a, p.b AS name_b,
-       CAST(p.common AS BIGINT) AS common,
-       CAST(p.ra_u AS BIGINT) AS ra_u
-FROM pairs p
-LEFT JOIN und u ON u.group_id = p.group_id AND u.a = p.a AND u.b = p.b
-WHERE u.a IS NULL"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _domain_url_cases(prefix_col: str = "doc_id") -> tuple[str, str]:
-    """Shared url-fixture expressions (Spark dialect, DuckDB dialect):
-    deterministic subdomain / TLD / tracking-suffix variation keyed on
-    doc_id so registrable-domain extraction has real work to do."""
-    sub = (
-        f"CASE WHEN {prefix_col} % 3 = 0 THEN 'www.' "
-        f"WHEN {prefix_col} % 3 = 1 THEN 'news.' ELSE '' END"
-    )
-    tld = f"CASE WHEN {prefix_col} % 5 = 0 THEN '.co.uk' ELSE '.com' END"
-    q = f"CASE WHEN {prefix_col} % 2 = 1 THEN '?ref=rss' ELSE '' END"
-    spark = (
-        f"concat('https://', {sub}, source, '-', lang, {tld}, '/p/', "
-        f"cast({prefix_col} as string), {q})"
-    )
-    duck = (
-        f"concat('https://', {sub}, source, '-', lang, {tld}, '/p/', "
-        f"CAST({prefix_col} AS VARCHAR), {q})"
-    )
-    return spark, duck
-
-
-def q_doc_domain_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-registrable-domain curation rollup (operators/urls.
-    domain_stats) — the domain-reputation table (C4/RefinedWeb filter
-    whole domains first): page count, languages, tokens, corpus-wide
-    exact-dup pages, Gopher-keep pages. Fixture: every document gets a
-    deterministic url (subdomain/TLD/tracking variation, co.uk public
-    suffixes included) plus a cross-domain .net mirror of the first 40
-    docs — the mirrors AND their originals must both count as dups."""
-    from .operators import urls as urls_mod
-
-    d = docs_mod.read_documents(spark, sf_dir).select(
-        "doc_id", "lang", "text", "source"
-    )
-    url_s, _ = _domain_url_cases()
-    base = d.select(
-        "doc_id", "lang", "text", F.expr(url_s).alias("url")
-    )
-    mirror = d.where("doc_id < 40").select(
-        (F.col("doc_id") + 9_000_000).cast("long").alias("doc_id"),
-        "lang",
-        "text",
-        F.expr(
-            "concat('https://mirror.', source, '-', lang, '.net/p/',"
-            " cast(doc_id as string))"
-        ).alias("url"),
-    )
-    return urls_mod.domain_stats(base.unionByName(mirror))
-
-
-def _sql_doc_domain_stats() -> str:
-    from .operators.urls import _domain_sql
-
-    _, url_d = _domain_url_cases()
-    gopher_d = _sql_doc_gopher().replace("FROM documents", "FROM d")
-    return rf"""
-WITH d AS (
-  SELECT doc_id, lang, text, {url_d} AS url FROM documents
-  UNION ALL
-  SELECT doc_id + 9000000, lang, text,
-         concat('https://mirror.', source, '-', lang, '.net/p/',
-                CAST(doc_id AS VARCHAR))
-  FROM documents WHERE doc_id < 40
-),
-dom AS (
-  SELECT doc_id, lang, {_domain_sql(duck=True)} AS domain,
-         len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_tokens
-  FROM d
-),
-fp AS (
-  SELECT doc_id, md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g')))
-           AS fingerprint
-  FROM d
-),
-fpc AS (SELECT fingerprint, count(*) AS n_same FROM fp GROUP BY 1),
-dup AS (
-  SELECT fp.doc_id, CASE WHEN n_same > 1 THEN 1 ELSE 0 END AS is_dup
-  FROM fp JOIN fpc USING (fingerprint)
-),
-g AS (SELECT doc_id, keep FROM ({gopher_d}))
-SELECT dom.domain,
-       count(*) AS n_docs,
-       CAST(count(DISTINCT dom.lang) AS BIGINT) AS n_langs,
-       CAST(sum(dom.n_tokens) AS BIGINT) AS n_tokens,
-       CAST(sum(dup.is_dup) AS BIGINT) AS n_dup_docs,
-       CAST(sum(g.keep) AS BIGINT) AS n_gopher_keep
-FROM dom
-JOIN dup ON dup.doc_id = dom.doc_id
-JOIN g ON g.doc_id = dom.doc_id
-GROUP BY 1"""
-
-
-HOP_WINDOW_S = 3600
-HOP_S = 900
-
-
-def q_evt_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping 1-hour/15-min sliding windows per event_type (operators/
-    events.hopping_windows) — the batch twin of the streaming
-    overlapping-window aggregation; every event counts in 4 windows."""
-    from .operators import events as ev
-
-    out = ev.hopping_windows(
-        ev.read_events(spark, sf_dir), window_s=HOP_WINDOW_S, hop_s=HOP_S
-    )
-    return out.select(
-        "window_start",
-        "event_type",
-        F.col("n_events").cast("long").alias("n_events"),
-        F.col("sum_value_c").cast("long").alias("sum_value_c"),
-        F.col("n_users").cast("long").alias("n_users"),
-    )
-
-
-def _sql_evt_hopping() -> str:
-    n = HOP_WINDOW_S // HOP_S
-    return f"""
-WITH k AS (
-  SELECT *, CAST(floor(epoch(ts) / {HOP_S}) AS BIGINT) AS k FROM events
-),
-x AS (
-  SELECT *, unnest(range(k - {n - 1}, k + 1)) AS j FROM k
-)
-SELECT make_timestamp(j * {HOP_S} * 1000000) AS window_start, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_c,
-       count(DISTINCT user_id) AS n_users
-FROM x GROUP BY 1, 2"""
-
-
-def q_kg_er_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Entity-resolution quality audit: pairwise precision/recall/F1 of
-    the engine's alias clustering (uuid_map) against the GENERATIVE
-    mention truth (corpus.golden_mentions — the same pure function the
-    parity tests pin against the DuckDB corpus CTEs). The standard ER
-    evaluation (pairwise P/R over same-cluster name pairs, Menestrina
-    et al. 2010), integer-exact in micro-units.
-
-    The DuckDB oracle derives BOTH sides from the generative truth, so
-    the gate asserts perfect resolution (P = R = F1 = 1e6, fp = fn = 0
-    per group): any engine drift — a missed typo alias, an over-merge —
-    fails the hash compare loudly rather than shifting a float.
-
-    Scale: truth extraction is Arrow-batched mapInPandas over the
-    skinny (doc_id, source) projection (eval-side only, never the build
-    hot path); pair enumeration self-joins within (group, cluster) —
-    bounded by cluster size, the same shape as the dedup verifies; the
-    metric rollup is one hash agg per group."""
-    from .corpus import golden_mentions
-
-    t = _graph(spark, sf_dir)
-
-    def _truth(batches):
-        for pdf in batches:
-            g = golden_mentions(pdf)
-            yield g[["group_id", "name", "base"]]
-
-    truth = (
-        docs_mod.read_documents(spark, sf_dir)
-        .select("doc_id", "source")
-        .mapInPandas(_truth, "group_id string, name string, base string")
-        .distinct()
-    )
-
-    from .operators.resolve import er_pair_metrics
-
-    engine = t.uuid_map.select(
-        "group_id", "name", F.col("canon_uuid").alias("cluster")
-    ).distinct()
-    return er_pair_metrics(truth, engine)
-
-
-def q_kg_blocking_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Blocking-stage quality audit (the stage BEFORE clustering, which
-    kg_er_metrics evaluates): per group, the candidate pairs the exact
-    norm-block star + MinHash-LSH banding actually generate, scored
-    against the generative alias-pair truth — pairs completeness
-    (blocking recall) and reduction ratio (1 - candidates/all-pairs),
-    the two standard blocking metrics (Christen 2012). Integer-exact
-    micro-units; the oracle reproduces the ENTIRE banding pipeline
-    (shingles, md5 Carter-Wegman minhash family, 16x4 band keys, bucket
-    cap, exact-Jaccard verify) in SQL, so the gate pins the blocking
-    output itself, not just downstream cluster equality."""
-    from .corpus import golden_mentions
-    from .operators.resolve import match_edges_exact, match_edges_lsh
-
-    t = _graph(spark, sf_dir)
-    ents = t.uuid_map.select("group_id", "name", "norm_name", "uuid").distinct()
-    cand_uuid = (
-        match_edges_exact(ents).union(match_edges_lsh(ents)).distinct()
-    )
-    nm = ents.select("uuid", "group_id", "name")
-    cand = (
-        cand_uuid.join(
-            nm.withColumnRenamed("uuid", "src").withColumnRenamed("name", "name_a"),
-            "src",
-        )
-        .join(
-            nm.select(
-                F.col("uuid").alias("dst"), F.col("name").alias("name_b")
-            ),
-            "dst",
-        )
-        .select(
-            "group_id",
-            F.least("name_a", "name_b").alias("na"),
-            F.greatest("name_a", "name_b").alias("nb"),
-        )
-        .distinct()
-    )
-
-    def _truth(batches):
-        for pdf in batches:
-            g = golden_mentions(pdf)
-            yield g[["group_id", "name", "base"]].drop_duplicates()
-
-    tm = (
-        docs_mod.read_documents(spark, sf_dir)
-        .select("doc_id", "source")
-        .mapInPandas(_truth, "group_id string, name string, base string")
-        .distinct()
-    )
-    truth = (
-        tm.alias("a")
-        .join(
-            tm.alias("b"),
-            (F.col("a.group_id") == F.col("b.group_id"))
-            & (F.col("a.base") == F.col("b.base"))
-            & (F.col("a.name") < F.col("b.name")),
-        )
-        .select(
-            F.col("a.group_id").alias("group_id"),
-            F.col("a.name").alias("na"),
-            F.col("b.name").alias("nb"),
-        )
-        .distinct()
-    )
-
-    n_ents = ents.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_ents"))
-    n_cand = cand.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_cand"))
-    n_true = truth.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_true"))
-    tp = (
-        cand.join(truth, ["group_id", "na", "nb"], "left_semi")
-        .groupBy("group_id")
-        .agg(F.count(F.lit(1)).alias("tp"))
-    )
-    out = (
-        n_ents.join(n_cand, "group_id", "left")
-        .join(n_true, "group_id", "left")
-        .join(tp, "group_id", "left")
-        .na.fill(0, ["n_cand", "n_true", "tp"])
-    )
-    return out.select(
-        "group_id",
-        F.col("n_ents").cast("long").alias("n_ents"),
-        F.col("n_cand").cast("long").alias("n_cand"),
-        F.col("n_true").cast("long").alias("n_true"),
-        F.col("tp").cast("long").alias("tp"),
-        F.when(F.col("n_true") > 0,
-               F.expr("(tp * 1000000) div n_true"))
-        .otherwise(F.lit(1000000)).cast("long").alias("recall_u"),
-        F.when(F.col("n_ents") > 1,
-               F.lit(1000000)
-               - F.expr("(n_cand * 2000000) div (n_ents * (n_ents - 1))"))
-        .otherwise(F.lit(1000000)).cast("long").alias("rr_u"),
-    )
-
-
-def _sql_kg_er_metrics() -> str:
-    body = """
-, tp_pairs AS (
-  SELECT DISTINCT a.group_id, a.name AS na, b.name AS nb
-  FROM ents a
-  JOIN ents b ON b.group_id = a.group_id AND b.base = a.base
-             AND b.name > a.name
-),
-cnt AS (SELECT group_id, count(*) AS n FROM tp_pairs GROUP BY 1)
-SELECT group_id,
-       CAST(n AS BIGINT) AS n_truth_pairs,
-       CAST(n AS BIGINT) AS n_engine_pairs,
-       CAST(n AS BIGINT) AS tp,
-       CAST(0 AS BIGINT) AS fp,
-       CAST(0 AS BIGINT) AS fn,
-       CAST(1000000 AS BIGINT) AS precision_u,
-       CAST(1000000 AS BIGINT) AS recall_u,
-       CAST(1000000 AS BIGINT) AS f1_u
-FROM cnt"""
-    return _kg_sql(body)
-
-
-_CORRUPT_RULE = (
-    "('0x' || substr(md5('corrupt:' || name), 1, 8))::BIGINT % 7 = 0"
-)
-_CORRUPT_RULE_SPARK = (
-    "cast(conv(substr(md5(concat('corrupt:', name)), 1, 8), 16, 10)"
-    " as bigint) % 7 = 0"
-)
-
-
-def q_kg_domain_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SHACL-lite domain/range validation sweep (operators/maintenance.
-    domain_range_violations) over the canonical edges vs the ontology's
-    predicate roles. The clean corpus validates by construction (labels
-    are role-voted), so the gate deterministically corrupts ~1/7 of the
-    node label sets to 'Entity' first — the violation counters must
-    fire on exactly the corrupted endpoints."""
-    from .operators.maintenance import domain_range_violations
-
-    t = _graph(spark, sf_dir)
-    corrupted = t.nodes.select(
-        "group_id",
-        "name",
-        F.expr(
-            f"CASE WHEN {_CORRUPT_RULE_SPARK} THEN array('Entity')"
-            " ELSE labels END"
-        ).alias("labels"),
-    )
-    triples = q_kg_triples(spark, sf_dir).select(
-        "group_id", "subj", "pred", "obj"
-    )
-    return domain_range_violations(triples, corrupted)
-
-
-def _sql_kg_domain_range() -> str:
-    from .ontology import DEFAULT
-
-    body = f""",
-{_LABELS_CTES.strip().rstrip()},
-nl AS (
-  SELECT group_id, name,
-         CASE WHEN {_CORRUPT_RULE} THEN 'Entity' ELSE labels_str END
-           AS labels_str
-  FROM nlab
-),
-ex AS (
-  SELECT e.group_id, e.subj, e.pred, e.obj,
-         {DEFAULT.role_sql(0, "e.pred")} AS subj_req,
-         {DEFAULT.role_sql(1, "e.pred")} AS obj_req
-  FROM eds e
-)
-SELECT x.group_id, x.pred,
-       count(*) AS n_edges,
-       CAST(sum(CASE WHEN subj_req IS NOT NULL AND (s.labels_str IS NULL
-                OR NOT list_contains(string_split(s.labels_str, '/'), subj_req))
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_subj_viol,
-       CAST(sum(CASE WHEN obj_req IS NOT NULL AND (o.labels_str IS NULL
-                OR NOT list_contains(string_split(o.labels_str, '/'), obj_req))
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_obj_viol
-FROM ex x
-LEFT JOIN nl s ON s.group_id = x.group_id AND s.name = x.subj
-LEFT JOIN nl o ON o.group_id = x.group_id AND o.name = x.obj
-GROUP BY 1, 2"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_metapaths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-hop metapath composition profile (operators/rules.
-    metapath_counts): exact path counts per ordered predicate pair via
-    the degree-product identity — no path enumeration, skew-proof."""
-    from .operators.rules import metapath_counts
-
-    return metapath_counts(q_kg_triples(spark, sf_dir))
-
-
-def _sql_kg_metapaths() -> str:
-    body = """
-, de AS (SELECT DISTINCT group_id, subj, pred, obj FROM eds),
-ind AS (SELECT group_id, obj AS mid, pred AS p1, count(*) AS n_in
-        FROM de GROUP BY 1, 2, 3),
-outd AS (SELECT group_id, subj AS mid, pred AS p2, count(*) AS n_out
-         FROM de GROUP BY 1, 2, 3)
-SELECT i.group_id, i.p1, o.p2,
-       CAST(sum(i.n_in * o.n_out) AS BIGINT) AS n_paths,
-       CAST(count(DISTINCT i.mid) AS BIGINT) AS n_middles
-FROM ind i
-JOIN outd o ON o.group_id = i.group_id AND o.mid = i.mid
-GROUP BY 1, 2, 3"""
-    return _kg_sql(body, with_eds=True)
-
-
-NORM_BUCKET = 500
-
-
-def q_emb_norm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-table QA gate (operators/ann.norm_band_audit): per-label
-    exact P10/P90 norm bands over fixed-width integer norm buckets —
-    low/high flags for the vectors a cosine index should quarantine."""
-    from .operators.ann import norm_band_audit, read_embeddings
-
-    emb = read_embeddings(spark, sf_dir).select(
-        F.col("vec_id").alias("c_id"),
-        F.col("label").cast("long").alias("label"),
-        F.expr(_QZ).alias("emb"),
-    )
-    return norm_band_audit(emb, bucket=NORM_BUCKET)
-
-
-def _sql_emb_norm_audit() -> str:
-    return f"""
-WITH norms AS (
-  SELECT vec_id AS c_id, CAST(label AS BIGINT) AS label,
-         CAST(list_sum(list_transform({_DUCK_QZ}, v -> v * v)) AS BIGINT)
-           AS norm_sq
-  FROM embeddings
-),
-nb AS (SELECT *, norm_sq // {NORM_BUCKET} AS b FROM norms),
-hist AS (SELECT label, b, count(*) AS c FROM nb GROUP BY 1, 2),
-cdf AS (
-  SELECT label, b,
-         sum(c) OVER (PARTITION BY label ORDER BY b
-                      ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(c) OVER (PARTITION BY label) AS n
-  FROM hist
-),
-th AS (
-  SELECT label,
-         min(CASE WHEN cum * 10 >= n THEN b END) AS b10,
-         min(CASE WHEN cum * 10 >= 9 * n THEN b END) AS b90
-  FROM cdf GROUP BY 1
-)
-SELECT nb.c_id, nb.label, nb.norm_sq,
-       CASE WHEN nb.b < th.b10 THEN 'low' WHEN nb.b > th.b90 THEN 'high'
-            ELSE 'mid' END AS band
-FROM nb JOIN th USING (label)"""
-
-
-def q_doc_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID confusion matrix (classifier QA): predicted vs
-    declared language with per-declared-language recall in micro-units —
-    the eval table a curation pipeline reads before trusting lang_id
-    for mixing/filtering decisions."""
-    out = docs.lang_id(docs.read_documents(spark, sf_dir)).select(
-        "lang_declared", "lang_guess"
-    )
-    cm = out.groupBy("lang_declared", "lang_guess").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs")
-    )
-    tot = cm.groupBy("lang_declared").agg(F.sum("n_docs").alias("n_true"))
-    return cm.join(tot, "lang_declared").select(
-        "lang_declared",
-        "lang_guess",
-        "n_docs",
-        F.expr("(n_docs * 1000000L) div n_true").cast("long").alias("recall_u"),
-    )
-
-
-def _sql_doc_lang_confusion() -> str:
-    return f"""
-WITH p AS (SELECT * FROM ({_sql_doc_langid()})),
-cm AS (
-  SELECT lang_declared, lang_guess, count(*) AS n_docs
-  FROM p GROUP BY 1, 2
-),
-tot AS (SELECT lang_declared, sum(n_docs) AS n_true FROM cm GROUP BY 1)
-SELECT cm.lang_declared, cm.lang_guess,
-       CAST(cm.n_docs AS BIGINT) AS n_docs,
-       CAST((cm.n_docs * 1000000) // t.n_true AS BIGINT) AS recall_u
-FROM cm JOIN tot t USING (lang_declared)"""
-
-
-CLF_EVAL_SUFFIX = (
-    " the data have to be part of the scan and that with merge"
-)
-
-
-def _clf_eval_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Eval corpus for the classifier confusion gate: the raw documents
-    (all Gopher-drop — too short, stopword-poor) plus a keep-class
-    variant of every even doc_id (4x stopword-rich suffix pushes it past
-    the word-count and distinct-stopword rules). Mixed labels make the
-    held-out confusion matrix non-degenerate; the DuckDB oracle builds
-    the identical corpus from the same constant."""
-    base = docs.read_documents(spark, sf_dir).select(
-        "doc_id", "lang", "source", "text", "n_chars"
-    )
-    aug = base.where("doc_id % 2 = 0").select(
-        (F.col("doc_id") + 5_000_000).cast("long").alias("doc_id"),
-        "lang",
-        "source",
-        F.expr(f"text || repeat('{CLF_EVAL_SUFFIX}', 4)").alias("text"),
-        "n_chars",
-    )
-    return base.unionByName(aug)
-
-
-def q_doc_clf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Held-out confusion matrix of the trained quality classifier
-    (label = Gopher keep, pred = score >= 0.5): evaluated ONLY on the
-    val/test hash buckets the trainer never saw — the honest
-    generalization check, per (label, pred) cell with the cell's share
-    of the held-out set in micro-units. Runs on the mixed-label eval
-    corpus (see _clf_eval_corpus)."""
-    holdout = SPLIT_VAL_PCT + SPLIT_TEST_PCT
-    corpus_df = _clf_eval_corpus(spark, sf_dir)
-    scored = docs_mod.quality_classifier(corpus_df, holdout_pct=holdout)
-    held = (
-        corpus_df.select(
-            "doc_id",
-            F.expr(
-                "cast(conv(substr(md5(lang || '|' || doc_id), 1, 15),"
-                " 16, 10) as bigint) % 100"
-            ).alias("b"),
-        )
-        .where(F.col("b") < holdout)
-        .select("doc_id")
-    )
-    cells = (
-        scored.join(held, "doc_id")
-        .groupBy("label", "pred")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-    )
-    tot = cells.select(F.sum("n_docs").alias("n_held"))
-    return cells.crossJoin(tot).select(
-        F.col("label").cast("long").alias("label"),
-        F.col("pred").cast("long").alias("pred"),
-        "n_docs",
-        F.expr("(n_docs * 1000000L) div n_held").cast("long").alias("share_u"),
-    )
-
-
-def _sql_doc_clf_eval() -> str:
-    holdout = SPLIT_VAL_PCT + SPLIT_TEST_PCT
-    clf_d = _sql_doc_quality_classifier().replace("FROM documents", "FROM d")
-    return f"""
-WITH d AS (
-  SELECT doc_id, lang, source, text, n_chars FROM documents
-  UNION ALL
-  SELECT doc_id + 5000000, lang, source,
-         text || repeat('{CLF_EVAL_SUFFIX}', 4), n_chars
-  FROM documents WHERE doc_id % 2 = 0
-),
-scored AS (SELECT * FROM ({clf_d})),
-held AS (
-  SELECT doc_id FROM (
-    SELECT doc_id,
-           ('0x' || substr(md5(lang || '|' || doc_id), 1, 15))::UBIGINT % 100
-             AS b
-    FROM d
-  ) WHERE b < {holdout}
-),
-cells AS (
-  SELECT s.label, s.pred, count(*) AS n_docs
-  FROM scored s JOIN held USING (doc_id)
-  GROUP BY 1, 2
-),
-tot AS (SELECT sum(n_docs) AS n_held FROM cells)
-SELECT CAST(label AS BIGINT) AS label, CAST(pred AS BIGINT) AS pred,
-       CAST(n_docs AS BIGINT) AS n_docs,
-       CAST((n_docs * 1000000) // t.n_held AS BIGINT) AS share_u
-FROM cells, tot t"""
-
-
-def q_evt_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Session market-basket rules (operators/events.session_baskets):
-    support/confidence/lift per co-occurring event-type pair, sessions
-    as baskets — Agrawal-Srikant over the 30-min gap sessions."""
-    from .operators import events as ev
-
-    return ev.session_baskets(ev.read_events(spark, sf_dir))
-
-
-def _sql_evt_baskets() -> str:
-    return """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT *, sum(new_sess) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  ) AS session_idx
-  FROM flagged
-),
-items AS (SELECT DISTINCT user_id, session_idx, event_type FROM sess),
-ns AS (SELECT count(*) AS n_sessions FROM
-       (SELECT DISTINCT user_id, session_idx FROM items)),
-supp AS (SELECT event_type, count(*) AS n FROM items GROUP BY 1),
-pairs AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b, count(*) AS n_ab
-  FROM items a
-  JOIN items b ON b.user_id = a.user_id AND b.session_idx = a.session_idx
-              AND b.event_type > a.event_type
-  GROUP BY 1, 2
-)
-SELECT p.type_a, p.type_b,
-       CAST(p.n_ab AS BIGINT) AS n_ab,
-       CAST(sa.n AS BIGINT) AS n_a,
-       CAST(sb.n AS BIGINT) AS n_b,
-       CAST((p.n_ab * 1000000) // ns.n_sessions AS BIGINT) AS support_u,
-       CAST((p.n_ab * 1000000) // sa.n AS BIGINT) AS conf_ab_u,
-       CAST((p.n_ab * 1000000) // sb.n AS BIGINT) AS conf_ba_u,
-       CAST((p.n_ab * ns.n_sessions * 1000000) // (sa.n * sb.n) AS BIGINT)
-         AS lift_u
-FROM pairs p
-JOIN supp sa ON sa.event_type = p.type_a
-JOIN supp sb ON sb.event_type = p.type_b
-CROSS JOIN ns"""
-
-
-def q_kg_verbalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG -> pretraining text: one deterministic passage per (group,
-    subject), each fact rendered with its temporal qualifier (the
-    training-corpus consumption of the graph the reference's edge-fact
-    sentences exist for, edges.py:199-208)."""
-    from .operators.export import verbalize_triples
-
-    return verbalize_triples(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_qa_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """KG -> supervised QA rows: ontology-predicate question templates,
-    answer = object, validity split + episode-support weight."""
-    from .operators.export import qa_pairs
-
-    return qa_pairs(q_kg_triples(spark, sf_dir))
-
-
-def q_kg_ntriples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RDF N-Triples export with RDF-star fact/validity statements —
-    the triple-store interchange surface."""
-    from .operators.export import ntriples_lines
-
-    return ntriples_lines(q_kg_triples(spark, sf_dir))
-
-
-def q_doc_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4 curation sweep (terminal-punct + >=5-word line rules, >=3
-    kept lines, >=5 sentences, no code braces) over the cleaned pages."""
-    from .operators.docs import c4_page_filters
-    from .operators.episodes import clean_pages
-    from .sources.pages import build_pages
-
-    return c4_page_filters(
-        clean_pages(build_pages(spark, sf_dir, with_html=False))
-    )
-
-
-def q_kg_node_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GNN-training feature table: one row per canonical entity with its
-    type labels, alias count, directed fact degrees, currently-valid
-    fact count, and community size — the assembled node-feature export a
-    graph-ML consumer trains on. Three skinny key-joins on
-    (group_id, name); every input is itself oracle-gated."""
-    from .operators.communities import build_communities
-
-    t = _graph(spark, sf_dir)
-    tv = q_kg_triples(spark, sf_dir)
-    legs = tv.select(
-        "group_id",
-        F.col("subj").alias("name"),
-        F.lit(1).alias("as_subj"),
-        F.lit(0).alias("as_obj"),
-        "invalid_at",
-    ).unionByName(
-        tv.select(
-            "group_id",
-            F.col("obj").alias("name"),
-            F.lit(0).alias("as_subj"),
-            F.lit(1).alias("as_obj"),
-            "invalid_at",
-        )
-    )
-    deg = legs.groupBy("group_id", "name").agg(
-        F.sum("as_subj").cast("long").alias("out_facts"),
-        F.sum("as_obj").cast("long").alias("in_facts"),
-        F.sum(F.col("invalid_at").isNull().cast("int"))
-        .cast("long")
-        .alias("n_valid"),
-    )
-    communities, members = build_communities(t.nodes, t.edges)
-    csize = (
-        members.join(
-            communities.select(
-                F.col("uuid").alias("community_uuid"),
-                F.col("n_members").cast("long").alias("community_size"),
-            ),
-            "community_uuid",
-        )
-        .join(
-            t.nodes.select(F.col("uuid").alias("entity_uuid"), "name"),
-            "entity_uuid",
-        )
-        .select("group_id", "name", "community_size")
-    )
-    base = t.nodes.select(
-        "group_id",
-        "name",
-        F.array_join(F.col("labels"), "/").alias("labels_str"),
-        F.col("n_aliases").cast("long").alias("n_aliases"),
-    )
-    return (
-        base.join(deg, ["group_id", "name"], "left")
-        .join(csize, ["group_id", "name"], "left")
-        .na.fill(0, ["out_facts", "in_facts", "n_valid"])
-        .na.fill(1, ["community_size"])
-    )
-
-
-def q_kg_global_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-group entity identity: group_id is the isolation key of the
-    per-domain KGs (reference group_id semantics, graphiti.py:180), but a
-    crawl-scale consumer also needs the GLOBAL entity view — the same
-    real-world entity surfacing on many domains. Rolls canonical nodes up
-    by the shared normalization key (the exact-block key of X5
-    resolution, extract._NORM_SQL) into one global entity row with its
-    domain spread. One partial-agg'd groupBy on the normalized key —
-    entity-count cardinality, no joins."""
-    from .operators.extract import _NORM_SQL
-
-    t = _graph(spark, sf_dir)
-    return (
-        t.nodes.select(
-            "group_id",
-            "name",
-            F.col("n_aliases").cast("long").alias("n_aliases"),
-        )
-        .withColumn("global_key", F.expr(_NORM_SQL))
-        .groupBy("global_key")
-        .agg(
-            F.min("name").alias("canonical_name"),
-            F.countDistinct("group_id").cast("long").alias("n_groups"),
-            F.count(F.lit(1)).cast("long").alias("n_entities"),
-            F.sum("n_aliases").cast("long").alias("total_aliases"),
-        )
-        .withColumn(
-            "global_uuid",
-            F.md5(F.concat(F.lit("global|"), F.col("global_key"))),
-        )
-    )
-
-
-def q_kg_global_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-domain knowledge fusion at the FACT level (Dong et al.,
-    "From Data Fusion to Knowledge Fusion", VLDB'14): the per-group KGs
-    are isolated builds (reference group_id semantics), but a crawl-scale
-    consumer wants one fused fact table where the same (subj, pred, obj)
-    assertion observed on independent domains accumulates support. Keys:
-    the X5 normalization on both endpoint names (extract.norm_sql) and
-    the ontology synonym class on the predicate — the same fusion key
-    family materialize_edges dedups on within a group, lifted global.
-    Emits per fused fact: canonical names, domain support (n_groups),
-    observation counts, validity span, and corroborated flag (>=2
-    independent domains). Plan: one partial-agg'd groupBy over the final
-    triples table — fact-cardinality input, no joins, no window."""
-    from .ontology import DEFAULT
-    from .operators.extract import norm_sql
-
-    tri = q_kg_triples(spark, sf_dir)
-    return (
-        tri.withColumn("subj_key", F.expr(norm_sql("subj")))
-        .withColumn("obj_key", F.expr(norm_sql("obj")))
-        .withColumn("pred_class", F.expr(DEFAULT.synonym_class_sql("pred")))
-        .groupBy("subj_key", "pred_class", "obj_key")
-        .agg(
-            F.min("subj").alias("subj"),
-            F.min("obj").alias("obj"),
-            F.countDistinct("group_id").cast("long").alias("n_groups"),
-            F.count(F.lit(1)).cast("long").alias("n_facts"),
-            F.sum(F.when(F.col("invalid_at").isNull(), 1).otherwise(0))
-            .cast("long")
-            .alias("n_valid"),
-            F.min("valid_at").alias("first_valid_at"),
-            F.max("valid_at").alias("last_valid_at"),
-        )
-        .withColumn(
-            "corroborated",
-            (F.col("n_groups") >= 2).cast("long"),
-        )
-        .withColumn(
-            "global_fact_uuid",
-            F.md5(
-                F.concat_ws(
-                    "|", F.lit("gfact"), "subj_key", "pred_class", "obj_key"
-                )
-            ),
-        )
-    )
-
-
-def q_kg_global_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-domain conflict detection + majority-vote resolution (the
-    conflict-resolution half of knowledge fusion, Dong et al. VLDB'14):
-    for ontology-declared single-valued predicates (DEFAULT.functional —
-    the same set kg_functional_violations sweeps WITHIN a group), find
-    fused subjects whose currently-valid objects disagree across
-    independent domains, and emit the support-majority object (ties
-    broken by lexicographic obj_key, so the vote is deterministic and
-    oracle-checkable). Plan: one groupBy to per-object support, one
-    co-partitioned groupBy (same keys, shuffle reused) for the vote and
-    the disagreement stats — fact-cardinality input, no self-join."""
-    from .ontology import DEFAULT
-    from .operators.extract import norm_sql
-
-    tri = q_kg_triples(spark, sf_dir)
-    valid = (
-        tri.where(F.col("invalid_at").isNull())
-        .withColumn("subj_key", F.expr(norm_sql("subj")))
-        .withColumn("obj_key", F.expr(norm_sql("obj")))
-        .withColumn("pred_class", F.expr(DEFAULT.synonym_class_sql("pred")))
-        .where(F.col("pred_class").isin(*DEFAULT.functional))
-    )
-    # per-object support first; the domain spread (n_groups) aggregates
-    # straight off the fact stream (partial-agg'd countDistinct), NOT via
-    # collected group arrays — a crawl-popular entity can be asserted on
-    # millions of domains and no per-row array may scale with that.
-    per_obj = valid.groupBy("subj_key", "pred_class", "obj_key").agg(
-        F.min("subj").alias("subj"),
-        F.count(F.lit(1)).alias("n_obs"),
-    )
-    vote = per_obj.groupBy("subj_key", "pred_class").agg(
-        F.min("subj").alias("subj"),
-        F.count(F.lit(1)).cast("long").alias("n_objs"),
-        # flattened to a comma-joined string: the driver's pandas
-        # canonicalizer cannot sort top-level ARRAY columns (r4 verdict),
-        # same pattern as maintenance.functional_violations
-        F.array_join(F.array_sort(F.collect_list("obj_key")), ",").alias("objs"),
-        F.min_by(
-            "obj_key",
-            F.struct((-F.col("n_obs")).alias("a"), F.col("obj_key").alias("b")),
-        ).alias("majority_obj"),
-        F.max("n_obs").cast("long").alias("majority_support"),
-        F.sum("n_obs").cast("long").alias("total_support"),
-    )
-    spread = valid.groupBy("subj_key", "pred_class").agg(
-        F.countDistinct("group_id").cast("long").alias("n_groups")
-    )
-    # same grouping key on both sides -> co-partitioned join, the
-    # exchange is shared with the vote aggregation
-    fused = vote.join(spread, ["subj_key", "pred_class"])
-    return fused.where((F.col("n_objs") >= 2) & (F.col("n_groups") >= 2)).select(
-        "subj_key", "pred_class", "subj", "n_objs", "n_groups", "objs",
-        "majority_obj", "majority_support", "total_support",
-    )
-
-
-def q_kg_source_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-reliability scoring (TruthFinder / Knowledge Vault's
-    source-trust prior, simplified to one deterministic iteration): for
-    every domain (group_id), the fraction of its currently-valid
-    single-valued claims that agree with the cross-domain majority vote.
-    Each distinct (subj_key, pred_class, obj_key) claim counts once per
-    domain (a domain repeating itself on many pages gains no weight).
-    trust_permille is integer (1000*n_agree DIV n_claims) so the score
-    is hash-exact across engines. Plan: claims dedup (groupBy), majority
-    vote (two partial-agg'd groupBys on the same key family), one
-    broadcast-sized join majority->claims, one final groupBy on
-    group_id — no self-joins, no windows."""
-    from .ontology import DEFAULT
-    from .operators.extract import norm_sql
-
-    tri = q_kg_triples(spark, sf_dir)
-    valid = (
-        tri.where(F.col("invalid_at").isNull())
-        .withColumn("subj_key", F.expr(norm_sql("subj")))
-        .withColumn("obj_key", F.expr(norm_sql("obj")))
-        .withColumn("pred_class", F.expr(DEFAULT.synonym_class_sql("pred")))
-        .where(F.col("pred_class").isin(*DEFAULT.functional))
-    )
-    claims = valid.select(
-        "group_id", "subj_key", "pred_class", "obj_key"
-    ).distinct()
-    per_obj = valid.groupBy("subj_key", "pred_class", "obj_key").agg(
-        F.count(F.lit(1)).alias("n_obs")
-    )
-    majority = per_obj.groupBy("subj_key", "pred_class").agg(
-        F.min_by(
-            "obj_key",
-            F.struct((-F.col("n_obs")).alias("a"), F.col("obj_key").alias("b")),
-        ).alias("majority_obj")
-    )
-    scored = claims.join(majority, ["subj_key", "pred_class"]).withColumn(
-        "agree", (F.col("obj_key") == F.col("majority_obj")).cast("long")
-    )
-    return (
-        scored.groupBy("group_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_claims"),
-            F.sum("agree").cast("long").alias("n_agree"),
-        )
-        .withColumn(
-            "trust_permille",
-            F.expr("CAST((1000 * n_agree) DIV n_claims AS BIGINT)"),
-        )
-    )
-
-
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "kg_source_trust": q_kg_source_trust,
-    "kg_global_conflicts": q_kg_global_conflicts,
-    "kg_global_triples": q_kg_global_triples,
-    "kg_global_entities": q_kg_global_entities,
-    "kg_node_features": q_kg_node_features,
-    "kg_verbalize": q_kg_verbalize,
-    "kg_qa_pairs": q_kg_qa_pairs,
-    "kg_ntriples": q_kg_ntriples,
-    "doc_c4_filters": q_doc_c4_filters,
-    "kg_alias_resolution": q_kg_alias_resolution,
-    "kg_node_attributes": q_kg_node_attributes,
-    "kg_nodes_page": q_kg_nodes_page,
-    "kg_edges_page": q_kg_edges_page,
-    "kg_episodes_page": q_kg_episodes_page,
-    "kg_mentions_page": q_kg_mentions_page,
-    "kg_communities_page": q_kg_communities_page,
-    "doc_minhash_dedup": q_doc_minhash_dedup,
-    "doc_minhash_calibration": q_doc_minhash_calibration,
-    "doc_prefix_join": q_doc_prefix_join,
-    "doc_dup_clusters": q_doc_dup_clusters,
-    "doc_simhash_pairs": q_doc_simhash_pairs,
-    "kg_communities": q_kg_communities,
-    "kg_triples": q_kg_triples,
-    "kg_contradictions": q_kg_contradictions,
-    "kg_episodes": q_kg_episodes,
-    "kg_episode_facts": q_kg_episode_facts,
-    "kg_lineage_metrics": q_kg_lineage_metrics,
-    "kg_incremental_build": q_kg_incremental_build,
-    "kg_blocking_audit": q_kg_blocking_audit,
-    "kg_snapshot_diff": q_kg_snapshot_diff,
-    "kg_triple_negatives": q_kg_triple_negatives,
-    "kg_nodes": q_kg_nodes,
-    "kg_mentions": q_kg_mentions,
-    "kg_node_summaries": q_kg_node_summaries,
-    "kg_episode_entities": q_kg_episode_entities,
-    "kg_remove_episode": q_kg_remove_episode,
-    "kg_add_triplet": q_kg_add_triplet,
-    "kg_community_attach": q_kg_community_attach,
-    "kg_community_members": q_kg_community_members,
-    "doc_para_dedup": q_doc_para_dedup,
-    "doc_url_dedup": q_doc_url_dedup,
-    "doc_pii": q_doc_pii,
-    "doc_tokens": q_doc_tokens,
-    "doc_length_deciles": q_doc_length_deciles,
-    "doc_stats_rollup": q_doc_stats_rollup,
-    "doc_curation": q_doc_curation,
-    "doc_winnow": q_doc_winnow,
-    "doc_bpe_pairs": q_doc_bpe_pairs,
-    "doc_lm_buckets": q_doc_lm_buckets,
-    "evt_attribution": q_evt_attribution,
-    "doc_rag_chunks": q_doc_rag_chunks,
-    "doc_dsir": q_doc_dsir,
-    "doc_bigram_lm": q_doc_bigram_lm,
-    "evt_transitions": q_evt_transitions,
-    "evt_anomaly": q_evt_anomaly,
-    "kg_entity_timeline": q_kg_entity_timeline,
-    "doc_quality": q_doc_quality,
-    "doc_langid": q_doc_langid,
-    "doc_gopher": q_doc_gopher,
-    "doc_repetition": q_doc_repetition,
-    "doc_fingerprint": q_doc_fingerprint,
-    "doc_dedup_exact": q_doc_dedup_exact,
-    "doc_ngram_pairs": q_doc_ngram_pairs,
-    "ann_topk": q_ann_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "ann_ivf_recall": q_ann_ivf_recall,
-    "ann_pq_topk": q_ann_pq_topk,
-    "ann_ivfpq_topk": q_ann_ivfpq_topk,
-    "doc_hll_distinct": q_doc_hll_distinct,
-    "doc_cms_topk": q_doc_cms_topk,
-    "doc_bpe_merges": q_doc_bpe_merges,
-    "doc_embcos_dedup": q_doc_embcos_dedup,
-    "doc_embcos_clusters": q_doc_embcos_clusters,
-    "doc_split": q_doc_split,
-    "emb_contrastive": q_emb_contrastive,
-    "doc_unigram_lm": q_doc_unigram_lm,
-    "doc_tfidf_terms": q_doc_tfidf_terms,
-    "doc_cluster_topics": q_doc_cluster_topics,
-    "doc_substring_dup": q_doc_substring_dup,
-    "doc_source_drift": q_doc_source_drift,
-    "doc_decontaminate": q_doc_decontaminate,
-    "doc_clusters": q_doc_clusters,
-    "doc_pack": q_doc_pack,
-    "doc_mix_sample": q_doc_mix_sample,
-    "kg_pagerank": q_kg_pagerank,
-    "kg_ppr": q_kg_ppr,
-    "kg_rules": q_kg_rules,
-    "doc_quality_classifier": q_doc_quality_classifier,
-    "kg_snapshot_diff": q_kg_snapshot_diff,
-    "kg_node_edges": q_kg_node_edges,
-    "kg_shared_employer": q_kg_shared_employer,
-    "kg_clustering": q_kg_clustering,
-    "kg_kcore": q_kg_kcore,
-    "kg_ktruss": q_kg_ktruss,
-    "kg_predicate_stats": q_kg_predicate_stats,
-    "kg_functional_violations": q_kg_functional_violations,
-    "kg_integrity": q_kg_integrity,
-    "ann_range": q_ann_range,
-    "kg_degree_hist": q_kg_degree_hist,
-    "kg_entity_cards": q_kg_entity_cards,
-    "kg_cooccurrence": q_kg_cooccurrence,
-    "kg_random_walks": q_kg_random_walks,
-    "kg_neighbor_sample": q_kg_neighbor_sample,
-    "kg_temporal_paths": q_kg_temporal_paths,
-    "kg_fact_confidence": q_kg_fact_confidence,
-    "kg_node2vec": q_kg_node2vec,
-    "kg_hits": q_kg_hits,
-    "kg_shortest_paths": q_kg_shortest_paths,
-    "kg_link_pred_ra": q_kg_link_pred_ra,
-    "doc_domain_stats": q_doc_domain_stats,
-    "evt_hopping": q_evt_hopping,
-    "kg_er_metrics": q_kg_er_metrics,
-    "kg_domain_range": q_kg_domain_range,
-    "kg_metapaths": q_kg_metapaths,
-    "emb_norm_audit": q_emb_norm_audit,
-    "doc_lang_confusion": q_doc_lang_confusion,
-    "doc_clf_eval": q_doc_clf_eval,
-    "evt_baskets": q_evt_baskets,
-    "kg_walk_pairs": q_kg_walk_pairs,
-    "kg_link_prediction": q_kg_link_prediction,
-    "kg_modularity": q_kg_modularity,
-    "kg_components": q_kg_components,
-    "kg_scc": q_kg_scc,
-    "kg_triadic_closure": q_kg_triadic_closure,
-    "kg_graph_shape": q_kg_graph_shape,
-    "kg_fact_churn": q_kg_fact_churn,
-    "doc_zipf": q_doc_zipf,
-    "evt_sessions": q_evt_sessions,
-    "evt_retention": q_evt_retention,
-    "evt_windows": q_evt_windows,
-    "evt_funnel": q_evt_funnel,
-    "media_phash_pairs": q_media_phash_pairs,
-    "media_audio_dedup": q_media_audio_dedup,
-    "media_scene_cuts": q_media_scene_cuts,
-}
-
-
-# ---------------------------------------------------------------------------
-# DuckDB oracle SQL.
-# ---------------------------------------------------------------------------
-
-# Canonicalization oracle: the engine clusters alias display forms via
-# exact-norm blocking + MinHash-LSH + connected components; the oracle
-# knows the clusters GENERATIVELY (every display form carries its base
-# key in mentions_g), so the gate checks that fuzzy resolution recovers
-# exactly the generative truth — typos ("Alice Johnsonn"), honorifics and
-# corporate suffixes all collapse onto the base entity.
-_CANON_CTES = """
-ents AS (
-  SELECT DISTINCT group_id, name, base FROM mentions_g
-),
-canon AS MATERIALIZED (
-  SELECT group_id, base,
-         substr(min(lpad(CAST(length(name) AS VARCHAR), 4, '0') || name), 5) AS canon_name
-  FROM ents GROUP BY 1, 2
-)"""
-
-_EDS_CTES = (
-    _CANON_CTES
-    + """,
-raw AS (
-  SELECT t.group_id, cs.canon_name AS subj, t.pred, co.canon_name AS obj, t.fact,
-         t.valid_at,
-         md5(t.url || '|' || t.para_idx) AS episode_uuid,
-         md5('edge|' || md5(t.url || '|' || t.para_idx) || '|' || t.sent_idx) AS raw_uuid
-  FROM triples_g t
-  JOIN canon cs ON cs.group_id = t.group_id AND cs.base = t.subj_base
-  JOIN canon co ON co.group_id = t.group_id AND co.base = t.obj_base
-),
-eds AS MATERIALIZED (
-  -- dedup key = (pair, synonym class of pred): paraphrase predicates
-  -- (EMPLOYED_AT ~ WORKS_AT) collapse onto one edge; the earliest
-  -- observation (valid_at || raw_uuid order) donates predicate AND fact,
-  -- mirroring operators/materialize.py materialize_edges (J4/X8)
-  SELECT group_id, subj,
-         arg_min(pred, strftime(valid_at, '%Y-%m-%d %H:%M:%S.%f') || raw_uuid) AS pred,
-         obj,
-         min(raw_uuid) AS uuid,
-         arg_min(fact, strftime(valid_at, '%Y-%m-%d %H:%M:%S.%f') || raw_uuid) AS fact,
-         min(valid_at) AS valid_at,
-         count(DISTINCT episode_uuid) AS n_episodes
-  FROM raw
-  GROUP BY group_id, subj,
-           (CASE pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE pred END), obj
-),
-classed AS (
-  SELECT *,
-    CASE pred WHEN 'WORKS_AT' THEN 'WORKS_AT' WHEN 'EMPLOYED_AT' THEN 'WORKS_AT'
-              WHEN 'NO_LONGER_WORKS_AT' THEN 'WORKS_AT'
-              WHEN 'LIKES' THEN 'LIKES' WHEN 'DISLIKES' THEN 'LIKES' END AS contra_class,
-    CASE pred WHEN 'NO_LONGER_WORKS_AT' THEN -1 WHEN 'DISLIKES' THEN -1 ELSE 1 END AS polarity
-  FROM eds
-),
-inv AS (
-  SELECT a.group_id, a.subj, a.pred, a.obj, min(b.valid_at) AS contra_valid_at
-  FROM classed a
-  JOIN classed b ON a.group_id = b.group_id AND a.subj = b.subj AND a.obj = b.obj
-   AND a.contra_class IS NOT NULL AND b.contra_class = a.contra_class
-   AND b.polarity <> a.polarity AND b.valid_at > a.valid_at
-  GROUP BY 1, 2, 3, 4
-)"""
-)
-
-
-def _kg_sql(body: str, with_eds: bool = False) -> str:
-    ctes = (
-        corpus.sql_pages_cte()
-        + ","
-        + corpus.sql_triples_cte()
-        + ","
-        + corpus.sql_mentions_cte()
-    )
-    ctes += "," + (_EDS_CTES if with_eds else _CANON_CTES)
-    return "WITH " + ctes.lstrip() + "\n" + body
-
-
-_TRIPLES_SELECT = """
-SELECT e.group_id, e.subj, e.pred, e.obj, e.fact, e.valid_at,
-       i.contra_valid_at AS invalid_at, e.n_episodes
-FROM eds e
-LEFT JOIN inv i ON i.group_id = e.group_id AND i.subj = e.subj
-               AND i.pred = e.pred AND i.obj = e.obj"""
-
-
-def _sql_kg_triples() -> str:
-    return _kg_sql(_TRIPLES_SELECT, with_eds=True)
-
-
-def _sql_kg_contradictions() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT})
-SELECT *, TIMESTAMP '2024-12-31 00:00:00' AS expired_at
-FROM final WHERE invalid_at IS NOT NULL"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_episodes() -> str:
-    ctes = corpus.sql_pages_cte()
-    return (
-        "WITH "
-        + ctes.lstrip()
-        + """,
-chunks AS (
-  SELECT url, group_id, warc_ts,
-         unnest(string_split(clean_text, chr(10) || chr(10))) AS content,
-         generate_subscripts(string_split(clean_text, chr(10) || chr(10)), 1) AS i
-  FROM pages_g
-)
-SELECT md5(url || '|' || (i - 1)) AS uuid, url, CAST(i - 1 AS BIGINT) AS chunk_idx,
-       group_id, length(content) AS n_chars, warc_ts AS valid_at
-FROM chunks WHERE length(content) > 0"""
-    )
-
-
-def _sql_kg_episode_facts() -> str:
-    """SQL mirror of q_kg_episode_facts: raw extracted triples map to
-    their FINAL deduped edge via the same dedup key materialize_edges
-    groups on — (group_id, subj, synonym-class(pred), obj) — then the
-    (episode, edge uuid) pairs aggregate per episode; episodes without
-    facts come from the chunk base through the left join."""
-    body = """
-, rawk AS (
-  SELECT episode_uuid, group_id, subj, obj,
-         (CASE pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE pred END) AS predk
-  FROM raw
-),
-edsk AS (
-  SELECT group_id, subj, obj,
-         (CASE pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE pred END) AS predk,
-         uuid
-  FROM eds
-),
-ep_pairs AS (
-  SELECT DISTINCT r.episode_uuid, e.uuid AS edge_uuid
-  FROM rawk r JOIN edsk e USING (group_id, subj, predk, obj)
-),
-epf AS (
-  SELECT episode_uuid, count(*) AS n_facts,
-         string_agg(edge_uuid, ',' ORDER BY edge_uuid) AS fact_uuids
-  FROM ep_pairs GROUP BY 1
-),
-chunks AS (
-  SELECT md5(url || '|' || (i - 1)) AS uuid, url, CAST(i - 1 AS BIGINT) AS chunk_idx
-  FROM (
-    SELECT url,
-           unnest(string_split(clean_text, chr(10) || chr(10))) AS content,
-           generate_subscripts(string_split(clean_text, chr(10) || chr(10)), 1) AS i
-    FROM pages_g
-  ) WHERE length(content) > 0
-)
-SELECT c.uuid, c.url, c.chunk_idx,
-       CAST(coalesce(f.n_facts, 0) AS BIGINT) AS n_facts,
-       coalesce(f.fact_uuids, '') AS fact_uuids
-FROM chunks c LEFT JOIN epf f ON f.episode_uuid = c.uuid"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_blocking_audit() -> str:
-    """Full SQL mirror of the name-level blocking stage: engine norm
-    (honorific/suffix strip), deterministic node uuids, exact norm-block
-    star pairs, char-3-gram shingles of '^'||norm||'$', the md5
-    Carter-Wegman minhash family (same _A_NM/_B_NM constants), 16x4 band
-    keys with the 1000-bucket cap, exact-Jaccard >= 3/5 verify, then the
-    blocking metrics vs the generative alias-pair truth."""
-    from .operators.resolve import _A_NM, _B_NM, _MERSENNE31, LSH_ROWS, N_HASHES
-
-    consts = ", ".join(
-        f"({i}, {int(_A_NM[i])}, {int(_B_NM[i])})" for i in range(N_HASHES)
-    )
-    norm = (
-        "coalesce(nullif(regexp_replace(regexp_replace(lower(name),"
-        " '^(professor |dr\\. |dr |mr\\. |ms\\. |mrs\\. )', ''),"
-        " '( (inc|llc|ltd))+$', ''), ''), lower(name))"
-    )
-    ctes = corpus.sql_pages_cte() + "," + corpus.sql_mentions_cte()
-    return (
-        "WITH "
-        + ctes.lstrip()
-        + f""",
-entn AS MATERIALIZED (
-  SELECT group_id, name,
-         md5('node|' || group_id || '|' || name) AS uuid,
-         {norm} AS norm
-  FROM (SELECT DISTINCT group_id, name FROM mentions_g)
-),
-blockmin AS (
-  SELECT group_id, norm, min(uuid) AS muuid, arg_min(name, uuid) AS mname
-  FROM entn GROUP BY 1, 2
-),
-exact_pairs AS (
-  SELECT e.group_id, least(e.name, b.mname) AS na, greatest(e.name, b.mname) AS nb
-  FROM entn e JOIN blockmin b USING (group_id, norm)
-  WHERE e.uuid <> b.muuid
-),
-sh AS MATERIALIZED (
-  SELECT group_id, name, uuid,
-         unnest(list_distinct(list_transform(
-           range(0, greatest(length('^' || norm || '$') - 3, 0) + 1),
-           i -> substr('^' || norm || '$', i + 1, 3)))) AS shingle
-  FROM entn
-),
-hs AS (
-  SELECT group_id, name, uuid,
-         ('0x' || substr(md5(shingle), 1, 8))::BIGINT % {_MERSENNE31} AS h
-  FROM sh
-),
-consts(i, a, b) AS (VALUES {consts}),
-mh AS (
-  SELECT group_id, name, uuid, c.i, min((c.a * h + c.b) % {_MERSENNE31}) AS v
-  FROM hs CROSS JOIN consts c GROUP BY 1, 2, 3, 4
-),
-bands AS (
-  SELECT group_id, name, uuid, i // {LSH_ROWS} AS band,
-         string_agg(CAST(v AS VARCHAR), '|' ORDER BY i) AS bkey
-  FROM mh GROUP BY 1, 2, 3, i // {LSH_ROWS}
-),
-okb AS (
-  SELECT group_id, band, bkey FROM bands GROUP BY 1, 2, 3 HAVING count(*) <= 1000
-),
-b2 AS (SELECT bands.* FROM bands JOIN okb USING (group_id, band, bkey)),
-lsh_cand AS (
-  SELECT DISTINCT l.group_id, l.name AS name_a, r.name AS name_b
-  FROM b2 l JOIN b2 r
-    ON l.group_id = r.group_id AND l.band = r.band AND l.bkey = r.bkey
-   AND l.uuid < r.uuid
-),
-sizes AS (SELECT group_id, name, count(*) AS n_sh FROM sh GROUP BY 1, 2),
-shared AS (
-  SELECT c.group_id, c.name_a, c.name_b, count(*) AS n_shared
-  FROM lsh_cand c
-  JOIN sh sa ON sa.group_id = c.group_id AND sa.name = c.name_a
-  JOIN sh sb ON sb.group_id = c.group_id AND sb.name = c.name_b
-            AND sb.shingle = sa.shingle
-  GROUP BY 1, 2, 3
-),
-lsh_pairs AS (
-  SELECT s.group_id, least(s.name_a, s.name_b) AS na,
-         greatest(s.name_a, s.name_b) AS nb
-  FROM shared s
-  JOIN sizes za ON za.group_id = s.group_id AND za.name = s.name_a
-  JOIN sizes zb ON zb.group_id = s.group_id AND zb.name = s.name_b
-  WHERE s.n_shared * 5 >= 3 * (za.n_sh + zb.n_sh - s.n_shared)
-),
-cand AS (
-  SELECT DISTINCT * FROM (
-    SELECT * FROM exact_pairs UNION ALL SELECT * FROM lsh_pairs)
-),
-tn AS (SELECT DISTINCT group_id, base, name FROM mentions_g),
-truth AS (
-  SELECT DISTINCT a.group_id, a.name AS na, b.name AS nb
-  FROM tn a JOIN tn b
-    ON a.group_id = b.group_id AND a.base = b.base AND a.name < b.name
-),
-m_ents AS (SELECT group_id, count(*) AS n_ents FROM entn GROUP BY 1),
-m_cand AS (SELECT group_id, count(*) AS n_cand FROM cand GROUP BY 1),
-m_true AS (SELECT group_id, count(*) AS n_true FROM truth GROUP BY 1),
-m_tp AS (
-  SELECT c.group_id, count(*) AS tp
-  FROM cand c JOIN truth t USING (group_id, na, nb) GROUP BY 1
-)
-SELECT e.group_id,
-       e.n_ents,
-       coalesce(c.n_cand, 0) AS n_cand,
-       coalesce(t.n_true, 0) AS n_true,
-       coalesce(p.tp, 0) AS tp,
-       CASE WHEN coalesce(t.n_true, 0) > 0
-            THEN (coalesce(p.tp, 0) * 1000000) // t.n_true
-            ELSE 1000000 END AS recall_u,
-       CASE WHEN e.n_ents > 1
-            THEN 1000000 - (coalesce(c.n_cand, 0) * 2000000)
-                           // (e.n_ents * (e.n_ents - 1))
-            ELSE 1000000 END AS rr_u
-FROM m_ents e
-LEFT JOIN m_cand c USING (group_id)
-LEFT JOIN m_true t USING (group_id)
-LEFT JOIN m_tp p USING (group_id)"""
-    )
-
-
-def _sql_kg_lineage_metrics() -> str:
-    """SQL mirror of q_kg_lineage_metrics: per doc_id%8 range, the count
-    of extraction rows (generative triples + per-episode distinct mention
-    spans) and the order-independent checksum — sum of the 60-bit
-    md5-prefix integer of each row's episode_uuid, per-element mod 2^31
-    (bounds the running sum) then mod 2^31, exactly plans/lineage.py
-    _checksum."""
-    ctes = corpus.sql_pages_cte() + "," + corpus.sql_triples_cte() + "," + corpus.sql_mentions_cte()
-    return (
-        "WITH "
-        + ctes.lstrip()
-        + """,
-ext AS (
-  SELECT doc_id, md5(url || '|' || para_idx) AS episode_uuid FROM triples_g
-  UNION ALL
-  SELECT doc_id, md5(url || '|' || para_idx)
-  FROM (SELECT DISTINCT doc_id, url, para_idx, name FROM mentions_g)
-)
-SELECT CAST(doc_id % 8 AS BIGINT) AS range_id,
-       'extract' AS stage,
-       count(*) AS row_count,
-       CAST(sum(('0x' || substr(md5(episode_uuid), 1, 15))::UBIGINT % 2147483648)
-            % 2147483648 AS BIGINT) AS checksum
-FROM ext GROUP BY 1 ORDER BY 1"""
-    )
-
-
-def _sql_kg_nodes() -> str:
-    # per-display label = role vote from the triples the display name
-    # participates in (each display carries exactly one role in this
-    # corpus, so min == plurality); mention-only displays (distractor
-    # participants) fall back to 'Entity' — then labels aggregate over
-    # the alias cluster exactly like the engine's collect_set
-    body = """
-, labs AS (
-  SELECT group_id, subj AS name,
-         CASE WHEN pred = 'BASED_IN' THEN 'Organization' ELSE 'Person' END AS label
-  FROM triples_g
-  UNION ALL
-  SELECT group_id, obj,
-         CASE WHEN pred IN ('WORKS_AT','EMPLOYED_AT','NO_LONGER_WORKS_AT','LEADS') THEN 'Organization'
-              WHEN pred IN ('LIKES','DISLIKES','ADMIRES') THEN 'Person' ELSE 'Place' END
-  FROM triples_g
-),
-alias_label AS (SELECT group_id, name, min(label) AS label FROM labs GROUP BY 1, 2)
-SELECT e.group_id, c.canon_name AS name,
-       string_agg(DISTINCT coalesce(al.label, 'Entity'), '/' ORDER BY coalesce(al.label, 'Entity')) AS labels_str,
-       count(DISTINCT e.name) AS n_aliases
-FROM ents e
-JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-LEFT JOIN alias_label al ON al.group_id = e.group_id AND al.name = e.name
-GROUP BY 1, 2"""
-    return _kg_sql(body)
-
-
-def _sql_kg_mentions() -> str:
-    body = """
-SELECT m.group_id, c.canon_name AS name,
-       count(DISTINCT m.url || '#' || m.para_idx) AS n_mentions
-FROM mentions_g m
-JOIN canon c ON c.group_id = m.group_id AND c.base = m.base
-GROUP BY 1, 2"""
-    return _kg_sql(body)
-
-
-# label CTEs shared by the kg_nodes / kg_node_summaries oracles: per-display
-# role vote from triples_g, aggregated over the alias cluster
-_LABELS_CTES = """
-labs AS (
-  SELECT group_id, subj AS name,
-         CASE WHEN pred = 'BASED_IN' THEN 'Organization' ELSE 'Person' END AS label
-  FROM triples_g
-  UNION ALL
-  SELECT group_id, obj,
-         CASE WHEN pred IN ('WORKS_AT','EMPLOYED_AT','NO_LONGER_WORKS_AT','LEADS') THEN 'Organization'
-              WHEN pred IN ('LIKES','DISLIKES','ADMIRES') THEN 'Person' ELSE 'Place' END
-  FROM triples_g
-),
-alias_label AS (SELECT group_id, name, min(label) AS label FROM labs GROUP BY 1, 2),
-nlab AS (
-  SELECT e.group_id, c.canon_name AS name,
-         string_agg(DISTINCT coalesce(al.label, 'Entity'), '/' ORDER BY coalesce(al.label, 'Entity')) AS labels_str
-  FROM ents e
-  JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  LEFT JOIN alias_label al ON al.group_id = e.group_id AND al.name = e.name
-  GROUP BY 1, 2
-)"""
-
-
-def _sql_kg_node_summaries() -> str:
-    # mirrors operators/summaries.with_summaries: identity sentence
-    # ("NAME is a L1/L2") + the node's 3 earliest touching facts ordered
-    # by (valid_at, fact), ": "-joined, capped at 500 ws tokens
-    body = f"""
-, {_LABELS_CTES.lstrip()},
-touching AS (
-  SELECT group_id, subj AS name, fact, valid_at FROM eds
-  UNION ALL
-  SELECT group_id, obj, fact, valid_at FROM eds
-),
-topf AS (
-  SELECT *, row_number() OVER (PARTITION BY group_id, name ORDER BY valid_at, fact) AS rn
-  FROM touching
-),
-fsum AS (
-  SELECT group_id, name, string_agg(fact, ' ' ORDER BY rn) AS fact_summary
-  FROM topf WHERE rn <= 3 GROUP BY 1, 2
-)
-SELECT n.group_id, n.name,
-       array_to_string(list_slice(string_split(
-         CASE WHEN f.fact_summary IS NULL THEN n.name || ' is a ' || n.labels_str
-              ELSE n.name || ' is a ' || n.labels_str || ': ' || f.fact_summary END,
-         ' '), 1, 500), ' ') AS summary
-FROM nlab n
-LEFT JOIN fsum f ON f.group_id = n.group_id AND f.name = n.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_episode_entities() -> str:
-    body = """
-, eps AS (
-  SELECT md5(url || '|' || (i - 1)) AS episode_uuid
-  FROM (SELECT url,
-               unnest(string_split(clean_text, chr(10) || chr(10))) AS content,
-               generate_subscripts(string_split(clean_text, chr(10) || chr(10)), 1) AS i
-        FROM pages_g)
-  WHERE length(content) > 0
-),
-sel AS (SELECT episode_uuid FROM eps WHERE substr(episode_uuid, 1, 1) = 'a'),
-men AS (
-  SELECT md5(m.url || '|' || m.para_idx) AS episode_uuid,
-         count(DISTINCT m.group_id || '|' || m.base) AS n_nodes
-  FROM mentions_g m GROUP BY 1
-),
-edg AS (
-  SELECT episode_uuid, count(*) AS n_edges FROM (
-    SELECT DISTINCT episode_uuid, group_id, subj,
-           (CASE pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE pred END) AS predclass, obj
-    FROM raw
-  ) GROUP BY 1
-)
-SELECT s.episode_uuid,
-       coalesce(men.n_nodes, 0) AS n_nodes,
-       coalesce(edg.n_edges, 0) AS n_edges
-FROM sel s
-LEFT JOIN men USING (episode_uuid)
-LEFT JOIN edg USING (episode_uuid)"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_remove_episode() -> str:
-    body = """
-, survive AS (
-  SELECT group_id, subj,
-         (CASE pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE pred END) AS predclass, obj,
-         count(DISTINCT episode_uuid)
-           FILTER (WHERE substr(episode_uuid, 1, 1) NOT IN ('0', '1', '2', '3')) AS n_left
-  FROM raw GROUP BY 1, 2, 3, 4
-)
-SELECT e.group_id, e.subj, e.pred, e.obj, s.n_left AS n_episodes_left
-FROM eds e
-JOIN survive s ON s.group_id = e.group_id AND s.subj = e.subj AND s.obj = e.obj
- AND s.predclass = (CASE e.pred WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' ELSE e.pred END)
-WHERE s.n_left > 0"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _norm_name_sql(col: str) -> str:
-    """SQL mirror of operators/triplet._norm_udf_col (honorific/suffix
-    strip) in the Java/RE2 common subset."""
-    return (
-        f"regexp_replace(regexp_replace(trim(lower({col})), "
-        f"'^(professor |dr\\. |dr |mr\\. |ms\\. |mrs\\. )', ''), "
-        f"' (inc|llc|ltd)$', '')"
-    )
-
-
-_CONTRA_CLASS_SQL = (
-    "CASE {x} WHEN 'WORKS_AT' THEN 'WORKS_AT' WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' "
-    "WHEN 'NO_LONGER_WORKS_AT' THEN 'WORKS_AT' "
-    "WHEN 'LIKES' THEN 'LIKES' WHEN 'DISLIKES' THEN 'LIKES' END"
-)
-_CONTRA_POL_SQL = (
-    "CASE {x} WHEN 'NO_LONGER_WORKS_AT' THEN -1 WHEN 'DISLIKES' THEN -1 ELSE 1 END"
-)
-
-
-def _sql_kg_add_triplet() -> str:
-    vals = ",\n         ".join(
-        f"('{g}', '{s}', '{p}', '{o}', '{f_}', TIMESTAMP '{ts}', '{ep}')"
-        for (g, s, p, o, f_, ts, ep) in _ADD_TRIPLETS
-    )
-    ca = _CONTRA_CLASS_SQL.format(x="a.pred")
-    cb = _CONTRA_CLASS_SQL.format(x="b.pred")
-    pa = _CONTRA_POL_SQL.format(x="a.pred")
-    pb = _CONTRA_POL_SQL.format(x="b.pred")
-    body = f"""
-, canonu AS (
-  SELECT e.group_id, c.canon_name AS name,
-         min(md5('node|' || e.group_id || '|' || e.name)) AS uuid
-  FROM ents e JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  GROUP BY 1, 2
-),
-normmap AS (
-  SELECT group_id, {_norm_name_sql('name')} AS norm,
-         min(uuid) AS uuid, arg_min(name, uuid) AS name
-  FROM canonu GROUP BY 1, 2
-),
-new_rows(group_id, subj_in, pred, obj_in, fact, valid_at, episode_uuid) AS (
-  VALUES {vals}
-),
-resolved AS (
-  SELECT n.group_id,
-         coalesce(ms.uuid, md5('node|' || n.group_id || '|' || n.subj_in)) AS src_uuid,
-         coalesce(ms.name, n.subj_in) AS subj,
-         n.pred,
-         coalesce(mo.uuid, md5('node|' || n.group_id || '|' || n.obj_in)) AS dst_uuid,
-         coalesce(mo.name, n.obj_in) AS obj,
-         n.fact, n.valid_at, n.episode_uuid
-  FROM new_rows n
-  LEFT JOIN normmap ms ON ms.group_id = n.group_id AND ms.norm = {_norm_name_sql('n.subj_in')}
-  LEFT JOIN normmap mo ON mo.group_id = n.group_id AND mo.norm = {_norm_name_sql('n.obj_in')}
-),
-merged AS (
-  SELECT group_id, src_uuid, dst_uuid, pred,
-         min(subj) AS subj, min(obj) AS obj, min(fact) AS fact,
-         min(valid_at) AS valid_at,
-         count(DISTINCT episode_uuid) AS n_episodes
-  FROM resolved GROUP BY 1, 2, 3, 4
-),
-inval AS (
-  SELECT a.group_id, a.src_uuid, a.dst_uuid, a.pred, min(b.valid_at) AS contra_valid_at
-  FROM merged a JOIN merged b
-    ON a.group_id = b.group_id AND a.src_uuid = b.src_uuid AND a.dst_uuid = b.dst_uuid
-   AND ({ca}) IS NOT NULL AND ({ca}) = ({cb})
-   AND ({pa}) <> ({pb}) AND b.valid_at > a.valid_at
-  GROUP BY 1, 2, 3, 4
-)
-SELECT m.group_id, m.subj, m.pred, m.obj, m.fact, m.valid_at,
-       i.contra_valid_at AS invalid_at, m.n_episodes
-FROM merged m
-LEFT JOIN inval i ON i.group_id = m.group_id AND i.src_uuid = m.src_uuid
-                 AND i.dst_uuid = m.dst_uuid AND i.pred = m.pred
-WHERE m.group_id = 'src0' AND m.subj IN ('Test Alpha Labs', 'Test Person')"""
-    return _kg_sql(body)
-
-
-def _sql_doc_para_dedup() -> str:
-    ctes = corpus.sql_pages_cte()
-    return (
-        "WITH "
-        + ctes.lstrip()
-        + """,
-paras AS (
-  SELECT url,
-         unnest(string_split(clean_text, chr(10) || chr(10))) AS para,
-         generate_subscripts(string_split(clean_text, chr(10) || chr(10)), 1) AS pos
-  FROM pages_g
-),
-pe AS (SELECT url, pos, para, md5(para) AS ph FROM paras WHERE length(para) > 0),
-boiler AS (SELECT ph FROM pe GROUP BY ph HAVING count(DISTINCT url) >= 2),
-flagged AS (
-  SELECT pe.*, (b.ph IS NOT NULL) AS is_boiler
-  FROM pe LEFT JOIN boiler b USING (ph)
-)
-SELECT url, count(*) AS n_paras,
-       CAST(sum(CASE WHEN is_boiler THEN 0 ELSE 1 END) AS BIGINT) AS n_kept,
-       md5(coalesce(string_agg(para, chr(10) || chr(10) ORDER BY pos)
-                      FILTER (WHERE NOT is_boiler), '')) AS kept_md5
-FROM flagged GROUP BY url"""
-    )
-
-
-_PII_EMAIL_SQL = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
-_PII_PHONE_SQL = r"\b555-[0-9]{3}-[0-9]{4}\b"
-_PII_IP_SQL = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
-
-
-def _sql_doc_pii() -> str:
-    return f"""
-WITH aug AS (
-  SELECT doc_id,
-         text
-         || CASE WHEN doc_id % 3 = 0
-                 THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com today'
-                 ELSE '' END
-         || CASE WHEN doc_id % 5 = 0
-                 THEN ' call 555-' || lpad(CAST(doc_id % 1000 AS VARCHAR), 3, '0')
-                      || '-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-                 ELSE '' END
-         || CASE WHEN doc_id % 7 = 0
-                 THEN ' from 10.0.' || CAST(doc_id % 256 AS VARCHAR)
-                      || '.' || CAST(doc_id % 254 + 1 AS VARCHAR)
-                 ELSE '' END AS text
-  FROM documents
-)
-SELECT doc_id,
-       len(regexp_extract_all(text, '{_PII_EMAIL_SQL}')) AS n_emails,
-       len(regexp_extract_all(text, '{_PII_PHONE_SQL}')) AS n_phones,
-       len(regexp_extract_all(regexp_replace(text, '{_PII_EMAIL_SQL}', '<EMAIL>', 'g'),
-                              '{_PII_IP_SQL}')) AS n_ips,
-       md5(regexp_replace(regexp_replace(regexp_replace(
-             text, '{_PII_EMAIL_SQL}', '<EMAIL>', 'g'),
-             '{_PII_PHONE_SQL}', '<PHONE>', 'g'),
-             '{_PII_IP_SQL}', '<IP>', 'g')) AS redacted_md5
-FROM aug"""
-
-
-_BPE_SQL = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
-
-_EN_SQL = r"\b(the|and|of|is|in|to|a|for|on|with)\b"
-
-
-def _sql_doc_tokens() -> str:
-    return rf"""
-SELECT doc_id, length(text) AS n_chars,
-       len(regexp_extract_all(text, '\S+')) AS n_ws_tokens,
-       len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_words,
-       len(regexp_extract_all(text, '{_BPE_SQL}')) AS n_bpe_tokens,
-       len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS n_punct
-FROM documents"""
-
-
-def _sql_doc_length_deciles() -> str:
-    return r"""
-WITH toks AS (
-  SELECT lang, len(regexp_extract_all(text, '\S+')) AS n FROM documents
-),
-hist AS (SELECT lang, n, count(*) AS cnt FROM toks GROUP BY 1, 2),
-cdf AS (
-  SELECT lang, n,
-         sum(cnt) OVER (PARTITION BY lang ORDER BY n
-                        ROWS UNBOUNDED PRECEDING) AS cum
-  FROM hist
-),
-tot AS (SELECT lang, sum(cnt) AS total FROM hist GROUP BY 1),
-dec AS (
-  SELECT lang, total, unnest(generate_series(1, 10)) AS decile FROM tot
-)
-SELECT d.lang, CAST(d.decile AS BIGINT) AS decile,
-       CAST(min(c.n) AS BIGINT) AS threshold_tokens,
-       CAST(d.total AS BIGINT) AS n_docs
-FROM dec d JOIN cdf c ON c.lang = d.lang AND c.cum * 10 >= d.decile * d.total
-GROUP BY 1, 2, 4"""
-
-
-def _sql_doc_stats_rollup() -> str:
-    return r"""
-SELECT lang, source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS total_tokens,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(min(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS min_tokens,
-       CAST(max(len(regexp_extract_all(text, '\S+'))) AS BIGINT) AS max_tokens
-FROM documents
-GROUP BY ROLLUP (lang, source)"""
-
-
-def _sql_kg_entity_timeline() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-legs AS (
-  SELECT group_id, subj AS name, 'subject' AS role, pred, obj AS other,
-         valid_at, invalid_at
-  FROM final
-  UNION ALL
-  SELECT group_id, obj, 'object', pred, subj, valid_at, invalid_at
-  FROM final
-)
-SELECT group_id, name,
-       CAST(row_number() OVER (PARTITION BY group_id, name
-            ORDER BY valid_at, pred, other, role) AS BIGINT) AS seq,
-       role, pred, other, valid_at, invalid_at
-FROM legs"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_doc_quality() -> str:
-    return rf"""
-WITH base AS (
-  SELECT doc_id,
-         len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_words,
-         len(regexp_extract_all(lower(text), '[a-z0-9]')) AS n_word_chars,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\s]')) AS n_punct,
-         len(regexp_extract_all(lower(text), '{_EN_SQL}')) AS n_stop,
-         length(text) AS n_chars
-  FROM documents
-),
-scored AS (
-  SELECT doc_id, n_words,
-         (n_stop * 1000000) // greatest(n_words, 1) AS stop_ratio_u,
-         (n_punct * 1000000) // greatest(n_chars, 1) AS punct_ratio_u,
-         (n_word_chars * 1000000) // greatest(n_words, 1) AS mean_word_len_u
-  FROM base
-)
-SELECT *,
-       ((least(n_words, 400) * 1000000) // 400) // 2
-         + (1000000 - punct_ratio_u) // 2 AS quality_u
-FROM scored"""
-
-
-def _sql_doc_langid() -> str:
-    # generated from the same LANG_TRIGRAMS table as the Spark scorer
-    from .operators.docs import sql_lang_id_cte
-
-    return sql_lang_id_cte()
-
-
-_GOPHER_STOPS_SQL = " + ".join(
-    rf"(CASE WHEN regexp_matches(lower(text), '\b{w}\b') THEN 1 ELSE 0 END)"
-    for w in ("the", "be", "to", "of", "and", "that", "have", "with")
-)
-
-
-def _sql_doc_gopher() -> str:
-    return rf"""
-WITH base AS (
-  SELECT doc_id,
-         len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS n_words,
-         len(regexp_extract_all(lower(text), '[a-z0-9]')) AS n_word_chars,
-         len(regexp_extract_all(lower(text), '[0-9]*[a-z][a-z0-9]*')) AS n_alpha_words,
-         len(regexp_extract_all(text, '#|\.\.\.|…')) AS n_symbols,
-         {_GOPHER_STOPS_SQL} AS stop_distinct
-  FROM documents
-),
-sig AS (
-  SELECT doc_id, n_words,
-         (n_word_chars * 1000000) // greatest(n_words, 1) AS mean_word_len_u,
-         (n_alpha_words * 1000000) // greatest(n_words, 1) AS frac_alpha_words_u,
-         (n_symbols * 1000000) // greatest(n_words, 1) AS symbol_ratio_u,
-         stop_distinct
-  FROM base
-),
-flagged AS (
-  SELECT *,
-         CASE WHEN n_words BETWEEN 50 AND 100000 THEN 1 ELSE 0 END AS r_word_count,
-         CASE WHEN mean_word_len_u BETWEEN 3000000 AND 10000000 THEN 1 ELSE 0 END AS r_mean_word_len,
-         CASE WHEN symbol_ratio_u <= 100000 THEN 1 ELSE 0 END AS r_symbol,
-         CASE WHEN frac_alpha_words_u >= 800000 THEN 1 ELSE 0 END AS r_alpha,
-         CASE WHEN stop_distinct >= 2 THEN 1 ELSE 0 END AS r_stop
-  FROM sig
-)
-SELECT *, r_word_count * r_mean_word_len * r_symbol * r_alpha * r_stop AS keep
-FROM flagged"""
-
-
-def _sql_doc_repetition() -> str:
-    return """
-WITH tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
-),
-base AS (
-  SELECT doc_id, len(toks) AS n_words, len(list_distinct(toks)) AS n_distinct_words, toks
-  FROM tok
-),
-grams AS (
-  SELECT doc_id,
-         unnest(list_transform(range(1, greatest(len(toks) - 1, 0) + 1),
-                i -> array_to_string(list_slice(toks, i, i + 1), ' '))) AS gram
-  FROM base
-),
-counts AS (SELECT doc_id, gram, count(*) AS n FROM grams GROUP BY 1, 2),
-top AS (
-  SELECT doc_id, gram AS top_bigram, n AS top_bigram_n FROM (
-    SELECT doc_id, gram, n,
-           row_number() OVER (PARTITION BY doc_id ORDER BY n DESC, gram) AS rn
-    FROM counts
-  ) WHERE rn = 1
-)
-SELECT b.doc_id, b.n_words, b.n_distinct_words,
-       ((b.n_words - b.n_distinct_words) * 1000000) // greatest(b.n_words, 1) AS dup_word_frac_u,
-       coalesce(t.top_bigram, '') AS top_bigram,
-       coalesce(t.top_bigram_n, 0) AS top_bigram_n,
-       (coalesce(t.top_bigram_n, 0) * 1000000) // greatest(b.n_words - 1, 1) AS top_bigram_frac_u
-FROM base b LEFT JOIN top t USING (doc_id)"""
-
-
-_NORM_SQL = r"trim(regexp_replace(lower(text), '\s+', ' ', 'g'))"
-
-
-def _sql_doc_fingerprint() -> str:
-    return f"""
-SELECT doc_id, md5({_NORM_SQL}) AS fingerprint, length({_NORM_SQL}) AS n_norm_chars
-FROM documents"""
-
-
-def _sql_doc_dedup_exact() -> str:
-    return f"""
-SELECT md5({_NORM_SQL}) AS fingerprint, count(*) AS n_docs, min(doc_id) AS canonical_doc_id
-FROM documents GROUP BY 1"""
-
-
-def _sql_doc_ngram_pairs() -> str:
-    return """
-WITH tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           range(1, greatest(len(toks) - 2, 0) + 1),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))) AS shingle
-  FROM tok
-),
-ok AS (SELECT shingle FROM sh GROUP BY shingle
-       HAVING count(*) <= (SELECT greatest(2, CAST(floor(count(DISTINCT doc_id) * 0.02) AS BIGINT))
-                           FROM documents)),
-sh2 AS (SELECT sh.* FROM sh JOIN ok USING (shingle)),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh2 GROUP BY 1),
-shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-  FROM sh2 a JOIN sh2 b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT s.doc_a, s.doc_b, s.shared,
-       (s.shared * 1000000) // (sa.n_sh + sb.n_sh - s.shared) AS jaccard_u
-FROM shared s
-JOIN sizes sa ON sa.doc_id = s.doc_a
-JOIN sizes sb ON sb.doc_id = s.doc_b
-ORDER BY jaccard_u DESC, s.doc_a, s.doc_b
-LIMIT 20"""
-
-
-def _sql_ann_topk() -> str:
-    return """
-WITH q AS (SELECT vec_id AS q_id, embedding AS qe FROM embeddings WHERE vec_id < 8),
-c AS (SELECT vec_id AS c_id, embedding AS ce FROM embeddings WHERE vec_id >= 8),
-scored AS (
-  SELECT q.q_id, c.c_id, list_cosine_similarity(c.ce, q.qe) AS score FROM c, q
-),
-ranked AS (
-  SELECT q_id, c_id,
-         row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id) AS rank
-  FROM scored
-)
-SELECT q_id, rank, c_id FROM ranked WHERE rank <= 5"""
-
-
-def _sql_kg_nodes_page() -> str:
-    body = f"""
-, canonu AS (
-  SELECT e.group_id, c.canon_name AS name,
-         min(md5('node|' || e.group_id || '|' || e.name)) AS uuid
-  FROM ents e JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  GROUP BY 1, 2
-)
-SELECT group_id, uuid, name FROM canonu
-WHERE group_id IN ('src0', 'src1') AND uuid < '{PAGE_CURSOR}'
-ORDER BY uuid DESC LIMIT {PAGE_LIMIT}"""
-    return _kg_sql(body)
-
-
-def _sql_doc_unigram_lm() -> str:
-    return """
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-dt AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-lm AS (SELECT tok, sum(tf) AS cf FROM dt GROUP BY 1),
-tot AS (SELECT sum(cf) AS total FROM lm)
-SELECT d.doc_id,
-       CAST(sum(d.tf) AS BIGINT) AS n_tokens,
-       count(*) AS n_distinct,
-       CAST(sum(CASE WHEN l.cf <= 2 THEN d.tf ELSE 0 END) AS BIGINT) AS n_rare,
-       CAST((sum(d.tf * l.cf) * 1000000) // greatest(sum(d.tf), 1) AS BIGINT) AS avg_cf_u,
-       CAST(((sum(d.tf * l.cf) * 1000000) // greatest(sum(d.tf), 1)) * 1000
-         // greatest(max(t.total), 1) AS BIGINT) AS lm_score_n
-FROM dt d JOIN lm l USING (tok) CROSS JOIN tot t
-GROUP BY 1"""
-
-
-def _sql_doc_tfidf_terms() -> str:
-    return """
-WITH toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-dt AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-dftab AS (SELECT tok, count(*) AS df FROM dt GROUP BY 1),
-nd AS (SELECT count(*) AS n_docs FROM documents),
-dlen AS (SELECT doc_id, sum(tf) AS n_doc_tokens FROM dt GROUP BY 1),
-scored AS (
-  SELECT d.doc_id, d.tok, d.tf, f.df,
-         (n.n_docs * 1000000) // f.df AS idf_u,
-         (d.tf * ((n.n_docs * 1000000) // f.df)) // l.n_doc_tokens AS weight_u
-  FROM dt d JOIN dftab f USING (tok) JOIN dlen l USING (doc_id) CROSS JOIN nd n
-),
-ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY weight_u DESC, tok
-  ) AS rank FROM scored
-)
-SELECT doc_id, tok AS term, tf, df, CAST(weight_u AS BIGINT) AS weight_u, rank
-FROM ranked WHERE rank <= 3"""
-
-
-def _sql_doc_cluster_topics() -> str:
-    parts = [f"cand AS (SELECT vec_id AS c_id, {_DUCK_QZ} AS emb FROM embeddings)"]
-    km_parts, last_asg, _ = _kmeans_sql_parts(IVF_CELLS, IVF_ITERS)
-    parts += km_parts
-    parts += [
-        """toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-)""",
-        "dt AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2)",
-        f"asg AS (SELECT c_id AS doc_id, cell_id FROM {last_asg})",
-        """ct AS (
-  SELECT a.cell_id, d.tok, sum(d.tf) AS tf_c
-  FROM dt d JOIN asg a USING (doc_id) GROUP BY 1, 2
-)""",
-        "ca AS (SELECT tok, sum(tf_c) AS tf_all FROM ct GROUP BY 1)",
-        "tc AS (SELECT cell_id, sum(tf_c) AS toks_c FROM ct GROUP BY 1)",
-        "tt AS (SELECT sum(tf_c) AS toks_total FROM ct)",
-        """scored AS (
-  SELECT c.cell_id, c.tok, c.tf_c,
-         c.tf_c * t.toks_total - a.tf_all * x.toks_c AS lift_u
-  FROM ct c JOIN ca a USING (tok) JOIN tc x USING (cell_id) CROSS JOIN tt t
-)""",
-        """ranked AS (
-  SELECT *, row_number() OVER (
-    PARTITION BY cell_id ORDER BY lift_u DESC, tok
-  ) AS rank FROM scored
-)""",
-    ]
-    return (
-        "WITH " + ",".join(p.strip() for p in parts)
-        + """
-SELECT CAST(cell_id AS BIGINT) AS cell_id, tok AS term,
-       CAST(tf_c AS BIGINT) AS tf_c, CAST(lift_u AS BIGINT) AS lift_u,
-       CAST(rank AS BIGINT) AS rank
-FROM ranked WHERE rank <= 5"""
-    )
-
-
-def _sql_doc_substring_dup() -> str:
-    return """
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id,
-         md5(array_to_string(list_slice(ws, i, i + 9), ' ')) AS gh
-  FROM toks, unnest(range(1, greatest(len(ws) - 9, 0) + 1)) AS t(i)
-),
-freq AS (SELECT gh, count(DISTINCT doc_id) AS n_docs FROM grams GROUP BY 1),
-per_doc AS (
-  SELECT g.doc_id, count(*) AS n_grams,
-         CAST(sum(CASE WHEN f.n_docs >= 2 THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_grams
-  FROM grams g JOIN freq f USING (gh) GROUP BY 1
-)
-SELECT d.doc_id,
-       coalesce(p.n_grams, 0) AS n_grams,
-       coalesce(p.n_dup_grams, 0) AS n_dup_grams,
-       CAST(coalesce(p.n_dup_grams, 0) * 1000000
-         // greatest(coalesce(p.n_grams, 0), 1) AS BIGINT) AS dup_frac_u
-FROM documents d LEFT JOIN per_doc p USING (doc_id)"""
-
-
-def _sql_doc_decontaminate() -> str:
-    k, mod = DECON_K, DECON_MOD
-    return f"""
-WITH toks AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
-  FROM documents
-),
-grams AS (
-  SELECT DISTINCT doc_id,
-         md5(array_to_string(list_slice(ws, i, i + {k - 1}), ' ')) AS gh
-  FROM toks, unnest(range(1, greatest(len(ws) - {k - 1}, 0) + 1)) AS t(i)
-),
-bg AS (SELECT DISTINCT gh FROM grams WHERE doc_id % {mod} = 0),
-per_doc AS (
-  SELECT g.doc_id, count(*) AS n_grams,
-         CAST(sum(CASE WHEN b.gh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hit
-  FROM grams g LEFT JOIN bg b USING (gh)
-  WHERE g.doc_id % {mod} <> 0
-  GROUP BY 1
-)
-SELECT d.doc_id,
-       coalesce(p.n_grams, 0) AS n_grams,
-       coalesce(p.n_hit, 0) AS n_hit_grams,
-       CAST(CASE WHEN coalesce(p.n_hit, 0) > 0 THEN 1 ELSE 0 END AS BIGINT)
-         AS contaminated
-FROM (SELECT doc_id FROM documents WHERE doc_id % {mod} <> 0) d
-LEFT JOIN per_doc p USING (doc_id)"""
-
-
-def _sql_doc_mix_sample() -> str:
-    branches = " ".join(
-        f"WHEN '{s}' THEN {r}" for s, r in sorted(MIX_RATES_U.items())
-    )
-    hash_u = (
-        "('0x' || substr(md5('mix:' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT"
-        " % 1000000"
-    )
-    return f"""
-SELECT doc_id, lang AS stratum,
-       CAST({hash_u} AS BIGINT) AS hash_u,
-       CAST(CASE WHEN {hash_u} <
-         (CASE lang {branches} ELSE 100000 END)
-         THEN 1 ELSE 0 END AS BIGINT) AS keep
-FROM documents"""
-
-
-def _sql_doc_lm_buckets() -> str:
-    return f"""
-WITH scored AS ({_sql_doc_unigram_lm()}),
-s AS (
-  SELECT sc.doc_id, d.lang, sc.lm_score_n
-  FROM scored sc JOIN documents d USING (doc_id)
-),
-hist AS (SELECT lang, lm_score_n, count(*) AS cnt FROM s GROUP BY 1, 2),
-cdf AS (
-  SELECT lang, lm_score_n,
-         sum(cnt) OVER (PARTITION BY lang ORDER BY lm_score_n
-                        ROWS UNBOUNDED PRECEDING) AS cum
-  FROM hist
-),
-tot AS (SELECT lang, sum(cnt) AS total FROM hist GROUP BY 1),
-ts AS (
-  SELECT c.lang,
-         min(CASE WHEN c.cum * 3 >= 1 * t.total THEN c.lm_score_n END) AS t1,
-         min(CASE WHEN c.cum * 3 >= 2 * t.total THEN c.lm_score_n END) AS t2
-  FROM cdf c JOIN tot t USING (lang)
-  GROUP BY 1
-)
-SELECT s.doc_id, s.lang, CAST(s.lm_score_n AS BIGINT) AS lm_score_n,
-       CASE WHEN s.lm_score_n <= ts.t1 THEN 'tail'
-            WHEN s.lm_score_n <= ts.t2 THEN 'middle'
-            ELSE 'head' END AS bucket
-FROM s JOIN ts USING (lang)"""
-
-
-def _sql_doc_bpe_pairs() -> str:
-    return """
-WITH w AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
-  FROM documents
-),
-wc AS (SELECT word, count(*) AS cnt FROM w GROUP BY 1),
-p AS (
-  SELECT unnest(list_transform(range(1, length(word)),
-                i -> substring(word, i, 2))) AS pair, cnt
-  FROM wc WHERE length(word) >= 2
-),
-agg AS (SELECT pair, sum(cnt) AS total FROM p GROUP BY 1)
-SELECT pair, CAST(total AS BIGINT) AS total,
-       CAST(row_number() OVER (ORDER BY total DESC, pair) AS BIGINT) AS rank
-FROM agg QUALIFY rank <= 20"""
-
-
-def _sql_evt_attribution() -> str:
-    return """
-WITH conv AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
-),
-touches AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'
-)
-SELECT c.user_id, c.event_id AS conversion_id, c.ts AS conversion_ts,
-       t.touch_id, t.touch_ts
-FROM conv c
-LEFT JOIN LATERAL (
-  SELECT tt.event_id AS touch_id, tt.ts AS touch_ts
-  FROM touches tt
-  WHERE tt.user_id = c.user_id AND tt.ts <= c.ts
-  ORDER BY tt.ts DESC, tt.event_id DESC LIMIT 1
-) t ON true"""
-
-
-def _sql_doc_winnow() -> str:
-    from .operators.docs import WINNOW_K as k, WINNOW_W as w
-
-    return f"""
-WITH tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks
-  FROM documents
-),
-h AS (
-  SELECT doc_id,
-         CASE WHEN len(toks) >= {k} THEN
-           list_transform(range(1, len(toks) - {k} + 2),
-             i -> ('0x' || substr(md5(array_to_string(
-                    list_slice(toks, i, i + {k - 1}), ' ')), 1, 8))::BIGINT)
-         ELSE CAST([] AS BIGINT[]) END AS hashes
-  FROM tok
-),
-fps AS (
-  SELECT DISTINCT doc_id, fp FROM (
-    SELECT doc_id,
-           unnest(list_distinct(
-             CASE WHEN len(hashes) >= {w} THEN
-               list_transform(range(1, len(hashes) - {w} + 2),
-                 j -> list_min(list_slice(hashes, j, j + {w - 1})))
-             WHEN len(hashes) >= 1 THEN [list_min(hashes)]
-             ELSE CAST([] AS BIGINT[]) END)) AS fp
-    FROM h
-  )
-),
-ok AS (
-  SELECT fp FROM fps GROUP BY fp
-  HAVING count(*) <= (SELECT greatest(2, count(*) * 20000 // 1000000)
-                      FROM documents)
-),
-kept AS (SELECT fps.* FROM fps JOIN ok USING (fp)),
-sizes AS (SELECT doc_id, count(*) AS n_fp FROM kept GROUP BY 1),
-shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-  FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-  GROUP BY 1, 2 HAVING count(*) >= 3
-)
-SELECT s.doc_a, s.doc_b, CAST(s.shared AS BIGINT) AS shared,
-       CAST((1000000 * s.shared) // (sa.n_fp + sb.n_fp - s.shared) AS BIGINT)
-         AS winnow_jaccard_u
-FROM shared s
-JOIN sizes sa ON sa.doc_id = s.doc_a
-JOIN sizes sb ON sb.doc_id = s.doc_b"""
-
-
-def _sql_doc_curation() -> str:
-    # the composite reuses each stage's oracle verbatim as a CTE, so the
-    # audit's semantics are definitionally those of the gated stages
-    return f"""
-WITH fp AS ({_sql_doc_fingerprint()}),
-dd AS ({_sql_doc_dedup_exact()}),
-g AS (SELECT doc_id,
-        r_word_count * r_mean_word_len * r_symbol * r_alpha AS q_keep
-      FROM ({_sql_doc_gopher()})),
-l AS ({_sql_doc_langid()}),
-m AS ({_sql_doc_mix_sample()})
-SELECT d.doc_id,
-       CAST(CASE WHEN d.doc_id = dd.canonical_doc_id AND g.q_keep = 1
-                  AND l.lang_guess <> 'und' AND m.keep = 1
-            THEN 1 ELSE 0 END AS BIGINT) AS keep,
-       CASE WHEN d.doc_id <> dd.canonical_doc_id THEN 'duplicate'
-            WHEN g.q_keep = 0 THEN 'quality'
-            WHEN l.lang_guess = 'und' THEN 'language'
-            WHEN m.keep = 0 THEN 'sampled_out'
-            ELSE 'kept' END AS reason
-FROM documents d
-JOIN fp ON fp.doc_id = d.doc_id
-JOIN dd ON dd.fingerprint = fp.fingerprint
-JOIN g ON g.doc_id = d.doc_id
-JOIN l ON l.doc_id = d.doc_id
-JOIN m ON m.doc_id = d.doc_id"""
-
-
-def _sql_doc_pack() -> str:
-    return rf"""
-WITH n AS (
-  SELECT doc_id,
-         CAST(len(regexp_extract_all(text, '{_BPE_SQL}')) + 1 AS BIGINT)
-           AS n_tokens
-  FROM documents
-),
-c AS (
-  SELECT doc_id, n_tokens,
-         sum(n_tokens) OVER (ORDER BY doc_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) - n_tokens
-           AS start_pos
-  FROM n
-)
-SELECT doc_id, n_tokens,
-       CAST(start_pos AS BIGINT) AS start_pos,
-       CAST(start_pos // 2048 AS BIGINT) AS start_block,
-       CAST((start_pos + n_tokens - 1) // 2048 AS BIGINT) AS end_block
-FROM c"""
-
-
-PAGERANK_ITERS = 3
-
-
-def _sql_kg_pagerank() -> str:
-    rounds = []
-    for i in range(1, PAGERANK_ITERS + 1):
-        prev = f"r{i - 1}"
-        rounds.append(f"""
-c{i} AS (
-  SELECT e.group_id, e.dst AS name,
-         CAST(sum({prev}.rank_u // od.outdeg) AS BIGINT) AS s
-  FROM e
-  JOIN od ON od.group_id = e.group_id AND od.src = e.src
-  JOIN {prev} ON {prev}.group_id = e.group_id AND {prev}.name = e.src
-  GROUP BY 1, 2
-),
-r{i} AS MATERIALIZED (
-  SELECT v.group_id, v.name,
-         (150000 // ng.n_g) + (85 * coalesce(c{i}.s, 0)) // 100 AS rank_u
-  FROM v JOIN ng USING (group_id)
-  LEFT JOIN c{i} ON c{i}.group_id = v.group_id AND c{i}.name = v.name
-)""")
-    body = f"""
-, e AS (SELECT DISTINCT group_id, subj AS src, obj AS dst FROM eds),
-v AS (SELECT group_id, src AS name FROM e
-      UNION SELECT group_id, dst FROM e),
-ng AS (SELECT group_id, count(*) AS n_g FROM v GROUP BY 1),
-od AS (SELECT group_id, src, count(*) AS outdeg FROM e GROUP BY 1, 2),
-idg AS (SELECT group_id, dst, count(*) AS indeg FROM e GROUP BY 1, 2),
-r0 AS (SELECT v.group_id, v.name, 1000000 // ng.n_g AS rank_u
-       FROM v JOIN ng USING (group_id)),{",".join(rounds)}
-SELECT r.group_id, r.name,
-       CAST(coalesce(od.outdeg, 0) AS BIGINT) AS out_deg,
-       CAST(coalesce(idg.indeg, 0) AS BIGINT) AS in_deg,
-       CAST(r.rank_u AS BIGINT) AS rank_u
-FROM r{PAGERANK_ITERS} r
-LEFT JOIN od ON od.group_id = r.group_id AND od.src = r.name
-LEFT JOIN idg ON idg.group_id = r.group_id AND idg.dst = r.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-PPR_ITERS = 3
-
-
-def _sql_kg_ppr() -> str:
-    base_u = (1_000_000 * (100 - 85)) // 100
-    rounds = []
-    for i in range(1, PPR_ITERS + 1):
-        prev = f"p{i - 1}"
-        rounds.append(f"""
-c{i} AS (
-  SELECT e.group_id, e.dst AS name,
-         CAST(sum({prev}.ppr_u // od.outdeg) AS BIGINT) AS s
-  FROM e
-  JOIN od ON od.group_id = e.group_id AND od.src = e.src
-  JOIN {prev} ON {prev}.group_id = e.group_id AND {prev}.name = e.src
-  GROUP BY 1, 2
-),
-p{i} AS MATERIALIZED (
-  SELECT coalesce(t.group_id, c.group_id) AS group_id,
-         coalesce(t.name, c.name) AS name,
-         coalesce(t.tele_u, 0) + (85 * coalesce(c.s, 0)) // 100 AS ppr_u
-  FROM tele t
-  FULL JOIN c{i} c ON c.group_id = t.group_id AND c.name = t.name
-)""")
-    body = f"""
-, e AS (SELECT DISTINCT group_id, subj AS src, obj AS dst FROM eds),
-v AS (SELECT group_id, src AS name FROM e
-      UNION SELECT group_id, dst FROM e),
-seeds AS (SELECT group_id, name FROM v WHERE name LIKE 'A%'),
-ns AS (SELECT group_id, count(*) AS n_s FROM seeds GROUP BY 1),
-od AS (SELECT group_id, src, count(*) AS outdeg FROM e GROUP BY 1, 2),
-tele AS (SELECT s.group_id, s.name, {base_u} // ns.n_s AS tele_u
-         FROM seeds s JOIN ns USING (group_id)),
-p0 AS (SELECT s.group_id, s.name, 1000000 // ns.n_s AS ppr_u
-       FROM seeds s JOIN ns USING (group_id)),{",".join(rounds)}
-SELECT group_id, name, CAST(ppr_u AS BIGINT) AS ppr_u,
-       CAST(CASE WHEN name LIKE 'A%' THEN 1 ELSE 0 END AS BIGINT) AS is_seed
-FROM p{PPR_ITERS} WHERE ppr_u > 0"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_rules() -> str:
-    from .operators.rules import MAX_MID_FAN, MIN_SUPPORT
-
-    body = f"""
-, e AS (SELECT DISTINCT group_id, subj, pred, obj FROM eds),
-ind AS (SELECT group_id, obj AS mid, count(*) AS in_d FROM e GROUP BY 1, 2),
-outd AS (SELECT group_id, subj AS mid, count(*) AS out_d FROM e GROUP BY 1, 2),
-okm AS (SELECT i.group_id, i.mid FROM ind i
-        JOIN outd o ON o.group_id = i.group_id AND o.mid = i.mid
-        WHERE i.in_d * o.out_d <= {MAX_MID_FAN}),
-paths AS (
-  SELECT DISTINCT a.group_id, a.subj AS x, a.pred AS p1, b.pred AS p2,
-         b.obj AS z
-  FROM e a
-  JOIN okm ON okm.group_id = a.group_id AND okm.mid = a.obj
-  JOIN e b ON b.group_id = a.group_id AND b.subj = a.obj
-  WHERE a.subj != b.obj
-),
-sup AS (SELECT p.p1, p.p2, h.pred AS p3, count(*) AS support
-        FROM paths p
-        JOIN e h ON h.group_id = p.group_id AND h.subj = p.x AND h.obj = p.z
-        GROUP BY 1, 2, 3),
-bdy AS (SELECT p1, p2, count(*) AS body FROM paths GROUP BY 1, 2)
-SELECT s.p1, s.p2, s.p3, CAST(b.body AS BIGINT) AS body,
-       CAST(s.support AS BIGINT) AS support,
-       CAST(s.support * 1000000 // b.body AS BIGINT) AS conf_u
-FROM sup s JOIN bdy b USING (p1, p2) WHERE s.support >= {MIN_SUPPORT}"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_doc_quality_classifier() -> str:
-    holdout = SPLIT_VAL_PCT + SPLIT_TEST_PCT
-    gopher = _sql_doc_gopher()
-    return f"""
-WITH labels AS (
-  SELECT doc_id, CAST(keep AS BIGINT) AS label FROM ({gopher}) g
-),
-train AS (
-  SELECT doc_id FROM (
-    SELECT doc_id,
-           ('0x' || substr(md5(lang || '|' || doc_id), 1, 15))::UBIGINT % 100
-             AS b
-    FROM documents
-  ) WHERE b >= {holdout}
-),
-toks AS (
-  SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-  FROM documents
-),
-dt AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-cls AS (
-  SELECT tok,
-         sum(CASE WHEN label = 1 THEN tf ELSE 0 END) AS c1,
-         sum(CASE WHEN label = 0 THEN tf ELSE 0 END) AS c0
-  FROM dt JOIN train USING (doc_id) JOIN labels USING (doc_id)
-  GROUP BY 1
-),
-w AS (SELECT tok, (c1 + 1) * 1000000 // (c1 + c0 + 2) AS w_u FROM cls),
-scored AS (
-  SELECT dt.doc_id, sum(tf) AS n_tokens,
-         sum(tf * coalesce(w.w_u, 500000)) // sum(tf) AS score_u
-  FROM dt LEFT JOIN w USING (tok) GROUP BY 1
-)
-SELECT l.doc_id, l.label,
-       CAST(coalesce(s.n_tokens, 0) AS BIGINT) AS n_tokens,
-       CAST(coalesce(s.score_u, 500000) AS BIGINT) AS score_u,
-       CAST(CASE WHEN coalesce(s.score_u, 500000) >= 500000
-            THEN 1 ELSE 0 END AS BIGINT) AS pred
-FROM labels l LEFT JOIN scored s USING (doc_id)"""
-
-
-def _snapshot_ctes(filter_expr: str) -> str:
-    """Second canon/eds/classed/inv chain over the page subset selected by
-    `filter_expr` (a doc_id predicate), derived MECHANICALLY from
-    _EDS_CTES by suffixing every chain-local CTE name with '2' — the two
-    snapshots' semantics can never drift apart. Word-boundary regex keeps
-    raw_uuid / canon_name / mentions_g intact."""
-    import re
-
-    s = _EDS_CTES
-    for name in ("ents", "canon", "raw", "eds", "classed", "inv"):
-        s = re.sub(rf"\b{name}\b", f"{name}2", s)
-    # restrict both generative sources to the snapshot's pages
-    s = s.replace(
-        "SELECT DISTINCT group_id, name, base FROM mentions_g",
-        "SELECT DISTINCT group_id, name, base FROM mentions_g"
-        f" WHERE {filter_expr}",
-    )
-    s = s.replace(
-        "JOIN canon2 co ON co.group_id = t.group_id AND co.base = t.obj_base",
-        "JOIN canon2 co ON co.group_id = t.group_id AND co.base = t.obj_base\n"
-        f"  WHERE t.{filter_expr}",
-    )
-    return s
-
-
-def _sql_kg_snapshot_diff() -> str:
-    snap = _snapshot_ctes(
-        f"doc_id <= (SELECT max(doc_id) * {SNAP_PCT} // 100 FROM pages_g)"
-    )
-    body = f"""
-,{snap},
-new_f AS ({_TRIPLES_SELECT}),
-old_f AS (
-  SELECT e.group_id, e.subj, e.pred, e.obj,
-         i.contra_valid_at AS invalid_at, e.n_episodes
-  FROM eds2 e
-  LEFT JOIN inv2 i ON i.group_id = e.group_id AND i.subj = e.subj
-                  AND i.pred = e.pred AND i.obj = e.obj
-)
-SELECT coalesce(n.group_id, o.group_id) AS group_id,
-       coalesce(n.subj, o.subj) AS subj,
-       coalesce(n.pred, o.pred) AS pred,
-       coalesce(n.obj, o.obj) AS obj,
-       CASE WHEN o.subj IS NULL THEN 'added'
-            WHEN n.subj IS NULL THEN 'removed'
-            WHEN o.invalid_at IS NULL AND n.invalid_at IS NOT NULL
-              THEN 'invalidated'
-            ELSE 'provenance' END AS status,
-       CAST(coalesce(o.n_episodes, 0) AS BIGINT) AS n_eps_old,
-       CAST(coalesce(n.n_episodes, 0) AS BIGINT) AS n_eps_new
-FROM new_f n
-FULL JOIN old_f o ON o.group_id = n.group_id AND o.subj = n.subj
-                 AND o.pred = n.pred AND o.obj = n.obj
-WHERE o.subj IS NULL OR n.subj IS NULL
-   OR o.n_episodes <> n.n_episodes
-   OR (o.invalid_at IS NULL) <> (n.invalid_at IS NULL)"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_node_edges() -> str:
-    body = """
-SELECT group_id, subj AS node_name, 'out' AS direction, pred,
-       obj AS other_name, valid_at
-FROM eds WHERE subj LIKE 'A%' OR subj LIKE 'B%'
-UNION ALL
-SELECT group_id, obj, 'in', pred, subj, valid_at
-FROM eds WHERE obj LIKE 'A%' OR obj LIKE 'B%'"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_shared_employer() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-emp AS (
-  SELECT group_id, subj AS person, obj AS org FROM final
-  WHERE pred = 'WORKS_AT' AND invalid_at IS NULL
-)
-SELECT a.group_id, a.org, a.person AS person_a, b.person AS person_b
-FROM emp a
-JOIN emp b ON b.group_id = a.group_id AND b.org = a.org
-          AND b.person > a.person"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_clustering() -> str:
-    body = """
-, und AS (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-),
-deg AS (
-  SELECT group_id, name, count(*) AS degree FROM (
-    SELECT group_id, a AS name FROM und
-    UNION ALL SELECT group_id, b FROM und
-  ) GROUP BY 1, 2
-),
-tri AS (
-  SELECT e1.group_id, e1.a AS v1, e1.b AS v2, e2.b AS v3
-  FROM und e1
-  JOIN und e2 ON e2.group_id = e1.group_id AND e2.a = e1.a AND e2.b > e1.b
-  JOIN und e3 ON e3.group_id = e1.group_id AND e3.a = e1.b AND e3.b = e2.b
-),
-pn AS (
-  SELECT group_id, v AS name, count(*) AS tri FROM (
-    SELECT group_id, v1 AS v FROM tri
-    UNION ALL SELECT group_id, v2 FROM tri
-    UNION ALL SELECT group_id, v3 FROM tri
-  ) GROUP BY 1, 2
-)
-SELECT d.group_id, d.name, CAST(d.degree AS BIGINT) AS degree,
-       CAST(coalesce(pn.tri, 0) AS BIGINT) AS triangles,
-       CAST(CASE WHEN d.degree >= 2
-            THEN (2000000 * coalesce(pn.tri, 0)) // (d.degree * (d.degree - 1))
-            ELSE 0 END AS BIGINT) AS coeff_u
-FROM deg d LEFT JOIN pn ON pn.group_id = d.group_id AND pn.name = d.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_kcore(rounds: int = 10) -> str:
-    # peel rounds unrolled mechanically; the engine peels to fixpoint with
-    # an early-exit probe, so the gate holds whenever the graph converges
-    # within `rounds` (pendant-path depth, verified at test scale)
-    # every CTE here is referenced 2-3x per round — MATERIALIZED keeps
-    # DuckDB from inlining (and thus exponentially re-evaluating) the chain
-    ctes = """
-, und0 AS MATERIALIZED (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-)"""
-    for i in range(rounds):
-        ctes += f""",
-alive{i} AS MATERIALIZED (
-  SELECT group_id, name FROM (
-    SELECT group_id, name, count(*) AS c FROM (
-      SELECT group_id, a AS name FROM und{i}
-      UNION ALL SELECT group_id, b FROM und{i}
-    ) GROUP BY 1, 2
-  ) WHERE c >= 2
-),
-und{i + 1} AS MATERIALIZED (
-  SELECT u.group_id, u.a, u.b FROM und{i} u
-  JOIN alive{i} x ON x.group_id = u.group_id AND x.name = u.a
-  JOIN alive{i} y ON y.group_id = u.group_id AND y.name = u.b
-)"""
-    body = (
-        ctes
-        + f"""
-SELECT group_id, name, CAST(count(*) AS BIGINT) AS core_degree FROM (
-  SELECT group_id, a AS name FROM und{rounds}
-  UNION ALL SELECT group_id, b FROM und{rounds}
-) GROUP BY 1, 2"""
-    )
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_degree_hist() -> str:
-    body = """
-, und AS (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-),
-deg AS (
-  SELECT group_id, name, count(*) AS degree FROM (
-    SELECT group_id, a AS name FROM und
-    UNION ALL SELECT group_id, b FROM und
-  ) GROUP BY 1, 2
-)
-SELECT group_id, CAST(length(bin(degree)) - 1 AS BIGINT) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_nodes
-FROM deg GROUP BY 1, 2"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_entity_cards() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-legs AS (
-  SELECT group_id, subj AS name, 1 AS as_subj, 0 AS as_obj, pred,
-         valid_at, invalid_at FROM final
-  UNION ALL
-  SELECT group_id, obj, 0, 1, pred, valid_at, invalid_at FROM final
-),
-cards AS (
-  SELECT group_id, name,
-         CAST(sum(as_subj) AS BIGINT) AS n_subj,
-         CAST(sum(as_obj) AS BIGINT) AS n_obj,
-         CAST(count(*) AS BIGINT) AS n_facts,
-         CAST(sum(CASE WHEN invalid_at IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_valid,
-         min(valid_at) AS first_valid,
-         max(valid_at) AS last_valid
-  FROM legs GROUP BY 1, 2
-),
-pc AS (SELECT group_id, name, pred, count(*) AS c FROM legs GROUP BY 1, 2, 3),
-top AS (
-  SELECT group_id, name, pred AS top_pred FROM (
-    SELECT group_id, name, pred,
-           row_number() OVER (PARTITION BY group_id, name
-                              ORDER BY c DESC, pred ASC) AS rn
-    FROM pc
-  ) WHERE rn = 1
-)
-SELECT c.group_id, c.name, c.n_subj, c.n_obj, c.n_facts, c.n_valid,
-       c.first_valid, c.last_valid, t.top_pred
-FROM cards c JOIN top t ON t.group_id = c.group_id AND t.name = c.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_functional_violations() -> str:
-    from .ontology import DEFAULT
-
-    preds = ", ".join(f"'{p}'" for p in sorted(DEFAULT.functional))
-    body = f"""
-, final AS ({_TRIPLES_SELECT})
-SELECT group_id, pred, subj,
-       CAST(count(DISTINCT obj) AS BIGINT) AS n_objects,
-       string_agg(DISTINCT obj, ',' ORDER BY obj) AS objs
-FROM final
-WHERE invalid_at IS NULL AND pred IN ({preds})
-GROUP BY 1, 2, 3
-HAVING count(DISTINCT obj) >= 2"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_predicate_stats() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT})
-SELECT group_id, pred,
-       CAST(count(*) AS BIGINT) AS n_facts,
-       CAST(count(DISTINCT subj) AS BIGINT) AS n_subjects,
-       CAST(count(DISTINCT obj) AS BIGINT) AS n_objects,
-       CAST(sum(CASE WHEN invalid_at IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_valid,
-       CAST((1000000 * count(DISTINCT subj)) // count(*) AS BIGINT) AS func_u,
-       CAST((1000000 * count(DISTINCT obj)) // count(*) AS BIGINT)
-         AS inv_func_u
-FROM final GROUP BY 1, 2"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_integrity() -> str:
-    # the engine corrupts its node table by dropping uuids starting 0/1/2;
-    # node uuid = min md5('node|' group '|' alias) per canonical group
-    # (canonu), edge endpoints resolve through the same mapping, mention
-    # edges through ment_edges, episode refs are untouched (n_bad = 0)
-    body = """
-, canonu AS MATERIALIZED (
-  SELECT e.group_id, c.canon_name AS name,
-         min(md5('node|' || e.group_id || '|' || e.name)) AS uuid
-  FROM ents e JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  GROUP BY 1, 2
-),
-kept AS MATERIALIZED (
-  SELECT uuid FROM canonu WHERE substr(uuid, 1, 1) NOT IN ('0', '1', '2')
-),
-erefs AS MATERIALIZED (
-  SELECT cs.uuid AS src_uuid, co.uuid AS dst_uuid
-  FROM eds e
-  JOIN canonu cs ON cs.group_id = e.group_id AND cs.name = e.subj
-  JOIN canonu co ON co.group_id = e.group_id AND co.name = e.obj
-),
-ment AS MATERIALIZED (
-  SELECT DISTINCT m.group_id,
-         md5(m.url || '|' || m.para_idx) AS episode_uuid,
-         cu.uuid AS entity_uuid
-  FROM mentions_g m
-  JOIN canon c ON c.group_id = m.group_id AND c.base = m.base
-  JOIN canonu cu ON cu.group_id = m.group_id AND cu.name = c.canon_name
-)
-SELECT 'edge_src_missing' AS "check",
-       CAST(sum(CASE WHEN k.uuid IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-       CAST(count(*) AS BIGINT) AS n_total
-FROM erefs LEFT JOIN kept k ON k.uuid = erefs.src_uuid
-UNION ALL
-SELECT 'edge_dst_missing',
-       CAST(sum(CASE WHEN k.uuid IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(*) AS BIGINT)
-FROM erefs LEFT JOIN kept k ON k.uuid = erefs.dst_uuid
-UNION ALL
-SELECT 'mention_entity_missing',
-       CAST(sum(CASE WHEN k.uuid IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(*) AS BIGINT)
-FROM ment LEFT JOIN kept k ON k.uuid = ment.entity_uuid
-UNION ALL
-SELECT 'mention_episode_missing', CAST(0 AS BIGINT),
-       CAST(count(*) AS BIGINT)
-FROM ment"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_ann_range() -> str:
-    return f"""
-WITH q AS (SELECT vec_id AS q_id, {_DUCK_QZ} AS qemb
-           FROM embeddings WHERE vec_id < 8),
-c AS (SELECT vec_id AS c_id, {_DUCK_QZ} AS emb
-      FROM embeddings WHERE vec_id >= 8)
-SELECT q.q_id, c.c_id,
-       CAST(list_inner_product(c.emb, q.qemb) AS BIGINT) AS score_q
-FROM c, q
-WHERE CAST(list_inner_product(c.emb, q.qemb) AS BIGINT) >= {ANN_RANGE_MIN_Q}"""
-
-
-def _sql_kg_cooccurrence() -> str:
-    body = """
-SELECT pr.group_id, pr.name_a, pr.name_b,
-       CAST(pr.c_ab AS BIGINT) AS c_ab,
-       CAST(pa.c AS BIGINT) AS c_a,
-       CAST(pb.c AS BIGINT) AS c_b,
-       CAST((1000000 * pr.c_ab * n.n_eps) // (pa.c * pb.c) AS BIGINT) AS lift_u
-FROM pr
-JOIN per pa ON pa.group_id = pr.group_id AND pa.name = pr.name_a
-JOIN per pb ON pb.group_id = pr.group_id AND pb.name = pr.name_b
-JOIN neps n ON n.group_id = pr.group_id"""
-    ctes = """
-, men AS (
-  SELECT DISTINCT m.group_id,
-         m.url || '#' || CAST(m.para_idx AS VARCHAR) AS ep,
-         c.canon_name AS name
-  FROM mentions_g m
-  JOIN canon c ON c.group_id = m.group_id AND c.base = m.base
-),
-per AS (SELECT group_id, name, count(*) AS c FROM men GROUP BY 1, 2),
-neps AS (SELECT group_id, count(DISTINCT ep) AS n_eps FROM men GROUP BY 1),
-pr AS (
-  SELECT x.group_id, x.name AS name_a, y.name AS name_b, count(*) AS c_ab
-  FROM men x
-  JOIN men y ON y.group_id = x.group_id AND y.ep = x.ep AND y.name > x.name
-  GROUP BY 1, 2, 3
-)"""
-    return _kg_sql(ctes + body)
-
-
-def _sql_kg_fact_churn() -> str:
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-newf AS (
-  SELECT group_id, strftime(valid_at, '%Y-%m-%d') AS day, count(*) AS n_new
-  FROM final GROUP BY 1, 2
-),
-invf AS (
-  SELECT group_id, strftime(invalid_at, '%Y-%m-%d') AS day, count(*) AS n_invalidated
-  FROM final WHERE invalid_at IS NOT NULL GROUP BY 1, 2
-)
-SELECT coalesce(n.group_id, i.group_id) AS group_id,
-       coalesce(n.day, i.day) AS day,
-       CAST(coalesce(n.n_new, 0) AS BIGINT) AS n_new,
-       CAST(coalesce(i.n_invalidated, 0) AS BIGINT) AS n_invalidated
-FROM newf n
-FULL JOIN invf i ON i.group_id = n.group_id AND i.day = n.day"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_doc_zipf() -> str:
-    return """
-WITH t AS (
-  SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS term
-  FROM documents
-),
-c AS (SELECT term, count(*) AS cnt FROM t GROUP BY 1)
-SELECT term, CAST(cnt AS BIGINT) AS cnt,
-       CAST(row_number() OVER (ORDER BY cnt DESC, term) AS BIGINT) AS rank
-FROM c QUALIFY rank <= 50"""
-
-
-def _sql_kg_components() -> str:
-    rounds = []
-    for k in range(1, 13):  # 12 min-propagation rounds >= entity-graph diameter
-        prev = f"k{k - 1}"
-        rounds.append(f"""
-k{k} AS MATERIALIZED (
-  SELECT l.group_id, l.name,
-         least(l.comp, coalesce(min(n.comp), l.comp)) AS comp
-  FROM {prev} l
-  LEFT JOIN e2 ON e2.group_id = l.group_id AND e2.a = l.name
-  LEFT JOIN {prev} n ON n.group_id = e2.group_id AND n.name = e2.b
-  GROUP BY l.group_id, l.name, l.comp
-)""")
-    body = f"""
-, undc AS (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-),
-e2 AS (SELECT group_id, a, b FROM undc
-       UNION ALL SELECT group_id, b, a FROM undc),
-vc AS (SELECT DISTINCT group_id, a AS name FROM e2),
-k0 AS (SELECT group_id, name, name AS comp FROM vc),{",".join(rounds)},
-sz AS (SELECT group_id, comp, count(*) AS comp_size FROM k12 GROUP BY 1, 2)
-SELECT k.group_id, k.name, k.comp AS component,
-       CAST(sz.comp_size AS BIGINT) AS comp_size
-FROM k12 k JOIN sz ON sz.group_id = k.group_id AND sz.comp = k.comp"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_scc() -> str:
-    # Exact SCC via transitive closure: a recursive-CTE reachability
-    # set (nested WITH RECURSIVE so the non-recursive outer WITH from
-    # _kg_sql stays untouched), mutual-reach pairs, and
-    # scc_id = least(self, min mutual partner) — the same min-member
-    # id the Spark pivots produce.
-    body = """
-, de AS (SELECT DISTINCT group_id, subj AS src, obj AS dst
-         FROM eds WHERE subj <> obj),
-vv AS (SELECT group_id, src AS name FROM de
-       UNION SELECT group_id, dst FROM de),
-tc AS (
-  SELECT * FROM (
-    WITH RECURSIVE reach(group_id, src, dst) AS (
-      SELECT group_id, src, dst FROM de
-      UNION
-      SELECT r.group_id, r.src, e.dst
-      FROM reach r
-      JOIN de e ON e.group_id = r.group_id AND e.src = r.dst
-    )
-    SELECT group_id, src, dst FROM reach
-  )
-),
-mutual AS (
-  SELECT a.group_id, a.src AS u, a.dst AS v
-  FROM tc a
-  JOIN tc b ON b.group_id = a.group_id
-           AND b.src = a.dst AND b.dst = a.src
-),
-base AS (
-  SELECT v.group_id, v.name,
-         least(v.name, coalesce(min(m.v), v.name)) AS scc_id
-  FROM vv v
-  LEFT JOIN mutual m ON m.group_id = v.group_id AND m.u = v.name
-  GROUP BY v.group_id, v.name
-),
-sz AS (SELECT group_id, scc_id, count(*) AS scc_size
-       FROM base GROUP BY 1, 2)
-SELECT b.group_id, b.name, b.scc_id, CAST(sz.scc_size AS BIGINT) AS scc_size
-FROM base b JOIN sz ON sz.group_id = b.group_id AND sz.scc_id = b.scc_id"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_triadic_closure() -> str:
-    # winner = lexicographic max of (t, lo, hi) over the three triangle
-    # edges, expanded to explicit CASE comparisons (engine-portable; the
-    # (t, lo, hi) tuples are unique per triangle so the order is total)
-    body = """
-, undt AS (
-  SELECT group_id, least(subj, obj) AS u, greatest(subj, obj) AS v,
-         min(valid_at) AS t
-  FROM eds WHERE valid_at IS NOT NULL AND subj <> obj
-  GROUP BY 1, 2, 3
-),
-tri AS (
-  SELECT e1.group_id, e1.u AS a, e1.v AS b, e2.v AS c,
-         e1.t AS t_ab, e2.t AS t_ac, e3.t AS t_bc
-  FROM undt e1
-  JOIN undt e2 ON e2.group_id = e1.group_id AND e2.u = e1.u
-              AND e2.v > e1.v
-  JOIN undt e3 ON e3.group_id = e1.group_id AND e3.u = e1.v
-              AND e3.v = e2.v
-)
-SELECT group_id, a, b, c,
-  CASE WHEN (t_ab > t_ac OR (t_ab = t_ac AND (a > a OR (a = a AND b >= c)))) AND (t_ab > t_bc OR (t_ab = t_bc AND (a > b OR (a = b AND b >= c)))) THEN a
-       WHEN NOT (t_ab > t_ac OR (t_ab = t_ac AND (a > a OR (a = a AND b >= c)))) AND (t_ac > t_bc OR (t_ac = t_bc AND (a > b OR (a = b AND c >= c)))) THEN a
-       ELSE b END AS closed_u,
-  CASE WHEN (t_ab > t_ac OR (t_ab = t_ac AND (a > a OR (a = a AND b >= c)))) AND (t_ab > t_bc OR (t_ab = t_bc AND (a > b OR (a = b AND b >= c)))) THEN b
-       WHEN NOT (t_ab > t_ac OR (t_ab = t_ac AND (a > a OR (a = a AND b >= c)))) AND (t_ac > t_bc OR (t_ac = t_bc AND (a > b OR (a = b AND c >= c)))) THEN c
-       ELSE c END AS closed_v,
-  CASE WHEN (t_ab > t_ac OR (t_ab = t_ac AND (a > a OR (a = a AND b >= c)))) AND (t_ab > t_bc OR (t_ab = t_bc AND (a > b OR (a = b AND b >= c)))) THEN t_ab
-       WHEN NOT (t_ab > t_ac OR (t_ab = t_ac AND (a > a OR (a = a AND b >= c)))) AND (t_ac > t_bc OR (t_ac = t_bc AND (a > b OR (a = b AND c >= c)))) THEN t_ac
-       ELSE t_bc END AS closed_at
-FROM tri"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_graph_shape() -> str:
-    body = """
-, arcs AS (SELECT DISTINCT group_id, subj AS src, obj AS dst
-           FROM eds WHERE subj <> obj),
-mut AS (
-  SELECT a.group_id, count(*) AS n_mutual
-  FROM arcs a
-  JOIN arcs r ON r.group_id = a.group_id AND r.src = a.dst
-             AND r.dst = a.src
-  GROUP BY 1
-),
-basec AS (SELECT group_id, count(*) AS n_arcs FROM arcs GROUP BY 1),
-und AS (SELECT DISTINCT group_id, least(src, dst) AS a,
-               greatest(src, dst) AS b FROM arcs),
-deg AS (
-  SELECT group_id, name, count(*) AS deg FROM (
-    SELECT group_id, a AS name FROM und
-    UNION ALL SELECT group_id, b FROM und
-  ) GROUP BY 1, 2
-),
-nn AS (SELECT group_id, count(*) AS n_nodes FROM deg GROUP BY 1),
-mo AS (
-  SELECT u.group_id, count(*) AS n_edges,
-         sum(da.deg) AS sum_x, sum(db.deg) AS sum_y,
-         sum(da.deg * db.deg) AS sum_xy,
-         sum(da.deg * da.deg) AS sum_x2,
-         sum(db.deg * db.deg) AS sum_y2
-  FROM und u
-  JOIN deg da ON da.group_id = u.group_id AND da.name = u.a
-  JOIN deg db ON db.group_id = u.group_id AND db.name = u.b
-  GROUP BY 1
-)
-SELECT b.group_id,
-       CAST(nn.n_nodes AS BIGINT) AS n_nodes,
-       CAST(b.n_arcs AS BIGINT) AS n_arcs,
-       CAST(coalesce(mut.n_mutual, 0) AS BIGINT) AS n_mutual,
-       CAST(mo.n_edges AS BIGINT) AS n_edges,
-       CAST(mo.sum_x AS BIGINT) AS sum_x,
-       CAST(mo.sum_y AS BIGINT) AS sum_y,
-       CAST(mo.sum_xy AS BIGINT) AS sum_xy,
-       CAST(mo.sum_x2 AS BIGINT) AS sum_x2,
-       CAST(mo.sum_y2 AS BIGINT) AS sum_y2
-FROM basec b
-LEFT JOIN mut ON mut.group_id = b.group_id
-JOIN nn ON nn.group_id = b.group_id
-JOIN mo ON mo.group_id = b.group_id"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_modularity() -> str:
-    n = LPA_ORACLE_ROUNDS
-    body = communities_ctes() + f"""
-, undm AS (
-  SELECT DISTINCT group_id, least(src, dst) AS a, greatest(src, dst) AS b
-  FROM ce WHERE src <> dst
-),
-mtot AS (SELECT group_id, count(*) AS m FROM undm GROUP BY 1),
-degu AS (
-  SELECT group_id, u AS uuid, count(*) AS deg FROM (
-    SELECT group_id, a AS u FROM undm
-    UNION ALL SELECT group_id, b FROM undm
-  ) GROUP BY 1, 2
-),
-ecin AS (
-  SELECT u.group_id, la.community, count(*) AS e_in
-  FROM undm u
-  JOIN l{n} la ON la.group_id = u.group_id AND la.uuid = u.a
-  JOIN l{n} lb ON lb.group_id = u.group_id AND lb.uuid = u.b
-   AND lb.community = la.community
-  GROUP BY 1, 2
-),
-dcs AS (
-  SELECT d.group_id, l.community, sum(d.deg) AS d_c
-  FROM degu d JOIN l{n} l ON l.group_id = d.group_id AND l.uuid = d.uuid
-  GROUP BY 1, 2
-)
-SELECT d.group_id,
-       CAST(count(*) AS BIGINT) AS n_communities,
-       CAST(max(mt.m) AS BIGINT) AS m_edges,
-       CAST(sum(4 * mt.m * coalesce(e.e_in, 0) - d.d_c * d.d_c) AS BIGINT)
-         AS modularity_num,
-       CAST(4 * max(mt.m) * max(mt.m) AS BIGINT) AS modularity_den
-FROM dcs d
-LEFT JOIN ecin e ON e.group_id = d.group_id AND e.community = d.community
-JOIN mtot mt ON mt.group_id = d.group_id
-GROUP BY 1"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_link_prediction() -> str:
-    body = """
-, und AS (
-  SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
-  FROM eds WHERE subj <> obj
-),
-adj AS (
-  SELECT group_id, a AS v, b AS nbr FROM und
-  UNION ALL SELECT group_id, b, a FROM und
-),
-deg AS (SELECT group_id, v, count(*) AS deg FROM adj GROUP BY 1, 2),
-pairs AS (
-  SELECT e1.group_id, e1.nbr AS a, e2.nbr AS b, count(*) AS common
-  FROM adj e1
-  JOIN adj e2 ON e2.group_id = e1.group_id AND e2.v = e1.v
-             AND e2.nbr > e1.nbr
-  GROUP BY 1, 2, 3
-),
-cand AS (
-  SELECT p.* FROM pairs p
-  LEFT JOIN und u ON u.group_id = p.group_id AND u.a = p.a AND u.b = p.b
-  WHERE u.a IS NULL
-)
-SELECT c.group_id, c.a AS name_a, c.b AS name_b,
-       CAST(c.common AS BIGINT) AS common,
-       CAST(da.deg AS BIGINT) AS deg_a,
-       CAST(db.deg AS BIGINT) AS deg_b,
-       CAST((1000000 * c.common) // (da.deg + db.deg - c.common) AS BIGINT)
-         AS jaccard_u
-FROM cand c
-JOIN deg da ON da.group_id = c.group_id AND da.v = c.a
-JOIN deg db ON db.group_id = c.group_id AND db.v = c.b"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_evt_retention() -> str:
-    return """
-WITH firsts AS (
-  SELECT user_id, date_trunc('day', min(ts)) AS cohort_day
-  FROM events GROUP BY 1
-),
-active AS (SELECT DISTINCT user_id, date_trunc('day', ts) AS day FROM events),
-sz AS (SELECT cohort_day, count(*) AS cohort_size FROM firsts GROUP BY 1),
-per AS (
-  SELECT f.cohort_day, datediff('day', f.cohort_day, a.day) AS day_offset,
-         count(*) AS n_users
-  FROM active a JOIN firsts f USING (user_id)
-  GROUP BY 1, 2
-)
-SELECT p.cohort_day, CAST(p.day_offset AS BIGINT) AS day_offset,
-       CAST(p.n_users AS BIGINT) AS n_users,
-       CAST(sz.cohort_size AS BIGINT) AS cohort_size,
-       CAST((1000000 * p.n_users) // sz.cohort_size AS BIGINT) AS retention_u
-FROM per p JOIN sz USING (cohort_day)"""
-
-
-def _sql_kg_random_walks() -> str:
-    rounds, unions = [], [
-        "SELECT group_id, start, CAST(0 AS BIGINT) AS step, node FROM s0"
-    ]
-    for s in range(1, WALK_LEN + 1):
-        prev = f"s{s - 1}"
-        rounds.append(f"""
-s{s} AS (
-  SELECT s.group_id, s.start, n.dst AS node
-  FROM {prev} s
-  JOIN od ON od.group_id = s.group_id AND od.src = s.node
-  JOIN nbrs n ON n.group_id = s.group_id AND n.src = s.node
-   AND n.pick = ('0x' || substr(md5('walk:' || s.start || ':{s}'), 1, 8))::BIGINT
-                % od.outdeg + 1
-)""")
-        unions.append(
-            f"SELECT group_id, start, CAST({s} AS BIGINT), node FROM s{s}"
-        )
-    body = f"""
-, e AS (SELECT DISTINCT group_id, subj AS src, obj AS dst FROM eds),
-nbrs AS (
-  SELECT group_id, src, dst,
-         row_number() OVER (PARTITION BY group_id, src ORDER BY dst) AS pick
-  FROM e
-),
-od AS (SELECT group_id, src, count(*) AS outdeg FROM e GROUP BY 1, 2),
-v AS (SELECT group_id, src AS name FROM e
-      UNION SELECT group_id, dst FROM e),
-s0 AS (SELECT group_id, name AS start, name AS node FROM v),{",".join(rounds)}
-{" UNION ALL ".join(unions)}"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_walk_pairs() -> str:
-    walks = _sql_kg_random_walks()
-    return f"""
-WITH walks AS ({walks})
-SELECT a.group_id, a.node AS center, b.node AS context,
-       CAST(count(*) AS BIGINT) AS n_pairs
-FROM walks a
-JOIN walks b ON b.group_id = a.group_id AND b.start = a.start
-            AND b.step <> a.step
-            AND abs(a.step - b.step) <= {WALK_WINDOW}
-GROUP BY 1, 2, 3"""
-
-
-def _sql_evt_sessions() -> str:
-    return """
-WITH flagged AS (
-  SELECT user_id, event_id, ts, event_type,
-         CAST(round(value * 100) AS BIGINT) AS value_c,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
-              THEN 1 ELSE 0 END AS new_sess
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT *, sum(new_sess) OVER (
-    PARTITION BY user_id ORDER BY ts, event_id
-    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-  ) AS session_idx
-  FROM flagged
-)
-SELECT user_id, CAST(session_idx AS BIGINT) AS session_idx,
-       count(*) AS n_events,
-       min(ts) AS session_start, max(ts) AS session_end,
-       CAST(sum(value_c) AS BIGINT) AS sum_value_c,
-       count(DISTINCT event_type) AS n_types
-FROM sess GROUP BY 1, 2"""
-
-
-def _sql_evt_windows() -> str:
-    return """
-SELECT date_trunc('hour', ts) AS window_start, event_type,
-       count(*) AS n_events,
-       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS sum_value_c,
-       count(DISTINCT user_id) AS n_users
-FROM events GROUP BY 1, 2"""
-
-
-def _sql_doc_rag_chunks() -> str:
-    from .operators.docs import RAG_STRIDE, RAG_WINDOW
-
-    w, s = RAG_WINDOW, RAG_STRIDE
-    return rf"""
-WITH toks AS (
-  SELECT doc_id, len(regexp_extract_all(text, '\S+')) AS n_tok FROM documents
-),
-base AS (
-  SELECT doc_id, n_tok,
-         CASE WHEN n_tok <= 0 THEN 0
-              ELSE 1 + (greatest(n_tok - {w}, 0) + {s - 1}) // {s} END AS n_chunks
-  FROM toks
-)
-SELECT doc_id, CAST(u AS BIGINT) AS chunk_idx,
-       CAST(u * {s} AS BIGINT) AS start_tok,
-       CAST(least(u * {s} + {w}, n_tok) AS BIGINT) AS end_tok,
-       CAST(n_tok AS BIGINT) AS n_tok
-FROM (SELECT doc_id, n_tok, unnest(range(n_chunks)) AS u
-      FROM base WHERE n_tok > 0)"""
-
-
-def _sql_doc_dsir() -> str:
-    from .operators.docs import DSIR_BUCKETS
-
-    b = DSIR_BUCKETS
-    return rf"""
-WITH tb AS MATERIALIZED (
-  SELECT doc_id, lang,
-         ('0x' || substr(md5(tok), 1, 8))::BIGINT % {b} AS bucket
-  FROM (SELECT doc_id, lang,
-               unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
-        FROM documents)
-),
-tot AS (
-  SELECT count(*) AS n_raw,
-         sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
-  FROM tb
-),
-lm AS MATERIALIZED (
-  SELECT bucket,
-         (1000000 * (1000000 * (sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) + 1)
-                     // (any_value(t.n_tgt) + {b})))
-         // greatest(1000000 * (count(*) + 1) // (any_value(t.n_raw) + {b}), 1)
-           AS ratio_u
-  FROM tb CROSS JOIN tot t GROUP BY bucket
-)
-SELECT tb.doc_id, CAST(count(*) AS BIGINT) AS n_toks,
-       CAST(sum(lm.ratio_u) // count(*) AS BIGINT) AS weight_u
-FROM tb JOIN lm USING (bucket) GROUP BY 1"""
-
-
-def _sql_doc_bigram_lm() -> str:
-    return r"""
-WITH toks AS MATERIALIZED (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ts
-  FROM documents
-),
-bigs AS MATERIALIZED (
-  SELECT doc_id,
-         unnest(ts[1 : len(ts) - 1]) AS w1,
-         unnest(ts[2 : len(ts)]) AS w2
-  FROM toks WHERE len(ts) >= 2
-),
-cb AS (SELECT w1, w2, count(*) AS cb FROM bigs WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-cu AS MATERIALIZED (
-  SELECT w1, count(*) AS cu FROM (
-    SELECT unnest(ts) AS w1 FROM toks WHERE doc_id % 2 = 0
-  ) GROUP BY 1
-),
-v AS (SELECT count(*) AS v FROM cu),
-dt AS (SELECT doc_id, w1, w2, count(*) AS tf FROM bigs GROUP BY 1, 2, 3),
-scored AS (
-  SELECT d.doc_id, d.tf, (c.cb IS NULL) AS unseen,
-         (1000000 * (coalesce(c.cb, 0) + 1))
-           // (coalesce(u.cu, 0) + v.v) AS p_u
-  FROM dt d
-  LEFT JOIN cb c ON c.w1 = d.w1 AND c.w2 = d.w2
-  LEFT JOIN cu u ON u.w1 = d.w1
-  CROSS JOIN v
-)
-SELECT doc_id, CAST(sum(tf) AS BIGINT) AS n_bigrams,
-       CAST(sum(CASE WHEN unseen THEN tf ELSE 0 END) AS BIGINT) AS n_unseen,
-       CAST(sum(tf * p_u) // greatest(sum(tf), 1) AS BIGINT) AS avg_p_u
-FROM scored GROUP BY 1"""
-
-
-def _sql_evt_transitions() -> str:
-    return """
-WITH steps AS (
-  SELECT event_type AS prev_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS next_type
-  FROM events
-),
-c AS (
-  SELECT prev_type, next_type, count(*) AS n FROM steps
-  WHERE next_type IS NOT NULL GROUP BY 1, 2
-),
-tot AS (SELECT prev_type, sum(n) AS n_from FROM c GROUP BY 1)
-SELECT c.prev_type, c.next_type, CAST(c.n AS BIGINT) AS n,
-       CAST((1000000 * c.n) // t.n_from AS BIGINT) AS prob_u
-FROM c JOIN tot t ON t.prev_type = c.prev_type"""
-
-
-def _sql_evt_anomaly() -> str:
-    return """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
-  FROM events GROUP BY 1, 2
-),
-norm AS (
-  SELECT event_type, sum(n) AS total, count(*) AS n_days
-  FROM daily GROUP BY 1
-)
-SELECT d.event_type, d.day, CAST(d.n AS BIGINT) AS n,
-       CAST((1000000 * d.n * x.n_days) // x.total AS BIGINT) AS ratio_u,
-       ((1000000 * d.n * x.n_days) // x.total >= 2000000) AS is_spike
-FROM daily d JOIN norm x ON x.event_type = d.event_type"""
-
-
-def _sql_evt_funnel() -> str:
-    steps = FUNNEL_STEPS
-    return f"""
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = '{steps[0]}' GROUP BY 1
-),
-s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN s1 ON s1.user_id = e.user_id
-  WHERE e.event_type = '{steps[1]}' AND e.ts > s1.t1 GROUP BY 1
-),
-s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN s2 ON s2.user_id = e.user_id
-  WHERE e.event_type = '{steps[2]}' AND e.ts > s2.t2 GROUP BY 1
-)
-SELECT s1.user_id, t1, t2, t3,
-       CAST(1 + CAST(t2 IS NOT NULL AS INT) + CAST(t3 IS NOT NULL AS INT)
-            AS BIGINT) AS steps_completed
-FROM s1
-LEFT JOIN s2 ON s2.user_id = s1.user_id
-LEFT JOIN s3 ON s3.user_id = s1.user_id"""
-
-
-def _sql_kg_verbalize() -> str:
-    from .operators.export import SENTENCE_SQL
-
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-sents AS (
-  SELECT group_id, subj, {SENTENCE_SQL} AS sentence FROM final
-),
-agg AS (
-  SELECT group_id, subj,
-         string_agg(sentence, ' ' ORDER BY sentence) AS passage,
-         CAST(count(*) AS BIGINT) AS n_facts
-  FROM sents GROUP BY 1, 2
-)
-SELECT group_id, subj, passage, n_facts,
-       CAST(len(string_split(passage, ' ')) AS BIGINT) AS n_tokens
-FROM agg"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_qa_pairs() -> str:
-    from .operators.export import QUESTION_SQL
-
-    body = f"""
-, final AS ({_TRIPLES_SELECT})
-SELECT group_id, pred, {QUESTION_SQL} AS question, obj AS answer,
-       CAST(invalid_at IS NULL AS INT) AS currently_true,
-       n_episodes AS support
-FROM final"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_ntriples() -> str:
-    # escape chain written in DuckDB literal syntax (no backslash
-    # escapes in standard SQL strings) — semantically identical to
-    # export._nt_escape's DataFrame-function chain
-    esc = (
-        "replace(replace(replace(replace(fact,"
-        " '\\', '\\\\'), '\"', '\\\"'),"
-        " chr(10), '\\n'), chr(9), '\\t')"
-    )
-    xsd = "'\"^^<http://www.w3.org/2001/XMLSchema#date>'"
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-iri AS (
-  SELECT group_id, fact, valid_at, invalid_at,
-    '<urn:kg:' || group_id || ':e:' || md5(subj) || '>' AS s_iri,
-    '<urn:kg:p:' || lower(pred) || '>' AS p_iri,
-    '<urn:kg:' || group_id || ':e:' || md5(obj) || '>' AS o_iri
-  FROM final
-),
-q AS (
-  SELECT *, '<< ' || s_iri || ' ' || p_iri || ' ' || o_iri || ' >>' AS quoted
-  FROM iri
-)
-SELECT group_id, 'spo' AS kind,
-       s_iri || ' ' || p_iri || ' ' || o_iri || ' .' AS line FROM q
-UNION ALL
-SELECT group_id, 'fact',
-       quoted || ' <urn:kg:p:fact> \"' || {esc} || '\" .' FROM q
-UNION ALL
-SELECT group_id, 'valid_from',
-       quoted || ' <urn:kg:p:valid_from> \"'
-       || substr(cast(valid_at as string), 1, 10) || {xsd} || ' .'
-FROM q WHERE valid_at IS NOT NULL
-UNION ALL
-SELECT group_id, 'valid_until',
-       quoted || ' <urn:kg:p:valid_until> \"'
-       || substr(cast(invalid_at as string), 1, 10) || {xsd} || ' .'
-FROM q WHERE invalid_at IS NOT NULL"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_doc_c4_filters() -> str:
-    ctes = corpus.sql_pages_cte()
-    return (
-        "WITH "
-        + ctes.lstrip()
-        + """,
-lines AS (
-  SELECT url, group_id, clean_text,
-         string_split(clean_text, chr(10) || chr(10)) AS paras
-  FROM pages_g
-),
-c AS (
-  SELECT url, group_id,
-         CAST(len(paras) AS BIGINT) AS n_lines,
-         CAST(len(list_filter(paras,
-              x -> regexp_matches(x, '[.!?"]$')
-                   AND len(string_split(x, ' ')) >= 5)) AS BIGINT)
-           AS n_kept_lines,
-         CAST(length(regexp_replace(clean_text, '[^.!?]', '', 'g'))
-              AS BIGINT) AS n_sentences,
-         CAST(contains(clean_text, '{') AS INT) AS has_brace
-  FROM lines
-)
-SELECT *,
-       CAST(n_kept_lines >= 3 AND n_sentences >= 5 AND has_brace = 0
-            AS INT) AS keep
-FROM c"""
-    )
-
-
-def _sql_kg_node_features() -> str:
-    n = LPA_ORACLE_ROUNDS
-    body = (
-        """
-, labs AS (
-  SELECT group_id, subj AS name,
-         CASE WHEN pred = 'BASED_IN' THEN 'Organization' ELSE 'Person' END AS label
-  FROM triples_g
-  UNION ALL
-  SELECT group_id, obj,
-         CASE WHEN pred IN ('WORKS_AT','EMPLOYED_AT','NO_LONGER_WORKS_AT','LEADS') THEN 'Organization'
-              WHEN pred IN ('LIKES','DISLIKES','ADMIRES') THEN 'Person' ELSE 'Place' END
-  FROM triples_g
-),
-alias_label AS (SELECT group_id, name, min(label) AS label FROM labs GROUP BY 1, 2),
-base AS (
-  SELECT e.group_id, c.canon_name AS name,
-         string_agg(DISTINCT coalesce(al.label, 'Entity'), '/'
-                    ORDER BY coalesce(al.label, 'Entity')) AS labels_str,
-         CAST(count(DISTINCT e.name) AS BIGINT) AS n_aliases
-  FROM ents e
-  JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  LEFT JOIN alias_label al ON al.group_id = e.group_id AND al.name = e.name
-  GROUP BY 1, 2
-),"""
-        + f"""
-final AS ({_TRIPLES_SELECT}),
-deg_legs AS (
-  SELECT group_id, subj AS name, 1 AS as_subj, 0 AS as_obj, invalid_at FROM final
-  UNION ALL
-  SELECT group_id, obj, 0, 1, invalid_at FROM final
-),
-deg AS (
-  SELECT group_id, name,
-         CAST(sum(as_subj) AS BIGINT) AS out_facts,
-         CAST(sum(as_obj) AS BIGINT) AS in_facts,
-         CAST(sum(CASE WHEN invalid_at IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_valid
-  FROM deg_legs GROUP BY 1, 2
-)"""
-        + communities_ctes()
-        + f""",
-csize AS (
-  SELECT l.group_id, cn.canon_name AS name,
-         CAST(a.n_members AS BIGINT) AS community_size
-  FROM l{n} l
-  JOIN canonu cn ON cn.group_id = l.group_id AND cn.uuid = l.uuid
-  JOIN agg a ON a.group_id = l.group_id AND a.community = l.community
-)
-SELECT b.group_id, b.name, b.labels_str, b.n_aliases,
-       CAST(coalesce(d.out_facts, 0) AS BIGINT) AS out_facts,
-       CAST(coalesce(d.in_facts, 0) AS BIGINT) AS in_facts,
-       CAST(coalesce(d.n_valid, 0) AS BIGINT) AS n_valid,
-       CAST(coalesce(cs.community_size, 1) AS BIGINT) AS community_size
-FROM base b
-LEFT JOIN deg d ON d.group_id = b.group_id AND d.name = b.name
-LEFT JOIN csize cs ON cs.group_id = b.group_id AND cs.name = b.name"""
-    )
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_global_entities() -> str:
-    from .operators.extract import norm_sql
-
-    norm = norm_sql("canon_name", duck=True)
-    body = f"""
-, al AS (
-  SELECT e.group_id, c.canon_name,
-         CAST(count(DISTINCT e.name) AS BIGINT) AS n_aliases
-  FROM ents e
-  JOIN canon c ON c.group_id = e.group_id AND c.base = e.base
-  GROUP BY 1, 2
-),
-keyed AS (
-  SELECT group_id, canon_name, n_aliases, {norm} AS global_key FROM al
-)
-SELECT global_key,
-       min(canon_name) AS canonical_name,
-       CAST(count(DISTINCT group_id) AS BIGINT) AS n_groups,
-       CAST(count(*) AS BIGINT) AS n_entities,
-       CAST(sum(n_aliases) AS BIGINT) AS total_aliases,
-       md5('global|' || global_key) AS global_uuid
-FROM keyed GROUP BY global_key"""
-    return _kg_sql(body)
-
-
-def _sql_kg_global_triples() -> str:
-    from .ontology import DEFAULT
-    from .operators.extract import norm_sql
-
-    def norm(col: str) -> str:
-        return norm_sql(col, duck=True)
-
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-keyed AS (
-  SELECT *, {norm('subj')} AS subj_key,
-         {DEFAULT.synonym_class_sql('pred')} AS pred_class,
-         {norm('obj')} AS obj_key
-  FROM final
-)
-SELECT subj_key, pred_class, obj_key,
-       min(subj) AS subj, min(obj) AS obj,
-       CAST(count(DISTINCT group_id) AS BIGINT) AS n_groups,
-       CAST(count(*) AS BIGINT) AS n_facts,
-       CAST(sum(CASE WHEN invalid_at IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_valid,
-       min(valid_at) AS first_valid_at,
-       max(valid_at) AS last_valid_at,
-       CAST(CASE WHEN count(DISTINCT group_id) >= 2 THEN 1 ELSE 0 END
-            AS BIGINT) AS corroborated,
-       md5('gfact|' || subj_key || '|' || pred_class || '|' || obj_key)
-         AS global_fact_uuid
-FROM keyed GROUP BY subj_key, pred_class, obj_key"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_global_conflicts() -> str:
-    from .ontology import DEFAULT
-    from .operators.extract import norm_sql
-
-    funcs = ", ".join(f"'{p}'" for p in sorted(DEFAULT.functional))
-    # majority vote tiebreak mirrors the Spark min_by struct(-n_obs,
-    # obj_key): encode as a fixed-width composite string (n_obs < 1e9 at
-    # oracle scale)
-    vote_key = "lpad(CAST(1000000000 - n_obs AS VARCHAR), 10, '0') || '|' || obj_key"
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-validf AS (
-  SELECT {norm_sql('subj', duck=True)} AS subj_key,
-         {DEFAULT.synonym_class_sql('pred')} AS pred_class,
-         {norm_sql('obj', duck=True)} AS obj_key,
-         subj, group_id
-  FROM final
-  WHERE invalid_at IS NULL
-    AND ({DEFAULT.synonym_class_sql('pred')}) IN ({funcs})
-),
-per_obj AS (
-  SELECT subj_key, pred_class, obj_key, min(subj) AS subj,
-         count(*) AS n_obs
-  FROM validf GROUP BY 1, 2, 3
-),
-vote AS (
-  SELECT subj_key, pred_class, min(subj) AS subj,
-         CAST(count(*) AS BIGINT) AS n_objs,
-         array_to_string(list_sort(list(obj_key)), ',') AS objs,
-         arg_min(obj_key, {vote_key}) AS majority_obj,
-         CAST(max(n_obs) AS BIGINT) AS majority_support,
-         CAST(sum(n_obs) AS BIGINT) AS total_support
-  FROM per_obj GROUP BY 1, 2
-),
-spread AS (
-  SELECT subj_key, pred_class,
-         CAST(count(DISTINCT group_id) AS BIGINT) AS n_groups
-  FROM validf GROUP BY 1, 2
-)
-SELECT v.subj_key, v.pred_class, v.subj, v.n_objs, s.n_groups, v.objs,
-       v.majority_obj, v.majority_support, v.total_support
-FROM vote v JOIN spread s
-  ON s.subj_key = v.subj_key AND s.pred_class = v.pred_class
-WHERE v.n_objs >= 2 AND s.n_groups >= 2"""
-    return _kg_sql(body, with_eds=True)
-
-
-def _sql_kg_source_trust() -> str:
-    from .ontology import DEFAULT
-    from .operators.extract import norm_sql
-
-    funcs = ", ".join(f"'{p}'" for p in sorted(DEFAULT.functional))
-    vote_key = "lpad(CAST(1000000000 - n_obs AS VARCHAR), 10, '0') || '|' || obj_key"
-    body = f"""
-, final AS ({_TRIPLES_SELECT}),
-validf AS (
-  SELECT {norm_sql('subj', duck=True)} AS subj_key,
-         {DEFAULT.synonym_class_sql('pred')} AS pred_class,
-         {norm_sql('obj', duck=True)} AS obj_key,
-         group_id
-  FROM final
-  WHERE invalid_at IS NULL
-    AND ({DEFAULT.synonym_class_sql('pred')}) IN ({funcs})
-),
-claims AS (
-  SELECT DISTINCT group_id, subj_key, pred_class, obj_key FROM validf
-),
-per_obj AS (
-  SELECT subj_key, pred_class, obj_key, count(*) AS n_obs
-  FROM validf GROUP BY 1, 2, 3
-),
-majority AS (
-  SELECT subj_key, pred_class, arg_min(obj_key, {vote_key}) AS majority_obj
-  FROM per_obj GROUP BY 1, 2
-),
-scored AS (
-  SELECT c.group_id,
-         CASE WHEN c.obj_key = m.majority_obj THEN 1 ELSE 0 END AS agree
-  FROM claims c
-  JOIN majority m
-    ON m.subj_key = c.subj_key AND m.pred_class = c.pred_class
-)
-SELECT group_id,
-       CAST(count(*) AS BIGINT) AS n_claims,
-       CAST(sum(agree) AS BIGINT) AS n_agree,
-       CAST((1000 * sum(agree)) // count(*) AS BIGINT) AS trust_permille
-FROM scored GROUP BY group_id"""
-    return _kg_sql(body, with_eds=True)
-
-
-ORACLES: dict[str, Callable[[], str]] = {
-    "kg_source_trust": _sql_kg_source_trust,
-    "kg_global_conflicts": _sql_kg_global_conflicts,
-    "kg_global_triples": _sql_kg_global_triples,
-    "kg_global_entities": _sql_kg_global_entities,
-    "kg_node_features": _sql_kg_node_features,
-    "kg_verbalize": _sql_kg_verbalize,
-    "kg_qa_pairs": _sql_kg_qa_pairs,
-    "kg_ntriples": _sql_kg_ntriples,
-    "doc_c4_filters": _sql_doc_c4_filters,
-    "kg_alias_resolution": _sql_kg_alias_resolution,
-    "kg_node_attributes": _sql_kg_node_attributes,
-    "kg_nodes_page": _sql_kg_nodes_page,
-    "kg_edges_page": _sql_kg_edges_page,
-    "kg_episodes_page": _sql_kg_episodes_page,
-    "kg_mentions_page": _sql_kg_mentions_page,
-    "kg_communities_page": _sql_kg_communities_page,
-    "doc_minhash_dedup": _sql_doc_minhash_dedup,
-    "doc_minhash_calibration": _sql_doc_minhash_calibration,
-    "doc_prefix_join": _sql_doc_prefix_join,
-    "doc_dup_clusters": _sql_doc_dup_clusters,
-    "doc_simhash_pairs": _sql_doc_simhash_pairs,
-    "kg_communities": _sql_kg_communities,
-    "kg_triples": _sql_kg_triples,
-    "kg_contradictions": _sql_kg_contradictions,
-    "kg_episodes": _sql_kg_episodes,
-    "kg_episode_facts": _sql_kg_episode_facts,
-    "kg_lineage_metrics": _sql_kg_lineage_metrics,
-    "kg_incremental_build": _sql_kg_triples,
-    "kg_blocking_audit": _sql_kg_blocking_audit,
-    "kg_snapshot_diff": _sql_kg_snapshot_diff,
-    "kg_triple_negatives": _sql_kg_triple_negatives,
-    "kg_nodes": _sql_kg_nodes,
-    "kg_mentions": _sql_kg_mentions,
-    "kg_node_summaries": _sql_kg_node_summaries,
-    "kg_episode_entities": _sql_kg_episode_entities,
-    "kg_remove_episode": _sql_kg_remove_episode,
-    "kg_add_triplet": _sql_kg_add_triplet,
-    "kg_community_attach": _sql_kg_community_attach,
-    "kg_community_members": _sql_kg_community_members,
-    "doc_para_dedup": _sql_doc_para_dedup,
-    "doc_url_dedup": _sql_doc_url_dedup,
-    "doc_pii": _sql_doc_pii,
-    "doc_tokens": _sql_doc_tokens,
-    "doc_length_deciles": _sql_doc_length_deciles,
-    "doc_stats_rollup": _sql_doc_stats_rollup,
-    "doc_curation": _sql_doc_curation,
-    "doc_winnow": _sql_doc_winnow,
-    "doc_bpe_pairs": _sql_doc_bpe_pairs,
-    "doc_lm_buckets": _sql_doc_lm_buckets,
-    "evt_attribution": _sql_evt_attribution,
-    "kg_entity_timeline": _sql_kg_entity_timeline,
-    "doc_quality": _sql_doc_quality,
-    "doc_langid": _sql_doc_langid,
-    "doc_gopher": _sql_doc_gopher,
-    "doc_repetition": _sql_doc_repetition,
-    "doc_fingerprint": _sql_doc_fingerprint,
-    "doc_dedup_exact": _sql_doc_dedup_exact,
-    "doc_ngram_pairs": _sql_doc_ngram_pairs,
-    "ann_topk": _sql_ann_topk,
-    "ann_ivf_topk": _sql_ann_ivf_topk,
-    "ann_ivf_recall": _sql_ann_ivf_recall,
-    "ann_pq_topk": _sql_ann_pq_topk,
-    "ann_ivfpq_topk": _sql_ann_ivfpq_topk,
-    "doc_hll_distinct": _sql_doc_hll_distinct,
-    "doc_cms_topk": _sql_doc_cms_topk,
-    "doc_bpe_merges": _sql_doc_bpe_merges,
-    "doc_embcos_dedup": _sql_doc_embcos_dedup,
-    "doc_embcos_clusters": _sql_doc_embcos_clusters,
-    "doc_split": _sql_doc_split,
-    "emb_contrastive": _sql_emb_contrastive,
-    "doc_unigram_lm": _sql_doc_unigram_lm,
-    "doc_tfidf_terms": _sql_doc_tfidf_terms,
-    "doc_cluster_topics": _sql_doc_cluster_topics,
-    "doc_substring_dup": _sql_doc_substring_dup,
-    "doc_source_drift": _sql_doc_source_drift,
-    "doc_decontaminate": _sql_doc_decontaminate,
-    "doc_clusters": _sql_doc_clusters,
-    "doc_pack": _sql_doc_pack,
-    "doc_mix_sample": _sql_doc_mix_sample,
-    "kg_pagerank": _sql_kg_pagerank,
-    "kg_ppr": _sql_kg_ppr,
-    "kg_rules": _sql_kg_rules,
-    "doc_quality_classifier": _sql_doc_quality_classifier,
-    "kg_snapshot_diff": _sql_kg_snapshot_diff,
-    "kg_node_edges": _sql_kg_node_edges,
-    "kg_shared_employer": _sql_kg_shared_employer,
-    "kg_clustering": _sql_kg_clustering,
-    "kg_kcore": _sql_kg_kcore,
-    "kg_ktruss": _sql_kg_ktruss,
-    "kg_predicate_stats": _sql_kg_predicate_stats,
-    "kg_functional_violations": _sql_kg_functional_violations,
-    "kg_integrity": _sql_kg_integrity,
-    "ann_range": _sql_ann_range,
-    "kg_degree_hist": _sql_kg_degree_hist,
-    "kg_entity_cards": _sql_kg_entity_cards,
-    "kg_cooccurrence": _sql_kg_cooccurrence,
-    "kg_random_walks": _sql_kg_random_walks,
-    "kg_neighbor_sample": _sql_kg_neighbor_sample,
-    "kg_temporal_paths": _sql_kg_temporal_paths,
-    "kg_fact_confidence": _sql_kg_fact_confidence,
-    "kg_node2vec": _sql_kg_node2vec,
-    "kg_hits": _sql_kg_hits,
-    "kg_shortest_paths": _sql_kg_shortest_paths,
-    "kg_link_pred_ra": _sql_kg_link_pred_ra,
-    "doc_domain_stats": _sql_doc_domain_stats,
-    "evt_hopping": _sql_evt_hopping,
-    "kg_er_metrics": _sql_kg_er_metrics,
-    "kg_domain_range": _sql_kg_domain_range,
-    "kg_metapaths": _sql_kg_metapaths,
-    "emb_norm_audit": _sql_emb_norm_audit,
-    "doc_lang_confusion": _sql_doc_lang_confusion,
-    "doc_clf_eval": _sql_doc_clf_eval,
-    "evt_baskets": _sql_evt_baskets,
-    "kg_walk_pairs": _sql_kg_walk_pairs,
-    "kg_link_prediction": _sql_kg_link_prediction,
-    "kg_modularity": _sql_kg_modularity,
-    "kg_components": _sql_kg_components,
-    "kg_scc": _sql_kg_scc,
-    "kg_triadic_closure": _sql_kg_triadic_closure,
-    "kg_graph_shape": _sql_kg_graph_shape,
-    "kg_fact_churn": _sql_kg_fact_churn,
-    "doc_zipf": _sql_doc_zipf,
-    "evt_sessions": _sql_evt_sessions,
-    "evt_retention": _sql_evt_retention,
-    "evt_windows": _sql_evt_windows,
-    "evt_funnel": _sql_evt_funnel,
-    "doc_rag_chunks": _sql_doc_rag_chunks,
-    "doc_dsir": _sql_doc_dsir,
-    "doc_bigram_lm": _sql_doc_bigram_lm,
-    "evt_transitions": _sql_evt_transitions,
-    "evt_anomaly": _sql_evt_anomaly,
-    "media_phash_pairs": _sql_media_phash_pairs,
-    "media_audio_dedup": _sql_media_audio_dedup,
-    "media_scene_cuts": _sql_media_scene_cuts,
-}
-
-
-def _merge_extra_registries() -> None:
-    from . import registry_search
-
-    QUERIES.update(registry_search.SEARCH_QUERIES)
-    ORACLES.update(registry_search.SEARCH_ORACLES)
-
-
-_merge_extra_registries()
+_FOUND = [q for mod in (kg, graph, docs, ann, media, events, search) for q in _collect(mod)]
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {n: q for n, q, _ in _FOUND}
+ORACLES: dict[str, Callable[[], str]] = {n: o for n, _, o in _FOUND}
 
 
 def oracle_sql() -> dict[str, str]:
     return {name: fn() for name, fn in ORACLES.items()}
-
-
-# --- Round-4 second wave: structural features & hyperplane LSH -------------
-
-
-def q_kg_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Katz centrality (fixed 3 iterations, beta = 1/8, integer
-    micro-units) over the canonical directed triple graph — the
-    walk-counting importance score that complements kg_pagerank: hubs
-    pass full attenuated weight to every neighbor instead of splitting
-    it, the natural salience for web-crawl coverage."""
-    from .operators.centrality import katz_centrality
-
-    return katz_centrality(q_kg_triples(spark, sf_dir))
-
-
-def _sql_kg_katz() -> str:
-    steps = []
-    for k in range(1, 4):
-        prev = f"x{k - 1}"
-        steps.append(f"""
-x{k} AS (
-  SELECT v.group_id, v.name,
-         CAST(1000000 + coalesce(s.s, 0) AS BIGINT) AS x_u
-  FROM kverts v LEFT JOIN (
-    SELECT e.group_id, e.dst AS name, sum(x.x_u // 8) AS s
-    FROM ke e JOIN {prev} x ON x.group_id = e.group_id AND x.name = e.src
-    GROUP BY 1, 2
-  ) s ON s.group_id = v.group_id AND s.name = v.name
-)""")
-    body = f"""
-, ke AS (
-  SELECT DISTINCT group_id, subj AS src, obj AS dst FROM eds WHERE subj <> obj
-),
-kverts AS (
-  SELECT group_id, src AS name FROM ke UNION SELECT group_id, dst FROM ke
-),
-x0 AS (SELECT group_id, name, CAST(1000000 AS BIGINT) AS x_u FROM kverts),
-{",".join(steps)}
-SELECT v.group_id, v.name,
-       CAST(coalesce(d.indeg, 0) AS BIGINT) AS in_deg,
-       x.x_u AS katz_u
-FROM kverts v
-JOIN x3 x ON x.group_id = v.group_id AND x.name = v.name
-LEFT JOIN (
-  SELECT group_id, dst AS name, count(*) AS indeg FROM ke GROUP BY 1, 2
-) d ON d.group_id = v.group_id AND d.name = v.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-WL_ROUNDS = 2
-
-
-def q_kg_wl_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weisfeiler-Lehman refinement labels (2 rounds) over the
-    predicate-typed KG: per-entity structural-role hashes + the size of
-    each round-2 class — the WL-kernel node features / GNN
-    expressiveness baseline, bit-reproducible via sorted-multiset md5."""
-    from .operators.centrality import wl_refine
-
-    return wl_refine(q_kg_triples(spark, sf_dir), rounds=WL_ROUNDS)
-
-
-def _sql_kg_wl_labels() -> str:
-    rounds = []
-    for r in range(1, WL_ROUNDS + 1):
-        prev = f"w{r - 1}"
-        rounds.append(f"""
-t{r} AS (
-  SELECT a.group_id, a.node AS name,
-         string_agg(a.rel || ':' || w.wl, ',' ORDER BY a.rel || ':' || w.wl)
-           AS nbrs
-  FROM wadj a JOIN {prev} w ON w.group_id = a.group_id AND w.name = a.nbr
-  GROUP BY 1, 2
-),
-w{r} AS MATERIALIZED (
-  SELECT v.group_id, v.name,
-         md5(w.wl || '|' || coalesce(t.nbrs, '')) AS wl
-  FROM wverts v
-  JOIN {prev} w ON w.group_id = v.group_id AND w.name = v.name
-  LEFT JOIN t{r} t ON t.group_id = v.group_id AND t.name = v.name
-)""")
-    body = f"""
-, warcs AS (SELECT DISTINCT group_id, subj, pred, obj FROM eds),
-wadj AS (
-  SELECT group_id, subj AS node, '>' || pred AS rel, obj AS nbr FROM warcs
-  UNION ALL
-  SELECT group_id, obj, '<' || pred, subj FROM warcs
-),
-wverts AS (SELECT DISTINCT group_id, node AS name FROM wadj),
-w0 AS (SELECT group_id, name, md5('wl0') AS wl FROM wverts),
-{",".join(rounds)}
-SELECT a.group_id, a.name, a.wl AS wl1, b.wl AS wl2,
-       CAST(count(*) OVER (PARTITION BY b.group_id, b.wl) AS BIGINT) AS n_class
-FROM w1 a JOIN w2 b ON b.group_id = a.group_id AND b.name = a.name"""
-    return _kg_sql(body, with_eds=True)
-
-
-def q_kg_supergraph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community-contracted quotient graph (graph summarization): LPA
-    communities become super-nodes; canonical typed arcs roll up to
-    weighted super-arcs (n_edges / n_pairs / n_preds). The diagonal is
-    intra-community cohesion, the off-diagonal the bridge map."""
-    from .operators.communities import community_supergraph
-
-    t = _graph(spark, sf_dir)
-    return community_supergraph(t.nodes, t.edges)
-
-
-def _sql_kg_supergraph() -> str:
-    n = LPA_ORACLE_ROUNDS
-    body = communities_ctes() + f"""
-, asg AS (
-  SELECT l.group_id, l.uuid,
-         md5('community|' || l.group_id || '|' || a.anchor_uuid) AS cuuid
-  FROM l{n} l JOIN agg a
-    ON a.group_id = l.group_id AND a.community = l.community
-)
-SELECT ce.group_id, sa.cuuid AS comm_src, sd.cuuid AS comm_dst,
-       CAST(count(*) AS BIGINT) AS n_edges,
-       CAST(count(DISTINCT ce.src || '|' || ce.dst) AS BIGINT) AS n_pairs,
-       CAST(count(DISTINCT ce.pred) AS BIGINT) AS n_preds
-FROM ce
-JOIN asg sa ON sa.group_id = ce.group_id AND sa.uuid = ce.src
-JOIN asg sd ON sd.group_id = ce.group_id AND sd.uuid = ce.dst
-GROUP BY 1, 2, 3"""
-    return _kg_sql(body, with_eds=True)
-
-
-SH_BITS, SH_BANDS, SH_MAX_HAM, SH_MAX_BUCKET = 48, 6, 10, 1000
-
-
-def q_emb_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-LSH (SimHash) near-duplicate candidate pairs over the
-    embeddings table with exact integer squared-cosine verification —
-    the trainer-free embedding-dedup scale path (vs the IVF cell
-    blocking of doc_embcos_dedup)."""
-    from .operators.ann import simhash_pairs
-
-    emb = ann.read_embeddings(spark, sf_dir)
-    return simhash_pairs(
-        emb, dim=EMB_DIM, n_bits=SH_BITS, n_bands=SH_BANDS,
-        max_ham=SH_MAX_HAM, max_bucket=SH_MAX_BUCKET,
-    )
-
-
-def _sql_emb_simhash() -> str:
-    bpb = SH_BITS // SH_BANDS
-    mask = (1 << bpb) - 1
-    return f"""
-WITH planes AS (
-  SELECT j.j, i.i,
-         CASE WHEN substr(md5('hp|' || j.j || '|' || i.i), 1, 1)
-                   IN ('1','3','5','7','9','b','d','f')
-              THEN -1 ELSE 1 END AS s
-  FROM range({SH_BITS}) j(j), range({EMB_DIM}) i(i)
-),
-qv AS MATERIALIZED (
-  SELECT vec_id AS id, i.i AS i,
-         CAST(floor(CAST(embedding[i.i + 1] AS DOUBLE) * 100) AS BIGINT) AS x
-  FROM embeddings, range({EMB_DIM}) i(i)
-),
-bits AS (
-  SELECT q.id, p.j,
-         CASE WHEN sum(q.x * p.s) >= 0
-              THEN CAST(1 AS BIGINT) << p.j ELSE 0 END AS bitv
-  FROM qv q JOIN planes p ON p.i = q.i
-  GROUP BY q.id, p.j
-),
-sigs AS MATERIALIZED (SELECT id, CAST(sum(bitv) AS BIGINT) AS sig FROM bits GROUP BY 1),
-norms AS (SELECT id, CAST(sum(x * x) AS BIGINT) AS n2 FROM qv GROUP BY 1),
-bands AS (
-  SELECT s.id, s.sig, b.b, (s.sig >> (b.b * {bpb})) & {mask} AS v
-  FROM sigs s, range({SH_BANDS}) b(b)
-),
-ok AS (SELECT b, v FROM bands GROUP BY 1, 2 HAVING count(*) <= {SH_MAX_BUCKET}),
-bandsok AS (SELECT bands.* FROM bands JOIN ok USING (b, v)),
-cand AS (
-  SELECT DISTINCT a.id AS id_a, c.id AS id_b, a.sig AS sig_a, c.sig AS sig_b
-  FROM bandsok a JOIN bandsok c
-    ON c.b = a.b AND c.v = a.v AND a.id < c.id
-),
-ham AS (
-  SELECT id_a, id_b, bit_count(xor(sig_a, sig_b)) AS hamming
-  FROM cand WHERE bit_count(xor(sig_a, sig_b)) <= {SH_MAX_HAM}
-),
-dots AS (
-  SELECT h.id_a, h.id_b, h.hamming,
-         CAST(sum(qa.x * qb.x) AS BIGINT) AS dot,
-         max(na.n2) AS na2, max(nb.n2) AS nb2
-  FROM ham h
-  JOIN qv qa ON qa.id = h.id_a
-  JOIN qv qb ON qb.id = h.id_b AND qb.i = qa.i
-  JOIN norms na ON na.id = h.id_a
-  JOIN norms nb ON nb.id = h.id_b
-  GROUP BY 1, 2, 3
-)
-SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming,
-       CAST((CASE WHEN dot < 0 THEN -1 ELSE 1 END)
-            * ((dot * dot * 1000000) // (na2 * nb2)) AS BIGINT) AS cos2s_u
-FROM dots
-WHERE na2 > 0 AND nb2 > 0"""
-
-
-QUERIES["kg_katz"] = q_kg_katz
-QUERIES["kg_wl_labels"] = q_kg_wl_labels
-QUERIES["kg_supergraph"] = q_kg_supergraph
-QUERIES["emb_simhash"] = q_emb_simhash
-ORACLES["kg_katz"] = _sql_kg_katz
-ORACLES["kg_wl_labels"] = _sql_kg_wl_labels
-ORACLES["kg_supergraph"] = _sql_kg_supergraph
-ORACLES["emb_simhash"] = _sql_emb_simhash
-
-
-RAKE_TOP_K = 3
-
-
-def q_doc_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyphrases per document (degree/frequency word scores over
-    stopword-delimited candidate phrases, integer micro-units, top-3) —
-    the document-local multi-word counterpart of doc_tfidf_terms."""
-    from .operators.docs import rake_keyphrases
-
-    return rake_keyphrases(docs.read_documents(spark, sf_dir), top_k=RAKE_TOP_K)
-
-
-def _sql_doc_keyphrases() -> str:
-    from .operators.docs import RAKE_STOPS
-
-    stops = ", ".join(f"'{s}'" for s in RAKE_STOPS)
-    return f"""
-WITH segs AS (
-  SELECT doc_id, generate_subscripts(a, 1) AS seg_idx, unnest(a) AS seg
-  FROM (SELECT doc_id,
-               regexp_split_to_array(lower(text), '[^a-z0-9 ]+') AS a
-        FROM documents)
-),
-toks AS (
-  SELECT doc_id, seg_idx, generate_subscripts(t, 1) AS pos, unnest(t) AS tok
-  FROM (SELECT doc_id, seg_idx,
-               regexp_extract_all(seg, '[a-z0-9]+') AS t
-        FROM segs)
-),
-ns AS (
-  SELECT *,
-         pos - row_number() OVER (PARTITION BY doc_id, seg_idx ORDER BY pos)
-           AS run
-  FROM toks WHERE tok NOT IN ({stops})
-),
-ph AS (
-  SELECT doc_id, seg_idx, run,
-         string_agg(tok, ' ' ORDER BY pos) AS phrase,
-         count(*) AS plen
-  FROM ns GROUP BY 1, 2, 3
-),
-words AS (
-  SELECT n.doc_id, n.seg_idx, n.run, n.tok, p.plen, p.phrase
-  FROM ns n JOIN ph p USING (doc_id, seg_idx, run)
-),
-ws AS (
-  SELECT doc_id, tok, (sum(plen) * 1000000) // count(*) AS wscore_u
-  FROM words GROUP BY 1, 2
-),
-phsc AS (
-  SELECT doc_id, phrase, max(score_u) AS score_u FROM (
-    SELECT w.doc_id, w.seg_idx, w.run, w.phrase,
-           sum(s.wscore_u) AS score_u
-    FROM words w
-    JOIN ws s ON s.doc_id = w.doc_id AND s.tok = w.tok
-    GROUP BY 1, 2, 3, 4
-  ) GROUP BY 1, 2
-),
-rk AS (
-  SELECT doc_id, phrase, score_u,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY score_u DESC, phrase) AS rank
-  FROM phsc
-)
-SELECT doc_id, CAST(rank AS BIGINT) AS rank, phrase,
-       CAST(score_u AS BIGINT) AS score_u
-FROM rk WHERE rank <= {RAKE_TOP_K}"""
-
-
-QUERIES["doc_keyphrases"] = q_doc_keyphrases
-ORACLES["doc_keyphrases"] = _sql_doc_keyphrases
-
-
-def q_doc_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric shingle-containment near-dup pairs (Broder 1997):
-    catches a short doc embedded in a long one where Jaccard stays near
-    zero — the quote/syndication case of the dedup suite."""
-    from .operators.docs import containment_pairs
-
-    return containment_pairs(docs.read_documents(spark, sf_dir))
-
-
-def _sql_doc_containment() -> str:
-    return """
-WITH tok AS (
-  SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
-),
-sh AS (
-  SELECT doc_id,
-         unnest(list_distinct(list_transform(
-           range(1, greatest(len(toks) - 2, 0) + 1),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))) AS shingle
-  FROM tok
-),
-ok AS (SELECT shingle FROM sh GROUP BY shingle
-       HAVING count(*) <= (SELECT greatest(2, CAST(floor(count(DISTINCT doc_id) * 0.02) AS BIGINT))
-                           FROM documents)),
-sh2 AS (SELECT sh.* FROM sh JOIN ok USING (shingle)),
-sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh2 GROUP BY 1),
-shared AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
-  FROM sh2 a JOIN sh2 b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)
-SELECT s.doc_a, s.doc_b, s.shared,
-       (s.shared * 1000000) // least(sa.n_sh, sb.n_sh) AS containment_u,
-       CASE WHEN sb.n_sh < sa.n_sh THEN s.doc_b ELSE s.doc_a END AS contained
-FROM shared s
-JOIN sizes sa ON sa.doc_id = s.doc_a
-JOIN sizes sb ON sb.doc_id = s.doc_b
-ORDER BY containment_u DESC, s.doc_a, s.doc_b
-LIMIT 20"""
-
-
-QUERIES["doc_containment"] = q_doc_containment
-ORACLES["doc_containment"] = _sql_doc_containment
-
-
-MOTIF_PATTERN = "(a)-[LIKES]->(b); (b)-[*]->(c)"
-
-
-def q_kg_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Motif query surface (operators/motifs.py): the onward-relation
-    pattern (a)-[LIKES]->(b); (b)-[*]->(c) — who do the people a likes
-    relate to, and how — compiled from the pattern string to connected
-    equi-joins; the wildcard binds the second predicate as column p1;
-    all node variables pairwise distinct."""
-    from .operators.motifs import match_motif
-
-    return match_motif(q_kg_triples(spark, sf_dir), MOTIF_PATTERN)
-
-
-def _sql_kg_motifs() -> str:
-    body = """
-, m AS (SELECT DISTINCT group_id, subj, pred, obj FROM eds)
-SELECT t1.group_id, t1.subj AS a, t1.obj AS b, t2.obj AS c, t2.pred AS p1
-FROM m t1
-JOIN m t2 ON t2.group_id = t1.group_id AND t2.subj = t1.obj
-WHERE t1.pred = 'LIKES'
-  AND t1.subj <> t1.obj AND t1.subj <> t2.obj AND t1.obj <> t2.obj"""
-    return _kg_sql(body, with_eds=True)
-
-
-QUERIES["kg_motifs"] = q_kg_motifs
-ORACLES["kg_motifs"] = _sql_kg_motifs
-
-
-MOTIF_NEG_PATTERN = "(a)-[WORKS_AT]->(o); (b)-[WORKS_AT]->(o); !(a)-[LIKES]->(b)"
-
-
-def q_kg_motifs_neg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Negated motif: colleague pairs (shared employer wedge) with NO
-    LIKES arc a->b — the absence-of-edge pattern (Cypher WHERE NOT
-    EXISTS) compiled to a left-anti join by operators/motifs.py."""
-    from .operators.motifs import match_motif
-
-    return match_motif(q_kg_triples(spark, sf_dir), MOTIF_NEG_PATTERN)
-
-
-def _sql_kg_motifs_neg() -> str:
-    body = """
-, m AS (SELECT DISTINCT group_id, subj, pred, obj FROM eds)
-SELECT t1.group_id, t1.subj AS a, t1.obj AS o, t2.subj AS b
-FROM m t1
-JOIN m t2 ON t2.group_id = t1.group_id AND t2.pred = 'WORKS_AT'
-         AND t2.obj = t1.obj
-WHERE t1.pred = 'WORKS_AT'
-  AND NOT EXISTS (SELECT 1 FROM m n
-                  WHERE n.group_id = t1.group_id AND n.pred = 'LIKES'
-                    AND n.subj = t1.subj AND n.obj = t2.subj)
-  AND t1.subj <> t2.subj AND t1.subj <> t1.obj AND t2.subj <> t1.obj"""
-    return _kg_sql(body, with_eds=True)
-
-
-QUERIES["kg_motifs_neg"] = q_kg_motifs_neg
-ORACLES["kg_motifs_neg"] = _sql_kg_motifs_neg
-
-
-STAT_ITERS = 4
-
-
-def q_evt_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stationary distribution of the event-type Markov chain (integer
-    power method, 4 fixed iterations over the vocab-bounded transition
-    matrix) — the long-run state-share companion of evt_transitions."""
-    from .operators import events as ev
-
-    return ev.stationary_distribution(ev.read_events(spark, sf_dir), iters=STAT_ITERS)
-
-
-def _sql_evt_stationary() -> str:
-    rounds = []
-    for k in range(1, STAT_ITERS + 1):
-        prev = f"pi{k - 1}"
-        rounds.append(f"""
-pi{k} AS (
-  SELECT s.state, coalesce(m.pi_u, 0) AS pi_u
-  FROM states s LEFT JOIN (
-    SELECT c.next_type AS state,
-           sum((p.pi_u * c.n) // t.n_from) AS pi_u
-    FROM c
-    JOIN tot t ON t.prev_type = c.prev_type
-    JOIN {prev} p ON p.state = c.prev_type
-    GROUP BY 1
-  ) m ON m.state = s.state
-)""")
-    return f"""
-WITH steps AS (
-  SELECT event_type AS prev_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS next_type
-  FROM events
-),
-c AS (
-  SELECT prev_type, next_type, count(*) AS n FROM steps
-  WHERE next_type IS NOT NULL GROUP BY 1, 2
-),
-tot AS (SELECT prev_type, sum(n) AS n_from FROM c GROUP BY 1),
-states AS (
-  SELECT prev_type AS state FROM c
-  UNION
-  SELECT next_type FROM c
-),
-pi0 AS (
-  SELECT state,
-         1000000 // (SELECT count(*) FROM states) AS pi_u
-  FROM states
-),{",".join(rounds)}
-SELECT state, CAST(pi_u AS BIGINT) AS pi_u FROM pi{STAT_ITERS}"""
-
-
-QUERIES["evt_stationary"] = q_evt_stationary
-ORACLES["evt_stationary"] = _sql_evt_stationary
-
-
-MOTIF_TEMPORAL_PATTERN = "(a)-[LIKES]->(b); (b)-[LIKES]->(c)"
-
-
-def q_kg_motifs_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-ordered motif (temporal BGP, Paranjape et al. 2017
-    semantics on fact validity): LIKES chains a->b->c where the second
-    fact became valid no earlier than the first — influence-cascade
-    candidates rather than mere structural chains."""
-    from .operators.motifs import match_motif
-
-    return match_motif(
-        q_kg_triples(spark, sf_dir), MOTIF_TEMPORAL_PATTERN, time_ordered=True
-    )
-
-
-def _sql_kg_motifs_temporal() -> str:
-    body = """
-, m AS (
-  SELECT DISTINCT group_id, subj, pred, obj, valid_at FROM eds
-  WHERE valid_at IS NOT NULL
-)
-SELECT t1.group_id, t1.subj AS a, t1.obj AS b, t1.valid_at AS t0,
-       t2.obj AS c, t2.valid_at AS t1
-FROM m t1
-JOIN m t2 ON t2.group_id = t1.group_id AND t2.pred = 'LIKES'
-         AND t2.subj = t1.obj
-WHERE t1.pred = 'LIKES'
-  AND t1.valid_at <= t2.valid_at
-  AND t1.subj <> t1.obj AND t1.subj <> t2.obj AND t1.obj <> t2.obj"""
-    return _kg_sql(body, with_eds=True)
-
-
-QUERIES["kg_motifs_temporal"] = q_kg_motifs_temporal
-ORACLES["kg_motifs_temporal"] = _sql_kg_motifs_temporal
-
-
-def q_doc_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TextRank extractive summaries: top-2 most central sentences per
-    document by fixed-iteration integer PageRank over the shared-token
-    sentence graph (Mihalcea & Tarau 2004) — the deterministic
-    seq2seq-summarization-pair generator of the text suite."""
-    from .operators.docs import textrank_sentences
-
-    return textrank_sentences(docs.read_documents(spark, sf_dir))
-
-
-def _sql_doc_textrank() -> str:
-    from .operators.docs import TEXTRANK_DAMP, TEXTRANK_ITERS, TEXTRANK_TOP
-
-    base = (1_000_000 * (100 - TEXTRANK_DAMP)) // 100
-    rounds = []
-    for k in range(1, TEXTRANK_ITERS + 1):
-        prev = f"r{k - 1}"
-        rounds.append(f"""
-r{k} AS MATERIALIZED (
-  SELECT s.doc_id, s.sidx,
-         {base} + ({TEXTRANK_DAMP} * coalesce(c.s, 0)) // 100 AS r_u
-  FROM sents s LEFT JOIN (
-    SELECT p.doc_id, p.i AS sidx, sum((r.r_u * p.w) // p.wj) AS s
-    FROM pw p JOIN {prev} r ON r.doc_id = p.doc_id AND r.sidx = p.j
-    GROUP BY 1, 2
-  ) c ON c.doc_id = s.doc_id AND c.sidx = s.sidx
-)""")
-    return f"""
-WITH segs AS (
-  SELECT doc_id, generate_subscripts(a, 1) - 1 AS sidx, unnest(a) AS sent
-  FROM (SELECT doc_id, regexp_split_to_array(text, '[.!?]+') AS a
-        FROM documents)
-),
-sents AS MATERIALIZED (
-  SELECT doc_id, sidx FROM segs WHERE length(trim(sent)) > 0
-),
-stoks AS (
-  SELECT DISTINCT doc_id, sidx, unnest(regexp_extract_all(lower(sent), '[a-z0-9]+')) AS tok
-  FROM segs
-),
-prs AS (
-  SELECT a.doc_id, a.sidx AS i, b.sidx AS j, count(*) AS w
-  FROM stoks a JOIN stoks b
-    ON b.doc_id = a.doc_id AND b.tok = a.tok AND b.sidx <> a.sidx
-  GROUP BY 1, 2, 3
-),
-wj AS (SELECT doc_id, j, sum(w) AS wj FROM prs GROUP BY 1, 2),
-pw AS MATERIALIZED (
-  SELECT p.doc_id, p.i, p.j, p.w, t.wj
-  FROM prs p JOIN wj t ON t.doc_id = p.doc_id AND t.j = p.j
-),
-r0 AS (SELECT doc_id, sidx, CAST(1000000 AS BIGINT) AS r_u FROM sents),
-{",".join(rounds)},
-rk AS (
-  SELECT doc_id, sidx, r_u,
-         row_number() OVER (PARTITION BY doc_id
-                            ORDER BY r_u DESC, sidx) AS rank
-  FROM r{TEXTRANK_ITERS}
-)
-SELECT doc_id, CAST(rank AS BIGINT) AS rank,
-       CAST(sidx AS BIGINT) AS sent_idx, CAST(r_u AS BIGINT) AS score_u
-FROM rk WHERE rank <= {TEXTRANK_TOP}"""
-
-
-QUERIES["doc_textrank"] = q_doc_textrank
-ORACLES["doc_textrank"] = _sql_doc_textrank

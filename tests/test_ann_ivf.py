@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from graphiti_spark.operators import ann
-from graphiti_spark.registry import IVF_CELLS, IVF_K, IVF_PROBE, _QZ
+from graphiti_spark.queries.shared import IVF_CELLS, IVF_K, IVF_PROBE, _QZ
 
 
 def _split(spark, sf_dir):

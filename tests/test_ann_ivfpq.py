@@ -11,17 +11,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from graphiti_spark.operators import ann
-from graphiti_spark.registry import (
+from graphiti_spark.queries.ann import (
     EMB_DIM,
-    IVF_CELLS,
-    IVF_ITERS,
-    IVF_PROBE,
     IVFPQ_CODES,
     IVFPQ_ITERS,
     IVFPQ_K,
     IVFPQ_M,
-    _QZ,
 )
+from graphiti_spark.queries.shared import IVF_CELLS, IVF_ITERS, IVF_PROBE, _QZ
 
 
 def _split(spark, sf_dir):

@@ -9,7 +9,8 @@ from __future__ import annotations
 from pyspark.sql import Window, functions as F
 
 from graphiti_spark.operators import ann
-from graphiti_spark.registry import EMB_DIM, PQ_CODES, PQ_ITERS, PQ_K, PQ_M, _QZ
+from graphiti_spark.queries.ann import EMB_DIM, PQ_CODES, PQ_ITERS, PQ_K, PQ_M
+from graphiti_spark.queries.shared import _QZ
 
 
 def test_pq_assign_argmin_and_tiebreak(spark):

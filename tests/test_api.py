@@ -70,6 +70,57 @@ def test_learned_cross_encoder_reranker(g):
     assert "alice johnson" in top_fact or "works" in top_fact
 
 
+def test_learned_cross_encoder_training_sample_is_bounded(g, monkeypatch):
+    """The learned reranker trains on at most 200 candidate passages and
+    only that sample is collected; with fewer than 200 candidates it
+    still trains on all of them, so its top-k is the full-set one."""
+    from graphiti_spark.api import SearchConfig
+    from graphiti_spark.operators import ce_learned
+
+    cfg = SearchConfig("edges", "cross_encoder_learned")
+    real_sample_df = ce_learned.sample_passages_df
+    real_sample = ce_learned.sample_passages
+    real_train = ce_learned.train_weights
+    seen = {}
+
+    def sample_df(df, id_col, text_col, cap=200):
+        seen["candidates"] = df.count()
+        return real_sample_df(df, id_col, text_col, cap=cap)
+
+    def sample(rows, cap=200):
+        seen["collected"] = len(rows)
+        return real_sample(rows, cap=cap)
+
+    def train(passages):
+        seen["trained"] = len(passages)
+        return real_train(passages)
+
+    monkeypatch.setattr(ce_learned, "sample_passages_df", sample_df)
+    monkeypatch.setattr(ce_learned, "sample_passages", sample)
+    monkeypatch.setattr(ce_learned, "train_weights", train)
+
+    names = [
+        r["name"]
+        for r in g.tables.nodes.select("name").distinct().orderBy("name").collect()
+    ]
+    g.search(names[:40], cfg).count()
+    assert seen["candidates"] > 200
+    assert seen["collected"] == seen["trained"] == 200
+
+    few = g.search(["alice johnson works"], cfg).toPandas()
+    assert seen["candidates"] < 200
+    assert seen["trained"] == seen["candidates"]
+    # the training set before the cap: every candidate, in uuid order
+    monkeypatch.setattr(
+        ce_learned, "sample_passages_df",
+        lambda df, id_col, text_col, cap=200: [
+            r[text_col] for r in df.orderBy(id_col).collect()
+        ],
+    )
+    full = g.search(["alice johnson works"], cfg).toPandas()
+    assert few.to_dict("records") == full.to_dict("records")
+
+
 def test_all_reference_recipe_names_importable():
     """Every recipe constant the reference exports
     (search_config_recipes.py:31-194, 16 names) must be importable

@@ -86,7 +86,7 @@ def test_spark_rank_matches_duckdb_oracle(spark, sf_dir):
     its oracle SQL (same trained weights) agree row-for-row."""
     import os
 
-    from graphiti_spark.registry_search import (
+    from graphiti_spark.queries.search import (
         _sql_search_ce_learned,
         q_search_ce_learned,
     )

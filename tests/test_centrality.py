@@ -181,7 +181,7 @@ def test_link_prediction_excludes_existing_edges(spark):
 def test_components_group_isolation(spark):
     """Same entity names in different groups stay in separate components
     (the group-prefixed vertex key); sizes are per-group."""
-    from graphiti_spark.registry import q_kg_components  # noqa: F401  (plumbing)
+    from graphiti_spark.queries.graph import q_kg_components  # noqa: F401  (plumbing)
     from graphiti_spark.operators.resolve import connected_components
     from pyspark.sql import functions as F
 
@@ -201,7 +201,7 @@ def test_components_group_isolation(spark):
 def test_walk_pairs_window(spark):
     """On the forced chain a->b->c->d, the walk from a is a,b,c,d: pairs
     within window 2 are exactly the (center, context) at distance 1-2."""
-    from graphiti_spark.registry import WALK_WINDOW, WALK_LEN  # noqa: F401
+    from graphiti_spark.queries.graph import WALK_WINDOW, WALK_LEN  # noqa: F401
     from graphiti_spark.operators.centrality import random_walks
     from pyspark.sql import functions as F
 

@@ -186,7 +186,7 @@ def test_quality_classifier_empty_doc_neutral(spark):
 
 
 def test_lang_confusion_is_rowwise_consistent(spark, sf_dir):
-    from graphiti_spark.registry import q_doc_lang_confusion
+    from graphiti_spark.queries.docs import q_doc_lang_confusion
 
     rows = q_doc_lang_confusion(spark, sf_dir).collect()
     by_true = {}
@@ -206,7 +206,7 @@ def test_lang_confusion_is_rowwise_consistent(spark, sf_dir):
 
 
 def test_clf_eval_held_out_generalizes(spark, sf_dir):
-    from graphiti_spark.registry import q_doc_clf_eval
+    from graphiti_spark.queries.docs import q_doc_clf_eval
 
     cells = {(r["label"], r["pred"]): r for r in q_doc_clf_eval(spark, sf_dir).collect()}
     # mixed-label corpus: both classes appear in the held-out set and the

@@ -1,4 +1,6 @@
-"""Physical-plan audit over the driver query registry.
+"""Physical-plan audit over the driver query registry
+(`graphiti_spark.registry`: every `q_<name>` query of the per-family
+modules in `graphiti_spark/queries/`).
 
 For every queries() entry, capture `explain(formatted)` and flag the
 anti-patterns that kill 100x scale-ups:

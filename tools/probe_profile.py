@@ -2,12 +2,14 @@
 flagship-DAG probe attempt (build_graph at sf0.1 x20 + triples_view count)
 with the event log on, then decompose the wall time into
 
-  - per-job execution time (first task launch -> job end),
+  - execution time (first task launch -> job end, over all jobs),
   - job scheduling latency (job submit -> first task launch),
-  - driver gaps (time between one job's end and the next job's submit —
-    Python/driver-side planning, createDataFrame, analysis),
+  - driver gaps (time when no job is running — Python/driver-side
+    planning, createDataFrame, analysis),
 
-and print the top contributors. This is the measurement tool behind the
+and print the top contributors. The event log is read by
+perfbench/eventlog.py, which maps each task to its job through the job's
+stage ids. This is the measurement tool behind the
 "chase the ~8-12s fixed latency" item:
 
   python tools/probe_profile.py [sf_dir]   # default: bench.py's DEFAULT_SF
@@ -29,6 +31,10 @@ sys.path.insert(0, REPO)
 def main() -> None:
     from bench import DEFAULT_SF
 
+    sys.path.insert(0, os.path.join(REPO, "perfbench"))
+    from eventlog import read_jobs, summarize
+    from trace import tag_call_sites
+
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else DEFAULT_SF
     evdir = "/tmp/probe-profile"
     import shutil
@@ -42,6 +48,8 @@ def main() -> None:
 
     spark = get_spark(app_name="probe-profile")
     spark.sparkContext.setLogLevel("ERROR")
+    # each job's description names the package line whose action ran it
+    tag_call_sites(spark, os.path.join(REPO, "graphiti_spark"))
     # warm-up exactly like bench.py
     triples_view(build_graph(spark, "/root/testdata/sf0.001")).count()
     spark.catalog.clearCache()
@@ -55,82 +63,27 @@ def main() -> None:
     raw = t.triples_raw.count()
     spark.stop()
 
-    # Spark 4 event logs are rolling DIRECTORIES (eventlog_v2_*) of
-    # events_* files; walk recursively and read regular files only
-    paths = [
-        os.path.join(r, f)
-        for r, _, fs in os.walk(evdir)
-        for f in fs
-        if not f.startswith("appstatus")
-    ]
-    jobs: dict[int, dict] = {}
-    for path in paths:
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    ev = json.loads(line)
-                except ValueError:
-                    continue
-                e = ev.get("Event")
-                if e == "SparkListenerJobStart":
-                    props = ev.get("Properties", {}) or {}
-                    infos = ev.get("Stage Infos", [])
-                    names = [si.get("Stage Name", "") for si in infos]
-                    jobs[ev["Job ID"]] = {
-                        "submit": ev["Submission Time"], "first_task": None,
-                        "end": None, "n_stages": len(ev.get("Stage IDs", [])),
-                        "desc": (props.get("spark.job.description")
-                                 or props.get("callSite.short")
-                                 or (names[-1] if names else ""))[:90],
-                    }
-                elif e == "SparkListenerJobEnd":
-                    if ev["Job ID"] in jobs:
-                        jobs[ev["Job ID"]]["end"] = ev["Completion Time"]
-                elif e == "SparkListenerTaskEnd":
-                    # attribute by time: earliest task launch inside each
-                    # job's [submit, end] window (an approximation when
-                    # jobs overlap)
-                    lt = ev.get("Task Info", {}).get("Launch Time")
-                    for j in jobs.values():
-                        if j["submit"] is not None and lt is not None and \
-                                lt >= j["submit"] and (
-                                    j["end"] is None or lt <= j["end"]):
-                            if j["first_task"] is None or lt < j["first_task"]:
-                                j["first_task"] = lt
-
-    seq = sorted(
-        (j for j in jobs.values()
-         if j["end"] and wall_start_ms <= j["submit"] <= wall_end_ms),
-        key=lambda j: j["submit"],
+    seq = [j for j in read_jobs(evdir) if wall_start_ms <= j.submit <= wall_end_ms]
+    span = summarize(seq, wall_start_ms, wall_end_ms)
+    gaps = sorted(
+        ((b.submit - a.end, i) for i, (a, b) in enumerate(zip(seq, seq[1:]))
+         if b.submit > a.end),
+        reverse=True,
     )
-    exec_ms = sched_ms = gap_ms = 0
-    gaps = []
-    for i, j in enumerate(seq):
-        if j["first_task"]:
-            sched_ms += j["first_task"] - j["submit"]
-            exec_ms += j["end"] - j["first_task"]
-        else:
-            exec_ms += j["end"] - j["submit"]
-        if i + 1 < len(seq):
-            g = seq[i + 1]["submit"] - j["end"]
-            if g > 0:
-                gap_ms += g
-                gaps.append((g, i))
-    gaps.sort(reverse=True)
-    by_dur = sorted(seq, key=lambda j: -(j["end"] - j["submit"]))
+    by_dur = sorted(seq, key=lambda j: j.submit - j.end)
     print(json.dumps({
         "wall_sec": round(wall, 3), "n_canonical": n,
-        "n_raw": raw, "n_jobs": len(seq),
-        "exec_sec_all_jobs": round(exec_ms / 1000, 3),
-        "sched_sec": round(sched_ms / 1000, 3),
-        "driver_gap_sec": round(gap_ms / 1000, 3),
+        "n_raw": raw, "n_jobs": span["jobs"],
+        "exec_sec_all_jobs": round(span["exec_s"], 3),
+        "sched_sec": round(span["sched_delay_s"], 3),
+        "driver_gap_sec": round(span["driver_gap_s"], 3),
         "top_gaps_ms": [g for g, _ in gaps[:10]],
         "top_gap_after_job": [
-            {"desc": seq[i]["desc"], "gap_ms": g} for g, i in gaps[:5]
+            {"desc": seq[i].description, "gap_ms": g} for g, i in gaps[:5]
         ],
         "top_jobs_ms": [
-            {"desc": j["desc"], "ms": j["end"] - j["submit"],
-             "n_stages": j["n_stages"]}
+            {"desc": j.description, "ms": j.end - j.submit,
+             "n_stages": len(j.stage_ids)}
             for j in by_dur[:12]
         ],
     }))
