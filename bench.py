@@ -6,10 +6,12 @@ Default mode: run the headline queries at $SPARK_GRAFT_SF_DIR (default
    "queries": {name: sec, ...}, "sf": ..., "n_triples": ..., "triples_per_sec": ...}
 
 Scaling mode (`--scaling`): run the flagship KG-construction job in two
-fresh subprocesses at local[8] and local[32] on the same input (the
+fresh subprocesses at local[lo] and local[hi] on the same input (the
 sandbox proxy for the north rule's N -> 4N executor criterion), compute
-throughput scaling efficiency = (T8/T32)/4, and append the measured table
-to BENCH.md.
+throughput scaling efficiency = (T_lo/T_hi)/(hi/lo), and append the
+measured table to BENCH.md. The defaults fit the host (scaling_defaults):
+hi = the CPUs this process may use, lo = hi/4, driver heap = half the
+available memory (8 -> 32 CPUs and 48g on a 32-core / 128 GB host).
 """
 
 from __future__ import annotations
@@ -214,8 +216,23 @@ def _calibrate(lo: int, hi: int) -> dict:
     return json.loads(cal.stdout.splitlines()[-1])
 
 
-def run_scaling(sf_dir: str, replicate: int = 400, lo: int = 8,
-                hi: int = 32, runs: int = 3) -> dict:
+def scaling_defaults(cpus: int | None = None, mem_available_kb: int | None = None) -> dict:
+    """Host-aware defaults of --scaling: the lo -> hi = N -> 4N pair ends at
+    the CPUs this process may use, and the driver heap takes half the
+    memory available now (capped at the 48g a 128 GB host gets)."""
+    if cpus is None:
+        cpus = len(os.sched_getaffinity(0))
+    if mem_available_kb is None:
+        with open("/proc/meminfo") as f:
+            mem_available_kb = next(
+                int(line.split()[1]) for line in f if line.startswith("MemAvailable:")
+            )
+    mem_gb = min(48, max(1, mem_available_kb // (2 * 1024 * 1024)))
+    return {"cpus_lo": max(1, cpus // 4), "cpus_hi": cpus, "driver_mem": f"{mem_gb}g"}
+
+
+def run_scaling(sf_dir: str, lo: int, hi: int, driver_mem: str,
+                replicate: int = 400, runs: int = 3) -> dict:
     """The north-rule N -> 4N evidence, sandbox proxy: the same flagship
     KG-construction job at local[lo] vs local[hi] on the same input, warm
     (workers spawned, JIT done), min of `runs`. The replicate default is
@@ -227,7 +244,7 @@ def run_scaling(sf_dir: str, replicate: int = 400, lo: int = 8,
     nor any bandwidth growth past ~2 cores, and drifts), and job
     efficiency is reported against both: a KG-construction pass is a
     compute/bandwidth blend, so its honest ceiling lies between them."""
-    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": "48g"}
+    env = {**os.environ, "SPARK_GRAFT_DRIVER_MEM": driver_mem}
     cals = [_calibrate(lo, hi)]
     results = {}
     for cpus in (lo, hi):
@@ -301,14 +318,17 @@ def main() -> None:
     ap.add_argument("--queries", default=",".join(HEADLINE))
     ap.add_argument("--scaling", action="store_true")
     ap.add_argument("--replicate", type=int, default=400)
-    ap.add_argument("--cpus-lo", type=int, default=8)
-    ap.add_argument("--cpus-hi", type=int, default=32)
+    ap.add_argument("--cpus-lo", type=int, default=None)
+    ap.add_argument("--cpus-hi", type=int, default=None)
     ap.add_argument("--runs", type=int, default=3)
     args = ap.parse_args()
 
     if args.scaling:
-        out = run_scaling(args.sf_dir, replicate=args.replicate,
-                          lo=args.cpus_lo, hi=args.cpus_hi, runs=args.runs)
+        host = scaling_defaults()
+        out = run_scaling(args.sf_dir, lo=args.cpus_lo or host["cpus_lo"],
+                          hi=args.cpus_hi or host["cpus_hi"],
+                          driver_mem=host["driver_mem"],
+                          replicate=args.replicate, runs=args.runs)
     else:
         out = run_bench(args.sf_dir, args.cpus, args.queries.split(","))
     print(json.dumps(out))

@@ -21,8 +21,11 @@ rerank with the deterministic cross-encoder scorer
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .functions.embed import embed_texts, with_embedding
@@ -30,6 +33,7 @@ from .operators import search as S
 from .operators.communities import build_communities as _build_communities
 from .operators.triplet import add_triplets
 from .plans.pipeline import GraphTables, build_graph, triples_view
+from .session import local_frame
 
 
 @dataclass(frozen=True)
@@ -100,6 +104,29 @@ COMMUNITY_HYBRID_SEARCH_MMR = SearchConfig("communities", "mmr")
 COMMUNITY_HYBRID_SEARCH_CROSS_ENCODER = SearchConfig("communities", "cross_encoder")
 
 
+@contextmanager
+def _side_leg(spark: SparkSession, fn):
+    """Run `fn` on a side thread while the `with` body runs on this one;
+    join on exit and re-raise the side thread's error. The side thread
+    keeps the caller's Spark job group, description and job tags."""
+    err: list[BaseException] = []
+
+    def run() -> None:
+        try:
+            fn()
+        except BaseException as e:  # re-raised on the calling thread
+            err.append(e)
+
+    th = threading.Thread(target=inheritable_thread_target(spark)(run), daemon=True)
+    th.start()
+    try:
+        yield
+    finally:
+        th.join()
+    if err:
+        raise err[0]
+
+
 class GraphitiSpark:
     def __init__(self, spark: SparkSession):
         self.spark = spark
@@ -116,26 +143,32 @@ class GraphitiSpark:
     # -- ingestion ---------------------------------------------------------
 
     def build(self, sf_dir: str, **kwargs) -> GraphTables:
-        """add_episode_bulk analogue: the full construction DAG. The hot
-        graph tables are persisted — the facade is a long-lived handle
-        that serves many reads, so re-executing the construction lineage
-        per query would be wrong (the production analogue: the DAG's
-        outputs live as Iceberg tables, read not recomputed)."""
-        self.tables = build_graph(self.spark, sf_dir, **kwargs)
-        # materialize now AND truncate lineage: build() is the write path;
-        # reads that follow must start from the finished tables, not
-        # re-run (or even re-ANALYZE) construction. localCheckpoint swaps
-        # each table's plan for its materialized RDD — without it every
-        # search re-optimizes the full construction plan (LSH band
-        # expressions etc.) per action: measured 123s -> ~5s for a
-        # cross-encoder search at sf0.001. The production analogue is
-        # exactly this: the DAG's outputs live as Iceberg tables, read
-        # not replanned. nodes and edges are already committed by
-        # GraphTables when first read, so reading them is enough.
-        t = self.tables
+        """add_episode_bulk analogue: runs the full construction DAG and
+        returns with every table committed: episodes, nodes, edges,
+        mention_edges and both embedding indexes (nodes_emb / edges_emb,
+        the reference's name/fact embeddings stored at ingest). The
+        facade is a long-lived handle that serves many reads, so the
+        construction lineage must not re-run per query (the production
+        analogue: the DAG's outputs live as Iceberg tables, read not
+        recomputed)."""
+        self.tables = t = build_graph(self.spark, sf_dir, **kwargs)
+        # localCheckpoint truncates lineage: without it every search
+        # re-optimizes the full construction plan (LSH band expressions
+        # etc.) per action — measured 123s -> ~5s for a cross-encoder
+        # search at sf0.001. nodes / edges are committed by GraphTables
+        # when first read.
         t.episodes = t.episodes.localCheckpoint(eager=True)
-        t.nodes, t.edges
-        t.mention_edges = t.mention_edges.localCheckpoint(eager=True)
+        # uuid_map is the shared upstream of every leg below: force it
+        # here, so no stage is ever built by two threads at once. Then the
+        # legs off the critical path (mention_edges; the fact embeddings,
+        # whose Python-worker start hides behind the node build) commit on
+        # side threads while this thread commits edges -> nodes -> nodes_emb.
+        t.uuid_map
+        with _side_leg(self.spark, lambda: setattr(
+                t, "mention_edges", t.mention_edges.localCheckpoint(eager=True))):
+            t.edges
+            with _side_leg(self.spark, lambda: t.edges_emb.count()):
+                t.nodes_emb.count()
         self._comm = None
         self._drop_comm_emb()
         self._mutation_log = []
@@ -295,7 +328,8 @@ class GraphitiSpark:
         t = self._t()
         qs = S.make_queries_df(self.spark, queries)
         qv = embed_texts(queries)
-        qvec = self.spark.createDataFrame(
+        qvec = local_frame(
+            self.spark,
             [(i, [float(x) for x in qv[i]]) for i in range(len(queries))],
             "query_id long, qvec array<float>",
         )
@@ -330,9 +364,10 @@ class GraphitiSpark:
                 # the center (reference search/search.py:203-222 maps edges
                 # through edge.source_node_uuid before node_distance)
                 src = t.edges.select("uuid", "source_node_uuid")  # edge-scaled: AQE decides
-                origins = self.spark.createDataFrame(
+                origins = local_frame(
+                    self.spark,
                     [(center_node_uuid, center_node_uuid)],
-                    ["origin_uuid", "uuid"],
+                    "origin_uuid string, uuid string",
                 )
                 dist = S.bfs_nodes(pairs, origins).select(
                     F.col("uuid").alias("source_node_uuid"),
@@ -504,7 +539,8 @@ class GraphitiSpark:
                            obj: str, fact: str, valid_at,
                            episode_uuid: str) -> None:
         t = self._t()
-        trip = self.spark.createDataFrame(
+        trip = local_frame(
+            self.spark,
             [(group_id, subj, pred, obj, fact, valid_at, episode_uuid)],
             "group_id string, subj_name string, pred string, obj_name string,"
             " fact string, valid_at timestamp, episode_uuid string",
@@ -546,8 +582,8 @@ class GraphitiSpark:
         from .operators.maintenance import remove_episodes_tables
 
         t = self._t()
-        removed = self.spark.createDataFrame(
-            [(u,) for u in episode_uuids], "uuid string"
+        removed = local_frame(
+            self.spark, [(u,) for u in episode_uuids], "uuid string"
         )
         eps, edges, mentions, nodes = remove_episodes_tables(
             t.episodes, t.edges, t.mention_edges, t.nodes, removed

@@ -25,6 +25,8 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, functions as F
 
+from ..session import local_frame
+
 # deterministic "now" for expired_at stamps: derived from data, not wall
 # clock, so reruns are idempotent (reference uses utc_now() at
 # edge_operations.py:259; our batch equivalent must be reproducible).
@@ -122,7 +124,7 @@ def _contra_map(spark, ontology) -> DataFrame:
     contradiction classes."""
     rows = [(p, c, pol) for p, (c, pol) in ontology.contra.items()]
     return F.broadcast(
-        spark.createDataFrame(rows, "name string, contra_class string, polarity int")
+        local_frame(spark, rows, "name string, contra_class string, polarity int")
     )
 
 

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from ..functions.png import png_decode, png_encode
 from ..functions.wav import wav_decode, wav_encode
 from ..functions.y4m import y4m_decode, y4m_encode
+from ..session import local_frame
 
 MEDIA_SCHEMA = T.StructType(
     [
@@ -155,7 +156,7 @@ def synth_media(spark, n: int = 64) -> DataFrame:
         rows.append(
             (f"m{i:04d}", modality, bytearray(payload), mime, w, h, duration_ms)
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 def decode_image_batch(payloads: pd.Series) -> list[np.ndarray]:
@@ -462,7 +463,7 @@ def synth_clips(spark, n: int = 24) -> DataFrame:
             (f"c{i:04d}", "video", bytearray(y4m_encode(frames, fps=(10, 1))),
              "video/x-yuv4mpeg", w, h, int(1000.0 * len(frames) / 10))
         )
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
+    return local_frame(spark, rows, MEDIA_SCHEMA)
 
 
 DIFF_SCHEMA = "content_id string, frame_idx long, diff_u long"

@@ -31,6 +31,8 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..session import local_frame
+
 # --- MinHash parameters (deterministic hash family) -----------------------
 # 16 bands x 2 rows: candidate recall at the verification threshold is
 # effectively 1 (P(miss) = (1 - J^2)^16 ~ 2e-6 at J=0.75) — required
@@ -222,8 +224,11 @@ def lsh_band_rows(entities: DataFrame) -> DataFrame:
     distinct-entity table. In the incremental merge this table is
     STANDING STATE (persisted, appended per batch); here it is also the
     internal front of match_edges_lsh."""
+    # each shingle is hashed ONCE into _hs; the 32 signature minima reuse
+    # it (Catalyst does not share subexpressions across lambda bodies, so
+    # hashing inside each signature lambda costs 32 md5 calls per shingle)
     sig = lambda i: (  # noqa: E731
-        f"array_min(transform(_sh, s -> ({int(_A_NM[i])} * ({_H32.format(x='s')})"
+        f"array_min(transform(_hs, h -> ({int(_A_NM[i])} * h"
         f" + {int(_B_NM[i])}) % {_MERSENNE31}))"
     )
     band_structs = ", ".join(
@@ -236,6 +241,7 @@ def lsh_band_rows(entities: DataFrame) -> DataFrame:
     return (
         entities.select("uuid", "group_id", "norm_name")
         .withColumn("_sh", F.expr(_SHINGLE_ARR))
+        .withColumn("_hs", F.expr(f"transform(_sh, s -> {_H32.format(x='s')})"))
         .select(
             "uuid",
             "group_id",
@@ -286,7 +292,7 @@ def lsh_verify_pairs(
     )
 
 
-def _local_components(spark, pairs) -> DataFrame:
+def _local_components(spark, pairs, id_type: str) -> DataFrame:
     """Driver-side union-find over a SMALL collected match-edge list. The
     alias graph is orders of magnitude smaller than the corpus (only
     colliding distinct names appear), so below the threshold the iterative
@@ -295,7 +301,8 @@ def _local_components(spark, pairs) -> DataFrame:
     broadcast-back, the same small-graph cutover GraphX-style CC
     implementations use. Returns (id, component=min member id) for ids
     touched by any edge; untouched vertices keep themselves via the
-    caller's coalesce."""
+    caller's coalesce. `id_type` is the SQL type of the ids (uuid strings
+    for entity resolution, longs for document clusters)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -315,14 +322,7 @@ def _local_components(spark, pairs) -> DataFrame:
         comp[x] = min(roots.get(root, x), x)
         roots[root] = comp[x]
     rows = [(x, roots[find(x)]) for x in comp]
-    if not rows:
-        from pyspark.sql import types as T
-
-        return spark.createDataFrame(
-            [], T.StructType([T.StructField("id", T.StringType()),
-                              T.StructField("component", T.StringType())])
-        )
-    return spark.createDataFrame(rows, ["id", "component"])
+    return local_frame(spark, rows, f"id {id_type}, component {id_type}")
 
 
 LOCAL_CC_THRESHOLD = 100_000
@@ -336,30 +336,27 @@ def connected_components(
     diameter; alias-resolution graphs are star-shaped so this converges in
     1-2 rounds; checkpointing via localCheckpoint truncates lineage."""
     # adaptive small-graph cutover: the match-edge list is tiny relative
-    # to the corpus (distinct colliding names only). The probe is COUNT
-    # FIRST (a scalar — the driver never sees a Row), collect SECOND only
-    # when the graph is confirmed small; above the threshold the
-    # distributed fixpoint below is the common path and nothing beyond
-    # the scalar ever reaches the driver. The count is over the FULL
-    # persisted edge list (not a limit probe): a full count materializes
-    # the cache, so the expensive candidate-join plan above it executes
-    # exactly once — the subsequent collect (small path) or fixpoint
-    # iterations (large path) read the cache instead of recomputing the
-    # LSH join. A limit-bounded probe short-circuits and leaves the cache
-    # unfilled, doubling the blocking-join cost (measured: 3.8s -> 2.3s
-    # for the sf0.1 resolution stage).
-    edges = edges.persist()
-    n_probe = edges.count()
-    if n_probe <= LOCAL_CC_THRESHOLD:
-        pairs = edges.select("src", "dst").collect()
-        local = _local_components(edges.sparkSession, pairs)
+    # to the corpus (distinct colliding names only). ONE bounded action
+    # probes it: collect at most LOCAL_CC_THRESHOLD + 1 pairs. If the
+    # probe comes back short, it IS the whole edge list and union-find
+    # runs over it on the driver; the persisted list is not needed again.
+    # Otherwise the distributed fixpoint below runs, and the persist keeps
+    # the candidate-join plan above it from executing once per iteration
+    # (the probe fills only the partitions it read; the first iteration
+    # fills the rest).
+    edges = edges.select("src", "dst").persist()
+    probe = edges.limit(LOCAL_CC_THRESHOLD + 1).collect()
+    if len(probe) <= LOCAL_CC_THRESHOLD:
         edges.unpersist()
+        local = _local_components(
+            edges.sparkSession, probe, edges.schema["src"].dataType.simpleString()
+        )
         return vertices.join(local, "id", "left").select(
             "id", F.coalesce("component", "id").alias("component")
         )
 
     labels = vertices.select(F.col("id"), F.col("id").alias("component"))
-    bidir = edges.select("src", "dst").union(
+    bidir = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     for _ in range(max_iter):

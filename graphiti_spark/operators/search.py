@@ -34,6 +34,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+from ..session import local_frame
+
 WORD_PATTERN = "[a-z0-9]+"
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -51,8 +53,8 @@ def tokens(col) -> F.Column:
 def make_queries_df(spark: SparkSession, queries: list[str]) -> DataFrame:
     """(query_id, query) — MAX_QUERY_LENGTH=32-word guard applied
     (search_utils.py:56-73: overlong queries return no results)."""
-    df = spark.createDataFrame(
-        [(i, q) for i, q in enumerate(queries)], "query_id long, query string"
+    df = local_frame(
+        spark, list(enumerate(queries)), "query_id long, query string"
     )
     return df.where(F.size(tokens("query")) < 32)
 
@@ -261,7 +263,9 @@ def node_distance_rerank(
     """Q9: rank search results by BFS distance to a center node; center
     first, unreachable last (search_utils.py:758-795)."""
     spark = results.sparkSession
-    origins = spark.createDataFrame([(center_uuid, center_uuid)], ["origin_uuid", "uuid"])
+    origins = local_frame(
+        spark, [(center_uuid, center_uuid)], "origin_uuid string, uuid string"
+    )
     dist = bfs_nodes(edges, origins).select(
         F.col("uuid"), F.col("depth").alias("distance")
     )

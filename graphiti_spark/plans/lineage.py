@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.episodes import build_episodes
 from ..operators.extract import extract_all
+from ..session import local_frame
 from ..sources.pages import build_pages
 
 METRICS_SCHEMA = (
@@ -69,8 +70,9 @@ def _commit_metrics(
 ) -> None:
     row = [(res.range_id, stage, res.row_count, res.checksum, res.wall_ms)]
     (
-        spark.createDataFrame(
-            row, "range_id int, stage string, row_count long, checksum long, wall_ms long"
+        local_frame(
+            spark, row,
+            "range_id int, stage string, row_count long, checksum long, wall_ms long",
         )
         .withColumn("committed_at", F.current_timestamp())
         .write.mode("append")

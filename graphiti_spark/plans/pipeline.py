@@ -162,7 +162,8 @@ class GraphTables:
     def _build_nodes_emb(self) -> DataFrame:
         # name_embedding materialized at BUILD time, exactly once per
         # graph (reference stores node.name_embedding at ingest —
-        # nodes.py:262-269); search reads this table instead of
+        # nodes.py:262-269): GraphitiSpark.build forces it as the last
+        # step of its critical path. Search reads this table instead of
         # re-embedding the corpus per call. Persisted: it is a read-side
         # index, the Iceberg-embedding-table analogue.
         from ..functions.embed import with_embedding
@@ -173,7 +174,9 @@ class GraphTables:
         return with_embedding(corpus, "text", "vec").persist()
 
     def _build_edges_emb(self) -> DataFrame:
-        # fact_embedding at build time (reference edges.py:199-208)
+        # fact_embedding at build time (reference edges.py:199-208):
+        # GraphitiSpark.build forces it on a side thread while the node
+        # table and its embeddings commit
         from ..functions.embed import with_embedding
 
         corpus = self.edges.select("uuid", F.col("fact").alias("text"))

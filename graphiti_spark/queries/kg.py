@@ -11,6 +11,7 @@ from .. import corpus
 from ..operators import docs as docs_mod
 from ..operators.materialize import JOB_TS
 from ..plans.pipeline import triples_view
+from ..session import local_frame
 from .shared import (
     LPA_ORACLE_ROUNDS,
     PAGE_CURSOR,
@@ -347,7 +348,8 @@ def q_kg_add_triplet(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.triplet import add_triplets
 
     t = _graph(spark, sf_dir)
-    trip = spark.createDataFrame(
+    trip = local_frame(
+        spark,
         _ADD_TRIPLETS,
         "group_id string, subj_name string, pred string, obj_name string, "
         "fact string, valid_at string, episode_uuid string",

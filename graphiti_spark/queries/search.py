@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .. import corpus
 from ..operators import search
 from ..operators.docs import read_documents
+from ..session import local_frame
 from .kg import q_kg_triples
 from .shared import (
     ORACLE_SCRATCH,
@@ -880,7 +881,8 @@ def _write_node_embeddings(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     ).select("uuid", "group_id", "name", "emb")
     emb.write.mode("overwrite").parquet(nodes_path)
     qv = _quantize(embed_texts(NAME_QUERIES))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(i, qv[i]) for i in range(len(NAME_QUERIES))],
         "query_id long, qvec array<bigint>",
     )
@@ -1390,7 +1392,8 @@ def q_kg_community_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb.write.mode("overwrite").parquet(cpath)
     emb = spark.read.parquet(cpath)
     qv = _quantize(embed_texts(COMM_QUERIES))
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(i, qv[i]) for i in range(len(COMM_QUERIES))],
         "query_id long, qvec array<bigint>",
     )

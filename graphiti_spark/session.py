@@ -9,9 +9,35 @@ overrides via spark-submit conf.
 
 from __future__ import annotations
 
+import datetime
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """The one way to turn driver-side rows (tuples in schema order) into a
+    DataFrame. The rows go to the JVM as one Arrow table, so the plan is a
+    JVM-local relation (`LocalTableScan`) and scanning it never starts a
+    Python worker; `createDataFrame(list)` instead plans a `Scan
+    ExistingRDD` over a pickled Python RDD, which every stage reading it
+    must feed through Python. The schema is explicit (StructType or DDL
+    string), so empty `rows` need no special case. TIMESTAMP values keep
+    `createDataFrame(list)` semantics: a naive datetime is local time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrays = []
+    for field, af, col in zip(schema.fields, arrow, cols):
+        if isinstance(field.dataType, T.TimestampType):
+            col = [None if v is None else v.astimezone(datetime.timezone.utc) for v in col]
+        arrays.append(pa.array(col, type=af.type))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), schema)
 
 
 def get_spark(

@@ -559,3 +559,49 @@ def test_closeness_reranker(g):
     ).toPandas()
     assert len(edges) > 0 and "harmonic_q" in edges.columns
     assert list(edges["harmonic_q"]) == sorted(edges["harmonic_q"], reverse=True)
+
+
+def _cache_loaded(df) -> bool:
+    rel = df._jdf.queryExecution().withCachedData()
+    return rel.nodeName() == "InMemoryRelation" and rel.cacheBuilder().isCachedColumnBuffersLoaded()
+
+
+def test_build_materializes_embedding_indexes(g):
+    t = g.tables
+    for name in ("nodes_emb", "edges_emb"):
+        df = t.__dict__[name]  # built by build(), not by this access
+        assert df.is_cached and _cache_loaded(df), name
+
+
+def _small_pages(spark, sf_dir):
+    from graphiti_spark.sources.pages import build_pages
+
+    return build_pages(spark, sf_dir).limit(40)
+
+
+def test_build_jobs_keep_the_callers_job_group(spark, sf_dir):
+    """Jobs of build()'s side legs run on other threads; they still carry
+    the job group the caller set."""
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    ungrouped = set(st.getJobIdsForGroup())
+    sc.setJobGroup("build-under-test", "build() job-group probe")
+    try:
+        GraphitiSpark(spark).build(sf_dir, pages=_small_pages(spark, sf_dir))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the tracker forgets old jobs, so compare only what is new
+    assert set(st.getJobIdsForGroup()) - ungrouped == set()
+    assert len(st.getJobIdsForGroup("build-under-test")) > 0
+
+
+def test_build_side_leg_error_propagates(spark, sf_dir, monkeypatch):
+    from graphiti_spark.plans.pipeline import GraphTables
+
+    def boom(self):
+        raise RuntimeError("side leg failed")
+
+    monkeypatch.setattr(GraphTables, "_build_edges_emb", boom)
+    with pytest.raises(RuntimeError, match="side leg failed"):
+        GraphitiSpark(spark).build(sf_dir, pages=_small_pages(spark, sf_dir))

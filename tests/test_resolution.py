@@ -105,3 +105,36 @@ def test_lsh_finds_typo_variants(spark):
     got = nodes.toPandas()
     assert len(got) == 2
     assert "Alice Johnson" in set(got["name"])
+
+
+def test_lsh_band_rows_match_python_minhash(spark):
+    """The JVM band rows (standing state of the incremental merge) equal
+    the bands of the single-process `minhash_signature`, name by name:
+    ordinary, empty, 1- and 2-character and non-ASCII names."""
+    from graphiti_spark.operators.resolve import LSH_BANDS, LSH_ROWS, lsh_band_rows
+
+    names = ["john smith", "acme corporation", "", "a", "ab", "zoë müller",
+             "北京大学", "crème brûlée co"]
+    ents = spark.createDataFrame(
+        [(f"u{i}", "g", n) for i, n in enumerate(names)],
+        "uuid string, group_id string, norm_name string",
+    )
+    got = sorted((r.uuid, r.band, r.bkey) for r in lsh_band_rows(ents).collect())
+    want = sorted(
+        (f"u{i}", band,
+         "|".join(str(int(sig[band * LSH_ROWS + k])) for k in range(LSH_ROWS)))
+        for i, n in enumerate(names)
+        for sig in [minhash_signature(n)]
+        for band in range(LSH_BANDS)
+    )
+    assert got == want
+
+
+def test_connected_components_keeps_bigint_ids(spark):
+    """The small-graph driver path returns components in the id type of
+    the edge list (the document-cluster queries cluster bigint ids)."""
+    edges = spark.createDataFrame([(3, 1), (1, 2), (7, 9)], "src bigint, dst bigint")
+    verts = spark.createDataFrame([(i,) for i in (1, 2, 3, 7, 9, 11)], "id bigint")
+    comp = connected_components(edges, verts)
+    assert comp.schema["component"].dataType.simpleString() == "bigint"
+    assert dict(comp.collect()) == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7, 11: 11}

@@ -62,7 +62,7 @@ def test_distributed_cc_branch_matches_local(spark, monkeypatch):
     """The distributed min-label fixpoint (taken when the match-edge list
     exceeds LOCAL_CC_THRESHOLD — the 100 TB common path) produces the
     same components as the small-graph driver path. Forced here by
-    dropping the threshold to 0 so the probe count always overflows."""
+    dropping the threshold to 0 so the bounded probe always overflows."""
     from graphiti_spark.operators import resolve
 
     edges = spark.createDataFrame(
