@@ -151,7 +151,8 @@ class GraphitiSpark:
         construction lineage must not re-run per query (the production
         analogue: the DAG's outputs live as Iceberg tables, read not
         recomputed)."""
-        self.tables = t = build_graph(self.spark, sf_dir, **kwargs)
+        t = build_graph(self.spark, sf_dir, **kwargs)
+        self._replace_tables(t)
         # localCheckpoint truncates lineage: without it every search
         # re-optimizes the full construction plan (LSH band expressions
         # etc.) per action — measured 123s -> ~5s for a cross-encoder
@@ -173,6 +174,31 @@ class GraphitiSpark:
         self._drop_comm_emb()
         self._mutation_log = []
         return self.tables
+
+    def _rerank_by_node_score(
+        self, res: DataFrame, scope: str, scores: DataFrame
+    ) -> DataFrame:
+        """Order search results by a per-node score table `scores`
+        (_n node uuid, score column): node results by their own score,
+        edge results by their SOURCE node's (like node_distance). Unscored
+        rows score 0; ties break on uuid."""
+        col = scores.columns[1]
+        key = "source_node_uuid" if scope == "edges" else "uuid"
+        if scope == "edges":
+            res = res.join(self._t().edges.select("uuid", key), "uuid", "left")
+        out = res.join(scores.withColumnRenamed("_n", key), key, "left").withColumn(
+            col, F.coalesce(col, F.lit(0))
+        )
+        if scope == "edges":
+            out = out.drop(key)
+        return out.orderBy(F.desc(col), "uuid")
+
+    def _replace_tables(self, t: GraphTables) -> None:
+        """Swap in a new graph, releasing the persisted embedding indexes
+        of the one it replaces."""
+        if self.tables is not None:
+            self.tables.release()
+        self.tables = t
 
     def _drop_comm_emb(self) -> None:
         stale = getattr(self, "_comm_emb", None)
@@ -221,7 +247,7 @@ class GraphitiSpark:
         )
         retained_ex = old.extracted.join(drop_eps, "episode_uuid", "left_anti")
         t.extracted = t._commit(retained_ex.unionByName(extract_all(new_eps)))
-        self.tables = t
+        self._replace_tables(t)
         # communities (and their embedding index) describe the pre-ingest
         # graph: drop them so community search rebuilds over the new one
         self._comm = None
@@ -403,68 +429,33 @@ class GraphitiSpark:
             # beyond-reference reranker: global entity importance
             # (integer PageRank over the canonical edge graph) instead of
             # query-relative BFS distance — the batch centrality table a
-            # web-scale KG would precompute per build. Edge results rank
-            # by their SOURCE node's rank, like node_distance.
+            # web-scale KG would precompute per build.
             from .operators.centrality import pagerank
 
-            res = fused.where(F.col("rank") <= config.limit)
             g = t.edges.select(
                 "group_id",
                 F.col("source_node_uuid").alias("subj"),
                 F.lit("E").alias("pred"),
                 F.col("target_node_uuid").alias("obj"),
             )
-            pr = pagerank(g).select(F.col("name").alias("_n"), "rank_u")
-            if config.scope == "edges":
-                src = t.edges.select("uuid", "source_node_uuid")
-                out = (
-                    res.join(src, "uuid", "left")
-                    .join(
-                        pr.withColumnRenamed("_n", "source_node_uuid"),
-                        "source_node_uuid",
-                        "left",
-                    )
-                    .withColumn("rank_u", F.coalesce("rank_u", F.lit(0)))
-                    .drop("source_node_uuid")
-                    .orderBy(F.desc("rank_u"), "uuid")
-                )
-            else:
-                out = (
-                    res.join(pr.withColumnRenamed("_n", "uuid"), "uuid", "left")
-                    .withColumn("rank_u", F.coalesce("rank_u", F.lit(0)))
-                    .orderBy(F.desc("rank_u"), "uuid")
-                )
+            out = self._rerank_by_node_score(
+                fused.where(F.col("rank") <= config.limit), config.scope,
+                pagerank(g).select(F.col("name").alias("_n"), "rank_u"),
+            )
         elif config.reranker == "closeness":
             # beyond-reference reranker: landmark harmonic closeness
             # (centrality.landmark_closeness) — "how central is this
-            # entity in the graph", robust to disconnection; same
-            # precomputed-table join shape as the pagerank reranker.
+            # entity in the graph", robust to disconnection.
             from .operators.centrality import landmark_closeness
 
-            res = fused.where(F.col("rank") <= config.limit)
             cl = landmark_closeness(
                 t.edges.select("source_node_uuid", "target_node_uuid"),
                 t.nodes.select("uuid"),
-            ).select(F.col("node_key").alias("_n"), "harmonic_q")
-            if config.scope == "edges":
-                src = t.edges.select("uuid", "source_node_uuid")
-                out = (
-                    res.join(src, "uuid", "left")
-                    .join(
-                        cl.withColumnRenamed("_n", "source_node_uuid"),
-                        "source_node_uuid",
-                        "left",
-                    )
-                    .withColumn("harmonic_q", F.coalesce("harmonic_q", F.lit(0)))
-                    .drop("source_node_uuid")
-                    .orderBy(F.desc("harmonic_q"), "uuid")
-                )
-            else:
-                out = (
-                    res.join(cl.withColumnRenamed("_n", "uuid"), "uuid", "left")
-                    .withColumn("harmonic_q", F.coalesce("harmonic_q", F.lit(0)))
-                    .orderBy(F.desc("harmonic_q"), "uuid")
-                )
+            )
+            out = self._rerank_by_node_score(
+                fused.where(F.col("rank") <= config.limit), config.scope,
+                cl.select(F.col("node_key").alias("_n"), "harmonic_q"),
+            )
         elif config.reranker in ("cross_encoder", "cross_encoder_learned"):
             # Q13/U5: cross-encoder rerank of the hybrid candidate set
             # (reference reranks only its candidates;
@@ -494,7 +485,7 @@ class GraphitiSpark:
                     train_weights,
                 )
 
-                sample = sample_passages_df(cand_corpus, "uuid", "text", cap=200)
+                sample = sample_passages_df(cand_corpus, "uuid", "text")
                 ce = learned_ce_rank(
                     cand_corpus, qs, "uuid", "text",
                     weights=train_weights(sample), k=10**9,

@@ -30,12 +30,12 @@ _MIX_B = np.int64(1013904223)
 _MASK32 = np.int64(0xFFFFFFFF)
 
 
-def embed_texts(texts, dim: int = EMBEDDING_DIM) -> np.ndarray:
-    """Vectorized over a sequence of strings -> (n, dim) float32,
+def embed_texts(texts) -> np.ndarray:
+    """Vectorized over a sequence of strings -> (n, EMBEDDING_DIM) float32,
     L2-normalized rows. Deterministic multiplicative feature hashing of
     byte trigrams of '^' + lower(text) + '$' (newlines flattened per
     nodes.py:264); sign from hash bit 16."""
-    n = len(texts)
+    n, dim = len(texts), EMBEDDING_DIM
     out = np.zeros((n, dim), dtype=np.float64)
     if n == 0:
         return out.astype(np.float32)
@@ -71,12 +71,12 @@ def embed_texts(texts, dim: int = EMBEDDING_DIM) -> np.ndarray:
     return out.astype(np.float32)
 
 
-def embed_series(s: pd.Series, dim: int = EMBEDDING_DIM) -> pd.Series:
-    vecs = embed_texts(s.fillna("").tolist(), dim)
+def embed_series(s: pd.Series) -> pd.Series:
+    vecs = embed_texts(s.fillna("").tolist())
     return pd.Series(list(vecs), index=s.index)
 
 
-def with_embedding(df, text_col: str, out_col: str, dim: int = EMBEDDING_DIM):
+def with_embedding(df, text_col: str, out_col: str):
     """Adds an ArrayType(Float) embedding column via mapInPandas (Arrow
     batches; one numpy pass per batch)."""
     from pyspark.sql import types as T
@@ -90,7 +90,7 @@ def with_embedding(df, text_col: str, out_col: str, dim: int = EMBEDDING_DIM):
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf[out_col] = embed_series(pdf[text_col], dim)
+            pdf[out_col] = embed_series(pdf[text_col])
             yield pdf
 
     return df.mapInPandas(gen, schema=schema)

@@ -55,13 +55,13 @@ def salted_join(
 
 def salted_top1_by(
     df: DataFrame, keys: list[str], order: str, payload: list[str],
-    n_salt: int = 16, ascending: bool = True,
+    n_salt: int = 16,
 ) -> DataFrame:
-    """Per-key arg-min (or arg-max) of `order`, carrying `payload`
-    columns, as a two-phase salted aggregation: phase 1 reduces each
-    (key, salt) slice, phase 2 reduces the <= n_salt survivors per key —
-    no single task ever sees more than a salt-slice of a hot key."""
-    agg_fn = F.min_by if ascending else F.max_by
+    """Per-key arg-min of `order`, carrying `payload` columns, as a
+    two-phase salted aggregation: phase 1 reduces each (key, salt) slice,
+    phase 2 reduces the <= n_salt survivors per key — no single task ever
+    sees more than a salt-slice of a hot key."""
+    agg_fn = F.min_by
     struct = F.struct(*[F.col(c) for c in [order, *payload]])
     salt = F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_salt))
     phase1 = (

@@ -42,8 +42,8 @@ def _norm(a: str):
     )
 
 
-def with_cosine(pairs: DataFrame, a: str = "qe", b: str = "ce") -> DataFrame:
-    return pairs.withColumn("score", _dot(a, b) / (_norm(a) * _norm(b)))
+def with_cosine(pairs: DataFrame) -> DataFrame:
+    return pairs.withColumn("score", _dot("qe", "ce") / (_norm("qe") * _norm("ce")))
 
 
 def brute_force_topk(
@@ -76,11 +76,11 @@ def ivf_assign(candidates: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
-def suggest_n_cells(n_vectors: int, max_cell_target: int = 100_000) -> int:
+def suggest_n_cells(n_vectors: int) -> int:
     """IVF cell-count sizing for a corpus of `n_vectors`: the classic
     sqrt(N) rule (balances probe cost ~N/cells against centroid-table
     cost ~cells), floored so the EXPECTED cell population stays under
-    max_cell_target (the _cap_cells bound — cells should rarely trip the
+    100_000 (the _cap_cells bound — cells should rarely trip the
     cap under a balanced trainer). The test-scale default n_cells=8 is
     simply suggest_n_cells at the oracle corpus size; at 1e9 vectors
     this returns ~31623 cells (~31.6k vectors/cell expected). Pure
@@ -91,7 +91,7 @@ def suggest_n_cells(n_vectors: int, max_cell_target: int = 100_000) -> int:
     if n_vectors <= 0:
         return 1
     by_sqrt = int(math.isqrt(n_vectors)) or 1
-    by_cap = -(-n_vectors // max_cell_target)  # ceil
+    by_cap = -(-n_vectors // 100_000)  # ceil
     return max(1, min(n_vectors, max(by_sqrt, by_cap)))
 
 
@@ -280,10 +280,9 @@ def ivf_topk(
     queries: DataFrame,
     candidates: DataFrame,
     centroids: DataFrame,
-    k: int = 5,
     n_probe: int = 2,
 ) -> DataFrame:
-    """IVF-pruned approximate top-k: score only candidates living in the
+    """IVF-pruned approximate top-5: score only candidates living in the
     query's `n_probe` nearest cells. Recall < 1 by design; the pytest
     harness checks recall vs `brute_force_topk` instead of an SQL oracle."""
     assigned = ivf_assign(candidates, centroids)
@@ -306,7 +305,7 @@ def ivf_topk(
     w = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("c_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .where(F.col("rank") <= 5)
         .select("q_id", "rank", "c_id", "score")
     )
 
@@ -719,7 +718,6 @@ def simhash_pairs(
     n_bands: int = 4,
     max_ham: int = 6,
     max_bucket: int = 1000,
-    scale_u: int = 1_000_000,
 ) -> DataFrame:
     """Random-hyperplane LSH near-duplicate pairs over an embedding
     column (Charikar, STOC 2002) — the third leg of the embedding-dedup
@@ -815,6 +813,6 @@ def simhash_pairs(
         F.col("hamming").cast("long").alias("hamming"),
         F.expr(
             f"CASE WHEN {dot} < 0 THEN -1L ELSE 1L END"
-            f" * (({dot}) * ({dot}) * {scale_u}L div (na2 * nb2))"
+            f" * (({dot}) * ({dot}) * 1000000L div (na2 * nb2))"
         ).cast("long").alias("cos2s_u"),
     )

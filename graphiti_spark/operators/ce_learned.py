@@ -43,6 +43,9 @@ TOKEN_PATTERN = "[a-z0-9]+"
 QUERY_TOKENS = 5
 EPOCHS = 3
 N_FEATURES = 5
+# training-sample bound, shared by the search reranker and the registry
+# query's DuckDB-side sample
+SAMPLE_CAP = 200
 _TOK_RE = re.compile(TOKEN_PATTERN)
 
 
@@ -110,30 +113,28 @@ def train_weights(passages: list[str]) -> list[int]:
     return [a // steps for a in acc]
 
 
-def sample_passages(rows: list[tuple[int, str]], cap: int = 200) -> list[str]:
+def sample_passages(rows: list[tuple[int, str]]) -> list[str]:
     """Deterministic bounded training sample from (doc_id, text) rows:
-    sort by doc_id, stride so at most `cap` survive."""
+    sort by doc_id, stride so at most SAMPLE_CAP survive."""
     rows = sorted(rows)
-    stride = max(1, len(rows) // cap)
-    return [t for _, t in rows[::stride]][:cap]
+    stride = max(1, len(rows) // SAMPLE_CAP)
+    return [t for _, t in rows[::stride]][:SAMPLE_CAP]
 
 
-def sample_passages_df(
-    df: DataFrame, id_col: str, text_col: str, cap: int = 200
-) -> list[str]:
+def sample_passages_df(df: DataFrame, id_col: str, text_col: str) -> list[str]:
     """sample_passages over a DataFrame with unique ids, selected in Spark
-    so only the <= cap sampled rows reach the driver: the rows at id rank
-    i with i % stride == 0 and i < cap * stride are exactly the ones
-    sample_passages keeps. The rank window is global, so `df` must be a
-    bounded set (e.g. a search's candidates), not a corpus."""
-    stride = max(1, df.count() // cap)
+    so only the <= SAMPLE_CAP sampled rows reach the driver: the rows at
+    id rank i with i % stride == 0 and i < SAMPLE_CAP * stride are exactly
+    the ones sample_passages keeps. The rank window is global, so `df`
+    must be a bounded set (e.g. a search's candidates), not a corpus."""
+    stride = max(1, df.count() // SAMPLE_CAP)
     i = F.row_number().over(Window.orderBy(id_col)) - 1
     rows = (
         df.select(id_col, text_col, i.alias("i"))
-        .where((F.col("i") % stride == 0) & (F.col("i") < cap * stride))
+        .where((F.col("i") % stride == 0) & (F.col("i") < SAMPLE_CAP * stride))
         .collect()
     )
-    return sample_passages([(r[id_col], r[text_col]) for r in rows], cap=cap)
+    return sample_passages([(r[id_col], r[text_col]) for r in rows])
 
 
 def learned_ce_rank(
@@ -233,9 +234,7 @@ def learned_ce_rank(
     )
 
 
-def sql_learned_ce(
-    source_sql: str, queries_values: str, weights: list[int], k: int = 10
-) -> str:
+def sql_learned_ce(source_sql: str, queries_values: str, weights: list[int]) -> str:
     """DuckDB twin of learned_ce_rank with the trained weights embedded
     as literals (the oracle trains identically via train_weights on the
     same deterministic sample, so the literals match bit-for-bit)."""

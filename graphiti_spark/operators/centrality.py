@@ -23,8 +23,18 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+# Fixed operator settings; the DuckDB oracles in queries/graph.py read the
+# same constants, so engine and oracle cannot drift apart.
 DAMP_PCT = 85  # damping 0.85 in integer percent
-R0_U = 1_000_000  # rank unit: micro-units summing (pre-damping) to ~1e6/group
+# micro-unit: the integer scale of every rank and score here (PageRank
+# mass sums, pre-damping, to ~R0_U per group)
+R0_U = 1_000_000
+PAGERANK_ITERS = 3
+PPR_ITERS = 3
+KCORE_K = 2  # k of the k-core
+KATZ_ITERS = 3
+KATZ_BETA_DEN = 8  # attenuation beta = 1 / KATZ_BETA_DEN
+NS_FANOUT = (4, 3)  # neighbor_sample per-hop fanouts
 
 
 def clustering_coefficients(triples: DataFrame) -> DataFrame:
@@ -432,9 +442,7 @@ def node2vec_walks(
     return out
 
 
-def pagerank(
-    triples: DataFrame, iters: int = 3, damp_pct: int = DAMP_PCT
-) -> DataFrame:
+def pagerank(triples: DataFrame) -> DataFrame:
     """Per-group integer PageRank over the distinct directed (subj, obj)
     name pairs of the canonical triples, plus in/out degree.
 
@@ -446,8 +454,8 @@ def pagerank(
     recurrence stays a pure integer function of the graph, identical in
     Spark `div` and DuckDB `//`.
     """
-    # the skinny edge list is read 2 + iters times (verts, degrees, every
-    # iteration's contribution join): commit it once so each iteration
+    # the skinny edge list is read 2 + PAGERANK_ITERS times (verts,
+    # degrees, every iteration's contribution join): commit it once so each iteration
     # reads materialized rows instead of re-running the triple lineage —
     # the same lineage-truncation discipline as connected_components
     e = (
@@ -466,12 +474,12 @@ def pagerank(
     outdeg = e.groupBy("group_id", "src").agg(F.count(F.lit(1)).alias("outdeg"))
     indeg = e.groupBy("group_id", "dst").agg(F.count(F.lit(1)).alias("indeg"))
 
-    base_u = (R0_U * (100 - damp_pct)) // 100  # e.g. 150000
+    base_u = (R0_U * (100 - DAMP_PCT)) // 100  # e.g. 150000
     vn = verts.join(ng, "group_id")
     r = vn.select(
         "group_id", "name", F.expr(f"{R0_U}L div n_g").alias("rank_u")
     )
-    for _ in range(iters):
+    for _ in range(PAGERANK_ITERS):
         contrib = (
             e.join(outdeg, ["group_id", "src"])
             .join(
@@ -493,7 +501,7 @@ def pagerank(
                 "name",
                 F.expr(
                     f"({base_u}L div n_g)"
-                    f" + ({damp_pct}L * coalesce(s, 0L)) div 100"
+                    f" + ({DAMP_PCT}L * coalesce(s, 0L)) div 100"
                 ).alias("rank_u"),
             )
             .localCheckpoint(eager=True)
@@ -519,11 +527,11 @@ def pagerank(
     )
 
 
-def kcore(triples: DataFrame, k: int = 2, max_iter: int = 30) -> DataFrame:
-    """k-core decomposition membership: the maximal subgraph in which every
-    node keeps degree >= k, computed by iterative peeling (remove nodes
-    below k, drop their incident edges, repeat to fixpoint). The k-core is
-    the standard "dense backbone" extraction for a web-text KG — pendant
+def kcore(triples: DataFrame) -> DataFrame:
+    """k-core decomposition membership (k = KCORE_K): the maximal subgraph
+    in which every node keeps degree >= k, computed by iterative peeling
+    (remove nodes below k, drop their incident edges, repeat to
+    fixpoint). The k-core is the standard "dense backbone" extraction for a web-text KG — pendant
     chains of one-off extractions peel away, leaving the entities whose
     facts corroborate each other (the reference's community stage
     (community_operations.py) clusters exactly this backbone).
@@ -549,14 +557,14 @@ def kcore(triples: DataFrame, k: int = 2, max_iter: int = 30) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(30):
         deg = (
             und.select("group_id", F.col("a").alias("name"))
             .unionAll(und.select("group_id", F.col("b").alias("name")))
             .groupBy("group_id", "name")
             .agg(F.count(F.lit(1)).alias("c"))
         )
-        alive = deg.where(F.col("c") >= k).select("group_id", "name")
+        alive = deg.where(F.col("c") >= KCORE_K).select("group_id", "name")
         nxt = (
             und.join(
                 alive.withColumnRenamed("name", "a"), ["group_id", "a"], "semi"
@@ -617,7 +625,7 @@ def _edge_support(und: DataFrame) -> DataFrame:
     )
 
 
-def ktruss(triples: DataFrame, k: int = 3, max_iter: int = 10) -> DataFrame:
+def ktruss(triples: DataFrame, k: int = 3) -> DataFrame:
     """k-truss decomposition: the maximal subgraph in which every EDGE
     lies in >= k-2 triangles — the edge-analog of the k-core and the
     stricter dense-backbone extraction (a k-core keeps hub spokes; a
@@ -643,7 +651,7 @@ def ktruss(triples: DataFrame, k: int = 3, max_iter: int = 10) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(10):
         sup = _edge_support(und)
         keep = sup.where(F.col("s") >= k - 2).select("group_id", "a", "b")
         nxt = und.join(keep, ["group_id", "a", "b"], "semi").localCheckpoint(
@@ -669,7 +677,6 @@ def landmark_closeness(
     nodes: DataFrame,
     n_landmarks: int = 8,
     max_depth: int = 3,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Landmark-approximate closeness centrality (the Eppstein-Wang
     sampling scheme): exact bounded BFS from a deterministic sample of
@@ -684,13 +691,13 @@ def landmark_closeness(
     discipline), never a global sort. The BFS reuses search.bfs_nodes:
     per-hop dedup + visited anti-join, lineage truncated per hop, every
     hop one co-partitioned join. The final score is exact integer
-    micro-units (reached * scale div sum_d), so the whole estimator
+    micro-units (reached * R0_U div sum_d), so the whole estimator
     sits under the DuckDB value-hash gate.
 
     edges: (source_node_uuid, target_node_uuid) directed canonical
     edges (BFS treats them undirected). nodes: (uuid) node keys.
     Returns (node_key, n_reached, sum_depth, closeness_q,
-    harmonic_q); harmonic_q = sum(scale div d) is the harmonic
+    harmonic_q); harmonic_q = sum(R0_U div d) is the harmonic
     variant (Boldi-Vigna's preferred form — robust to disconnection
     since unreached landmarks contribute 0 instead of poisoning the
     sum); each term is an exact integer so the sum is order-free.
@@ -713,13 +720,13 @@ def landmark_closeness(
         .agg(
             F.count(F.lit(1)).alias("n_reached"),
             F.sum("depth").alias("sum_depth"),
-            F.sum(F.expr(f"{scale} div depth")).alias("harmonic_q"),
+            F.sum(F.expr(f"{R0_U} div depth")).alias("harmonic_q"),
         )
         .select(
             F.col("uuid").alias("node_key"),
             F.col("n_reached").cast("long").alias("n_reached"),
             F.col("sum_depth").cast("long").alias("sum_depth"),
-            F.expr(f"(n_reached * {scale}) div sum_depth")
+            F.expr(f"(n_reached * {R0_U}) div sum_depth")
             .cast("long")
             .alias("closeness_q"),
             F.col("harmonic_q").cast("long").alias("harmonic_q"),
@@ -732,7 +739,6 @@ def landmark_betweenness(
     nodes: DataFrame,
     n_landmarks: int = 8,
     max_depth: int = 3,
-    scale: int = 1_000_000,
 ) -> DataFrame:
     """Landmark-sampled betweenness centrality — Brandes (2001)
     dependency accumulation from a bounded deterministic source sample
@@ -745,7 +751,7 @@ def landmark_betweenness(
     sigma over depth-(d-1) neighbors — one co-partitioned join + agg
     per level), (3) dependency accumulation BACKWARD over the
     shortest-path DAG: delta(v) = sum over depth-(d+1) successors w of
-    sigma_v * (scale + delta(w)) div sigma_w — the integer-quantized
+    sigma_v * (R0_U + delta(w)) div sigma_w — the integer-quantized
     form of Brandes' (sigma_v/sigma_w)(1+delta(w)); each term is an
     exact integer so sums are order-free and the whole estimator sits
     under the DuckDB value-hash gate. betweenness_q(v) = sum over
@@ -836,7 +842,7 @@ def landmark_betweenness(
         else:
             j = j.withColumn("dw", F.lit(0).cast("long"))
         delta = (
-            j.withColumn("term", F.expr(f"(sv * ({scale} + dw)) div sw"))
+            j.withColumn("term", F.expr(f"(sv * ({R0_U} + dw)) div sw"))
             .groupBy("origin_uuid", "uuid")
             .agg(F.sum("term").alias("delta"))
             .localCheckpoint(eager=False)
@@ -984,8 +990,6 @@ def predicate_stats(triples: DataFrame) -> DataFrame:
 def personalized_pagerank(
     triples: DataFrame,
     seed_prefix: str = "A",
-    iters: int = 3,
-    damp_pct: int = DAMP_PCT,
 ) -> DataFrame:
     """Personalized PageRank from a seed set — the graph-proximity
     retrieval feature: all teleport mass returns to the SEEDS, so ranks
@@ -1024,7 +1028,7 @@ def personalized_pagerank(
     seeds = verts.where(F.col("name").startswith(seed_prefix))
     ns = seeds.groupBy("group_id").agg(F.count(F.lit(1)).alias("n_s"))
     outdeg = e.groupBy("group_id", "src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base_u = (R0_U * (100 - damp_pct)) // 100
+    base_u = (R0_U * (100 - DAMP_PCT)) // 100
     tele = (
         seeds.join(ns, "group_id")
         .select("group_id", "name", F.expr(f"{base_u}L div n_s").alias("tele_u"))
@@ -1033,7 +1037,7 @@ def personalized_pagerank(
     r = seeds.join(ns, "group_id").select(
         "group_id", "name", F.expr(f"{R0_U}L div n_s").alias("ppr_u")
     )
-    for _ in range(iters):
+    for _ in range(PPR_ITERS):
         contrib = (
             e.join(outdeg, ["group_id", "src"])
             .join(
@@ -1049,8 +1053,8 @@ def personalized_pagerank(
                 "group_id",
                 "name",
                 F.expr(
-                    f"coalesce(tele_u, 0L)"
-                    f" + ({damp_pct}L * coalesce(s, 0L)) div 100"
+                    "coalesce(tele_u, 0L)"
+                    f" + ({DAMP_PCT}L * coalesce(s, 0L)) div 100"
                 ).alias("ppr_u"),
             )
             .where(F.col("ppr_u") > 0)
@@ -1067,7 +1071,7 @@ def personalized_pagerank(
     )
 
 
-def hits(triples: DataFrame, iters: int = 2, scale: int = 1_000_000) -> DataFrame:
+def hits(triples: DataFrame, iters: int = 2) -> DataFrame:
     """Kleinberg HITS hubs & authorities over the directed canonical
     graph (Kleinberg 1999, "Authoritative sources in a hyperlinked
     environment") — the classic complement to PageRank for KG
@@ -1111,17 +1115,17 @@ def hits(triples: DataFrame, iters: int = 2, scale: int = 1_000_000) -> DataFram
 
     def _normalize(raw: DataFrame, col: str) -> DataFrame:
         mx = raw.groupBy("group_id").agg(
-            F.expr(f"greatest(max(raw_u) div {scale}, 1L)").alias("sc")
+            F.expr(f"greatest(max(raw_u) div {R0_U}, 1L)").alias("sc")
         )
         return raw.join(mx, "group_id").select(
             "group_id", "name", F.expr("raw_u div sc").alias(col)
         )
 
     a = verts.select(
-        "group_id", "name", F.lit(scale).cast("long").alias("auth_u")
+        "group_id", "name", F.lit(R0_U).cast("long").alias("auth_u")
     )
     h = verts.select(
-        "group_id", "name", F.lit(scale).cast("long").alias("hub_u")
+        "group_id", "name", F.lit(R0_U).cast("long").alias("hub_u")
     )
     for _ in range(iters):
         # authorities from the PREVIOUS hubs of in-neighbors ...
@@ -1239,7 +1243,7 @@ def weighted_sssp(
     )
 
 
-def ra_link_prediction(triples: DataFrame, scale: int = 1_000_000) -> DataFrame:
+def ra_link_prediction(triples: DataFrame) -> DataFrame:
     """Resource-allocation link-prediction index (Zhou, Lu & Zhang 2009)
     — the degree-weighted upgrade to link_prediction's raw
     common-neighbor/Jaccard features: each common neighbor z
@@ -1247,7 +1251,7 @@ def ra_link_prediction(triples: DataFrame, scale: int = 1_000_000) -> DataFrame:
     vertices outranks overlap through hubs. RA is the strongest of the
     classic local indices on most benchmarks (it out-discriminates
     Adamic-Adar by penalizing hubs linearly instead of
-    logarithmically) and stays integer-exact as scale div deg(z).
+    logarithmically) and stays integer-exact as R0_U div deg(z).
 
     Same plan family as link_prediction: wedge enumeration at the
     shared vertex — but the shared vertex's degree joins BEFORE the
@@ -1282,7 +1286,7 @@ def ra_link_prediction(triples: DataFrame, scale: int = 1_000_000) -> DataFrame:
         )
         .agg(
             F.count(F.lit(1)).alias("common"),
-            F.sum(F.expr(f"{scale}L div deg")).alias("ra_u"),
+            F.sum(F.expr(f"{R0_U}L div deg")).alias("ra_u"),
         )
     )
     return pairs.join(und, ["group_id", "a", "b"], "left_anti").select(
@@ -1685,13 +1689,12 @@ def graph_shape_stats(triples: DataFrame) -> DataFrame:
 def neighbor_sample(
     triples: DataFrame,
     seed_mod: int = 5,
-    fanout: tuple[int, int] = (4, 3),
 ) -> DataFrame:
     """GraphSAGE-style bounded neighbor sampling (Hamilton et al. 2017)
     — the distributed GNN-minibatch export. Every ~1/seed_mod-th vertex
     (by hash, so the seed set is a reproducible sample, not a driver
     list) fans out two hops over the UNDIRECTED canonical graph with
-    per-hop fanouts; the 'random' pick is a per-(seed, frontier,
+    per-hop fanouts NS_FANOUT; the 'random' pick is a per-(seed, frontier,
     neighbor) md5 rank, so the sampled block is identical on every
     rerun, on every engine, at any parallelism — resumable minibatch
     generation at crawl scale.
@@ -1701,7 +1704,7 @@ def neighbor_sample(
     top-k window is bounded by DEGREE of that node only (never a global
     sort), and output size is seeds * f1 * (1 + f2) by construction —
     the sampler, not the graph, bounds the work."""
-    f1, f2 = fanout
+    f1, f2 = NS_FANOUT
     und = (
         triples.select(
             "group_id", F.col("subj").alias("src"), F.col("obj").alias("dst")
@@ -1765,9 +1768,7 @@ def neighbor_sample(
     )
 
 
-def katz_centrality(
-    triples: DataFrame, iters: int = 3, beta_den: int = 8, scale: int = 1_000_000
-) -> DataFrame:
+def katz_centrality(triples: DataFrame) -> DataFrame:
     """Katz centrality in exact integer arithmetic: the walk-counting
     entity-importance measure that, unlike PageRank, does not divide a
     node's influence by its out-degree — a prolific hub passes its full
@@ -1775,11 +1776,11 @@ def katz_centrality(
     works in a web-crawl KG (a page mentioning 50 entities is evidence
     for all 50, not 1/50th each).
 
-    Recurrence (fixed iters, per-step attenuation):
-        x_0(v)   = scale
-        x_k+1(v) = scale + sum_{u->v} (x_k(u) div beta_den)
+    Recurrence (KATZ_ITERS steps, per-step attenuation):
+        x_0(v)   = R0_U
+        x_k+1(v) = R0_U + sum_{u->v} (x_k(u) div KATZ_BETA_DEN)
     Dividing BEFORE the sum keeps every intermediate bounded by
-    scale * (1 + indeg_max/beta_den)^k for fixed k (no factorial path
+    R0_U * (1 + indeg_max/KATZ_BETA_DEN)^k for fixed k (no factorial path
     blowup) and makes the integer recurrence identical in Spark `div`
     and DuckDB `//`.
 
@@ -1802,22 +1803,22 @@ def katz_centrality(
         .unionByName(e.select("group_id", F.col("dst").alias("name")))
         .distinct()
     )
-    x = verts.withColumn("x_u", F.lit(scale).cast("long"))
-    for _ in range(iters):
+    x = verts.withColumn("x_u", F.lit(R0_U).cast("long"))
+    for _ in range(KATZ_ITERS):
         contrib = (
             e.join(
                 x.select("group_id", F.col("name").alias("src"), "x_u"),
                 ["group_id", "src"],
             )
             .groupBy("group_id", F.col("dst").alias("name"))
-            .agg(F.sum(F.expr(f"x_u div {beta_den}")).alias("s"))
+            .agg(F.sum(F.expr(f"x_u div {KATZ_BETA_DEN}")).alias("s"))
         )
         x = (
             verts.join(contrib, ["group_id", "name"], "left")
             .select(
                 "group_id",
                 "name",
-                (F.lit(scale) + F.coalesce("s", F.lit(0))).cast("long").alias("x_u"),
+                (F.lit(R0_U) + F.coalesce("s", F.lit(0))).cast("long").alias("x_u"),
             )
             .localCheckpoint(eager=True)
         )

@@ -88,7 +88,7 @@ def cross_encoder_rank(
     )
 
 
-def sql_cross_encoder(source_sql: str, queries_values: str, k: int = 10) -> str:
+def sql_cross_encoder(source_sql: str, queries_values: str) -> str:
     """DuckDB twin of cross_encoder_rank over any (doc, text) source."""
     return f"""
 cd AS (

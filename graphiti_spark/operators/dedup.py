@@ -44,13 +44,18 @@ _A = _RNG.randint(1, _P, size=N_HASHES).astype(np.int64)
 _B = _RNG.randint(0, _P, size=N_HASHES).astype(np.int64)
 
 SIMHASH_BITS = 64
+# Shared by the Spark operators, their DuckDB twins (sql_*) and the
+# single-process twins below.
+SHINGLE_N = 3  # words per shingle
+MINHASH_THRESHOLD = 0.5  # verified Jaccard gate
+MINHASH_BUCKET_CAP = 1000  # band-bucket population cap (boilerplate guard)
 
 _TOKS = "regexp_extract_all(lower(text), '[a-z0-9]+', 0)"
 _SHINGLES = (
     "CASE WHEN size(_toks) = 0 THEN array()"
-    " WHEN size(_toks) < 3 THEN array(concat_ws(' ', _toks))"
-    " ELSE array_distinct(transform(sequence(0, size(_toks) - 3),"
-    " i -> concat_ws(' ', slice(_toks, i + 1, 3)))) END"
+    f" WHEN size(_toks) < {SHINGLE_N} THEN array(concat_ws(' ', _toks))"
+    f" ELSE array_distinct(transform(sequence(0, size(_toks) - {SHINGLE_N}),"
+    f" i -> concat_ws(' ', slice(_toks, i + 1, {SHINGLE_N})))) END"
 )
 # first / second 8 hex chars of md5 as independent 32-bit hashes —
 # reproducible in DuckDB as ('0x' || substr(md5(x), ...))::BIGINT
@@ -99,14 +104,15 @@ def minhash_bands(docs: DataFrame) -> DataFrame:
     )
 
 
-def minhash_candidates(docs: DataFrame, max_bucket: int = 1000) -> DataFrame:
+def minhash_candidates(docs: DataFrame) -> DataFrame:
     """Candidate near-dup pairs: same (band, bkey); buckets larger than
-    max_bucket dropped (boilerplate guard — the quadratic blowup cap)."""
+    MINHASH_BUCKET_CAP dropped (boilerplate guard — the quadratic blowup
+    cap)."""
     bands = minhash_bands(docs)
     ok = (
         bands.groupBy("band", "bkey")
         .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") <= max_bucket)
+        .where(F.col("n") <= MINHASH_BUCKET_CAP)
         .select("band", "bkey")
     )
     b = bands.join(ok, ["band", "bkey"])
@@ -123,11 +129,12 @@ def minhash_candidates(docs: DataFrame, max_bucket: int = 1000) -> DataFrame:
     )
 
 
-def minhash_dedup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Verified near-dup pairs: LSH candidates -> exact Jaccard gate via a
-    skinny (doc_id, shingle) join restricted to the candidate list —
-    never an all-pairs comparison, never full text through the shuffle."""
-    thr_u = int(threshold * 1_000_000)
+def minhash_dedup_pairs(docs: DataFrame) -> DataFrame:
+    """Verified near-dup pairs: LSH candidates -> exact Jaccard gate
+    (>= MINHASH_THRESHOLD) via a skinny (doc_id, shingle) join restricted
+    to the candidate list — never an all-pairs comparison, never full
+    text through the shuffle."""
+    thr_u = int(MINHASH_THRESHOLD * 1_000_000)
     sh = doc_shingle_rows(docs)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     cands = minhash_candidates(docs)
@@ -261,18 +268,17 @@ dtok AS (
 sh AS (
   SELECT doc_id, unnest(
     CASE WHEN len(toks) = 0 THEN []
-         WHEN len(toks) < 3 THEN [array_to_string(toks, ' ')]
-         ELSE list_distinct(list_transform(range(1, len(toks) - 1),
-              i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
+         WHEN len(toks) < {SHINGLE_N} THEN [array_to_string(toks, ' ')]
+         ELSE list_distinct(list_transform(range(1, len(toks) - {SHINGLE_N - 2}),
+              i -> array_to_string(list_slice(toks, i, i + {SHINGLE_N - 1}), ' ')))
     END) AS shingle
   FROM dtok
 ),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY 1)"""
 
 
-def sql_minhash_pairs(source_sql: str, threshold: float = 0.5,
-                      max_bucket: int = 1000) -> str:
-    thr_u = int(threshold * 1_000_000)
+def sql_minhash_pairs(source_sql: str) -> str:
+    thr_u = int(MINHASH_THRESHOLD * 1_000_000)
     consts = ", ".join(
         f"({i}, {int(_A[i])}, {int(_B[i])})" for i in range(N_HASHES)
     )
@@ -291,7 +297,7 @@ bands AS (
          string_agg(CAST(v AS VARCHAR), '|' ORDER BY i) AS bkey
   FROM mh GROUP BY 1, 2
 ),
-ok AS (SELECT band, bkey FROM bands GROUP BY 1, 2 HAVING count(*) <= {max_bucket}),
+ok AS (SELECT band, bkey FROM bands GROUP BY 1, 2 HAVING count(*) <= {MINHASH_BUCKET_CAP}),
 b2 AS (SELECT bands.* FROM bands JOIN ok USING (band, bkey)),
 cands AS (
   SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
@@ -358,9 +364,10 @@ SELECT doc_a, doc_b, hamming FROM pairs WHERE hamming <= {max_hamming}"""
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text: str, n: int = 3) -> set[str]:
+def word_shingles(text: str) -> set[str]:
     import re
 
+    n = SHINGLE_N
     toks = re.findall(r"[a-z0-9]+", text.lower())
     if len(toks) < n:
         return {" ".join(toks)} if toks else set()

@@ -418,14 +418,22 @@ def exact_dup_groups(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc: (doc_id, shingle)."""
+# Near-duplicate pair operators (ngram_jaccard_pairs, containment_pairs);
+# their DuckDB oracles in queries/docs.py read the same constants.
+NEAR_DUP_N = 3  # words per shingle
+NEAR_DUP_TOP = 20  # pairs reported
+# relative document-frequency cap on shingles (the self-join skew guard)
+NEAR_DUP_MAX_DF_FRAC = 0.02
+
+
+def _shingles(docs: DataFrame) -> DataFrame:
+    """Distinct word NEAR_DUP_N-gram shingles per doc: (doc_id, shingle)."""
     toks = F.expr(f"regexp_extract_all(lower(text), '{WORD}', 0)")
     # guard: Spark sequence(1, 0) is the DESCENDING [1, 0], not empty
     sh = F.expr(
         "CASE WHEN size(toks) >= {n} THEN transform(sequence(1, size(toks) - {k}),"
         " i -> concat_ws(' ', slice(toks, i, {n}))) "
-        "ELSE cast(array() AS array<string>) END".format(k=n - 1, n=n)
+        "ELSE cast(array() AS array<string>) END".format(k=NEAR_DUP_N - 1, n=NEAR_DUP_N)
     )
     return (
         docs.select("doc_id", toks.alias("toks"))
@@ -433,14 +441,13 @@ def _shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    docs: DataFrame, n: int = 3, top: int = 20, max_df_frac: float = 0.02
-) -> DataFrame:
-    """Top near-duplicate pairs by word n-gram Jaccard similarity.
+def ngram_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """Top NEAR_DUP_TOP near-duplicate pairs by word n-gram Jaccard
+    similarity.
 
-    Plan: shingle -> (drop shingles seen in more than max_df_frac of the
-    corpus: the skew guard — a shingle with document frequency k
-    contributes k(k-1)/2 rows to the self-join, so boilerplate shingles
+    Plan: shingle -> (drop shingles seen in more than
+    NEAR_DUP_MAX_DF_FRAC of the corpus: the skew guard — a shingle with
+    document frequency k contributes k(k-1)/2 rows to the self-join, so boilerplate shingles
     blow it up quadratically at ANY scale; a RELATIVE cap keeps the join
     linear in corpus size where a fixed absolute cap silently degrades to
     a no-op as the corpus grows) -> self-join on shingle -> count shared
@@ -452,9 +459,9 @@ def ngram_jaccard_pairs(
     # instead of n-word strings — the same fixed-width-key discipline as
     # boilerplate_dedup/substring_dup (collisions are 2^-64-level noise
     # and the oracle compares final pair counts, not keys)
-    sh = _shingles(docs, n).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    sh = _shingles(docs).select("doc_id", F.xxhash64("shingle").alias("shingle"))
     nd = docs.select(F.countDistinct("doc_id").alias("nd"))
-    thr = F.expr(f"greatest(2L, cast(floor(nd * {max_df_frac}) as bigint))")
+    thr = F.expr(f"greatest(2L, cast(floor(nd * {NEAR_DUP_MAX_DF_FRAC}) as bigint))")
     df_ok = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -484,7 +491,7 @@ def ngram_jaccard_pairs(
         .withColumn("jaccard_u", F.expr("(shared * 1000000L) div (n_a + n_b - shared)"))
         .select("doc_a", "doc_b", "shared", "jaccard_u")
         .orderBy(F.desc("jaccard_u"), "doc_a", "doc_b")
-        .limit(top)
+        .limit(NEAR_DUP_TOP)
     )
     return out
 
@@ -498,18 +505,12 @@ PII_PHONE = r"\b555-[0-9]{3}-[0-9]{4}\b"
 PII_IP = r"\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b"
 
 
-def boilerplate_dedup(
-    paras: DataFrame,
-    url_col: str = "url",
-    pos_col: str = "chunk_idx",
-    text_col: str = "content",
-    min_urls: int = 2,
-) -> DataFrame:
+def boilerplate_dedup(paras: DataFrame) -> DataFrame:
     """C4-style cross-document boilerplate removal (Raffel et al. 2020
     §2.2: spans occurring more than once in the corpus are dropped;
     CCNet applies the same rule per paragraph). Input is a paragraph
-    table (url, position, text); a paragraph whose exact text appears on
-    >= `min_urls` distinct urls is removed from EVERY document.
+    table (url, chunk_idx, content); a paragraph whose exact text appears
+    on >= 2 distinct urls is removed from EVERY document.
 
     Plan (the shape that holds at crawl scale): hash each paragraph to a
     32-hex digest FIRST, so the corpus-wide frequency shuffle and the
@@ -518,12 +519,10 @@ def boilerplate_dedup(
     Returns per url: n_paras, n_kept, md5 of the retained text (the
     deterministic stand-in for rewriting the document)."""
     p = paras.select(
-        F.col(url_col).alias("url"),
-        F.col(pos_col).alias("pos"),
-        F.col(text_col).alias("para"),
+        "url", F.col("chunk_idx").alias("pos"), F.col("content").alias("para")
     ).withColumn("ph", F.md5("para"))
     freq = p.groupBy("ph").agg(F.count_distinct("url").alias("n_urls"))
-    boiler = freq.where(F.col("n_urls") >= min_urls).select(
+    boiler = freq.where(F.col("n_urls") >= 2).select(
         "ph", F.lit(1).alias("is_boiler")
     )
     flagged = p.join(boiler, "ph", "left")  # boiler is tiny vs corpus; AQE broadcasts
@@ -546,7 +545,7 @@ def boilerplate_dedup(
     )
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def pii_scrub(docs: DataFrame) -> DataFrame:
     """PII detection + redaction (the CCNet/Dolma-style scrub pass every
     web-text pipeline runs before training): emails, NANP-style phone
     numbers and IPv4 literals are counted and replaced by typed
@@ -555,7 +554,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle. Patterns are written in the Java/RE2 common subset so the
     DuckDB oracle runs them verbatim. Returns (doc_id, n_emails,
     n_phones, n_ips, redacted_md5)."""
-    t = F.col(text_col)
+    t = F.col("text")
     red = F.regexp_replace(t, PII_EMAIL, "<EMAIL>")
     red = F.regexp_replace(red, PII_PHONE, "<PHONE>")
     red = F.regexp_replace(red, PII_IP, "<IP>")
@@ -782,11 +781,10 @@ _MIX_HASH = (
 )
 
 
-def mix_sample(
-    docs: DataFrame,
-    rates_u: dict[str, int],
-    default_rate_u: int = 100_000,
-) -> DataFrame:
+MIX_DEFAULT_RATE_U = 100_000  # keep rate of a stratum missing from rates_u
+
+
+def mix_sample(docs: DataFrame, rates_u: dict[str, int]) -> DataFrame:
     """Stratified data-mixing sample — the deterministic per-stratum
     downsampling step of a training-data mixing recipe (e.g. keep 100% of
     English, 50% of the mid-resource languages, 25% of zh). The keep
@@ -805,7 +803,7 @@ def mix_sample(
         F.expr(_MIX_HASH).cast("long").alias("hash_u"),
         F.expr(
             f"CASE WHEN ({_MIX_HASH}) <"
-            f" (CASE {branches} ELSE {int(default_rate_u)}L END)"
+            f" (CASE {branches} ELSE {MIX_DEFAULT_RATE_U}L END)"
             " THEN 1 ELSE 0 END"
         )
         .cast("long")
@@ -897,7 +895,10 @@ def bpe_merges(docs: DataFrame, n_merges: int = 8) -> DataFrame:
     )
 
 
-def bpe_pair_counts(docs: DataFrame, top_n: int = 20) -> DataFrame:
+BPE_TOP_N = 20
+
+
+def bpe_pair_counts(docs: DataFrame) -> DataFrame:
     """The inner loop of distributed BPE tokenizer training (Sennrich et
     al. 2016): corpus-weighted adjacent-symbol-pair frequencies. The
     crucial scale move is counting over the DISTINCT-WORD frequency
@@ -905,7 +906,7 @@ def bpe_pair_counts(docs: DataFrame, top_n: int = 20) -> DataFrame:
     any per-character work, so the expensive pair explosion runs on
     vocab-sized data regardless of corpus size; production tokenizer
     trainers distribute exactly this way, re-running the count after
-    each merge. Returns the top_n pairs with deterministic rank (the
+    each merge. Returns the BPE_TOP_N pairs with deterministic rank (the
     rank-1 row is the next BPE merge)."""
     words = docs.select(
         F.explode(
@@ -924,10 +925,10 @@ def bpe_pair_counts(docs: DataFrame, top_n: int = 20) -> DataFrame:
     )
     agg = pairs.groupBy("pair").agg(F.sum("cnt").alias("total"))
     # top-k via orderBy().limit() -> TakeOrderedAndProject (partition-
-    # local heaps + tiny driver merge), then rank the <= top_n survivors
+    # local heaps + tiny driver merge), then rank the <= BPE_TOP_N survivors
     # in one bounded collect_list — never a global single-partition
     # window sort over the pair table
-    top = agg.orderBy(F.col("total").desc(), "pair").limit(top_n)
+    top = agg.orderBy(F.col("total").desc(), "pair").limit(BPE_TOP_N)
     return (
         top.agg(
             F.expr(
@@ -945,15 +946,17 @@ def bpe_pair_counts(docs: DataFrame, top_n: int = 20) -> DataFrame:
 
 WINNOW_K = 4  # tokens per gram
 WINNOW_W = 5  # grams per window
+WINNOW_MIN_SHARED = 3  # shared fingerprints that make a candidate pair
+# fingerprint document-frequency cap, micro-units of the corpus
+WINNOW_MAX_DF_FRAC_U = 20_000
 
 
-def winnow_fingerprints(
-    docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken
     2003 — the MOSS local fingerprinting algorithm): hash every k-token
-    gram, slide a w-gram window, keep each window's MINIMUM hash. The
-    selected set is ~2/(w+1) of all gram hashes yet GUARANTEES any
+    gram (k = WINNOW_K), slide a w-gram window (w = WINNOW_W), keep each
+    window's MINIMUM hash. The selected set is ~2/(w+1) of all gram
+    hashes yet GUARANTEES any
     shared token run of length >= w + k - 1 leaves at least one common
     fingerprint — position-robust local dedup that exact fingerprints
     and doc-global MinHash both miss.
@@ -965,8 +968,9 @@ def winnow_fingerprints(
     toks = F.expr(f"regexp_extract_all(lower(text), '{WORD}', 0)")
     base = docs.select("doc_id", toks.alias("toks")).select(
         "doc_id",
-        F.expr(_winnow_prep(k)).alias("hashes"),
+        F.expr(_winnow_prep()).alias("hashes"),
     )
+    w = WINNOW_W
     return (
         base.withColumn("n_g", F.size("hashes"))
         .select(
@@ -985,9 +989,10 @@ def winnow_fingerprints(
     )
 
 
-def _winnow_prep(k: int) -> str:
+def _winnow_prep() -> str:
     # token array -> k-gram hash array (Spark sequence(1, 0) is the
     # DESCENDING [1, 0], not empty — guard short docs explicitly)
+    k = WINNOW_K
     return f"""
     CASE WHEN size(toks) >= {k} THEN
       transform(
@@ -998,20 +1003,14 @@ def _winnow_prep(k: int) -> str:
     """
 
 
-def winnow_pairs(
-    docs: DataFrame,
-    k: int = WINNOW_K,
-    w: int = WINNOW_W,
-    min_shared: int = 3,
-    max_df_frac_u: int = 20_000,
-) -> DataFrame:
+def winnow_pairs(docs: DataFrame) -> DataFrame:
     """Near-dup candidate pairs by shared winnowing fingerprints: docs
-    sharing >= min_shared selected fingerprints, with the winnow-set
-    Jaccard. Fingerprints appearing in more than max_df_frac_u (micro)
-    of the corpus are dropped first — the same relative document-
+    sharing >= WINNOW_MIN_SHARED selected fingerprints, with the winnow-set
+    Jaccard. Fingerprints appearing in more than WINNOW_MAX_DF_FRAC_U
+    (micro) of the corpus are dropped first — the same relative document-
     frequency skew guard as the n-gram dedup (a corpus-wide boilerplate
     fingerprint would otherwise quadratically explode the self-join)."""
-    fps = winnow_fingerprints(docs, k, w)
+    fps = winnow_fingerprints(docs)
     n_docs = docs.select(F.count(F.lit(1)).alias("nd"))
     ok = (
         fps.groupBy("fp")
@@ -1019,7 +1018,7 @@ def winnow_pairs(
         .join(F.broadcast(n_docs))
         .where(
             F.col("df")
-            <= F.greatest(F.lit(2), F.expr(f"nd * {max_df_frac_u} div 1000000"))
+            <= F.greatest(F.lit(2), F.expr(f"nd * {WINNOW_MAX_DF_FRAC_U} div 1000000"))
         )
         .select("fp")
     )
@@ -1033,7 +1032,7 @@ def winnow_pairs(
             F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
         )
         .agg(F.count(F.lit(1)).alias("shared"))
-        .where(F.col("shared") >= min_shared)
+        .where(F.col("shared") >= WINNOW_MIN_SHARED)
     )
     return (
         shared.join(
@@ -1058,12 +1057,7 @@ def winnow_pairs(
 CURATION_RULES = ("r_word_count", "r_mean_word_len", "r_symbol", "r_alpha")
 
 
-def curation_decision(
-    docs: DataFrame,
-    rates_u: dict[str, int],
-    default_rate_u: int = 100_000,
-    quality_rules: tuple[str, ...] = CURATION_RULES,
-) -> DataFrame:
+def curation_decision(docs: DataFrame, rates_u: dict[str, int]) -> DataFrame:
     """End-to-end curation decision per document, composing the standard
     stages in production order: exact dedup -> Gopher quality ->
     language-ID confidence -> stratified mixing. Emits keep plus the
@@ -1071,10 +1065,10 @@ def curation_decision(
     run commits alongside the kept corpus (every drop is attributable,
     achieved rates are queryable per stage).
 
-    `quality_rules` selects which Gopher flags gate the run — thresholds
+    CURATION_RULES selects which Gopher flags gate the run — thresholds
     and rule sets are corpus-calibrated config in any real curation
-    (Rae et al. tune per source); the default takes the four content
-    rules. The language stage drops only docs whose guessed language is
+    (Rae et al. tune per source); here the four content rules. The
+    language stage drops only docs whose guessed language is
     undetermined ('und') — the CCNet low-confidence rule — so declared
     strata still reach the mixing stage.
 
@@ -1085,10 +1079,10 @@ def curation_decision(
     fp = fingerprints(docs).select("doc_id", "fingerprint")
     groups = exact_dup_groups(docs).select("fingerprint", "canonical_doc_id")
     dd = fp.join(groups, "fingerprint").select("doc_id", "canonical_doc_id")
-    q_keep = F.expr(" * ".join(quality_rules))
+    q_keep = F.expr(" * ".join(CURATION_RULES))
     g = gopher_rules(docs).select("doc_id", q_keep.alias("q_keep"))
     lid = lang_id(docs).select("doc_id", "lang_guess")
-    m = mix_sample(docs, rates_u, default_rate_u).select(
+    m = mix_sample(docs, rates_u).select(
         "doc_id", F.col("keep").alias("mix_keep")
     )
     j = dd.join(g, "doc_id").join(lid, "doc_id").join(m, "doc_id")
@@ -1176,8 +1170,12 @@ def pack_blocks(docs: DataFrame, block_tokens: int = 2048) -> DataFrame:
     )
 
 
-def substring_dup_stats(docs: DataFrame, k: int = 10) -> DataFrame:
+SUBSTRING_K = 10  # words per gram
+
+
+def substring_dup_stats(docs: DataFrame) -> DataFrame:
     """Exact-substring duplication per document at word-k-gram granularity
+    (k = SUBSTRING_K)
     (the fixed-window form of Lee et al. 2022's suffix-array exact
     substring dedup — the standard LM-training-data pass).
 
@@ -1187,7 +1185,7 @@ def substring_dup_stats(docs: DataFrame, k: int = 10) -> DataFrame:
     same fixed-width-key discipline as boilerplate_dedup), one groupBy on
     the hash + membership join back; short docs (< k words) keep a row
     with zero grams via the left join from the documents base."""
-    grams = _word_kgram_hashes(docs, k)
+    grams = _word_kgram_hashes(docs, SUBSTRING_K)
     freq = grams.groupBy("gh").agg(F.count_distinct("doc_id").alias("n_docs"))
     flagged = grams.join(
         freq.where(F.col("n_docs") >= 2).select("gh", F.lit(1).alias("dup")),
@@ -1216,13 +1214,12 @@ def substring_dup_stats(docs: DataFrame, k: int = 10) -> DataFrame:
 RAG_WINDOW = 64  # whitespace tokens per chunk
 RAG_STRIDE = 48  # stride (=> 16-token overlap between neighbors)
 DSIR_BUCKETS = 4096  # hashed-unigram feature space (Xie et al. 2023 use 10^4)
+DSIR_TARGET_LANG = "en"  # the trusted slice the weights point toward
 
 
-def rag_chunks(
-    docs: DataFrame, window: int = RAG_WINDOW, stride: int = RAG_STRIDE
-) -> DataFrame:
+def rag_chunks(docs: DataFrame) -> DataFrame:
     """Sliding-window chunk spans for RAG / training-window export:
-    fixed `window`-token chunks every `stride` tokens (overlap =
+    fixed RAG_WINDOW-token chunks every RAG_STRIDE tokens (overlap =
     window - stride), last chunk clipped to the document end. Emits the
     SPAN TABLE (doc_id, chunk_idx, start_tok, end_tok, n_tok) rather than
     materialized text — at 100 TB the spans are the cheap, losslessly
@@ -1232,6 +1229,7 @@ def rag_chunks(
     explode(sequence(...)) — per-doc fan-out is n_chunks (bounded by
     doc length / stride), no shuffle at all.
     """
+    window, stride = RAG_WINDOW, RAG_STRIDE
     n_tok = F.regexp_count("text", F.lit(WS_TOKEN))
     base = docs.select(
         "doc_id", n_tok.cast("long").alias("n_tok"),
@@ -1258,14 +1256,12 @@ def rag_chunks(
     )
 
 
-def dsir_weights(
-    docs: DataFrame, target_lang: str = "en", buckets: int = DSIR_BUCKETS
-) -> DataFrame:
+def dsir_weights(docs: DataFrame) -> DataFrame:
     """DSIR-style importance weights (Xie et al. 2023, "Data Selection
     for Language Models via Importance Resampling"): score every document
     by how target-like its hashed-unigram distribution is, where the
     target is a trusted slice of the corpus itself (here: the
-    `target_lang` documents, the stand-in for Wikipedia/books in the
+    DSIR_TARGET_LANG documents, the stand-in for Wikipedia/books in the
     paper). Deterministic integer quantization replaces the float
     log-ratio sum: each token contributes the micro-unit ratio
 
@@ -1292,10 +1288,10 @@ def dsir_weights(
     ).withColumn(
         "bucket",
         F.expr(
-            f"cast(conv(substr(md5(tok), 1, 8), 16, 10) as bigint) % {buckets}"
+            f"cast(conv(substr(md5(tok), 1, 8), 16, 10) as bigint) % {DSIR_BUCKETS}"
         ),
     )
-    is_tgt = (F.col("lang") == target_lang).cast("long")
+    is_tgt = (F.col("lang") == DSIR_TARGET_LANG).cast("long")
     totals = toks.agg(
         F.count(F.lit(1)).alias("n_raw"), F.sum(is_tgt).alias("n_tgt")
     )
@@ -1306,8 +1302,8 @@ def dsir_weights(
         "bucket",
         F.expr(
             f"(1000000L * (1000000L * (c_tgt + 1)"
-            f" div (n_tgt + {buckets})))"
-            f" div greatest(1000000L * (c_raw + 1) div (n_raw + {buckets}), 1L)"
+            f" div (n_tgt + {DSIR_BUCKETS})))"
+            f" div greatest(1000000L * (c_raw + 1) div (n_raw + {DSIR_BUCKETS}), 1L)"
         ).alias("ratio_u"),
     )
     return (
@@ -1533,10 +1529,13 @@ def cluster_topics(
     )
 
 
-def source_drift(docs: DataFrame, vocab_k: int = 200) -> DataFrame:
+DRIFT_VOCAB_K = 200  # global terms the drift score covers
+
+
+def source_drift(docs: DataFrame) -> DataFrame:
     """Per-source distribution-shift audit: a chi-square-style drift
     score of each source's unigram distribution against the global
-    corpus distribution over the top-`vocab_k` global terms — the
+    corpus distribution over the top-DRIFT_VOCAB_K global terms — the
     mixture-QA gate a training-data pipeline runs before/after adding a
     new crawl or domain slice (detects a source whose token mix diverges
     from the corpus it is being blended into).
@@ -1560,7 +1559,7 @@ def source_drift(docs: DataFrame, vocab_k: int = 200) -> DataFrame:
     )
     st = toks.groupBy("source", "tok").agg(F.count(F.lit(1)).alias("o"))
     gt = st.groupBy("tok").agg(F.sum("o").alias("g"))
-    vocab = gt.orderBy(F.desc("g"), F.asc("tok")).limit(vocab_k)
+    vocab = gt.orderBy(F.desc("g"), F.asc("tok")).limit(DRIFT_VOCAB_K)
     g_total = vocab.agg(F.sum("g").alias("gt"))  # one-row scalar
     s_tot = (
         st.join(vocab.select("tok"), "tok", "left_semi")
@@ -1713,7 +1712,7 @@ def rake_keyphrases(docs: DataFrame, top_k: int = 3) -> DataFrame:
 
 
 def containment_pairs(
-    docs: DataFrame, n: int = 3, top: int = 20, max_df_frac: float = 0.02
+    docs: DataFrame, max_df_frac: float = NEAR_DUP_MAX_DF_FRAC
 ) -> DataFrame:
     """Top ASYMMETRIC near-duplicate pairs by shingle containment
     C(A,B) = |A∩B| / min(|A|,|B|) (Broder 1997's containment, the
@@ -1727,7 +1726,7 @@ def containment_pairs(
     TakeOrderedAndProject. Containment is computed over the df-kept
     shingle space on both engines identically. `contained` names the
     smaller-side doc (tie -> doc_a)."""
-    sh = _shingles(docs, n).select("doc_id", F.xxhash64("shingle").alias("shingle"))
+    sh = _shingles(docs).select("doc_id", F.xxhash64("shingle").alias("shingle"))
     nd = docs.select(F.countDistinct("doc_id").alias("nd"))
     thr = F.expr(f"greatest(2L, cast(floor(nd * {max_df_frac}) as bigint))")
     df_ok = (
@@ -1763,7 +1762,7 @@ def containment_pairs(
         )
         .select("doc_a", "doc_b", "shared", "containment_u", "contained")
         .orderBy(F.desc("containment_u"), "doc_a", "doc_b")
-        .limit(top)
+        .limit(NEAR_DUP_TOP)
     )
 
 
@@ -1772,20 +1771,15 @@ TEXTRANK_ITERS = 2
 TEXTRANK_TOP = 2
 
 
-def textrank_sentences(
-    docs: DataFrame,
-    iters: int = TEXTRANK_ITERS,
-    top_k: int = TEXTRANK_TOP,
-    damp_pct: int = TEXTRANK_DAMP,
-) -> DataFrame:
+def textrank_sentences(docs: DataFrame, top_k: int = TEXTRANK_TOP) -> DataFrame:
     """TextRank extractive summarization (Mihalcea & Tarau 2004): per
     document, sentences are nodes, edge weight = number of shared
     distinct tokens, and a fixed-iteration integer PageRank picks the
-    top-k most central sentences — the classic deterministic
+    top-k most central sentences after TEXTRANK_ITERS iterations — the classic deterministic
     summarization op for building seq2seq training pairs from web text.
 
         r_0(i)   = 1e6
-        r_k+1(i) = (1e6 * (100-damp)) div 100
+        r_k+1(i) = (1e6 * (100-damp)) div 100        (damp = TEXTRANK_DAMP)
                    + damp * sum_j (r_k(j) * w_ij) div W_j div 100
 
     (W_j = total outgoing weight of sentence j; divide inside the sum,
@@ -1841,9 +1835,9 @@ def textrank_sentences(
     )
     wj = pairs.groupBy("doc_id", "j").agg(F.sum("w").alias("wj"))
     pw = pairs.join(wj, ["doc_id", "j"])
-    base = (1_000_000 * (100 - damp_pct)) // 100
+    base = (1_000_000 * (100 - TEXTRANK_DAMP)) // 100
     r = sents.select("doc_id", "sidx", F.lit(1_000_000).cast("long").alias("r_u"))
-    for _ in range(iters):
+    for _ in range(TEXTRANK_ITERS):
         contrib = (
             pw.join(
                 r.select("doc_id", F.col("sidx").alias("j"), "r_u"),
@@ -1858,7 +1852,7 @@ def textrank_sentences(
                 "doc_id",
                 "sidx",
                 F.expr(
-                    f"{base}L + ({damp_pct}L * coalesce(s, 0L)) div 100"
+                    f"{base}L + ({TEXTRANK_DAMP}L * coalesce(s, 0L)) div 100"
                 ).alias("r_u"),
             )
             .localCheckpoint(eager=True)

@@ -22,16 +22,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
+# Shared with the DuckDB oracles in queries/events.py.
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
+SPIKE_RATIO_U = 2_000_000  # daily volume >= 2x the type's mean is a spike
+CONVERSION_TYPE = "purchase"  # last-touch attribution: conversion events
+TOUCH_TYPE = "view"  # ... and the touches credited for them
 
 
 def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/events.parquet")
 
 
-def _session_assign(events: DataFrame, gap_us: int) -> DataFrame:
+def _session_assign(events: DataFrame) -> DataFrame:
     """Per-event session assignment (user_id, event_id, ts, event_type,
-    value_c, session_idx) — the shared lag + running-sum stage behind
+    value_c, session_idx), a new session after a SESSION_GAP_US gap — the shared lag + running-sum stage behind
     sessionize and session_baskets; one shuffle on user_id, both windows
     share the partitioning."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -44,7 +48,7 @@ def _session_assign(events: DataFrame, gap_us: int) -> DataFrame:
         "ts",
         "event_type",
         F.expr("cast(round(value * 100) as long)").alias("value_c"),
-        F.when(ts_us - F.lag(ts_us).over(w) > gap_us, 1)
+        F.when(ts_us - F.lag(ts_us).over(w) > SESSION_GAP_US, 1)
         .otherwise(0)
         .alias("new_sess"),
     )
@@ -58,11 +62,11 @@ def _session_assign(events: DataFrame, gap_us: int) -> DataFrame:
     )
 
 
-def sessionize(events: DataFrame, gap_us: int = SESSION_GAP_US) -> DataFrame:
+def sessionize(events: DataFrame) -> DataFrame:
     """Gap-based sessions per user: a new session starts when the gap to
-    the previous event exceeds `gap_us` (lag + running sum via
+    the previous event exceeds SESSION_GAP_US (lag + running sum via
     _session_assign), then one rollup per session."""
-    sess = _session_assign(events, gap_us)
+    sess = _session_assign(events)
     return sess.groupBy("user_id", "session_idx").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.min("ts").alias("session_start"),
@@ -106,12 +110,11 @@ def funnel(events: DataFrame, steps: list[str]) -> DataFrame:
     return out.withColumn("steps_completed", completed.cast("long"))
 
 
-def last_touch_attribution(
-    events: DataFrame, conversion: str = "purchase", touch: str = "view"
-) -> DataFrame:
+def last_touch_attribution(events: DataFrame) -> DataFrame:
     """As-of join, the classic operator Spark has no native form of: for
-    every conversion event, the user's most recent strictly-earlier
-    touch event (last-touch attribution; DuckDB expresses the same thing
+    every conversion event (CONVERSION_TYPE), the user's most recent
+    strictly-earlier touch event (TOUCH_TYPE) (last-touch attribution;
+    DuckDB expresses the same thing
     with its native ASOF JOIN, which is the oracle).
 
     Spark plan: union-tag both event kinds, ONE window per user ordered
@@ -123,14 +126,14 @@ def last_touch_attribution(
     equal touch timestamps the larger event_id wins, so the pick is
     total. Conversions with no prior touch keep null touch columns."""
     tagged = events.where(
-        F.col("event_type").isin([conversion, touch])
+        F.col("event_type").isin([CONVERSION_TYPE, TOUCH_TYPE])
     ).select(
         "user_id",
         "event_id",
         "ts",
-        (F.col("event_type") == conversion).cast("int").alias("is_conv"),
-        F.when(F.col("event_type") == touch, F.col("ts")).alias("touch_ts"),
-        F.when(F.col("event_type") == touch, F.col("event_id")).alias(
+        (F.col("event_type") == CONVERSION_TYPE).cast("int").alias("is_conv"),
+        F.when(F.col("event_type") == TOUCH_TYPE, F.col("ts")).alias("touch_ts"),
+        F.when(F.col("event_type") == TOUCH_TYPE, F.col("event_id")).alias(
             "touch_id"
         ),
     )
@@ -196,14 +199,14 @@ def retention(events: DataFrame) -> DataFrame:
     )
 
 
-def tumbling_windows(events: DataFrame, unit: str = "hour") -> DataFrame:
-    """Tumbling event-time windows per event_type — the batch form of the
+def tumbling_windows(events: DataFrame) -> DataFrame:
+    """Tumbling 1-hour event-time windows per event_type — the batch form of the
     streaming windowed-count operator (streaming/stateful.py): counts,
     value sum (cents), distinct users per (window, type). date_trunc is
     the epoch-aligned tumbling bucket — identical semantics in the DuckDB
     oracle, and it stays a plain groupBy key (partial-agg friendly)."""
     return events.groupBy(
-        F.date_trunc(unit, "ts").alias("window_start"),
+        F.date_trunc("hour", "ts").alias("window_start"),
         "event_type",
     ).agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -244,7 +247,7 @@ def type_transitions(events: DataFrame) -> DataFrame:
     )
 
 
-def daily_anomalies(events: DataFrame, spike_ratio_u: int = 2_000_000) -> DataFrame:
+def daily_anomalies(events: DataFrame) -> DataFrame:
     """Daily volume anomaly ratios per event type: each (type, day) count
     against the type's mean daily volume, as the integer micro-unit ratio
     ratio_u = 1e6 * n * n_days div total; is_spike flags >= 2x days —
@@ -264,7 +267,7 @@ def daily_anomalies(events: DataFrame, spike_ratio_u: int = 2_000_000) -> DataFr
         "day",
         F.col("n").cast("long").alias("n"),
         F.expr("(1000000L * n * n_days) div total").alias("ratio_u"),
-        (F.expr("(1000000L * n * n_days) div total") >= spike_ratio_u).alias(
+        (F.expr("(1000000L * n * n_days) div total") >= SPIKE_RATIO_U).alias(
             "is_spike"
         ),
     )
@@ -306,9 +309,7 @@ def hopping_windows(
     )
 
 
-def session_baskets(
-    events: DataFrame, gap_us: int = SESSION_GAP_US, scale: int = 1_000_000
-) -> DataFrame:
+def session_baskets(events: DataFrame) -> DataFrame:
     """Market-basket association rules over sessions (the Agrawal-Srikant
     support/confidence/lift mining, sessions as baskets, event types as
     items): for every unordered type pair {a, b} co-occurring in a
@@ -322,7 +323,7 @@ def session_baskets(
     the 1-row session total cross-joins (broadcast by construction, the
     dsir normalizer pattern — no driver collect)."""
     items = (
-        _session_assign(events, gap_us)
+        _session_assign(events)
         .select("user_id", "session_idx", "event_type")
         .distinct()
     )
@@ -356,12 +357,12 @@ def session_baskets(
             F.col("n_ab").cast("long").alias("n_ab"),
             F.col("n_a").cast("long").alias("n_a"),
             F.col("n_b").cast("long").alias("n_b"),
-            F.expr(f"(n_ab * {scale}L) div n_sessions")
+            F.expr("(n_ab * 1000000L) div n_sessions")
             .cast("long")
             .alias("support_u"),
-            F.expr(f"(n_ab * {scale}L) div n_a").cast("long").alias("conf_ab_u"),
-            F.expr(f"(n_ab * {scale}L) div n_b").cast("long").alias("conf_ba_u"),
-            F.expr(f"(n_ab * n_sessions * {scale}L) div (n_a * n_b)")
+            F.expr("(n_ab * 1000000L) div n_a").cast("long").alias("conf_ab_u"),
+            F.expr("(n_ab * 1000000L) div n_b").cast("long").alias("conf_ba_u"),
+            F.expr("(n_ab * n_sessions * 1000000L) div (n_a * n_b)")
             .cast("long")
             .alias("lift_u"),
         )

@@ -224,12 +224,10 @@ def functional_violations(
     )
 
 
-def domain_range_violations(
-    triples: DataFrame, node_labels: DataFrame, ontology=None
-) -> DataFrame:
+def domain_range_violations(triples: DataFrame, node_labels: DataFrame) -> DataFrame:
     """SHACL-lite domain/range validation sweep (the sh:class constraint
     of W3C SHACL, the standard KG quality gate): every canonical edge is
-    checked against the ontology's declared predicate roles — the
+    checked against the default ontology's declared predicate roles — the
     subject must carry the domain label, the object the range label
     (reference analogue: the typed entity_types the extraction prompts
     enforce upstream; this operator audits them downstream, where bulk
@@ -247,14 +245,13 @@ def domain_range_violations(
     agg on (group, pred). Predicate-vocab-sized output."""
     from ..ontology import DEFAULT
 
-    ont = ontology or DEFAULT
     e = triples.select(
         "group_id",
         "subj",
         "pred",
         "obj",
-        F.expr(ont.role_sql(0)).alias("subj_req"),
-        F.expr(ont.role_sql(1)).alias("obj_req"),
+        F.expr(DEFAULT.role_sql(0)).alias("subj_req"),
+        F.expr(DEFAULT.role_sql(1)).alias("obj_req"),
     )
     s = node_labels.select(
         "group_id", F.col("name").alias("subj"), F.col("labels").alias("s_labels")

@@ -132,14 +132,13 @@ def edge_dup_candidates(
     edges: DataFrame,
     emb: DataFrame,
     min_score_q: int = 400_000,
-    ontology=None,
 ) -> DataFrame:
     """J4 similarity verify (search_utils.py:702-740 +
     edge_operations.py:151-192): candidate duplicate edge pairs = edges on
     the SAME canonical (group, src, dst) pair whose quantized fact
     embeddings score >= min_score_q by exact integer dot product. Each
     candidate carries the deterministic duplicate judgment:
-    is_dup = same ontology synonym class AND not an opposite-polarity
+    is_dup = same default-ontology synonym class AND not an opposite-polarity
     contradiction pair (contradicting facts are the invalidation path,
     X10, never merge targets).
 
@@ -152,9 +151,8 @@ def edge_dup_candidates(
     """
     from ..ontology import DEFAULT
 
-    ontology = ontology or DEFAULT
-    cls = ontology.synonym_class_sql("name")
-    cmap = _contra_map(edges.sparkSession, ontology)
+    cls = DEFAULT.synonym_class_sql("name")
+    cmap = _contra_map(edges.sparkSession, DEFAULT)
     e = (
         edges.join(emb, "uuid")
         .join(cmap, "name", "left")
@@ -195,9 +193,7 @@ def edge_dup_candidates(
     )
 
 
-def invalidate_edges(
-    edges: DataFrame, ontology=None, job_ts: datetime = JOB_TS
-) -> DataFrame:
+def invalidate_edges(edges: DataFrame, ontology=None) -> DataFrame:
     """Batch bi-temporal invalidation over canonical edges.
 
     For each edge in a contradiction class of the ontology (`contra`),
@@ -232,7 +228,7 @@ def invalidate_edges(
         .withColumn("invalid_at", F.coalesce("invalid_at", "contra_valid_at"))
         .withColumn(
             "expired_at",
-            F.when(F.col("invalid_at").isNotNull(), F.lit(job_ts)),
+            F.when(F.col("invalid_at").isNotNull(), F.lit(JOB_TS)),
         )
         .drop("contra_valid_at", "contra_class", "polarity")
     )

@@ -74,30 +74,34 @@ def _synth_pixels(i: int, w: int, h: int) -> np.ndarray:
     return np.clip(base + grad + noise, 0, 255).astype(np.uint8)
 
 
-def _synth_audio_samples(i: int, rate: int = 8000) -> np.ndarray:
+AUDIO_RATE = 8000  # Hz of every synthesized clip
+
+
+def _synth_audio_samples(i: int) -> np.ndarray:
     """Deterministic 1s stereo PCM: two tones at integer-Hz bins (exact
     rfft bins at 1s/8kHz, so peak positions are noise-robust) + seeded
     noise. The tone pair (f0, f0+7) is distinct per seed modulo 41 —
     coprime with the audio-row stride 3, so no two base clips in a
     <=123-row corpus share a spectral identity."""
     rng = np.random.RandomState(i)
-    n = rate  # exactly 1 s -> 1 Hz rfft bins
-    t = np.arange(n) / rate
+    n = AUDIO_RATE  # exactly 1 s -> 1 Hz rfft bins
+    t = np.arange(n) / AUDIO_RATE
     f0 = 50.0 * (1 + i % 41)
     left = 0.6 * np.sin(2 * np.pi * f0 * t) + 0.05 * rng.randn(n)
     right = 0.5 * np.sin(2 * np.pi * (f0 + 7) * t) + 0.05 * rng.randn(n)
     return np.clip(np.stack([left, right], axis=1), -1, 1)
 
 
-def _synth_audio(i: int, rate: int = 8000) -> tuple[bytes, int]:
+def _synth_audio(i: int) -> tuple[bytes, int]:
     """Returns (wav_bytes, duration_ms) for the seeded clip."""
-    sig = _synth_audio_samples(i, rate)
-    return wav_encode(sig, rate), int(round(1000.0 * sig.shape[0] / rate))
+    sig = _synth_audio_samples(i)
+    return wav_encode(sig, AUDIO_RATE), int(round(1000.0 * sig.shape[0] / AUDIO_RATE))
 
 
-def _synth_video(i: int, w: int, h: int, fps: int = 10) -> tuple[bytes, int]:
-    """Deterministic Y4M clip: 3-8 gradient frames with a moving phase.
-    Returns (y4m_bytes, duration_ms)."""
+def _synth_video(i: int, w: int, h: int) -> tuple[bytes, int]:
+    """Deterministic 10 fps Y4M clip: 3-8 gradient frames with a moving
+    phase. Returns (y4m_bytes, duration_ms)."""
+    fps = 10
     n_frames = 3 + i % 6
     frames = [_synth_pixels(i * 100 + k, w, h) for k in range(n_frames)]
     return y4m_encode(frames, fps=(fps, 1)), int(round(1000.0 * n_frames / fps))
@@ -143,7 +147,7 @@ def synth_media(spark, n: int = 64) -> DataFrame:
                     -1,
                     1,
                 )
-                payload, duration_ms = wav_encode(sig, 8000), 1000
+                payload, duration_ms = wav_encode(sig, AUDIO_RATE), 1000
             else:
                 payload, duration_ms = _synth_audio(i)
             mime = "audio/wav"
@@ -291,9 +295,10 @@ def audio_features(media: DataFrame) -> DataFrame:
     return auds.mapInPandas(gen, schema=AUDIO_FEATURES_SCHEMA)
 
 
-def sample_frames(media: DataFrame, every_ms: int = 500) -> DataFrame:
+def sample_frames(media: DataFrame) -> DataFrame:
     """Video frame sampling with REAL container demux: Y4M payloads are
-    demuxed (functions/y4m.py), frames are selected at every_ms intervals
+    demuxed (functions/y4m.py), frames are selected at every_ms = 500 ms
+    intervals
     using the container's own fps, and each sampled frame is re-encoded
     as a real PNG. Output explodes one row per sampled frame — the
     UDTF-like batch shape; swapping in pyav/ffmpeg for compressed
@@ -304,6 +309,7 @@ def sample_frames(media: DataFrame, every_ms: int = 500) -> DataFrame:
     vids = media.where(F.col("modality") == "video").select(
         "content_id", "payload", "duration_ms"
     )
+    every_ms = 500
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import zlib
@@ -343,7 +349,10 @@ def sample_frames(media: DataFrame, every_ms: int = 500) -> DataFrame:
     return vids.mapInPandas(gen, schema=FRAME_SCHEMA)
 
 
-def phash_near_pairs(feats: DataFrame, max_hamming: int = 3) -> DataFrame:
+PHASH_MAX_HAMMING = 3  # near-duplicate image bound (shared with the oracle)
+
+
+def phash_near_pairs(feats: DataFrame) -> DataFrame:
     """Image near-duplicate pairs by perceptual-hash Hamming distance —
     the multimodal leg of the dedup stack (same pigeonhole blocking as
     operators/dedup.simhash_near_pairs: any pair within Hamming distance
@@ -380,7 +389,7 @@ def phash_near_pairs(feats: DataFrame, max_hamming: int = 3) -> DataFrame:
             F.expr("bit_count(l.phash ^ r.phash)").cast("long").alias("hamming"),
         )
         .distinct()
-        .where(F.col("hamming") <= max_hamming)
+        .where(F.col("hamming") <= PHASH_MAX_HAMMING)
     )
 
 
@@ -520,19 +529,19 @@ def frame_diffs(media: DataFrame) -> DataFrame:
 SCENE_CUT_MIN_U = 20_000  # 20 luma levels mean delta — far above pan noise
 
 
-def scene_cuts(diffs: DataFrame, min_diff_u: int = SCENE_CUT_MIN_U) -> DataFrame:
+def scene_cuts(diffs: DataFrame) -> DataFrame:
     """Hard-cut detection + per-clip scene count over the frame-diff
     table: a cut is a transition whose mean luma delta clears
-    `min_diff_u`. Returns one row per clip: (content_id, n_transitions,
+    SCENE_CUT_MIN_U. Returns one row per clip: (content_id, n_transitions,
     n_cuts, n_scenes, first_cut_frame) — the shot-segmentation summary a
     video curation pipeline keys on. Pure groupBy over the skinny diff
     table (codegen'd; no Python)."""
-    is_cut = (F.col("diff_u") >= min_diff_u).cast("long")
+    is_cut = (F.col("diff_u") >= SCENE_CUT_MIN_U).cast("long")
     return diffs.groupBy("content_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_transitions"),
         F.sum(is_cut).cast("long").alias("n_cuts"),
         (F.sum(is_cut) + 1).cast("long").alias("n_scenes"),
-        F.min(F.when(F.col("diff_u") >= min_diff_u, F.col("frame_idx")))
+        F.min(F.when(F.col("diff_u") >= SCENE_CUT_MIN_U, F.col("frame_idx")))
         .cast("long")
         .alias("first_cut_frame"),
     )

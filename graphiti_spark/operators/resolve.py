@@ -41,6 +41,9 @@ from ..session import local_frame
 # Jaccard verification step is the precision guard (and the corpus's
 # cross-entity ceiling is J=0.2, far under threshold).
 N_HASHES = 32
+# shingle width: the Python signature (char_shingles) and the JVM band
+# rows (_SHINGLE_ARR) must agree
+SHINGLE_N = 3
 LSH_BANDS = 16
 LSH_ROWS = N_HASHES // LSH_BANDS
 # Carter-Wegman family over Z_p, p = 2^31 - 1: hashes reduced mod p first
@@ -53,9 +56,9 @@ _A_NM = _RNG.randint(1, _MERSENNE31, size=N_HASHES).astype(np.int64)
 _B_NM = _RNG.randint(0, _MERSENNE31, size=N_HASHES).astype(np.int64)
 
 
-def char_shingles(name: str, n: int = 3) -> set[str]:
+def char_shingles(name: str) -> set[str]:
     s = f"^{name}$"
-    return {s[i : i + n] for i in range(max(1, len(s) - n + 1))}
+    return {s[i : i + SHINGLE_N] for i in range(max(1, len(s) - SHINGLE_N + 1))}
 
 
 def _shingle_hashes(name: str) -> np.ndarray:
@@ -165,8 +168,8 @@ def sorted_neighborhood_pairs(
 # char-3-gram shingle array of '^'||norm_name||'$' as a JVM expression
 _SHINGLE_ARR = (
     "array_distinct(transform("
-    "sequence(0, greatest(length('^' || norm_name || '$') - 3, 0)),"
-    " i -> substr('^' || norm_name || '$', i + 1, 3)))"
+    f"sequence(0, greatest(length('^' || norm_name || '$') - {SHINGLE_N}, 0)),"
+    f" i -> substr('^' || norm_name || '$', i + 1, {SHINGLE_N})))"
 )
 # md5-derived 32-bit hash + Carter-Wegman family over Z_(2^31-1) — the
 # same overflow-free, DuckDB-reproducible family as operators/dedup.py
@@ -328,9 +331,7 @@ def _local_components(spark, pairs, id_type: str) -> DataFrame:
 LOCAL_CC_THRESHOLD = 100_000
 
 
-def connected_components(
-    edges: DataFrame, vertices: DataFrame, max_iter: int = 25
-) -> DataFrame:
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     """Min-label propagation to fixpoint. vertices: (id). edges: (src, dst)
     undirected. Returns (id, component). Iterations are bounded by graph
     diameter; alias-resolution graphs are star-shaped so this converges in
@@ -359,7 +360,7 @@ def connected_components(
     bidir = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    for _ in range(max_iter):
+    for _ in range(25):
         nbr = (
             bidir.join(labels, bidir.src == labels.id)
             .groupBy(F.col("dst").alias("id"))

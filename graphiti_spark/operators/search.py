@@ -127,16 +127,16 @@ def cosine_topk(
     queries: DataFrame,
     id_col: str,
     vec_col: str,
-    qvec_col: str = "qvec",
     k: int = DEFAULT_SEARCH_LIMIT,
     min_score: float = DEFAULT_MIN_SCORE,
 ) -> DataFrame:
-    """Similarity search (Q4-Q6): cosine against every query vector,
-    min_score filter, top-k per query. Queries broadcast; scoring is a
-    single vectorized numpy matmul per Arrow batch (the corpus side
-    streams, the query matrix rides the broadcast)."""
-    q = queries.select("query_id", F.col(qvec_col)).toPandas()
-    qm = np.stack(q[qvec_col].to_numpy())  # (nq, dim)
+    """Similarity search (Q4-Q6): cosine against every query vector
+    (`queries`: query_id, qvec), min_score filter, top-k per query.
+    Queries broadcast; scoring is a single vectorized numpy matmul per
+    Arrow batch (the corpus side streams, the query matrix rides the
+    broadcast)."""
+    q = queries.select("query_id", "qvec").toPandas()
+    qm = np.stack(q["qvec"].to_numpy())  # (nq, dim)
     qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
     qids = q["query_id"].to_numpy()
     spark = corpus.sparkSession
@@ -231,14 +231,14 @@ def bfs_edges(
     edges: DataFrame,
     origins: DataFrame,
     max_depth: int = MAX_SEARCH_DEPTH,
-    edge_cols: list[str] | None = None,
 ) -> DataFrame:
     """Edge BFS (Q7 proper, search_utils.py:277-329): the DISTINCT edges
     lying on any undirected path of <= max_depth hops from an origin —
     i.e. edges with at least one endpoint within distance max_depth - 1.
-    Returns (origin_uuid, <edge_cols>). Distances come from the deduped
-    node BFS, so the expansion is linear in reachable nodes."""
-    cols = edge_cols or ["source_node_uuid", "target_node_uuid", "name"]
+    Returns (origin_uuid, source_node_uuid, target_node_uuid, name).
+    Distances come from the deduped node BFS, so the expansion is linear
+    in reachable nodes."""
+    cols = ["source_node_uuid", "target_node_uuid", "name"]
     dist = bfs_nodes(edges, origins, max_depth - 1).select(
         "origin_uuid", "uuid", "depth"
     )
@@ -288,20 +288,20 @@ def episode_mentions_rerank(results: DataFrame, mention_edges: DataFrame) -> Dat
     )
 
 
-def rrf(ranked_lists: list[DataFrame], id_col: str, k: int = RRF_K) -> DataFrame:
+def rrf(ranked_lists: list[DataFrame], id_col: str) -> DataFrame:
     """Q11: reciprocal rank fusion — the reference scores
     1/(i + rank_const) with 0-based list position i (search_utils.py:
     744-755), so with our 1-based rank the contribution is
-    1/(k + rank - 1): the top hit of a list gets 1/k. Integer micro-units
-    so the SQL oracle matches bit-for-bit. Input frames:
-    (query_id, rank, <id_col>)."""
+    1/(k + rank - 1) with k = RRF_K: the top hit of a list gets 1/k.
+    Integer micro-units so the SQL oracle matches bit-for-bit. Input
+    frames: (query_id, rank, <id_col>)."""
     u = ranked_lists[0]
     for nxt in ranked_lists[1:]:
         u = u.select("query_id", "rank", id_col).unionByName(
             nxt.select("query_id", "rank", id_col)
         )
     scored = u.withColumn(
-        "c_u", F.expr(f"1000000 div ({k} + rank - 1)")
+        "c_u", F.expr(f"1000000 div ({RRF_K} + rank - 1)")
     ).groupBy("query_id", id_col).agg(F.sum("c_u").alias("rrf_u"))
     w = Window.partitionBy("query_id").orderBy(F.desc("rrf_u"), F.asc(id_col))
     return scored.withColumn("rank", F.row_number().over(w)).select(
@@ -315,11 +315,11 @@ def mmr_rerank(
     vec_col: str,
     qvec_col: str,
     k: int = DEFAULT_SEARCH_LIMIT,
-    lam: float = MMR_LAMBDA,
 ) -> DataFrame:
-    """Q12: maximal marginal relevance — greedy diversity rerank inside a
-    grouped pandas UDF per query (the candidate set per query is already
-    top-N small; the greedy loop is O(k * n) numpy)."""
+    """Q12: maximal marginal relevance (lambda = MMR_LAMBDA) — greedy
+    diversity rerank inside a grouped pandas UDF per query (the candidate
+    set per query is already top-N small; the greedy loop is O(k * n)
+    numpy)."""
     def pick(pdf: pd.DataFrame) -> pd.DataFrame:
         vecs = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
         vecs = vecs / np.maximum(np.linalg.norm(vecs, axis=1, keepdims=True), 1e-12)
@@ -333,7 +333,7 @@ def mmr_rerank(
                 div = (vecs[rest] @ vecs[chosen].T).max(axis=1)
             else:
                 div = np.zeros(len(rest))
-            mmr = lam * rel[rest] - (1 - lam) * div
+            mmr = MMR_LAMBDA * rel[rest] - (1 - MMR_LAMBDA) * div
             best = rest[int(np.argmax(mmr))]
             chosen.append(best)
             rest.remove(best)
@@ -457,14 +457,14 @@ def entity_timeline(triples: DataFrame) -> DataFrame:
     )
 
 
-def shared_affiliation(triples: DataFrame, pred: str = "WORKS_AT") -> DataFrame:
-    """Motif query (GraphFrames-style): (a)-[pred]->(x)<-[pred]-(b),
+def shared_affiliation(triples: DataFrame) -> DataFrame:
+    """Motif query (GraphFrames-style): (a)-[WORKS_AT]->(x)<-[WORKS_AT]-(b),
     a < b, over currently-valid edges only (invalid_at null — superseded
     affiliations don't pair). One self-equi-join co-partitioned on
     (group_id, x); hot-hub skew on x is the AQE skew-join case, never a
     cartesian."""
     aff = triples.where(
-        (F.col("pred") == pred) & F.col("invalid_at").isNull()
+        (F.col("pred") == "WORKS_AT") & F.col("invalid_at").isNull()
     ).select("group_id", F.col("subj").alias("person"), F.col("obj").alias("org"))
     a, b = aff.alias("a"), aff.alias("b")
     return (
@@ -503,11 +503,11 @@ def ir_eval(
     queries: DataFrame,
     ranking: DataFrame,
     id_col: str,
-    text_col: str = "text",
     k: int = DEFAULT_SEARCH_LIMIT,
 ) -> DataFrame:
-    """Retrieval-quality scorecard for a ranking, against a
-    deterministic conjunctive qrel: a document is RELEVANT to a query
+    """Retrieval-quality scorecard for a ranking over `corpus`
+    (<id_col>, text), against a deterministic conjunctive qrel: a
+    document is RELEVANT to a query
     iff it contains EVERY query term (the boolean-AND judgment — the
     strictest labeled set derivable from the corpus itself, no human
     labels needed; the standard self-supervised eval for lexical
@@ -537,7 +537,7 @@ def ir_eval(
     posting = (
         corpus.select(
             F.col(id_col).alias("doc"),
-            F.explode(F.array_distinct(tokens(text_col))).alias("term"),
+            F.explode(F.array_distinct(tokens("text"))).alias("term"),
         )
     )
     n_match = (

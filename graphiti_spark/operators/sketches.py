@@ -47,18 +47,19 @@ RHO_MAX = 53  # hash is 60 bits; 60 - p = 52 payload bits, rho in [1, 53]
 
 _H60 = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
 
+# Every sketch here reads an item table (source, tok): tokens, grouped by
+# their source.
 
-def hll_registers(
-    items: DataFrame, group_col: str = "source", key_col: str = "tok"
-) -> DataFrame:
-    """(group, bucket, M): the 2^p HLL registers per group. One pure-map
+
+def hll_registers(items: DataFrame) -> DataFrame:
+    """(g, bucket, M): the 2^p HLL registers per source. One pure-map
     hash projection, one (group, bucket) max-agg — partial aggregation
     does almost all the work map-side, the shuffle carries at most
     groups * 256 skinny rows. Absent buckets are absent rows (M=0 is
     implied); hll_estimate fills them in."""
-    h = F.expr(_H60.format(x=key_col))
+    h = F.expr(_H60.format(x="tok"))
     return (
-        items.select(F.col(group_col).alias("g"), h.alias("h"))
+        items.select(F.col("source").alias("g"), h.alias("h"))
         .select(
             "g",
             (F.col("h") % HLL_M).alias("bucket"),
@@ -113,22 +114,20 @@ def hll_estimate(regs: DataFrame) -> DataFrame:
     )
 
 
-def hll_distinct(
-    items: DataFrame, group_col: str = "source", key_col: str = "tok"
-) -> DataFrame:
-    """End-to-end: (group, zeros, hll_q, exact_distinct). The exact
+def hll_distinct(items: DataFrame) -> DataFrame:
+    """End-to-end: (source, zeros, hll_q, exact_distinct). The exact
     count rides along for test-scale audit — at 100 TB you would emit
     only the sketch (the exact leg is the expensive thing HLL exists
     to avoid)."""
-    est = hll_estimate(hll_registers(items, group_col, key_col))
+    est = hll_estimate(hll_registers(items))
     exact = (
-        items.groupBy(F.col(group_col).alias("g"))
-        .agg(F.countDistinct(key_col).alias("exact_distinct"))
+        items.groupBy(F.col("source").alias("g"))
+        .agg(F.countDistinct("tok").alias("exact_distinct"))
     )
     return (
         est.join(exact, "g")
         .select(
-            F.col("g").alias(group_col),
+            F.col("g").alias("source"),
             "zeros",
             "hll_q",
             F.col("exact_distinct").cast("long").alias("exact_distinct"),
@@ -140,7 +139,14 @@ CMS_D = 4  # hash rows
 CMS_W = 256  # counters per row
 
 
-def cms_counters(items: DataFrame, key_col: str = "tok") -> DataFrame:
+# CMS row hash of the `tok` column: d positions per item
+_CMS_POS = (
+    "cast(conv(substr(md5(concat(r, ':', tok)), 1, 15), 16, 10)"
+    f" as bigint) % {CMS_W}"
+)
+
+
+def cms_counters(items: DataFrame) -> DataFrame:
     """Count-min sketch counters (Cormode & Muthukrishnan 2005) — the
     FREQUENCY leg of the sketch pair (hll_* is the cardinality leg).
     At 100 TB you cannot groupBy the full token stream per slice just
@@ -155,34 +161,26 @@ def cms_counters(items: DataFrame, key_col: str = "tok") -> DataFrame:
     one (row, pos) count — the shuffle carries at most d*w skinny
     rows. Returns (r, pos, c)."""
     rows = F.explode(F.expr(f"sequence(0, {CMS_D - 1})")).alias("r")
-    h = (
-        f"cast(conv(substr(md5(concat(r, ':', {key_col})), 1, 15), 16, 10)"
-        f" as bigint) % {CMS_W}"
-    )
     return (
-        items.select(F.col(key_col).alias(key_col), rows)
-        .withColumn("pos", F.expr(h))
+        items.select("tok", rows)
+        .withColumn("pos", F.expr(_CMS_POS))
         .groupBy("r", "pos")
         .agg(F.count(F.lit(1)).alias("c"))
     )
 
 
-def cms_estimate(counters: DataFrame, keys: DataFrame, key_col: str = "tok") -> DataFrame:
-    """Point-query the sketch: estimate(key) = min over the d rows of
-    the counter its hash lands in — an upper bound on the true count
+def cms_estimate(counters: DataFrame, keys: DataFrame) -> DataFrame:
+    """Point-query the sketch for `keys` (tok): estimate(key) = min over
+    the d rows of the counter its hash lands in — an upper bound on the true count
     (collisions only ever inflate), within eps*N with probability
     1-delta for w = e/eps, d = ln(1/delta). The counter table is
     d*w rows — always broadcast; querying K keys is one projection +
     broadcast join + min-agg."""
     rows = F.explode(F.expr(f"sequence(0, {CMS_D - 1})")).alias("r")
-    h = (
-        f"cast(conv(substr(md5(concat(r, ':', {key_col})), 1, 15), 16, 10)"
-        f" as bigint) % {CMS_W}"
-    )
     return (
-        keys.select(key_col, rows)
-        .withColumn("pos", F.expr(h))
+        keys.select("tok", rows)
+        .withColumn("pos", F.expr(_CMS_POS))
         .join(F.broadcast(counters), ["r", "pos"])
-        .groupBy(key_col)
+        .groupBy("tok")
         .agg(F.min("c").cast("long").alias("cms_est"))
     )

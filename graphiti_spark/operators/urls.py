@@ -73,9 +73,8 @@ def _canon_sql(url: str, *, duck: bool) -> str:
     )
 
 
-def with_canonical_url(df: DataFrame, url_col: str = "url",
-                       out_col: str = "canonical_url") -> DataFrame:
-    return df.withColumn(out_col, F.expr(_canon_sql(url_col, duck=False)))
+def with_canonical_url(df: DataFrame) -> DataFrame:
+    return df.withColumn("canonical_url", F.expr(_canon_sql("url", duck=False)))
 
 
 def url_dup_groups(urls: DataFrame) -> DataFrame:

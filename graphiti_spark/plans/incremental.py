@@ -58,7 +58,7 @@ from ..operators.resolve import (
     lsh_verify_pairs,
     match_edges_exact,
 )
-from .pipeline import GraphTables
+from .pipeline import GraphTables, named_triples
 
 
 @dataclass
@@ -71,12 +71,12 @@ class GraphState:
     bucket_n: DataFrame  # (group_id, band, bkey, n) bucket populations
 
     def names(self) -> DataFrame:
-        """Canonical display name per canon uuid over the alias cluster
-        (the same rule as resolve_entities)."""
+        """(uuid, name): canonical display name per canon uuid over the
+        alias cluster (the same rule as resolve_entities)."""
         return (
             self.ents.join(self.canon, "uuid")
-            .groupBy("canon_uuid")
-            .agg(canonical_name().alias("node_name"))
+            .groupBy(F.col("canon_uuid").alias("uuid"))
+            .agg(canonical_name().alias("name"))
         )
 
 
@@ -90,32 +90,23 @@ _PAIR = ["group_id", "source_node_uuid", "target_node_uuid"]
 
 
 def initial_state(pages: DataFrame, ontology=None) -> GraphState:
-    """Bootstrap: the plain batch pipeline, but keeping the skinny state
-    tables the incremental merges fold into — including the LSH band
-    index and its bucket-population counts, so later merges never
-    re-block the standing universe. Extraction and labelling are the
-    batch pipeline's own stages (GraphTables)."""
+    """Bootstrap from the batch pipeline's own stages (GraphTables):
+    entities and their canonical assignment from its entity resolution,
+    the raw triple log and the edge table from its edge build. The only
+    state of its own is the standing LSH band index and its
+    bucket-population counts, so later merges never re-block the
+    standing universe."""
     t = GraphTables(pages, ontology)
-    ents = distinct_entities(t.mentions_raw).select(
-        "group_id", "name", "norm_name", "uuid"
+    uuid_map = t.uuid_map
+    ents = uuid_map.select("group_id", "name", "norm_name", "uuid").localCheckpoint(
+        eager=True
     )
+    canon = uuid_map.select("uuid", "canon_uuid").localCheckpoint(eager=True)
+    # the staged triple log, committed before the edge build reads it
+    t.edges_raw = t.edges_raw.localCheckpoint(eager=True)
     bands = lsh_band_rows(ents).localCheckpoint(eager=True)
     bucket_n = bucket_sizes(bands).localCheckpoint(eager=True)
-    capped = capped_bands(bands, bucket_n)
-    star = match_edges_exact(ents).union(lsh_verify_pairs(capped, capped))
-    comp = connected_components(star, ents.select(F.col("uuid").alias("id")))
-    canon = (
-        ents.join(comp.withColumnRenamed("id", "uuid"), "uuid", "left")
-        .select("uuid", F.coalesce("component", "uuid").alias("canon_uuid"))
-    )
-    raw = resolve_edge_pointers(t.triples_raw, _uuid_map(ents, canon))
-    raw = raw.localCheckpoint(eager=True)  # the staged triple log
-    edges = invalidate_edges(
-        materialize_edges(raw, ontology), ontology
-    ).localCheckpoint(eager=True)
-    return GraphState(ents=ents.localCheckpoint(eager=True),
-                      canon=canon.localCheckpoint(eager=True),
-                      raw=raw, edges=edges,
+    return GraphState(ents=ents, canon=canon, raw=t.edges_raw, edges=t.edges,
                       bands=bands, bucket_n=bucket_n)
 
 
@@ -259,27 +250,7 @@ def incremental_triples(state: GraphState) -> DataFrame:
     """kg_triples-shaped projection of the merged state (the oracle for
     kg_incremental_build IS the kg_triples oracle — incremental == batch
     is the contract)."""
-    n = state.names()
-    e = state.edges
-    return (
-        e.join(
-            n.withColumnRenamed("canon_uuid", "source_node_uuid")
-            .withColumnRenamed("node_name", "subj"),
-            "source_node_uuid",
-        )
-        .join(
-            n.withColumnRenamed("canon_uuid", "target_node_uuid")
-            .withColumnRenamed("node_name", "obj"),
-            "target_node_uuid",
-        )
-        .select(
-            "group_id",
-            "subj",
-            F.col("name").alias("pred"),
-            "obj",
-            "fact",
-            "valid_at",
-            "invalid_at",
-            F.size("episodes").cast("long").alias("n_episodes"),
-        )
+    t = named_triples(state.edges, state.names())
+    return t.select(
+        *t.columns[:-1], F.size("episodes").cast("long").alias("n_episodes")
     )

@@ -40,7 +40,7 @@ class GraphTables:
     Attribute access materializes (and caches) the stage:
 
         pages -> episodes -> extracted -> {triples_raw, mentions_raw}
-              -> {nodes, uuid_map} -> edges -> mention_edges
+              -> {nodes, uuid_map} -> edges_raw -> edges -> mention_edges
 
     Assigning to a stage attribute overrides it: the API mutation paths
     (remove_episodes / add_triplet) rewrite tables in place, and the
@@ -109,6 +109,12 @@ class GraphTables:
         self._resolve()
         return self._base_nodes
 
+    def _build_edges_raw(self) -> DataFrame:
+        # raw triples with canonical endpoint uuids: read once by the edge
+        # build, so not committed here (the incremental bootstrap commits
+        # it as its standing triple log)
+        return resolve_edge_pointers(self.triples_raw, self.uuid_map)
+
     def _build_edges(self) -> DataFrame:
         # two-step commit: invalidate_edges references its input THREE
         # times (the contradiction self-join plus the final left join) and
@@ -116,8 +122,7 @@ class GraphTables:
         # under the differing filter/alias subtrees — uncommitted, the
         # 425k-row materialize groupBy executed ~3x (measured 7.2s -> 3.7s
         # at sf0.1 x20 with the intermediate commit)
-        resolved = resolve_edge_pointers(self.triples_raw, self.uuid_map)
-        mat = self._commit(materialize_edges(resolved, self.ontology))
+        mat = self._commit(materialize_edges(self.edges_raw, self.ontology))
         return self._commit(invalidate_edges(mat, self.ontology))
 
     def _build_nodes(self) -> DataFrame:
@@ -190,6 +195,7 @@ class GraphTables:
             "mentions_raw",
             "uuid_map",
             "_base_nodes",
+            "edges_raw",
             "edges",
             "nodes",
             "mention_edges",
@@ -217,11 +223,19 @@ class GraphTables:
         raise AttributeError(name)
 
     def __setattr__(self, name: str, value) -> None:
-        for dep in GraphTables._DERIVED.get(name, ()):
-            stale = self.__dict__.pop(dep, None)
+        self._drop(GraphTables._DERIVED.get(name, ()))
+        object.__setattr__(self, name, value)
+
+    def _drop(self, stages) -> None:
+        for name in stages:
+            stale = self.__dict__.pop(name, None)
             if stale is not None:
                 stale.unpersist()
-        object.__setattr__(self, name, value)
+
+    def release(self) -> None:
+        """Unpersist the read-side embedding indexes once this graph is
+        replaced (they are rebuilt on access if it is read again)."""
+        self._drop(("nodes_emb", "edges_emb"))
 
 
 def build_graph(
@@ -241,26 +255,25 @@ def build_graph(
     return GraphTables(pages, ontology=ontology)
 
 
-def triples_view(tables: GraphTables) -> DataFrame:
-    """The scored deliverable: (subj, pred, obj) with temporal validity —
-    canonical display names joined back through the nodes table. The name
-    join is left to AQE: the nodes table is O(distinct entities) — small
-    at test scale (AQE converts to broadcast at runtime), but billions of
-    rows at 10^12 documents, where a forced broadcast would OOM and
-    sort-merge on the uuid keys is the correct plan (SURVEY.md §2.3 J1)."""
-    n = tables.nodes.select(
-        F.col("uuid").alias("node_uuid"), F.col("name").alias("node_name")
-    )
-    e = tables.edges
+def named_triples(edges: DataFrame, names: DataFrame) -> DataFrame:
+    """Canonical edges as (subj, pred, obj) with temporal validity: both
+    endpoint uuids joined to their display names. `names`: (uuid, name).
+    The name join is left to AQE: the name table is O(distinct entities) —
+    small at test scale (AQE converts to broadcast at runtime), but
+    billions of rows at 10^12 documents, where a forced broadcast would
+    OOM and sort-merge on the uuid keys is the correct plan (SURVEY.md
+    §2.3 J1)."""
     return (
-        e.join(
-            n.withColumnRenamed("node_uuid", "source_node_uuid")
-            .withColumnRenamed("node_name", "subj"),
+        edges.join(
+            names.select(
+                F.col("uuid").alias("source_node_uuid"), F.col("name").alias("subj")
+            ),
             "source_node_uuid",
         )
         .join(
-            n.withColumnRenamed("node_uuid", "target_node_uuid")
-            .withColumnRenamed("node_name", "obj"),
+            names.select(
+                F.col("uuid").alias("target_node_uuid"), F.col("name").alias("obj")
+            ),
             "target_node_uuid",
         )
         .select(
@@ -274,3 +287,9 @@ def triples_view(tables: GraphTables) -> DataFrame:
             "episodes",
         )
     )
+
+
+def triples_view(tables: GraphTables) -> DataFrame:
+    """The scored deliverable: the built graph's named triples, display
+    names from the nodes table."""
+    return named_triples(tables.edges, tables.nodes)

@@ -392,7 +392,7 @@ def q_doc_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"regexp_extract_all(lower(text), '{docs_mod.WORD}', 0)")
         ).alias("tok"),
     )
-    return sketches.hll_distinct(toks, "source", "tok")
+    return sketches.hll_distinct(toks)
 
 
 def _sql_doc_hll_distinct() -> str:
@@ -658,13 +658,13 @@ def q_doc_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification all sit under the exact-match oracle gate."""
     from ..operators.dedup import minhash_dedup_pairs
 
-    return minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir), threshold=0.5)
+    return minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir))
 
 
 def _sql_doc_minhash_dedup() -> str:
     from ..operators.dedup import sql_minhash_pairs
 
-    return sql_minhash_pairs(_NEAR_DUP_SQL, threshold=0.5)
+    return sql_minhash_pairs(_NEAR_DUP_SQL)
 
 
 def q_doc_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -861,7 +861,7 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import minhash_dedup_pairs
     from ..operators.resolve import connected_components
 
-    pairs = minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir), threshold=0.5)
+    pairs = minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir))
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     verts = (
         edges.select(F.col("src").alias("id"))
@@ -882,7 +882,7 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_doc_dup_clusters() -> str:
     from ..operators.dedup import sql_minhash_pairs
 
-    base = sql_minhash_pairs(_NEAR_DUP_SQL, threshold=0.5)
+    base = sql_minhash_pairs(_NEAR_DUP_SQL)
     rounds = []
     for k in range(1, 7):  # 6 min-propagation rounds >= pair-graph diameter
         prev = f"c{k - 1}"
@@ -965,14 +965,14 @@ def q_doc_source_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_doc_source_drift() -> str:
-    return """
+    return f"""
 WITH toks AS (
   SELECT source, unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
   FROM documents
 ),
 st AS (SELECT source, tok, count(*) AS o FROM toks GROUP BY 1, 2),
 gt AS (SELECT tok, sum(o) AS g FROM st GROUP BY 1),
-vocab AS (SELECT tok, g FROM gt ORDER BY g DESC, tok ASC LIMIT 200),
+vocab AS (SELECT tok, g FROM gt ORDER BY g DESC, tok ASC LIMIT {docs_mod.DRIFT_VOCAB_K}),
 gtot AS (SELECT sum(g) AS gt FROM vocab),
 stot AS (
   SELECT s.source, sum(s.o) AS s_total
@@ -1000,7 +1000,7 @@ FROM x GROUP BY 1"""
 def q_doc_substring_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-10-gram exact-substring duplication per document (Lee et al.
     2022 fixed-window form)."""
-    out = docs_mod.substring_dup_stats(docs.read_documents(spark, sf_dir), k=10)
+    out = docs_mod.substring_dup_stats(docs.read_documents(spark, sf_dir))
     return out.select(
         "doc_id", *[F.col(c).cast("long").alias(c) for c in out.columns[1:]]
     )
@@ -1029,9 +1029,7 @@ def q_doc_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified data-mixing sample: deterministic md5-hash keep/drop per
     language stratum (keep-all en, 50% de/fr/es, 25% zh) — one shuffle-free
     codegen projection; emits the decision for every doc for auditing."""
-    return docs_mod.mix_sample(
-        docs.read_documents(spark, sf_dir), MIX_RATES_U, default_rate_u=100_000
-    )
+    return docs_mod.mix_sample(docs.read_documents(spark, sf_dir), MIX_RATES_U)
 
 
 def q_doc_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1083,9 +1081,7 @@ def q_doc_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end curation audit: keep + first-failing-stage reason per
     doc (dedup -> Gopher -> language agreement -> stratified mixing)."""
-    return docs_mod.curation_decision(
-        docs.read_documents(spark, sf_dir), MIX_RATES_U, default_rate_u=100_000
-    )
+    return docs_mod.curation_decision(docs.read_documents(spark, sf_dir), MIX_RATES_U)
 
 
 def q_doc_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1139,23 +1135,23 @@ def q_doc_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _domain_url_cases(prefix_col: str = "doc_id") -> tuple[str, str]:
+def _domain_url_cases() -> tuple[str, str]:
     """Shared url-fixture expressions (Spark dialect, DuckDB dialect):
     deterministic subdomain / TLD / tracking-suffix variation keyed on
     doc_id so registrable-domain extraction has real work to do."""
     sub = (
-        f"CASE WHEN {prefix_col} % 3 = 0 THEN 'www.' "
-        f"WHEN {prefix_col} % 3 = 1 THEN 'news.' ELSE '' END"
+        "CASE WHEN doc_id % 3 = 0 THEN 'www.' "
+        "WHEN doc_id % 3 = 1 THEN 'news.' ELSE '' END"
     )
-    tld = f"CASE WHEN {prefix_col} % 5 = 0 THEN '.co.uk' ELSE '.com' END"
-    q = f"CASE WHEN {prefix_col} % 2 = 1 THEN '?ref=rss' ELSE '' END"
+    tld = "CASE WHEN doc_id % 5 = 0 THEN '.co.uk' ELSE '.com' END"
+    q = "CASE WHEN doc_id % 2 = 1 THEN '?ref=rss' ELSE '' END"
     spark = (
         f"concat('https://', {sub}, source, '-', lang, {tld}, '/p/', "
-        f"cast({prefix_col} as string), {q})"
+        f"cast(doc_id as string), {q})"
     )
     duck = (
         f"concat('https://', {sub}, source, '-', lang, {tld}, '/p/', "
-        f"CAST({prefix_col} AS VARCHAR), {q})"
+        f"CAST(doc_id AS VARCHAR), {q})"
     )
     return spark, duck
 
@@ -1596,19 +1592,19 @@ FROM documents GROUP BY 1"""
 
 
 def _sql_doc_ngram_pairs() -> str:
-    return """
+    return f"""
 WITH tok AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
 ),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-           range(1, greatest(len(toks) - 2, 0) + 1),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))) AS shingle
+           range(1, greatest(len(toks) - {docs_mod.NEAR_DUP_N - 1}, 0) + 1),
+           i -> array_to_string(list_slice(toks, i, i + {docs_mod.NEAR_DUP_N - 1}), ' ')))) AS shingle
   FROM tok
 ),
 ok AS (SELECT shingle FROM sh GROUP BY shingle
-       HAVING count(*) <= (SELECT greatest(2, CAST(floor(count(DISTINCT doc_id) * 0.02) AS BIGINT))
+       HAVING count(*) <= (SELECT greatest(2, CAST(floor(count(DISTINCT doc_id) * {docs_mod.NEAR_DUP_MAX_DF_FRAC}) AS BIGINT))
                            FROM documents)),
 sh2 AS (SELECT sh.* FROM sh JOIN ok USING (shingle)),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh2 GROUP BY 1),
@@ -1623,7 +1619,7 @@ FROM shared s
 JOIN sizes sa ON sa.doc_id = s.doc_a
 JOIN sizes sb ON sb.doc_id = s.doc_b
 ORDER BY jaccard_u DESC, s.doc_a, s.doc_b
-LIMIT 20"""
+LIMIT {docs_mod.NEAR_DUP_TOP}"""
 
 
 def _sql_doc_unigram_lm() -> str:
@@ -1711,15 +1707,15 @@ FROM ranked WHERE rank <= 5"""
 
 
 def _sql_doc_substring_dup() -> str:
-    return """
+    return f"""
 WITH toks AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS ws
   FROM documents
 ),
 grams AS (
   SELECT DISTINCT doc_id,
-         md5(array_to_string(list_slice(ws, i, i + 9), ' ')) AS gh
-  FROM toks, unnest(range(1, greatest(len(ws) - 9, 0) + 1)) AS t(i)
+         md5(array_to_string(list_slice(ws, i, i + {docs_mod.SUBSTRING_K - 1}), ' ')) AS gh
+  FROM toks, unnest(range(1, greatest(len(ws) - {docs_mod.SUBSTRING_K - 1}, 0) + 1)) AS t(i)
 ),
 freq AS (SELECT gh, count(DISTINCT doc_id) AS n_docs FROM grams GROUP BY 1),
 per_doc AS (
@@ -1776,7 +1772,7 @@ def _sql_doc_mix_sample() -> str:
 SELECT doc_id, lang AS stratum,
        CAST({hash_u} AS BIGINT) AS hash_u,
        CAST(CASE WHEN {hash_u} <
-         (CASE lang {branches} ELSE 100000 END)
+         (CASE lang {branches} ELSE {docs_mod.MIX_DEFAULT_RATE_U} END)
          THEN 1 ELSE 0 END AS BIGINT) AS keep
 FROM documents"""
 
@@ -1811,7 +1807,7 @@ FROM s JOIN ts USING (lang)"""
 
 
 def _sql_doc_bpe_pairs() -> str:
-    return """
+    return f"""
 WITH w AS (
   SELECT unnest(regexp_extract_all(lower(text), '[a-z]+')) AS word
   FROM documents
@@ -1825,7 +1821,7 @@ p AS (
 agg AS (SELECT pair, sum(cnt) AS total FROM p GROUP BY 1)
 SELECT pair, CAST(total AS BIGINT) AS total,
        CAST(row_number() OVER (ORDER BY total DESC, pair) AS BIGINT) AS rank
-FROM agg QUALIFY rank <= 20"""
+FROM agg QUALIFY rank <= {docs_mod.BPE_TOP_N}"""
 
 
 def _sql_doc_winnow() -> str:
@@ -1859,7 +1855,7 @@ fps AS (
 ),
 ok AS (
   SELECT fp FROM fps GROUP BY fp
-  HAVING count(*) <= (SELECT greatest(2, count(*) * 20000 // 1000000)
+  HAVING count(*) <= (SELECT greatest(2, count(*) * {docs_mod.WINNOW_MAX_DF_FRAC_U} // 1000000)
                       FROM documents)
 ),
 kept AS (SELECT fps.* FROM fps JOIN ok USING (fp)),
@@ -1867,7 +1863,7 @@ sizes AS (SELECT doc_id, count(*) AS n_fp FROM kept GROUP BY 1),
 shared AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS shared
   FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-  GROUP BY 1, 2 HAVING count(*) >= 3
+  GROUP BY 1, 2 HAVING count(*) >= {docs_mod.WINNOW_MIN_SHARED}
 )
 SELECT s.doc_a, s.doc_b, CAST(s.shared AS BIGINT) AS shared,
        CAST((1000000 * s.shared) // (sa.n_fp + sb.n_fp - s.shared) AS BIGINT)
@@ -1884,7 +1880,7 @@ def _sql_doc_curation() -> str:
 WITH fp AS ({_sql_doc_fingerprint()}),
 dd AS ({_sql_doc_dedup_exact()}),
 g AS (SELECT doc_id,
-        r_word_count * r_mean_word_len * r_symbol * r_alpha AS q_keep
+        {" * ".join(docs_mod.CURATION_RULES)} AS q_keep
       FROM ({_sql_doc_gopher()})),
 l AS ({_sql_doc_langid()}),
 m AS ({_sql_doc_mix_sample()})
@@ -2016,12 +2012,12 @@ WITH tb AS MATERIALIZED (
 ),
 tot AS (
   SELECT count(*) AS n_raw,
-         sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS n_tgt
+         sum(CASE WHEN lang = '{docs_mod.DSIR_TARGET_LANG}' THEN 1 ELSE 0 END) AS n_tgt
   FROM tb
 ),
 lm AS MATERIALIZED (
   SELECT bucket,
-         (1000000 * (1000000 * (sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) + 1)
+         (1000000 * (1000000 * (sum(CASE WHEN lang = '{docs_mod.DSIR_TARGET_LANG}' THEN 1 ELSE 0 END) + 1)
                      // (any_value(t.n_tgt) + {b})))
          // greatest(1000000 * (count(*) + 1) // (any_value(t.n_raw) + {b}), 1)
            AS ratio_u
@@ -2176,19 +2172,19 @@ def q_doc_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_doc_containment() -> str:
-    return """
+    return f"""
 WITH tok AS (
   SELECT doc_id, regexp_extract_all(lower(text), '[a-z0-9]+') AS toks FROM documents
 ),
 sh AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-           range(1, greatest(len(toks) - 2, 0) + 1),
-           i -> array_to_string(list_slice(toks, i, i + 2), ' ')))) AS shingle
+           range(1, greatest(len(toks) - {docs_mod.NEAR_DUP_N - 1}, 0) + 1),
+           i -> array_to_string(list_slice(toks, i, i + {docs_mod.NEAR_DUP_N - 1}), ' ')))) AS shingle
   FROM tok
 ),
 ok AS (SELECT shingle FROM sh GROUP BY shingle
-       HAVING count(*) <= (SELECT greatest(2, CAST(floor(count(DISTINCT doc_id) * 0.02) AS BIGINT))
+       HAVING count(*) <= (SELECT greatest(2, CAST(floor(count(DISTINCT doc_id) * {docs_mod.NEAR_DUP_MAX_DF_FRAC}) AS BIGINT))
                            FROM documents)),
 sh2 AS (SELECT sh.* FROM sh JOIN ok USING (shingle)),
 sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh2 GROUP BY 1),
@@ -2204,7 +2200,7 @@ FROM shared s
 JOIN sizes sa ON sa.doc_id = s.doc_a
 JOIN sizes sb ON sb.doc_id = s.doc_b
 ORDER BY containment_u DESC, s.doc_a, s.doc_b
-LIMIT 20"""
+LIMIT {docs_mod.NEAR_DUP_TOP}"""
 
 
 def q_doc_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:

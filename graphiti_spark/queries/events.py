@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators.events import CONVERSION_TYPE, SESSION_GAP_US, SPIKE_RATIO_U, TOUCH_TYPE
+
 
 def q_evt_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type Markov transition matrix with integer-exact transition
@@ -65,7 +67,7 @@ def q_evt_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the watermarked streaming window aggregation."""
     from ..operators import events as ev
 
-    out = ev.tumbling_windows(ev.read_events(spark, sf_dir), unit="hour")
+    out = ev.tumbling_windows(ev.read_events(spark, sf_dir))
     return out.select(
         "window_start",
         "event_type",
@@ -136,10 +138,10 @@ def q_evt_baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_evt_baskets() -> str:
-    return """
+    return f"""
 WITH flagged AS (
   SELECT user_id, event_id, ts, event_type,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_US}
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -178,12 +180,12 @@ CROSS JOIN ns"""
 
 
 def _sql_evt_attribution() -> str:
-    return """
+    return f"""
 WITH conv AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase'
+  SELECT user_id, event_id, ts FROM events WHERE event_type = '{CONVERSION_TYPE}'
 ),
 touches AS (
-  SELECT user_id, event_id, ts FROM events WHERE event_type = 'view'
+  SELECT user_id, event_id, ts FROM events WHERE event_type = '{TOUCH_TYPE}'
 )
 SELECT c.user_id, c.event_id AS conversion_id, c.ts AS conversion_ts,
        t.touch_id, t.touch_ts
@@ -218,11 +220,11 @@ FROM per p JOIN sz USING (cohort_day)"""
 
 
 def _sql_evt_sessions() -> str:
-    return """
+    return f"""
 WITH flagged AS (
   SELECT user_id, event_id, ts, event_type,
          CAST(round(value * 100) AS BIGINT) AS value_c,
-         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > 1800000000
+         CASE WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_US}
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -270,7 +272,7 @@ FROM c JOIN tot t ON t.prev_type = c.prev_type"""
 
 
 def _sql_evt_anomaly() -> str:
-    return """
+    return f"""
 WITH daily AS (
   SELECT event_type, date_trunc('day', ts) AS day, count(*) AS n
   FROM events GROUP BY 1, 2
@@ -281,7 +283,7 @@ norm AS (
 )
 SELECT d.event_type, d.day, CAST(d.n AS BIGINT) AS n,
        CAST((1000000 * d.n * x.n_days) // x.total AS BIGINT) AS ratio_u,
-       ((1000000 * d.n * x.n_days) // x.total >= 2000000) AS is_spike
+       ((1000000 * d.n * x.n_days) // x.total >= {SPIKE_RATIO_U}) AS is_spike
 FROM daily d JOIN norm x ON x.event_type = d.event_type"""
 
 

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..operators import centrality
 from .kg import q_kg_triples
 from .shared import (
     LPA_ORACLE_ROUNDS,
@@ -137,7 +138,7 @@ def q_kg_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     damping 0.85, exact integer micro-unit ranks)."""
     from ..operators.centrality import pagerank
 
-    return pagerank(q_kg_triples(spark, sf_dir), iters=3)
+    return pagerank(q_kg_triples(spark, sf_dir))
 
 
 def q_kg_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -211,7 +212,7 @@ def q_kg_shared_employer(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew-join case, never a cartesian."""
     from ..operators.search import shared_affiliation
 
-    return shared_affiliation(q_kg_triples(spark, sf_dir), "WORKS_AT")
+    return shared_affiliation(q_kg_triples(spark, sf_dir))
 
 
 def q_kg_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -231,7 +232,7 @@ def q_kg_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     list (see operators/centrality.kcore scale notes)."""
     from ..operators.centrality import kcore
 
-    return kcore(q_kg_triples(spark, sf_dir), k=2)
+    return kcore(q_kg_triples(spark, sf_dir))
 
 
 def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,12 +245,17 @@ def q_kg_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ktruss(q_kg_triples(spark, sf_dir), k=3)
 
 
-def _sql_kg_ktruss(rounds: int = 6) -> str:
+KTRUSS_ORACLE_ROUNDS = 6
+KCORE_ORACLE_ROUNDS = 10
+
+
+def _sql_kg_ktruss() -> str:
     # peel rounds unrolled mechanically (kcore-oracle pattern); the
     # engine peels to fixpoint with an early-exit probe, so the gate
     # holds whenever the graph converges within `rounds` — verified at
     # test scale. MATERIALIZED keeps DuckDB from exponentially
     # re-inlining the per-round chain.
+    rounds = KTRUSS_ORACLE_ROUNDS
     ctes = """
 , und0 AS MATERIALIZED (
   SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
@@ -499,7 +505,7 @@ h1 AS (
            ORDER BY {u("'h1|' || u.group_id || '|' || s.seed || '|' || u.dst")}, u.dst) AS pos
   FROM seeds s JOIN und u ON u.group_id = s.group_id AND u.src = s.seed
 ),
-h1k AS (SELECT * FROM h1 WHERE pos <= 4),
+h1k AS (SELECT * FROM h1 WHERE pos <= {centrality.NS_FANOUT[0]}),
 h2 AS (
   SELECT u.group_id, h.seed, u.src, u.dst,
          ROW_NUMBER() OVER (PARTITION BY u.group_id, h.seed, u.src
@@ -507,7 +513,7 @@ h2 AS (
   FROM h1k h JOIN und u ON u.group_id = h.group_id AND u.src = h.dst
   WHERE u.dst <> h.seed
 ),
-h2k AS (SELECT * FROM h2 WHERE pos <= 3)
+h2k AS (SELECT * FROM h2 WHERE pos <= {centrality.NS_FANOUT[1]})
 SELECT group_id, seed, CAST(1 AS BIGINT) AS hop, seed AS src, dst,
        CAST(pos AS BIGINT) AS pos
 FROM h1k
@@ -800,12 +806,10 @@ GROUP BY 1, 2, 3"""
     return _kg_sql(body, with_eds=True)
 
 
-PAGERANK_ITERS = 3
-
-
 def _sql_kg_pagerank() -> str:
+    base_u = (centrality.R0_U * (100 - centrality.DAMP_PCT)) // 100
     rounds = []
-    for i in range(1, PAGERANK_ITERS + 1):
+    for i in range(1, centrality.PAGERANK_ITERS + 1):
         prev = f"r{i - 1}"
         rounds.append(f"""
 c{i} AS (
@@ -818,7 +822,7 @@ c{i} AS (
 ),
 r{i} AS MATERIALIZED (
   SELECT v.group_id, v.name,
-         (150000 // ng.n_g) + (85 * coalesce(c{i}.s, 0)) // 100 AS rank_u
+         ({base_u} // ng.n_g) + ({centrality.DAMP_PCT} * coalesce(c{i}.s, 0)) // 100 AS rank_u
   FROM v JOIN ng USING (group_id)
   LEFT JOIN c{i} ON c{i}.group_id = v.group_id AND c{i}.name = v.name
 )""")
@@ -829,25 +833,22 @@ v AS (SELECT group_id, src AS name FROM e
 ng AS (SELECT group_id, count(*) AS n_g FROM v GROUP BY 1),
 od AS (SELECT group_id, src, count(*) AS outdeg FROM e GROUP BY 1, 2),
 idg AS (SELECT group_id, dst, count(*) AS indeg FROM e GROUP BY 1, 2),
-r0 AS (SELECT v.group_id, v.name, 1000000 // ng.n_g AS rank_u
+r0 AS (SELECT v.group_id, v.name, {centrality.R0_U} // ng.n_g AS rank_u
        FROM v JOIN ng USING (group_id)),{",".join(rounds)}
 SELECT r.group_id, r.name,
        CAST(coalesce(od.outdeg, 0) AS BIGINT) AS out_deg,
        CAST(coalesce(idg.indeg, 0) AS BIGINT) AS in_deg,
        CAST(r.rank_u AS BIGINT) AS rank_u
-FROM r{PAGERANK_ITERS} r
+FROM r{centrality.PAGERANK_ITERS} r
 LEFT JOIN od ON od.group_id = r.group_id AND od.src = r.name
 LEFT JOIN idg ON idg.group_id = r.group_id AND idg.dst = r.name"""
     return _kg_sql(body, with_eds=True)
 
 
-PPR_ITERS = 3
-
-
 def _sql_kg_ppr() -> str:
-    base_u = (1_000_000 * (100 - 85)) // 100
+    base_u = (centrality.R0_U * (100 - centrality.DAMP_PCT)) // 100
     rounds = []
-    for i in range(1, PPR_ITERS + 1):
+    for i in range(1, centrality.PPR_ITERS + 1):
         prev = f"p{i - 1}"
         rounds.append(f"""
 c{i} AS (
@@ -861,7 +862,7 @@ c{i} AS (
 p{i} AS MATERIALIZED (
   SELECT coalesce(t.group_id, c.group_id) AS group_id,
          coalesce(t.name, c.name) AS name,
-         coalesce(t.tele_u, 0) + (85 * coalesce(c.s, 0)) // 100 AS ppr_u
+         coalesce(t.tele_u, 0) + ({centrality.DAMP_PCT} * coalesce(c.s, 0)) // 100 AS ppr_u
   FROM tele t
   FULL JOIN c{i} c ON c.group_id = t.group_id AND c.name = t.name
 )""")
@@ -874,11 +875,11 @@ ns AS (SELECT group_id, count(*) AS n_s FROM seeds GROUP BY 1),
 od AS (SELECT group_id, src, count(*) AS outdeg FROM e GROUP BY 1, 2),
 tele AS (SELECT s.group_id, s.name, {base_u} // ns.n_s AS tele_u
          FROM seeds s JOIN ns USING (group_id)),
-p0 AS (SELECT s.group_id, s.name, 1000000 // ns.n_s AS ppr_u
+p0 AS (SELECT s.group_id, s.name, {centrality.R0_U} // ns.n_s AS ppr_u
        FROM seeds s JOIN ns USING (group_id)),{",".join(rounds)}
 SELECT group_id, name, CAST(ppr_u AS BIGINT) AS ppr_u,
        CAST(CASE WHEN name LIKE 'A%' THEN 1 ELSE 0 END AS BIGINT) AS is_seed
-FROM p{PPR_ITERS} WHERE ppr_u > 0"""
+FROM p{centrality.PPR_ITERS} WHERE ppr_u > 0"""
     return _kg_sql(body, with_eds=True)
 
 
@@ -971,12 +972,13 @@ FROM deg d LEFT JOIN pn ON pn.group_id = d.group_id AND pn.name = d.name"""
     return _kg_sql(body, with_eds=True)
 
 
-def _sql_kg_kcore(rounds: int = 10) -> str:
+def _sql_kg_kcore() -> str:
     # peel rounds unrolled mechanically; the engine peels to fixpoint with
     # an early-exit probe, so the gate holds whenever the graph converges
     # within `rounds` (pendant-path depth, verified at test scale)
     # every CTE here is referenced 2-3x per round — MATERIALIZED keeps
     # DuckDB from inlining (and thus exponentially re-evaluating) the chain
+    rounds = KCORE_ORACLE_ROUNDS
     ctes = """
 , und0 AS MATERIALIZED (
   SELECT DISTINCT group_id, least(subj, obj) AS a, greatest(subj, obj) AS b
@@ -990,7 +992,7 @@ alive{i} AS MATERIALIZED (
       SELECT group_id, a AS name FROM und{i}
       UNION ALL SELECT group_id, b FROM und{i}
     ) GROUP BY 1, 2
-  ) WHERE c >= 2
+  ) WHERE c >= {centrality.KCORE_K}
 ),
 und{i + 1} AS MATERIALIZED (
   SELECT u.group_id, u.a, u.b FROM und{i} u
@@ -1396,14 +1398,14 @@ def q_kg_katz(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_kg_katz() -> str:
     steps = []
-    for k in range(1, 4):
+    for k in range(1, centrality.KATZ_ITERS + 1):
         prev = f"x{k - 1}"
         steps.append(f"""
 x{k} AS (
   SELECT v.group_id, v.name,
-         CAST(1000000 + coalesce(s.s, 0) AS BIGINT) AS x_u
+         CAST({centrality.R0_U} + coalesce(s.s, 0) AS BIGINT) AS x_u
   FROM kverts v LEFT JOIN (
-    SELECT e.group_id, e.dst AS name, sum(x.x_u // 8) AS s
+    SELECT e.group_id, e.dst AS name, sum(x.x_u // {centrality.KATZ_BETA_DEN}) AS s
     FROM ke e JOIN {prev} x ON x.group_id = e.group_id AND x.name = e.src
     GROUP BY 1, 2
   ) s ON s.group_id = v.group_id AND s.name = v.name
@@ -1415,13 +1417,13 @@ x{k} AS (
 kverts AS (
   SELECT group_id, src AS name FROM ke UNION SELECT group_id, dst FROM ke
 ),
-x0 AS (SELECT group_id, name, CAST(1000000 AS BIGINT) AS x_u FROM kverts),
+x0 AS (SELECT group_id, name, CAST({centrality.R0_U} AS BIGINT) AS x_u FROM kverts),
 {",".join(steps)}
 SELECT v.group_id, v.name,
        CAST(coalesce(d.indeg, 0) AS BIGINT) AS in_deg,
        x.x_u AS katz_u
 FROM kverts v
-JOIN x3 x ON x.group_id = v.group_id AND x.name = v.name
+JOIN x{centrality.KATZ_ITERS} x ON x.group_id = v.group_id AND x.name = v.name
 LEFT JOIN (
   SELECT group_id, dst AS name, count(*) AS indeg FROM ke GROUP BY 1, 2
 ) d ON d.group_id = v.group_id AND d.name = v.name"""

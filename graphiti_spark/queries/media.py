@@ -31,12 +31,14 @@ def q_media_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = media_phash_path(sf_dir)
     feats = image_features(synth_media(spark, MEDIA_N)).select("content_id", "phash")
     feats.write.mode("overwrite").parquet(path)
-    return phash_near_pairs(spark.read.parquet(path), max_hamming=3).select(
+    return phash_near_pairs(spark.read.parquet(path)).select(
         "content_a", "content_b", "hamming"
     )
 
 
 def _sql_media_phash_pairs() -> str:
+    from ..operators.multimodal import PHASH_MAX_HAMMING
+
     # all-pairs over the 40-image scratch table — the pigeonhole blocking
     # in the Spark plan is recall-lossless at hamming <= 3, so the oracle
     # can afford the brute-force formulation
@@ -45,7 +47,7 @@ WITH f AS (SELECT * FROM read_parquet('{media_phash_path(_oracle_sf_dir())}/*.pa
 SELECT a.content_id AS content_a, b.content_id AS content_b,
        bit_count(xor(a.phash, b.phash)) AS hamming
 FROM f a JOIN f b ON a.content_id < b.content_id
-WHERE bit_count(xor(a.phash, b.phash)) <= 3"""
+WHERE bit_count(xor(a.phash, b.phash)) <= {PHASH_MAX_HAMMING}"""
 
 
 def media_scene_path(sf_dir: str) -> str:

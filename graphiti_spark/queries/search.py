@@ -52,7 +52,7 @@ def q_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents(spark, sf_dir)
     qs = search.make_queries_df(spark, DOC_QUERIES)
     run = search.bm25_topk(docs, qs, "doc_id", "text", k=10)
-    return search.ir_eval(docs, qs, run, "doc_id", "text", k=10)
+    return search.ir_eval(docs, qs, run, "doc_id", k=10)
 
 
 def q_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1106,7 +1106,7 @@ FROM cranked WHERE rank <= 10"""
 
 def _ce_training_sample(sf_dir: str) -> list[str]:
     """Deterministic bounded training sample for the learned cross-
-    encoder: doc_id % 17 == 0, ordered, strided to <= 200 passages. Read
+    encoder: doc_id % 17 == 0, ordered, strided to <= SAMPLE_CAP passages. Read
     via DuckDB on BOTH the Spark-query and oracle sides so the sample —
     and therefore the trained integer weights — are byte-identical."""
     import duckdb
@@ -1117,7 +1117,7 @@ def _ce_training_sample(sf_dir: str) -> list[str]:
         f"SELECT doc_id, text FROM '{sf_dir}/documents.parquet' "
         "WHERE doc_id % 17 = 0 ORDER BY doc_id"
     ).fetchall()
-    return sample_passages([(int(d), t) for d, t in rows], cap=200)
+    return sample_passages([(int(d), t) for d, t in rows])
 
 
 _CE_WEIGHTS_CACHE: dict[str, list[int]] = {}

@@ -80,12 +80,12 @@ cent{i} AS (
 EMBCOS_MAX_CELL = 100_000  # per-cell population cap (quadratic guard)
 
 
-def _cell_cap_cte(last_asg: str, max_cell: int = EMBCOS_MAX_CELL) -> str:
-    """SQL mirror of operators/ann._cap_cells: cells above max_cell are
-    excluded before the same-cell self-join."""
+def _cell_cap_cte(last_asg: str) -> str:
+    """SQL mirror of operators/ann._cap_cells: cells above
+    EMBCOS_MAX_CELL are excluded before the same-cell self-join."""
     return f"""
 okcell AS (SELECT cell_id FROM {last_asg} GROUP BY 1
-           HAVING count(*) <= {max_cell})"""
+           HAVING count(*) <= {EMBCOS_MAX_CELL})"""
 
 
 PAGE_CURSOR = "d0"

@@ -20,7 +20,6 @@ def write_bucketed(
     table: str,
     bucket_keys: list[str],
     n_buckets: int = 16,
-    sort_keys: list[str] | None = None,
 ) -> None:
     """Write `df` as a bucketed (and bucket-sorted) managed parquet
     table. At crawl scale n_buckets is sized to the cluster (e.g. 2-4x
@@ -36,14 +35,13 @@ def write_bucketed(
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
     if wh:
         shutil.rmtree(f"{wh}/{table.lower()}", ignore_errors=True)
-    writer = (
+    (
         df.write.mode("overwrite")
         .format("parquet")
         .bucketBy(n_buckets, *bucket_keys)
+        .sortBy(*bucket_keys)
+        .saveAsTable(table)
     )
-    if sort_keys or bucket_keys:
-        writer = writer.sortBy(*(sort_keys or bucket_keys))
-    writer.saveAsTable(table)
 
 
 def write_graph_bucketed(

@@ -115,7 +115,6 @@ def build_pages(
     spark: SparkSession,
     sf_dir: str,
     replicate: int = 1,
-    partitions: int | None = None,
     with_html: bool = True,
 ) -> DataFrame:
     """documents.parquet -> pages DataFrame, all-JVM synthesis.
@@ -139,8 +138,7 @@ def build_pages(
         .parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", "text", "lang", "source")
     )
-    n_parts = partitions or spark.sparkContext.defaultParallelism
-    docs = base.repartition(n_parts)
+    docs = base.repartition(spark.sparkContext.defaultParallelism)
     if replicate > 1:
         docs = docs.withColumn(
             "r", F.explode(F.expr(f"sequence(0, {int(replicate) - 1})"))

@@ -56,23 +56,16 @@ def run_ingest(
     pages_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ):
-    """Start the ingest stream; with available_now the query drains all
-    pending files and stops (the catch-up / test mode)."""
-    stream = stream_pages(spark, pages_dir)
-    writer = (
-        stream.writeStream.foreachBatch(
-            lambda df, _epoch: process_batch(df, out_dir)
-        )
+    """Start the ingest stream (availableNow: the query drains all
+    pending files and stops — the catch-up mode)."""
+    return (
+        stream_pages(spark, pages_dir)
+        .writeStream.foreachBatch(lambda df, _epoch: process_batch(df, out_dir))
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
-        if available_now
-        else stream.writeStream.foreachBatch(
-            lambda df, _epoch: process_batch(df, out_dir)
-        ).option("checkpointLocation", checkpoint_dir)
+        .start()
     )
-    return writer.start()
 
 
 class IncrementalMaintainer:

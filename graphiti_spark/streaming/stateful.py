@@ -58,14 +58,17 @@ _MENTION_STATE = StructType(
 )
 
 
-def windowed_mention_counts(
-    mentions: DataFrame, window: str = "1 day", watermark: str = "2 days"
-) -> DataFrame:
-    """Event-time windowed mention counts with bounded late-data state.
-    `mentions`: streaming (group_id, name, valid_at)."""
+# event-time horizon of late mentions / episodes: state older than this is
+# evicted
+LATE_WATERMARK = "2 days"
+
+
+def windowed_mention_counts(mentions: DataFrame) -> DataFrame:
+    """Event-time 1-day windowed mention counts with bounded late-data
+    state. `mentions`: streaming (group_id, name, valid_at)."""
     return (
-        mentions.withWatermark("valid_at", watermark)
-        .groupBy(F.window("valid_at", window), "group_id", "name")
+        mentions.withWatermark("valid_at", LATE_WATERMARK)
+        .groupBy(F.window("valid_at", "1 day"), "group_id", "name")
         .agg(F.count(F.lit(1)).alias("n_mentions"))
     )
 
@@ -110,9 +113,7 @@ def entity_mention_state(mentions: DataFrame) -> DataFrame:
     )
 
 
-def dedup_episodes_stream(
-    episodes: DataFrame, watermark: str = "2 days"
-) -> DataFrame:
+def dedup_episodes_stream(episodes: DataFrame) -> DataFrame:
     """Streaming exact dedup of episode chunks by content fingerprint —
     the incremental form of docs.exact_dup_groups for a live ingest: a
     re-crawled or mirrored page whose cleaned chunk already streamed
@@ -129,7 +130,7 @@ def dedup_episodes_stream(
     """
     return (
         episodes.withColumn("fingerprint", F.md5(F.col("content")))
-        .withWatermark("valid_at", watermark)
+        .withWatermark("valid_at", LATE_WATERMARK)
         .dropDuplicatesWithinWatermark(["group_id", "fingerprint"])
     )
 
@@ -203,12 +204,13 @@ def _update_session(key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState)
     )
 
 
-def sessionize_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def sessionize_stream(events: DataFrame) -> DataFrame:
     """Streaming gap-based sessionization — the incremental twin of
     operators/events.sessionize, emitting each session exactly once when
     it CLOSES: either a new event from the same user arrives past the
     30-minute gap (in-batch or cross-batch), or the event-time watermark
-    passes last_event + gap (`EventTimeTimeout`, so idle sessions close
+    passes last_event + gap (`EventTimeTimeout` on a 1-hour watermark, so
+    idle sessions close
     without waiting for the user to return — the state store never holds
     a finished session longer than the late-data horizon).
 
@@ -216,7 +218,7 @@ def sessionize_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame
     State is one skinny row per OPEN session keyed by user_id; output
     mode is 'append' (closed sessions are immutable facts)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", "1 hour")
         .groupBy("user_id")
         .applyInPandasWithState(
             _update_session,
@@ -231,8 +233,6 @@ def sessionize_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame
 def enrich_mentions_stream(
     mentions: DataFrame,
     episodes: DataFrame,
-    watermark: str = "2 days",
-    slack_hours: int = 24,
 ) -> DataFrame:
     """Stream-stream inner join: a live mention stream enriched with the
     episode stream it references — the streaming analogue of the batch
@@ -241,7 +241,7 @@ def enrich_mentions_stream(
     topics and out of order.
 
     Both sides carry an event-time watermark and the join condition
-    bounds |mention.valid_at - episode.ep_valid_at| <= slack_hours, so
+    bounds |mention.valid_at - episode.ep_valid_at| <= 24 hours, so
     the state store holds only the slack window of each side (unbounded
     buffering is the classic stream-stream join failure; the range
     condition is what lets Spark evict). Equality keys
@@ -251,23 +251,23 @@ def enrich_mentions_stream(
     mentions: (group_id, episode_uuid, name, valid_at)
     episodes: (group_id, uuid, content, valid_at)
     """
-    m = mentions.withWatermark("valid_at", watermark)
+    m = mentions.withWatermark("valid_at", LATE_WATERMARK)
     e = episodes.select(
         F.col("group_id").alias("ep_group_id"),
         F.col("uuid").alias("ep_uuid"),
         F.col("content").alias("episode_content"),
         F.col("valid_at").alias("ep_valid_at"),
-    ).withWatermark("ep_valid_at", watermark)
+    ).withWatermark("ep_valid_at", LATE_WATERMARK)
     cond = (
         (m["group_id"] == e["ep_group_id"])
         & (m["episode_uuid"] == e["ep_uuid"])
         & (
             e["ep_valid_at"]
-            >= m["valid_at"] - F.expr(f"INTERVAL {slack_hours} HOURS")
+            >= m["valid_at"] - F.expr("INTERVAL 24 HOURS")
         )
         & (
             e["ep_valid_at"]
-            <= m["valid_at"] + F.expr(f"INTERVAL {slack_hours} HOURS")
+            <= m["valid_at"] + F.expr("INTERVAL 24 HOURS")
         )
     )
     return m.join(e, cond, "inner").select(

@@ -83,13 +83,13 @@ def test_learned_cross_encoder_training_sample_is_bounded(g, monkeypatch):
     real_train = ce_learned.train_weights
     seen = {}
 
-    def sample_df(df, id_col, text_col, cap=200):
+    def sample_df(df, id_col, text_col):
         seen["candidates"] = df.count()
-        return real_sample_df(df, id_col, text_col, cap=cap)
+        return real_sample_df(df, id_col, text_col)
 
-    def sample(rows, cap=200):
+    def sample(rows):
         seen["collected"] = len(rows)
-        return real_sample(rows, cap=cap)
+        return real_sample(rows)
 
     def train(passages):
         seen["trained"] = len(passages)
@@ -113,7 +113,7 @@ def test_learned_cross_encoder_training_sample_is_bounded(g, monkeypatch):
     # the training set before the cap: every candidate, in uuid order
     monkeypatch.setattr(
         ce_learned, "sample_passages_df",
-        lambda df, id_col, text_col, cap=200: [
+        lambda df, id_col, text_col: [
             r[text_col] for r in df.orderBy(id_col).collect()
         ],
     )
@@ -605,3 +605,27 @@ def test_build_side_leg_error_propagates(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(GraphTables, "_build_edges_emb", boom)
     with pytest.raises(RuntimeError, match="side leg failed"):
         GraphitiSpark(spark).build(sf_dir, pages=_small_pages(spark, sf_dir))
+
+
+def _in_cache_manager(df) -> bool:
+    cm = df._jdf.sparkSession().sharedState().cacheManager()
+    return cm.lookupCachedData(df._jdf).isDefined()
+
+
+def test_replaced_graph_releases_embedding_indexes(spark, sf_dir):
+    """A second build() on one facade unpersists the first graph's
+    embedding indexes (and add_pages those of the graph it replaces);
+    search then runs over the new graph."""
+    api = GraphitiSpark(spark)
+    first = api.build(sf_dir, pages=_small_pages(spark, sf_dir))
+    old = [first.__dict__[n] for n in ("nodes_emb", "edges_emb")]
+    assert all(_in_cache_manager(df) for df in old)
+    second = api.build(sf_dir, pages=_small_pages(spark, sf_dir))
+    assert not any(_in_cache_manager(df) for df in old)
+    out = api.search(["alice johnson works"], EDGE_HYBRID_SEARCH_RRF).toPandas()
+    assert 0 < len(out) <= EDGE_HYBRID_SEARCH_RRF.limit
+    assert set(out["uuid"]) <= {r["uuid"] for r in second.edges.select("uuid").collect()}
+    replaced = [second.__dict__[n] for n in ("nodes_emb", "edges_emb")]
+    assert all(_in_cache_manager(df) for df in replaced)
+    api.add_pages(_small_pages(spark, sf_dir).where("doc_id % 2 = 0"))
+    assert not any(_in_cache_manager(df) for df in replaced)

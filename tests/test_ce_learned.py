@@ -75,8 +75,8 @@ def test_features_integer_and_phrase_hit():
 
 def test_sample_passages_deterministic_and_bounded():
     rows = [(i * 3, f"text {i}") for i in range(1000)]
-    s1 = sample_passages(list(reversed(rows)), cap=200)
-    s2 = sample_passages(rows, cap=200)
+    s1 = sample_passages(list(reversed(rows)))
+    s2 = sample_passages(rows)
     assert s1 == s2
     assert len(s1) <= 200
 

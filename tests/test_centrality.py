@@ -235,7 +235,6 @@ def test_kcore_peels_pendant_chain(spark):
 
     out = kcore(
         _triples(spark, [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"), ("d", "e")]),
-        k=2,
     )
     rows = {r["name"]: r["core_degree"] for r in out.collect()}
     assert rows == {"a": 2, "b": 2, "c": 2}
@@ -244,7 +243,7 @@ def test_kcore_peels_pendant_chain(spark):
 def test_kcore_empty_when_forest(spark):
     from graphiti_spark.operators.centrality import kcore
 
-    out = kcore(_triples(spark, [("a", "b"), ("b", "c"), ("x", "y")]), k=2)
+    out = kcore(_triples(spark, [("a", "b"), ("b", "c"), ("x", "y")]))
     assert out.count() == 0
 
 

@@ -33,9 +33,9 @@ def test_minhash_similarity_estimate():
 
 
 def test_word_shingles():
-    assert word_shingles("a b c d", 3) == {"a b c", "b c d"}
-    assert word_shingles("a b", 3) == {"a b"}
-    assert word_shingles("", 3) == set()
+    assert word_shingles("a b c d") == {"a b c", "b c d"}
+    assert word_shingles("a b") == {"a b"}
+    assert word_shingles("") == set()
 
 
 @pytest.fixture(scope="module")
@@ -51,7 +51,7 @@ def dup_docs(spark, sf_dir):
 
 
 def test_minhash_finds_planted_dups(spark, dup_docs):
-    pairs = minhash_dedup_pairs(dup_docs, threshold=0.5).toPandas()
+    pairs = minhash_dedup_pairs(dup_docs).toPandas()
     found = set(zip(pairs["doc_a"], pairs["doc_b"]))
     for d in range(20):
         assert (d, d + 1000) in found, f"planted dup {d} not found"

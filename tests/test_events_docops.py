@@ -98,7 +98,7 @@ def test_substring_dup_detects_shared_10gram(spark):
             "short doc",  # < 10 words -> zero grams, still a row
         ],
     )
-    out = {r["doc_id"]: r for r in substring_dup_stats(docs, k=10).collect()}
+    out = {r["doc_id"]: r for r in substring_dup_stats(docs).collect()}
     assert out[0]["n_grams"] == 2 and out[0]["n_dup_grams"] == 1
     assert out[1]["n_grams"] == 2 and out[1]["n_dup_grams"] == 1
     assert out[0]["dup_frac_u"] == 500_000

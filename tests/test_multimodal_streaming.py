@@ -63,7 +63,7 @@ def test_frame_sampling_counts(spark):
     from graphiti_spark.functions.y4m import y4m_decode
 
     media = synth_media(spark, 36)
-    frames = sample_frames(media, every_ms=500).toPandas()
+    frames = sample_frames(media).toPandas()
     got = frames.groupby("content_id")["frame_idx"].count().to_dict()
     for r in media.where("modality = 'video'").collect():
         if r["mime"] == "video/x-yuv4mpeg":
@@ -89,8 +89,7 @@ def test_frame_sampling_demuxes_real_pixels(spark):
     )
     src_frames, _ = y4m_decode(bytes(row["payload"]))
     out = (
-        sample_frames(media.where(F.col("content_id") == row["content_id"]),
-                      every_ms=500)
+        sample_frames(media.where(F.col("content_id") == row["content_id"]))
         .orderBy("frame_idx")
         .collect()
     )
@@ -137,7 +136,7 @@ def test_phash_near_pairs_finds_planted_dups(spark):
     feats = image_features(media).select("content_id", "phash")
     pairs = {
         (r["content_a"], r["content_b"]): r["hamming"]
-        for r in phash_near_pairs(feats, max_hamming=3).collect()
+        for r in phash_near_pairs(feats).collect()
     }
     planted = {
         (f"m{i - 3:04d}", f"m{i:04d}")
@@ -196,7 +195,7 @@ def test_streaming_ingest_roundtrip(spark, sf_dir, tmp_path):
     pages = build_pages(spark, sf_dir).where(F.col("doc_id") < 60)
     pages.coalesce(2).write.parquet(pages_dir)
 
-    q = run_ingest(spark, pages_dir, out_dir, ckpt, available_now=True)
+    q = run_ingest(spark, pages_dir, out_dir, ckpt)
     q.awaitTermination(120)
 
     edges = staged_edges()
@@ -207,7 +206,7 @@ def test_streaming_ingest_roundtrip(spark, sf_dir, tmp_path):
     assert a.exceptAll(b).count() == 0
 
     # idempotent re-delivery: restart with same checkpoint adds nothing
-    q2 = run_ingest(spark, pages_dir, out_dir, ckpt, available_now=True)
+    q2 = run_ingest(spark, pages_dir, out_dir, ckpt)
     q2.awaitTermination(120)
     edges2 = staged_edges()
     assert edges2.count() == edges.count()

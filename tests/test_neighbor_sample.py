@@ -16,7 +16,7 @@ def _star(spark, n=10):
 
 def test_fanout_bounds_and_determinism(spark):
     t = _star(spark, n=10)
-    out = neighbor_sample(t, seed_mod=1, fanout=(4, 3)).toPandas()
+    out = neighbor_sample(t, seed_mod=1).toPandas()
 
     # per-(seed) hop-1 fanout and per-(seed, frontier) hop-2 fanout bounds
     h1 = out[out.hop == 1]
@@ -30,7 +30,7 @@ def test_fanout_bounds_and_determinism(spark):
     assert not (h2.dst == h2.seed).any()
 
     # deterministic: a second run is row-identical
-    again = neighbor_sample(t, seed_mod=1, fanout=(4, 3)).toPandas()
+    again = neighbor_sample(t, seed_mod=1).toPandas()
     cols = ["group_id", "seed", "hop", "src", "dst", "pos"]
     assert (
         out[cols].sort_values(cols).reset_index(drop=True)
@@ -42,7 +42,7 @@ def test_seed_subsampling(spark):
     t = _star(spark, n=40)
     all_nodes = 41
     sampled_seeds = (
-        neighbor_sample(t, seed_mod=5, fanout=(4, 3))
+        neighbor_sample(t, seed_mod=5)
         .select("seed").distinct().count()
     )
     # hash-mod seed selection: a strict, nonempty subset of the vertices
@@ -52,7 +52,7 @@ def test_seed_subsampling(spark):
 def test_group_isolation(spark):
     rows = [("g1", "a", "b"), ("g2", "a", "c")]
     t = spark.createDataFrame(rows, "group_id string, subj string, obj string")
-    out = neighbor_sample(t, seed_mod=1, fanout=(4, 3)).toPandas()
+    out = neighbor_sample(t, seed_mod=1).toPandas()
     # no sampled edge crosses groups: every (src, dst) pair exists in its
     # own group's undirected edge set
     allowed = {("g1", "a", "b"), ("g1", "b", "a"), ("g2", "a", "c"), ("g2", "c", "a")}

@@ -59,7 +59,7 @@ def test_ann_ivf_recall(spark, sf_dir):
         F.col("vec_id").alias("cell_id"), F.col("embedding").alias("ce_centroid")
     )
     exact = ann.brute_force_topk(q, c, k=5).toPandas()
-    approx = ann.ivf_topk(q, c, cents, k=5, n_probe=4).toPandas()
+    approx = ann.ivf_topk(q, c, cents, n_probe=4).toPandas()
     e = set(zip(exact["q_id"], exact["c_id"]))
     a = set(zip(approx["q_id"], approx["c_id"]))
     assert len(e & a) / len(e) >= 0.3

@@ -71,7 +71,7 @@ def test_entity_state_accumulates_across_batches(spark, tmp_path):
 def test_windowed_counts_with_watermark(spark, tmp_path):
     d = str(tmp_path)
     stream = _write_batches(spark, d)
-    agg = windowed_mention_counts(stream, window="1 day", watermark="2 days")
+    agg = windowed_mention_counts(stream)
     q = (
         agg.writeStream.outputMode("complete")
         .format("memory")
@@ -171,7 +171,7 @@ def test_sessionize_stream_gap_and_timeout(spark, tmp_path):
         .parquet(f"{d}/in/*")
     )
     q = (
-        sessionize_stream(stream, watermark="1 hour")
+        sessionize_stream(stream)
         .writeStream.outputMode("append")
         .format("memory")
         .queryName("sessions")
