@@ -536,7 +536,7 @@ class GraphitiSpark:
             "group_id string, subj_name string, pred string, obj_name string,"
             " fact string, valid_at timestamp, episode_uuid string",
         )
-        nodes, edges = add_triplets(t.nodes, t.edges, trip)
+        nodes, edges = add_triplets(t.nodes, t.edges, trip, t.ontology)
         t.nodes, t.edges = nodes, edges
 
     def build_communities(self):

@@ -83,20 +83,6 @@ N_TEMPLATES = 12
 EPOCH = datetime(2024, 1, 1)          # warc_ts base
 WARC_STEP_MINUTES = 7                 # warc_ts = EPOCH + doc_id * 7 min
 
-PRED_ROLES = {
-    # predicate -> (subject label, object label)
-    "WORKS_AT": ("Person", "Organization"),
-    "EMPLOYED_AT": ("Person", "Organization"),
-    "NO_LONGER_WORKS_AT": ("Person", "Organization"),
-    "LIKES": ("Person", "Person"),
-    "DISLIKES": ("Person", "Person"),
-    "BASED_IN": ("Organization", "Place"),
-    "MOVED_TO": ("Person", "Place"),
-    "LEADS": ("Person", "Organization"),
-    "VISITED": ("Person", "Place"),
-    "ADMIRES": ("Person", "Person"),
-}
-
 
 # --------------------------------------------------------------------------
 # Pure index arithmetic (must stay expressible in ANSI SQL: + * % div).

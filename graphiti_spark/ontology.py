@@ -77,7 +77,11 @@ class Ontology:
         """CASE expression mapping a predicate column to its REQUIRED
         endpoint label (side 0 = subject/domain, side 1 = object/range),
         NULL for unconstrained predicates — ANSI SQL shared verbatim by
-        the Spark plan and the DuckDB oracle (SHACL-lite sh:class)."""
+        the Spark plan and the DuckDB oracle (SHACL-lite sh:class). An
+        empty role table constrains nothing: a typed NULL (a CASE needs
+        at least one WHEN)."""
+        if not self.pred_roles:
+            return "CAST(NULL AS STRING)"
         whens = " ".join(
             f"WHEN '{p}' THEN '{r[side]}'"
             for p, r in sorted(self.pred_roles.items())

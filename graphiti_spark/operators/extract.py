@@ -26,7 +26,11 @@ Correctness is pinned against the generative golden truth
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window, functions as F
+
+from ..ontology import DEFAULT as DEFAULT_ONTOLOGY, Ontology
 
 NAME = r"(?:Professor |Dr\. )?[A-Z][a-z]+(?: [A-Z][a-z]+)*"
 NAME_G = f"({NAME})"
@@ -40,12 +44,6 @@ STOP_SPANS = frozenset(
      "September", "October", "November", "December"}
 )
 
-# role table now lives in the user-extensible Ontology (ontology.py);
-# kept as a module alias for the default configuration
-from ..ontology import DEFAULT as DEFAULT_ONTOLOGY, Ontology
-
-PRED_ROLES = DEFAULT_ONTOLOGY.pred_roles
-
 
 def _sql_lit(pat: str) -> str:
     """Python regex -> Spark SQL string literal (backslashes doubled)."""
@@ -57,7 +55,9 @@ NAME_SQL = _sql_lit(NAME)
 _HONORIFIC_SQL = _sql_lit(r"^(?:Professor |Dr\. )")
 
 # Text-episode pattern bank: (sql_pattern, pred, subj_group, obj_group,
-# valid_expr_template). Priority order matters — the negated form must be
+# valid_expr). valid_expr reads the match's capture groups as
+# element_at(g, N) and the episode reference time as valid_at (see
+# _fused_results_expr). Priority order matters — the negated form must be
 # tried before its positive substring twin; anchors (^...$) make hedged
 # phrasings like "It is unclear whether X works at Y." non-matches.
 _TEXT_PATTERNS: list[tuple[str, str, int, int, str | None]] = [
@@ -76,12 +76,12 @@ _TEXT_PATTERNS: list[tuple[str, str, int, int, str | None]] = [
     (
         _sql_lit(rf"^Since (\d{{4}}), {NAME_G} has led {NAME_G}\.$"),
         "LEADS", 2, 3,
-        "to_timestamp(regexp_extract(sentence, '{p}', 1) || '-01-01', 'yyyy-MM-dd')",
+        "to_timestamp(element_at(g, 1) || '-01-01', 'yyyy-MM-dd')",
     ),
     (
         _sql_lit(rf"^{NAME_G} visited {NAME_G} on (\d{{4}}-\d{{2}}-\d{{2}})\.$"),
         "VISITED", 1, 2,
-        "to_timestamp(regexp_extract(sentence, '{p}', 3), 'yyyy-MM-dd')",
+        "to_timestamp(element_at(g, 3), 'yyyy-MM-dd')",
     ),
     (
         # X4 relative-time rules (temporal_operations.py:32-68,
@@ -92,8 +92,7 @@ _TEXT_PATTERNS: list[tuple[str, str, int, int, str | None]] = [
         # reference time itself (the no-valid-expr patterns above)
         _sql_lit(rf"^(\d+) days ago, {NAME_G} visited {NAME_G}\.$"),
         "VISITED", 2, 3,
-        "valid_at - make_interval(0, 0, 0,"
-        " cast(regexp_extract(sentence, '{p}', 1) as int))",
+        "valid_at - make_interval(0, 0, 0, cast(element_at(g, 1) as int))",
     ),
     (
         _sql_lit(rf"^Last week, {NAME_G} visited {NAME_G}\.$"),
@@ -119,10 +118,10 @@ _TEXT_PATTERNS: list[tuple[str, str, int, int, str | None]] = [
         # no locale-dependent datetime parsing in the oracle path)
         _sql_lit(rf"^{NAME_G} has led {NAME_G} since ([A-Z][a-z]+) (\d{{4}})\.$"),
         "LEADS", 1, 2,
-        "make_timestamp(cast(regexp_extract(sentence, '{p}', 4) as int),"
+        "make_timestamp(cast(element_at(g, 4) as int),"
         " cast(array_position(array('January', 'February', 'March', 'April',"
         " 'May', 'June', 'July', 'August', 'September', 'October',"
-        " 'November', 'December'), regexp_extract(sentence, '{p}', 3)) as int),"
+        " 'November', 'December'), element_at(g, 3)) as int),"
         " 1, 0, 0, 0)",
     ),
 ]
@@ -155,166 +154,10 @@ def norm_sql(col: str = "name", duck: bool = False) -> str:
     )
 
 
-_NORM_SQL = norm_sql("name")
-
-
-def _sentences(episodes: DataFrame) -> DataFrame:
-    """(episode_uuid, group_id, valid_at, source, sent_idx, sentence) for
-    non-json episodes — the filter() inside the array keeps sent_idx equal
-    to cumcount-over-nonempty semantics without a window shuffle."""
-    return episodes.where(F.col("source") != "json").select(
-        F.col("uuid").alias("episode_uuid"),
-        "group_id",
-        "valid_at",
-        "source",
-        F.posexplode(
-            F.expr(f"filter(split(content, '{SENT_SPLIT_SQL}'), s -> s != '')")
-        ).alias("sent_idx", "sentence"),
-    )
-
-
-def _case(branches: list[tuple[str, str, str]]) -> str:
-    return (
-        "CASE "
-        + " ".join(
-            f"WHEN source = '{src}' AND sentence RLIKE '{p}' THEN {v}"
-            for src, p, v in branches
-        )
-        + " END"
-    )
-
-
 def _all_patterns() -> list[tuple[str, tuple]]:
     return [("text", pat) for pat in _TEXT_PATTERNS] + [
         ("message", pat) for pat in _MSG_PATTERNS
     ]
-
-
-def extract_triples_jvm(sents: DataFrame) -> DataFrame:
-    strip = lambda e: f"regexp_replace({e}, '{_HONORIFIC_SQL}', '')"  # noqa: E731
-    pats = _all_patterns()
-    pred = _case([(s, p, f"'{name}'") for s, (p, name, *_) in pats])
-    subj = _case(
-        [(s, p, strip(f"regexp_extract(sentence, '{p}', {sg})"))
-         for s, (p, _, sg, _, _) in pats]
-    )
-    obj = _case(
-        [(s, p, strip(f"regexp_extract(sentence, '{p}', {og})"))
-         for s, (p, _, _, og, _) in pats]
-    )
-    explicit = _case(
-        [(s, p, v.format(p=p)) for s, (p, _, _, _, v) in pats if v is not None]
-    )
-    return (
-        sents.withColumn("pred", F.expr(pred))
-        .where(F.col("pred").isNotNull())
-        .select(
-            "episode_uuid",
-            "group_id",
-            F.col("sent_idx").cast("int").alias("sent_idx"),
-            F.expr(subj).alias("subj_name"),
-            "pred",
-            F.expr(obj).alias("obj_name"),
-            F.col("sentence").alias("fact"),
-            F.coalesce(F.expr(explicit), F.col("valid_at")).alias("valid_at"),
-            F.lit(None).cast("timestamp").alias("invalid_at"),
-            F.col("valid_at").alias("warc_ts"),
-        )
-    )
-
-
-def extract_spans_jvm(sents: DataFrame) -> DataFrame:
-    return (
-        sents.select(
-            "episode_uuid",
-            "group_id",
-            "valid_at",
-            F.explode(
-                F.expr(f"regexp_extract_all(sentence, '{NAME_SQL}', 0)")
-            ).alias("span"),
-        )
-        .withColumn("name", F.expr(f"regexp_replace(span, '{_HONORIFIC_SQL}', '')"))
-        .where(~F.col("name").isin(*STOP_SPANS))
-        .dropDuplicates(["episode_uuid", "name"])
-        .withColumn("norm_name", F.expr(_NORM_SQL))
-        .select("episode_uuid", "group_id", "name", "norm_name", "valid_at")
-    )
-
-
-def extract_json_jvm(episodes: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """json-episode extraction (F13): from_json with the structured-content
-    schema; the relation value passes through as the predicate, `as_of`
-    gives explicit temporal validity, and the entity/target fields are the
-    mentions (the free-text span scan is NOT applied to json bodies —
-    prompts/extract_nodes.py:93-116 extracts from parsed values)."""
-    j = (
-        episodes.where(F.col("source") == "json")
-        .select(
-            F.col("uuid").alias("episode_uuid"),
-            "group_id",
-            "content",
-            "valid_at",
-            F.from_json("content", _JSON_SCHEMA).alias("j"),
-        )
-        .where(F.col("j.entity").isNotNull() & F.col("j.target").isNotNull())
-    )
-    triples = j.select(
-        "episode_uuid",
-        "group_id",
-        F.lit(0).alias("sent_idx"),
-        F.col("j.entity").alias("subj_name"),
-        F.col("j.relation").alias("pred"),
-        F.col("j.target").alias("obj_name"),
-        F.col("content").alias("fact"),
-        F.coalesce(
-            F.to_timestamp("j.as_of", "yyyy-MM-dd"), F.col("valid_at")
-        ).alias("valid_at"),
-        F.lit(None).cast("timestamp").alias("invalid_at"),
-        F.col("valid_at").alias("warc_ts"),
-    )
-    mentions = (
-        j.select(
-            "episode_uuid",
-            "group_id",
-            "valid_at",
-            F.explode(F.array("j.entity", "j.target")).alias("name"),
-        )
-        .dropDuplicates(["episode_uuid", "name"])
-        .withColumn("norm_name", F.expr(_NORM_SQL))
-        .select("episode_uuid", "group_id", "name", "norm_name", "valid_at")
-    )
-    return triples, mentions
-
-
-UNION_SCHEMA = (
-    "kind string, episode_uuid string, group_id string, sent_idx int,"
-    " subj_name string, pred string, obj_name string, fact string,"
-    " valid_at timestamp, invalid_at timestamp, warc_ts timestamp,"
-    " name string, norm_name string"
-)
-
-
-def _as_union(trip: DataFrame, ment: DataFrame) -> DataFrame:
-    t = trip.select(
-        F.lit("t").alias("kind"), "episode_uuid", "group_id", "sent_idx",
-        "subj_name", "pred", "obj_name", "fact", "valid_at", "invalid_at",
-        "warc_ts",
-        F.lit(None).cast("string").alias("name"),
-        F.lit(None).cast("string").alias("norm_name"),
-    )
-    m = ment.select(
-        F.lit("m").alias("kind"), "episode_uuid", "group_id",
-        F.lit(0).alias("sent_idx"),
-        F.lit(None).cast("string").alias("subj_name"),
-        F.lit(None).cast("string").alias("pred"),
-        F.lit(None).cast("string").alias("obj_name"),
-        F.lit(None).cast("string").alias("fact"),
-        "valid_at",
-        F.lit(None).cast("timestamp").alias("invalid_at"),
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-        "name", "norm_name",
-    )
-    return t.unionByName(m)
 
 
 def _result_struct(kind: str, sent_idx: str, subj: str, pred: str, obj: str,
@@ -340,26 +183,16 @@ def _fused_results_expr() -> str:
         # ONE regex evaluation on the matched branch: regexp_replace
         # rewrites the (anchored) sentence into all its capture groups
         # joined by SEP, and a single-element transform() binds the split
-        # group array as `g` — vs the previous 2-3 regexp_extract calls
-        # per matched pattern (each a full re-match of the sentence).
-        import re as _re
-
+        # group array as `g` — instead of one regexp_extract per group
+        # (each a full re-match of the sentence).
         p, name, sg, og, v = pat
-        ng = max([sg, og] + [int(m) for m in _re.findall(r"', (\d+)\)", v or "")])
-        repl = SEP.join(f"${i}" for i in range(1, ng + 1))
-        if v:
-            valid = _re.sub(
-                r"regexp_extract\(sentence, '\{p\}', (\d+)\)",
-                r"element_at(g, \1)",
-                v,
-            ).replace("sentence", "s")
-        else:
-            valid = "CAST(NULL AS TIMESTAMP)"
+        repl = SEP.join(f"${i}" for i in range(1, re.compile(p).groups + 1))
         st = _result_struct(
             "'t'", "CAST(i AS INT)",
             strip(f"element_at(g, {sg})"), f"'{name}'",
             strip(f"element_at(g, {og})"), "s",
-            valid, "CAST(NULL AS STRING)", "CAST(NULL AS STRING)",
+            v or "CAST(NULL AS TIMESTAMP)",
+            "CAST(NULL AS STRING)", "CAST(NULL AS STRING)",
         )
         return (
             f"WHEN source = '{src}' AND s RLIKE '{p}' THEN "
@@ -372,11 +205,7 @@ def _fused_results_expr() -> str:
         + " ".join(trip_branch(src, pat) for src, pat in _all_patterns())
         + " ELSE array() END"
     )
-    norm_of = (
-        "coalesce(nullif(regexp_replace(regexp_replace(lower(nm),"
-        " '^(professor |dr\\\\. |dr |mr\\\\. |ms\\\\. |mrs\\\\. )', ''),"
-        " '( (inc|llc|ltd))+$', ''), ''), lower(nm))"
-    )
+    norm_of = norm_sql("nm")
     stop_list = ", ".join(f"'{w}'" for w in sorted(STOP_SPANS))
     span_struct = _result_struct(
         "'m'", "0", "CAST(NULL AS STRING)", "CAST(NULL AS STRING)",
@@ -467,19 +296,6 @@ def split_extracted(all_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return triples, spans
 
 
-def extract_triples(episodes: DataFrame) -> DataFrame:
-    jt, _ = extract_json_jvm(episodes)
-    return extract_triples_jvm(_sentences(episodes)).unionByName(jt)
-
-
-def _role_case(which: int, ontology: Ontology = DEFAULT_ONTOLOGY) -> str:
-    branches = " ".join(
-        f"WHEN '{p}' THEN '{roles[which]}'"
-        for p, roles in ontology.pred_roles.items()
-    )
-    return f"CASE pred {branches} END"
-
-
 def mention_labels(
     triples: DataFrame, ontology: Ontology = DEFAULT_ONTOLOGY
 ) -> DataFrame:
@@ -491,12 +307,12 @@ def mention_labels(
     roles = (
         triples.selectExpr(
             "group_id", "subj_name AS name",
-            f"{_role_case(0, ontology)} AS label",
+            f"{ontology.role_sql(0)} AS label",
         )
         .unionAll(
             triples.selectExpr(
                 "group_id", "obj_name AS name",
-                f"{_role_case(1, ontology)} AS label",
+                f"{ontology.role_sql(1)} AS label",
             )
         )
         # predicates outside the role ontology (e.g. pass-through json
@@ -528,12 +344,3 @@ def attach_labels(
         .withColumn("label", F.coalesce("label", F.lit("Entity")))
         .select("episode_uuid", "group_id", "name", "norm_name", "label", "valid_at")
     )
-
-
-def extract_mentions(episodes: DataFrame, triples: DataFrame) -> DataFrame:
-    """Spans (JVM regexp_extract_all pass + json fields) + labels voted
-    from the already-extracted triples — avoids re-running the pattern
-    bank inside the mention pass."""
-    _, jm = extract_json_jvm(episodes)
-    spans = extract_spans_jvm(_sentences(episodes)).unionByName(jm)
-    return attach_labels(spans, triples)

@@ -203,7 +203,6 @@ def capped_bands(
 
 def match_edges_lsh(
     entities: DataFrame,
-    threshold: float = LSH_THRESHOLD,
     max_bucket: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
     """Fuzzy match edges, ALL-JVM: MinHash-LSH banding over char-3-gram
@@ -219,7 +218,7 @@ def match_edges_lsh(
     AQE skew-join splits the surviving hot buckets ('john smith')."""
     bands = lsh_band_rows(entities)
     bands = capped_bands(bands, bucket_sizes(bands), max_bucket)
-    return lsh_verify_pairs(bands, bands, threshold=threshold)
+    return lsh_verify_pairs(bands, bands)
 
 
 def lsh_band_rows(entities: DataFrame) -> DataFrame:
@@ -259,14 +258,13 @@ def lsh_band_rows(entities: DataFrame) -> DataFrame:
 def lsh_verify_pairs(
     left: DataFrame,
     right: DataFrame,
-    threshold: float = LSH_THRESHOLD,
     symmetric: bool = True,
 ) -> DataFrame:
     """Band-bucket join + exact-Jaccard verify over two band-row frames
     (lsh_band_rows shape). symmetric=True: left IS right, dedup via
     uuid <; symmetric=False: left is a probe subset, use != and
-    normalize with least/greatest."""
-    thr = float(threshold)
+    normalize with least/greatest. Pairs verify at Jaccard >=
+    LSH_THRESHOLD."""
     a, b = left.alias("a"), right.alias("b")
     pair_cond = (
         F.col("a.uuid") < F.col("b.uuid")
@@ -284,7 +282,7 @@ def lsh_verify_pairs(
         .where(
             F.expr(
                 "size(array_intersect(a._sh, b._sh)) >="
-                f" {thr} * size(array_union(a._sh, b._sh))"
+                f" {float(LSH_THRESHOLD)} * size(array_union(a._sh, b._sh))"
             )
         )
         .select(
@@ -398,15 +396,15 @@ def canonical_name():
     return F.min_by("name", F.concat(F.lpad(F.length("name"), 4, "0"), F.col("name")))
 
 
-def resolve_entities(mentions: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Returns (nodes, uuid_map).
+def resolve_entities(ents: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Resolve the distinct-entity table (distinct_entities; read by the
+    exact block, the LSH bands, CC and the final join, so callers pass it
+    cached). Returns (nodes, uuid_map).
 
     nodes: canonical entity table (uuid, name, group_id, labels, n_aliases,
            n_mentions, created_at-free — timestamps added at materialize).
     uuid_map: (group_id, name, uuid, canon_uuid) for pointer resolution.
     """
-    ents = distinct_entities(mentions).cache()
-
     star = match_edges_exact(ents).union(match_edges_lsh(ents))
     comp = connected_components(star, ents.select(F.col("uuid").alias("id")))
     mapped = ents.join(

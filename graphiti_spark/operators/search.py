@@ -503,7 +503,6 @@ def ir_eval(
     queries: DataFrame,
     ranking: DataFrame,
     id_col: str,
-    k: int = DEFAULT_SEARCH_LIMIT,
 ) -> DataFrame:
     """Retrieval-quality scorecard for a ranking over `corpus`
     (<id_col>, text), against a deterministic conjunctive qrel: a
@@ -514,18 +513,18 @@ def ir_eval(
     retrievers). Per query, integer-exact:
 
       n_rel          size of the relevant set in the whole corpus
-      hits_at_5/10   relevant docs inside the ranking's top-5 / top-k
-      first_rel_rank rank of the first relevant hit (0 = none in top-k)
+      hits_at_5/10   relevant docs inside the ranking's top-5 / top-10
+      first_rel_rank rank of the first relevant hit (0 = none in top-10)
 
     The float metrics a dashboard wants (MRR = mean 1/first_rel_rank,
-    recall@k = hits/n_rel) are one division away from these columns —
+    recall@10 = hits/n_rel) are one division away from these columns —
     the engine emits the exact integers, so the table hashes stably
     across engines and merges across eval shards.
 
     Plan: one distinct (doc, term) postings pass (the same shuffle
     family bm25_topk already builds), a broadcast of the tiny
     query-term table, one (query, doc) match count, and a semi-join of
-    the top-k ranking against the qrel — output is one row per query.
+    the top-10 ranking (DEFAULT_SEARCH_LIMIT) against the qrel — output is one row per query.
     """
     qterms = queries.select(
         "query_id",
@@ -552,7 +551,7 @@ def ir_eval(
     )
     nrel = qrel.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_rel"))
     hits = (
-        ranking.where(F.col("rank") <= k)
+        ranking.where(F.col("rank") <= DEFAULT_SEARCH_LIMIT)
         .select("query_id", "rank", F.col(id_col).alias("doc"))
         .join(qrel, ["query_id", "doc"], "semi")
     )
@@ -560,7 +559,7 @@ def ir_eval(
         F.sum(F.expr("CASE WHEN rank <= 5 THEN 1 ELSE 0 END")).alias(
             "hits_at_5"
         ),
-        F.count(F.lit(1)).alias(f"hits_at_{k}"),
+        F.count(F.lit(1)).alias(f"hits_at_{DEFAULT_SEARCH_LIMIT}"),
         F.min("rank").alias("first_rel_rank"),
     )
     base = queries.select("query_id").distinct()
@@ -571,7 +570,7 @@ def ir_eval(
             "query_id",
             *[
                 F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c)
-                for c in ["n_rel", "hits_at_5", f"hits_at_{k}",
+                for c in ["n_rel", "hits_at_5", f"hits_at_{DEFAULT_SEARCH_LIMIT}",
                           "first_rel_rank"]
             ],
         )

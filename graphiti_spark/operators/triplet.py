@@ -31,9 +31,11 @@ def add_triplets(
     nodes: DataFrame,
     edges: DataFrame,
     new_triplets: DataFrame,
+    ontology=None,
 ) -> tuple[DataFrame, DataFrame]:
     """new_triplets: (group_id, subj_name, pred, obj_name, fact, valid_at,
-    episode_uuid). Returns (nodes', edges')."""
+    episode_uuid). Returns (nodes', edges'); invalidation reads the
+    contradiction table of `ontology`, the one the graph was built with."""
     t = new_triplets.withColumn("subj_norm", _norm_udf_col(F.col("subj_name"))).withColumn(
         "obj_norm", _norm_udf_col(F.col("obj_name"))
     )
@@ -122,5 +124,5 @@ def add_triplets(
             F.min("created_at").alias("created_at"),
         )
     )
-    edges_out = invalidate_edges(merged)
+    edges_out = invalidate_edges(merged, ontology)
     return nodes_out, edges_out

@@ -58,7 +58,7 @@ from ..operators.resolve import (
     lsh_verify_pairs,
     match_edges_exact,
 )
-from .pipeline import GraphTables, named_triples
+from .pipeline import GraphTables, kg_triples
 
 
 @dataclass
@@ -250,7 +250,4 @@ def incremental_triples(state: GraphState) -> DataFrame:
     """kg_triples-shaped projection of the merged state (the oracle for
     kg_incremental_build IS the kg_triples oracle — incremental == batch
     is the contract)."""
-    t = named_triples(state.edges, state.names())
-    return t.select(
-        *t.columns[:-1], F.size("episodes").cast("long").alias("n_episodes")
-    )
+    return kg_triples(state.edges, state.names())

@@ -30,7 +30,7 @@ from ..operators.materialize import (
     materialize_edges,
     resolve_edge_pointers,
 )
-from ..operators.resolve import resolve_entities
+from ..operators.resolve import distinct_entities, resolve_entities
 from ..sources.pages import build_pages
 
 
@@ -40,7 +40,8 @@ class GraphTables:
     Attribute access materializes (and caches) the stage:
 
         pages -> episodes -> extracted -> {triples_raw, mentions_raw}
-              -> {nodes, uuid_map} -> edges_raw -> edges -> mention_edges
+              -> entities -> {nodes, uuid_map} -> edges_raw -> edges
+              -> mention_edges
 
     Assigning to a stage attribute overrides it: the API mutation paths
     (remove_episodes / add_triplet) rewrite tables in place, and the
@@ -94,9 +95,14 @@ class GraphTables:
         triples_raw, spans = split_extracted(self.extracted)
         return self._commit(attach_labels(spans, triples_raw, self.ontology))
 
+    def _build_entities(self) -> DataFrame:
+        # the distinct-entity table every resolution step reads; cached
+        # (no job of its own) and released with the graph
+        return distinct_entities(self.mentions_raw).cache()
+
     def _resolve(self) -> tuple[DataFrame, DataFrame]:
         """Entity resolution — runs once; caches BOTH outputs."""
-        nodes, uuid_map = resolve_entities(self.mentions_raw)
+        nodes, uuid_map = resolve_entities(self.entities)
         self.uuid_map = uuid_map
         self._base_nodes = nodes
         return nodes, uuid_map
@@ -193,6 +199,7 @@ class GraphTables:
             "extracted",
             "triples_raw",
             "mentions_raw",
+            "entities",
             "uuid_map",
             "_base_nodes",
             "edges_raw",
@@ -233,9 +240,10 @@ class GraphTables:
                 stale.unpersist()
 
     def release(self) -> None:
-        """Unpersist the read-side embedding indexes once this graph is
-        replaced (they are rebuilt on access if it is read again)."""
-        self._drop(("nodes_emb", "edges_emb"))
+        """Unpersist the cached entity table and the read-side embedding
+        indexes once this graph is replaced (they are rebuilt on access if
+        it is read again)."""
+        self._drop(("entities", "nodes_emb", "edges_emb"))
 
 
 def build_graph(
@@ -286,6 +294,15 @@ def named_triples(edges: DataFrame, names: DataFrame) -> DataFrame:
             "invalid_at",
             "episodes",
         )
+    )
+
+
+def kg_triples(edges: DataFrame, names: DataFrame) -> DataFrame:
+    """The kg_triples deliverable: named_triples with the provenance
+    array reduced to its size, n_episodes."""
+    t = named_triples(edges, names)
+    return t.select(
+        *t.columns[:-1], F.size("episodes").cast("long").alias("n_episodes")
     )
 
 

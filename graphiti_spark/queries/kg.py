@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from .. import corpus
 from ..operators import docs as docs_mod
 from ..operators.materialize import JOB_TS
-from ..plans.pipeline import triples_view
+from ..plans.pipeline import kg_triples, triples_view
 from ..session import local_frame
 from .shared import (
     LPA_ORACLE_ROUNDS,
@@ -29,16 +29,7 @@ def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship deliverable: deduplicated canonical (subj, pred, obj)
     triples with bi-temporal validity."""
     t = _graph(spark, sf_dir)
-    return triples_view(t).select(
-        "group_id",
-        "subj",
-        "pred",
-        "obj",
-        "fact",
-        "valid_at",
-        "invalid_at",
-        F.size("episodes").cast("long").alias("n_episodes"),
-    )
+    return kg_triples(t.edges, t.nodes)
 
 
 def q_kg_contradictions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -354,7 +345,7 @@ def q_kg_add_triplet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "group_id string, subj_name string, pred string, obj_name string, "
         "fact string, valid_at string, episode_uuid string",
     ).withColumn("valid_at", F.to_timestamp("valid_at"))
-    nodes2, edges2 = add_triplets(t.nodes, t.edges, trip)
+    nodes2, edges2 = add_triplets(t.nodes, t.edges, trip, t.ontology)
     subj = nodes2.select(
         F.col("uuid").alias("source_node_uuid"), F.col("name").alias("subj")
     )
@@ -1076,10 +1067,10 @@ def q_kg_global_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     crawl-scale consumer also needs the GLOBAL entity view — the same
     real-world entity surfacing on many domains. Rolls canonical nodes up
     by the shared normalization key (the exact-block key of X5
-    resolution, extract._NORM_SQL) into one global entity row with its
+    resolution, extract.norm_sql) into one global entity row with its
     domain spread. One partial-agg'd groupBy on the normalized key —
     entity-count cardinality, no joins."""
-    from ..operators.extract import _NORM_SQL
+    from ..operators.extract import norm_sql
 
     t = _graph(spark, sf_dir)
     return (
@@ -1088,7 +1079,7 @@ def q_kg_global_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
             "name",
             F.col("n_aliases").cast("long").alias("n_aliases"),
         )
-        .withColumn("global_key", F.expr(_NORM_SQL))
+        .withColumn("global_key", F.expr(norm_sql("name")))
         .groupBy("global_key")
         .agg(
             F.min("name").alias("canonical_name"),

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from .. import corpus
 from ..operators import search
 from ..operators.docs import read_documents
+from ..plans.pipeline import triples_view
 from ..session import local_frame
 from .kg import q_kg_triples
 from .shared import (
@@ -20,7 +21,10 @@ from .shared import (
     _graph,
     _kg_sql,
     _oracle_sf_dir,
+    bfs_origins,
     communities_ctes,
+    keyed_edges,
+    keyed_nodes,
 )
 
 # Fixed query workload over the documents table's vocabulary.
@@ -52,7 +56,7 @@ def q_search_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_documents(spark, sf_dir)
     qs = search.make_queries_df(spark, DOC_QUERIES)
     run = search.bm25_topk(docs, qs, "doc_id", "text", k=10)
-    return search.ir_eval(docs, qs, run, "doc_id", k=10)
+    return search.ir_eval(docs, qs, run, "doc_id")
 
 
 def q_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,19 +101,8 @@ def q_kg_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose name starts with the seed prefix; returns minimal hop depth.
     Keys are (group_id|name) — names are canonical within a group."""
     t = _graph(spark, sf_dir)
-    from ..plans.pipeline import triples_view
-
-    tv = triples_view(t)
-    edges = tv.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-    )
-    origins = (
-        t.nodes.where(F.col("name").startswith(BFS_SEED_PREFIX))
-        .select(F.concat_ws("|", "group_id", "name").alias("uuid"))
-        .withColumn("origin_uuid", F.col("uuid"))
-        .select("origin_uuid", "uuid")
-    )
+    edges = keyed_edges(triples_view(t))
+    origins = bfs_origins(t.nodes, BFS_SEED_PREFIX)
     out = search.bfs_nodes(edges, origins, max_depth=2)
     return out.select(
         "origin_uuid", F.col("uuid").alias("node_key"),
@@ -121,20 +114,8 @@ def q_kg_bfs_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q7 proper: the DISTINCT canonical edges on any <=2-hop undirected
     path from the seed nodes (edge-returning BFS, search_utils.py:277-329)."""
     t = _graph(spark, sf_dir)
-    from ..plans.pipeline import triples_view
-
-    tv = triples_view(t)
-    edges = tv.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-        F.col("pred").alias("name"),
-    )
-    origins = (
-        t.nodes.where(F.col("name").startswith(BFS_SEED_PREFIX))
-        .select(F.concat_ws("|", "group_id", "name").alias("uuid"))
-        .withColumn("origin_uuid", F.col("uuid"))
-        .select("origin_uuid", "uuid")
-    )
+    edges = keyed_edges(triples_view(t), F.col("pred").alias("name"))
+    origins = bfs_origins(t.nodes, BFS_SEED_PREFIX)
     out = search.bfs_edges(edges, origins, max_depth=2)
     return out.select(
         "origin_uuid",
@@ -402,16 +383,9 @@ def q_kg_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     no web-scale graph can afford exactly."""
     t = _graph(spark, sf_dir)
     from ..operators.centrality import landmark_closeness
-    from ..plans.pipeline import triples_view
 
-    tv = triples_view(t)
-    edges = tv.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-    )
-    nodes = t.nodes.select(
-        F.concat_ws("|", "group_id", "name").alias("uuid")
-    )
+    edges = keyed_edges(triples_view(t))
+    nodes = keyed_nodes(t.nodes)
     return landmark_closeness(
         edges, nodes, n_landmarks=N_LANDMARKS, max_depth=CLOSENESS_DEPTH
     )
@@ -462,16 +436,9 @@ def q_kg_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortest-path DAG."""
     t = _graph(spark, sf_dir)
     from ..operators.centrality import landmark_betweenness
-    from ..plans.pipeline import triples_view
 
-    tv = triples_view(t)
-    edges = tv.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-    )
-    nodes = t.nodes.select(
-        F.concat_ws("|", "group_id", "name").alias("uuid")
-    )
+    edges = keyed_edges(triples_view(t))
+    nodes = keyed_nodes(t.nodes)
     return landmark_betweenness(
         edges, nodes, n_landmarks=N_LANDMARKS, max_depth=CLOSENESS_DEPTH
     )
@@ -563,16 +530,10 @@ def q_kg_type_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, gated exactly."""
     t = _graph(spark, sf_dir)
     from ..operators.communities import propagate_labels
-    from ..plans.pipeline import triples_view
 
-    tv = triples_view(t)
-    edges = tv.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-    )
-    nodes = t.nodes.select(
-        F.concat_ws("|", "group_id", "name").alias("uuid"),
-        F.array_join(F.col("labels"), "/").alias("true_label"),
+    edges = keyed_edges(triples_view(t))
+    nodes = keyed_nodes(
+        t.nodes, F.array_join(F.col("labels"), "/").alias("true_label")
     )
     masked = F.substring(F.md5("uuid"), 1, 1).isin(*_MASK_NIBBLES)
     seeds = nodes.select(
@@ -734,17 +695,8 @@ def q_kg_bfs_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     hop is one co-partitioned join + min-agg."""
     t = _graph(spark, sf_dir)
     tv = q_kg_triples(spark, sf_dir)
-    snap = search.asof_snapshot(tv, ASOF_TS)
-    edges = snap.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-    )
-    origins = (
-        t.nodes.where(F.col("name").startswith(BFS_SEED_PREFIX))
-        .select(F.concat_ws("|", "group_id", "name").alias("uuid"))
-        .withColumn("origin_uuid", F.col("uuid"))
-        .select("origin_uuid", "uuid")
-    )
+    edges = keyed_edges(search.asof_snapshot(tv, ASOF_TS))
+    origins = bfs_origins(t.nodes, BFS_SEED_PREFIX)
     out = search.bfs_nodes(edges, origins, max_depth=2)
     return out.select(
         "origin_uuid",
@@ -810,8 +762,6 @@ EDGE_QUERIES = [
 def q_kg_edge_fulltext(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 proper: BM25 fulltext over the canonical edges' fact text
     (search_utils.py:146-197), doc key = group|subj|pred|obj."""
-    from ..plans.pipeline import triples_view
-
     t = _graph(spark, sf_dir)
     corpus_df = triples_view(t).select(
         F.concat_ws("|", "group_id", "subj", "pred", "obj").alias("edge_key"),
@@ -1253,17 +1203,9 @@ def q_kg_node_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     distance to a center node (search_utils.py:758-795) — center-adjacent
     hits first, unreachable last. Keys are (group|canon_name), matching
     the BFS queries."""
-    from ..plans.pipeline import triples_view
-
     t = _graph(spark, sf_dir)
-    tv = triples_view(t)
-    edges = tv.select(
-        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
-        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
-    )
-    nodes = t.nodes.select(
-        F.concat_ws("|", "group_id", "name").alias("uuid"), "name"
-    )
+    edges = keyed_edges(triples_view(t))
+    nodes = keyed_nodes(t.nodes, "name")
     qs = search.make_queries_df(spark, NAME_QUERIES)
     top = search.bm25_topk(nodes, qs, "uuid", "name", k=10).select(
         "query_id", "uuid"

@@ -1,11 +1,12 @@
 """Helpers shared by more than one query family: the memoized graph
 build, the oracle CTE fragments over the generative corpus, the embedding
 quantization expressions, the IVF / k-means SQL mirrors, the community
-CTEs, the keyset-pagination cursor and the oracle scratch directory."""
+CTEs, the keyset-pagination cursor, the oracle scratch directory and the
+(group_id|name)-keyed graph reads of the traversal queries."""
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import corpus
 from ..plans.pipeline import GraphTables, build_graph
@@ -20,6 +21,32 @@ def _graph(spark: SparkSession, sf_dir: str) -> GraphTables:
     if sf_dir not in _GRAPH_CACHE:
         _GRAPH_CACHE[sf_dir] = build_graph(spark, sf_dir)
     return _GRAPH_CACHE[sf_dir]
+
+
+# Traversal queries key nodes by (group_id|name): canonical names are
+# unique within a group, and the oracles build the same keys from SQL.
+
+def keyed_edges(triples: DataFrame, *extra) -> DataFrame:
+    """(source_node_uuid, target_node_uuid, *extra) edge list of a
+    named-triples frame, endpoints keyed by (group_id|name)."""
+    return triples.select(
+        F.concat_ws("|", "group_id", "subj").alias("source_node_uuid"),
+        F.concat_ws("|", "group_id", "obj").alias("target_node_uuid"),
+        *extra,
+    )
+
+
+def keyed_nodes(nodes: DataFrame, *extra) -> DataFrame:
+    """(uuid, *extra) node table keyed by (group_id|name)."""
+    return nodes.select(F.concat_ws("|", "group_id", "name").alias("uuid"), *extra)
+
+
+def bfs_origins(nodes: DataFrame, prefix: str) -> DataFrame:
+    """(origin_uuid, uuid) BFS seeds: every node whose name starts with
+    `prefix`, as its own origin."""
+    return keyed_nodes(nodes.where(F.col("name").startswith(prefix))).select(
+        F.col("uuid").alias("origin_uuid"), "uuid"
+    )
 
 
 IVF_CELLS, IVF_PROBE, IVF_ITERS, IVF_K = 8, 2, 2, 5

@@ -614,11 +614,11 @@ def _in_cache_manager(df) -> bool:
 
 def test_replaced_graph_releases_embedding_indexes(spark, sf_dir):
     """A second build() on one facade unpersists the first graph's
-    embedding indexes (and add_pages those of the graph it replaces);
-    search then runs over the new graph."""
+    cached entity table and embedding indexes (and add_pages those of the
+    graph it replaces); search then runs over the new graph."""
     api = GraphitiSpark(spark)
     first = api.build(sf_dir, pages=_small_pages(spark, sf_dir))
-    old = [first.__dict__[n] for n in ("nodes_emb", "edges_emb")]
+    old = [first.__dict__[n] for n in ("entities", "nodes_emb", "edges_emb")]
     assert all(_in_cache_manager(df) for df in old)
     second = api.build(sf_dir, pages=_small_pages(spark, sf_dir))
     assert not any(_in_cache_manager(df) for df in old)

@@ -77,7 +77,7 @@ def test_relative_time_forms(spark):
     present tense keeping the reference time itself."""
     import datetime
 
-    from graphiti_spark.operators.extract import extract_triples
+    from graphiti_spark.operators.extract import extract_all, split_extracted
 
     ref = datetime.datetime(2024, 3, 31, 10, 30)
     sents = [
@@ -93,7 +93,8 @@ def test_relative_time_forms(spark):
         "uuid string, group_id string, content string,"
         " valid_at timestamp, source string",
     )
-    got = {r["fact"]: r["valid_at"] for r in extract_triples(eps).collect()}
+    triples = split_extracted(extract_all(eps))[0]
+    got = {r["fact"]: r["valid_at"] for r in triples.collect()}
     assert got[sents[0]] == ref - datetime.timedelta(days=3)
     assert got[sents[1]] == ref - datetime.timedelta(days=7)
     assert got[sents[2]] == datetime.datetime(2024, 2, 29, 10, 30)  # clamped

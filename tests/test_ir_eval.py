@@ -23,7 +23,7 @@ def _eval(spark, queries):
     docs = _docs(spark)
     qs = make_queries_df(spark, queries)
     run = bm25_topk(docs, qs, "doc_id", "text", k=10)
-    out = ir_eval(docs, qs, run, "doc_id", k=10).collect()
+    out = ir_eval(docs, qs, run, "doc_id").collect()
     return {r["query_id"]: r for r in out}
 
 def test_conjunctive_qrel_and_hits(spark):

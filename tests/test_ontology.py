@@ -8,6 +8,8 @@ reference custom pydantic entity types and edge maps.
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -85,6 +87,37 @@ def test_ontology_synonym_class_sql_identity():
     assert Ontology(synonyms={}).synonym_class_sql("pred") == "pred"
     sql = DEFAULT.synonym_class_sql("pred")
     assert "EMPLOYED_AT" in sql and "WORKS_AT" in sql
+
+
+def test_empty_role_table_labels_every_node_entity(spark):
+    """An ontology with no predicate roles votes no label: the build runs
+    and every node keeps the bare Entity label."""
+    assert Ontology(pred_roles={}).role_sql(0) == "CAST(NULL AS STRING)"
+    t = build_graph(
+        spark, sf_dir="", pages=_pages(spark, TEXTS), ontology=Ontology(pred_roles={})
+    )
+    labels = {tuple(r["labels"]) for r in t.nodes.select("labels").collect()}
+    assert labels == {("Entity",)}
+
+
+def test_add_triplet_keeps_the_graphs_contradiction_table(spark):
+    """add_triplet re-runs invalidation under the ontology the graph was
+    built with: with no contradiction classes, a works-at fact and its
+    later no-longer-works-at twin both stay valid."""
+    from graphiti_spark.api import GraphitiSpark
+
+    pages = _pages(spark, [
+        "title zero\n\nnoise\n\nAlice Johnson works at Acme Corp.",
+        "title one\n\nnoise\n\nAlice Johnson no longer works at Acme Corp.",
+    ])
+    g = GraphitiSpark(spark)
+    t = g.build("", pages=pages, ontology=Ontology(contra={}))
+    assert t.edges.where("invalid_at IS NOT NULL").count() == 0
+    g.add_triplet("src0", "Bob Hartley", "LIKES", "Carol Danvers",
+                  "Bob Hartley likes Carol Danvers.",
+                  datetime.datetime(2024, 7, 1), "ep-added")
+    assert g.tables.edges.count() == 3
+    assert g.tables.edges.where("invalid_at IS NOT NULL").count() == 0
 
 
 def test_custom_ontology_same_graph_on_every_entry_path(spark, tmp_path):

@@ -77,15 +77,49 @@ def _calls():
     return by_name
 
 
-def _same(value, default):
-    """Whether a passed argument is the default literal itself."""
-    return ast.dump(value) == ast.dump(default)
+def _module_constants():
+    """name -> value of the package's module-level `NAME = <literal>`
+    assignments, for names every module binds to the same value."""
+    seen = defaultdict(set)
+    for path in _py_files(PACKAGE):
+        for node in _parse(path).body:
+            if isinstance(node, ast.Assign) and len(node.targets) == 1:
+                target = node.targets[0]
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                target = node.target
+            else:
+                continue
+            value = _literal(node.value)
+            if isinstance(target, ast.Name) and value is not None:
+                seen[target.id].add(value)
+    return {n: vs.pop() for n, vs in seen.items() if len(vs) == 1}
+
+
+def _literal(node):
+    try:
+        value = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError):
+        return None
+    return (type(value).__name__, repr(value))
+
+
+def _same(value, default, consts):
+    """Whether a passed argument is the default itself: the same
+    expression, or the literal a default naming a module constant holds
+    (`k=10` against `k: int = DEFAULT_SEARCH_LIMIT`)."""
+    if ast.dump(value) == ast.dump(default):
+        return True
+    if isinstance(default, ast.Name):
+        known = consts.get(default.id)
+        return known is not None and _literal(value) == known
+    return False
 
 
 def single_valued_params():
     """Sorted 'module.function.param' for every defaulted parameter that no
     call in the repo passes a non-default value."""
     calls = _calls()
+    consts = _module_constants()
     hits = []
     for name, (mod, fn) in _package_functions().items():
         for pname, idx, default in _defaulted(fn):
@@ -98,7 +132,7 @@ def single_valued_params():
                 passed = [k.value for k in c.keywords if k.arg == pname]
                 if idx is not None and idx < len(c.args):
                     passed.append(c.args[idx])
-                if any(not _same(v, default) for v in passed):
+                if any(not _same(v, default, consts) for v in passed):
                     varied = True
                     break
             if not varied:

@@ -10,6 +10,7 @@ import pandas as pd
 from graphiti_spark.operators.resolve import (
     char_shingles,
     connected_components,
+    distinct_entities,
     jaccard,
     match_edges_lsh,
     minhash_signature,
@@ -60,7 +61,7 @@ def test_jaccard_shingles():
 def test_lsh_equals_exact_on_corpus(spark, graph):
     """On this corpus all true aliases share a normalized name, so the LSH
     path must produce the same canonicalization as exact blocking."""
-    nodes_lsh, um_lsh = resolve_entities(graph.mentions_raw)
+    nodes_lsh, um_lsh = resolve_entities(distinct_entities(graph.mentions_raw))
     um_exact = graph.uuid_map.toPandas()
     lsh = um_lsh.toPandas()
     a = um_exact.set_index("uuid")["canon_uuid"]
@@ -98,7 +99,7 @@ def test_lsh_finds_typo_variants(spark):
         "episode_uuid string, group_id string, name string, norm_name string,"
         " label string, valid_at timestamp",
     )
-    nodes, um = resolve_entities(mentions)
+    nodes, um = resolve_entities(distinct_entities(mentions))
     m = um.toPandas().set_index("name")["canon_uuid"]
     assert m["Alice Johnson"] == m["Alice Johnsonn"]
     assert m["Bob Hartley"] != m["Alice Johnson"]

@@ -145,11 +145,11 @@ def test_lsh_bucket_cap_drops_pathological_bucket(spark):
     ents = spark.createDataFrame(
         rows, "group_id string, name string, norm_name string, label string, uuid string"
     )
-    capped = match_edges_lsh(ents, threshold=0.6, max_bucket=10)
+    capped = match_edges_lsh(ents, max_bucket=10)
     pairs = {(r["src"], r["dst"]) for r in capped.collect()}
     assert ("ua", "ub") in pairs or ("ub", "ua") in pairs
     # every template pair is gone (their buckets exceed the cap)
     assert all(not (a.startswith("u0") and b.startswith("u0")) for a, b in pairs)
     # uncapped, the hot bucket floods the candidate set quadratically
-    flood = match_edges_lsh(ents, threshold=0.6, max_bucket=100_000)
+    flood = match_edges_lsh(ents, max_bucket=100_000)
     assert flood.count() == capped.count() + 60 * 59 // 2
