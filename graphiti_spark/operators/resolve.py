@@ -4,17 +4,21 @@ graphiti resolves each extracted node against LSH-free LLM-judged candidate
 lists, one episode at a time (/root/reference/graphiti_core/utils/
 maintenance/node_operations.py:298-412; bulk_utils.py:243-327 for the
 recursive sqrt-chunk batch variant). The distributed redesign (per the
-north rule):
+north rule) is ONE resolver, `resolve_entities`, which resolves new
+entities against a standing index (EntityIndex); a batch build is the
+case of an empty index (full resolution is the delta over an empty
+index, as in dynamic-data ER):
 
 1. **blocking** — exact key: normalized entity name (lowercase, honorific
    and corporate-suffix stripped); fuzzy key: MinHash-LSH bands over char
    3-gram shingles of the normalized name;
-2. **match-edge list** — candidate pairs from a block are verified
+2. **match-edge list** — candidate pairs involving >= 1 new entity
    (exact-norm pairs are matches by definition; LSH pairs verified by
    exact shingle Jaccard >= threshold, JVM-side in the band join);
-3. **connected components** over the match edges (iterative min-label
-   propagation — GraphFrames-free), canonical uuid = min(uuid) per
-   component. This reproduces graphiti's order-dependent "first wins"
+3. **connected components** over the match edges with standing endpoints
+   contracted to their canonical uuid (iterative min-label propagation —
+   GraphFrames-free), canonical uuid = min(uuid) per component. This
+   reproduces graphiti's order-dependent "first wins"
    (bulk_utils.py:246-249) with a deterministic total order;
 4. **uuid_map broadcast join** to remap edge pointers
    (resolve_edge_pointers, bulk_utils.py:367-374 → J1).
@@ -26,6 +30,8 @@ verification* stage; the CC edge list is tiny relative to the corpus
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import numpy as np
 
@@ -176,10 +182,9 @@ _SHINGLE_ARR = (
 _H32 = "cast(conv(substr(md5({x}), 1, 8), 16, 10) as bigint) % 2147483647"
 
 
-# one definition of the fuzzy-match configuration, shared by the one-shot
-# build (resolve_entities) and the incremental merge (plans/incremental.py):
-# incremental == one-shot holds only if both verify at the same Jaccard
-# threshold and drop the same over-populated buckets
+# one definition of the fuzzy-match configuration, read by the one
+# resolver (resolve_entities) when it runs: a build and every merge verify
+# at the same Jaccard threshold and drop the same over-populated buckets
 LSH_THRESHOLD = 0.6
 LSH_BUCKET_CAP = 1000
 BUCKET_KEY = ["group_id", "band", "bkey"]
@@ -190,42 +195,20 @@ def bucket_sizes(bands: DataFrame) -> DataFrame:
     return bands.groupBy(*BUCKET_KEY).agg(F.count(F.lit(1)).alias("n"))
 
 
-def capped_bands(
-    bands: DataFrame, bucket_n: DataFrame, max_bucket: int = LSH_BUCKET_CAP
-) -> DataFrame:
-    """Band rows whose bucket holds at most `max_bucket` members (a bucket
-    with k members contributes k(k-1)/2 join rows — pathological buckets
-    are template/boilerplate name families, not alias clusters; same cap
-    discipline as operators/dedup.minhash_candidates)."""
-    ok = bucket_n.where(F.col("n") <= max_bucket).select(*BUCKET_KEY)
-    return bands.join(ok, BUCKET_KEY)
-
-
 def match_edges_lsh(
     entities: DataFrame,
     max_bucket: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
-    """Fuzzy match edges, ALL-JVM: MinHash-LSH banding over char-3-gram
-    shingles of the normalized name (higher-order-function min-hash per
-    band, no Python workers), then exact Jaccard verification inline in
-    the band join via array_intersect/array_union on the carried shingle
-    arrays (names are short, so the arrays ride the shuffle cheaply).
-
-    At crawl scale the input is the DISTINCT name table — orders of
-    magnitude smaller than the mention stream — and the band/bucket key
-    is the shuffle key. Two skew guards: buckets larger than
-    `max_bucket` are dropped BEFORE the self-join (capped_bands), and
-    AQE skew-join splits the surviving hot buckets ('john smith')."""
-    bands = lsh_band_rows(entities)
-    bands = capped_bands(bands, bucket_sizes(bands), max_bucket)
-    return lsh_verify_pairs(bands, bands)
+    """Fuzzy match edges among `entities`: the resolver's candidate
+    function (lsh_pairs) with every row new, i.e. no standing index."""
+    bands = lsh_band_rows(entities).withColumn("_new", F.lit(True))
+    return lsh_pairs(bands, bucket_sizes(bands), max_bucket)
 
 
 def lsh_band_rows(entities: DataFrame) -> DataFrame:
     """(uuid, group_id, _sh, band, bkey) — the LSH index rows of the
-    distinct-entity table. In the incremental merge this table is
-    STANDING STATE (persisted, appended per batch); here it is also the
-    internal front of match_edges_lsh."""
+    distinct-entity table: the `bands` of an EntityIndex (standing state,
+    persisted and appended per batch)."""
     # each shingle is hashed ONCE into _hs; the 32 signature minima reuse
     # it (Catalyst does not share subexpressions across lambda bodies, so
     # hashing inside each signature lambda costs 32 md5 calls per shingle)
@@ -255,29 +238,35 @@ def lsh_band_rows(entities: DataFrame) -> DataFrame:
     )
 
 
-def lsh_verify_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    symmetric: bool = True,
-) -> DataFrame:
-    """Band-bucket join + exact-Jaccard verify over two band-row frames
-    (lsh_band_rows shape). symmetric=True: left IS right, dedup via
-    uuid <; symmetric=False: left is a probe subset, use != and
-    normalize with least/greatest. Pairs verify at Jaccard >=
-    LSH_THRESHOLD."""
-    a, b = left.alias("a"), right.alias("b")
-    pair_cond = (
-        F.col("a.uuid") < F.col("b.uuid")
-        if symmetric
-        else F.col("a.uuid") != F.col("b.uuid")
-    )
+def lsh_pairs(bands: DataFrame, bucket_n: DataFrame, max_bucket: int) -> DataFrame:
+    """Verified fuzzy match pairs involving >= 1 new entity, ALL-JVM.
+
+    `bands` are lsh_band_rows with a boolean `_new` marker: false on the
+    standing index, true on the entities being resolved. The new rows
+    whose bucket holds at most `max_bucket` members (`bucket_n`, standing
+    + new) probe every row of their bucket: dropping a hot bucket from the
+    probe side drops every pair in it (a bucket of k members would make
+    k(k-1)/2 join rows; hot buckets are template/boilerplate name
+    families, not alias clusters — the cap discipline of
+    operators/dedup.minhash_candidates). `a.uuid < b.uuid OR NOT b._new`
+    emits each unordered pair once (new-new in uuid order, new-standing
+    with the new uuid first); pairs sharing several bands are deduplicated.
+    Exact Jaccard verification (>= LSH_THRESHOLD) runs inline in the band
+    join via array_intersect/array_union on the carried shingle arrays
+    (names are short, so the arrays ride the shuffle cheaply).
+
+    The band/bucket key is the shuffle key; AQE skew-join splits the
+    surviving hot buckets ('john smith')."""
+    ok = bucket_n.where(F.col("n") <= max_bucket).select(*BUCKET_KEY)
+    a = bands.where("_new").join(ok, BUCKET_KEY).alias("a")
+    b = bands.alias("b")
     return (
         a.join(
             b,
             (F.col("a.group_id") == F.col("b.group_id"))  # group is a hard partition (nodes.py:81)
             & (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bkey") == F.col("b.bkey"))
-            & pair_cond,
+            & ((F.col("a.uuid") < F.col("b.uuid")) | ~F.col("b._new")),
         )
         .where(
             F.expr(
@@ -285,10 +274,7 @@ def lsh_verify_pairs(
                 f" {float(LSH_THRESHOLD)} * size(array_union(a._sh, b._sh))"
             )
         )
-        .select(
-            F.least(F.col("a.uuid"), F.col("b.uuid")).alias("src"),
-            F.greatest(F.col("a.uuid"), F.col("b.uuid")).alias("dst"),
-        )
+        .select(F.col("a.uuid").alias("src"), F.col("b.uuid").alias("dst"))
         .dropDuplicates(["src", "dst"])
     )
 
@@ -301,9 +287,8 @@ def _local_components(spark, pairs, id_type: str) -> DataFrame:
     data — is replaced by union-find over the already-collected pairs +
     broadcast-back, the same small-graph cutover GraphX-style CC
     implementations use. Returns (id, component=min member id) for ids
-    touched by any edge; untouched vertices keep themselves via the
-    caller's coalesce. `id_type` is the SQL type of the ids (uuid strings
-    for entity resolution, longs for document clusters)."""
+    touched by any edge. `id_type` is the SQL type of the ids (uuid
+    strings for entity resolution, longs for document clusters)."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -329,11 +314,12 @@ def _local_components(spark, pairs, id_type: str) -> DataFrame:
 LOCAL_CC_THRESHOLD = 100_000
 
 
-def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
-    """Min-label propagation to fixpoint. vertices: (id). edges: (src, dst)
-    undirected. Returns (id, component). Iterations are bounded by graph
-    diameter; alias-resolution graphs are star-shaped so this converges in
-    1-2 rounds; checkpointing via localCheckpoint truncates lineage."""
+def component_map(edges: DataFrame) -> DataFrame:
+    """(id, component) for every endpoint of the undirected `edges` (src,
+    dst): component = min id of its connected component. Min-label
+    propagation to fixpoint; iterations are bounded by graph diameter;
+    alias-resolution graphs are star-shaped so this converges in 1-2
+    rounds; checkpointing via localCheckpoint truncates lineage."""
     # adaptive small-graph cutover: the match-edge list is tiny relative
     # to the corpus (distinct colliding names only). ONE bounded action
     # probes it: collect at most LOCAL_CC_THRESHOLD + 1 pairs. If the
@@ -347,16 +333,15 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     probe = edges.limit(LOCAL_CC_THRESHOLD + 1).collect()
     if len(probe) <= LOCAL_CC_THRESHOLD:
         edges.unpersist()
-        local = _local_components(
+        return _local_components(
             edges.sparkSession, probe, edges.schema["src"].dataType.simpleString()
         )
-        return vertices.join(local, "id", "left").select(
-            "id", F.coalesce("component", "id").alias("component")
-        )
 
-    labels = vertices.select(F.col("id"), F.col("id").alias("component"))
     bidir = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    labels = bidir.select(F.col("src").alias("id")).distinct().select(
+        "id", F.col("id").alias("component")
     )
     for _ in range(25):
         nbr = (
@@ -388,6 +373,14 @@ def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
     return labels
 
 
+def connected_components(edges: DataFrame, vertices: DataFrame) -> DataFrame:
+    """(id, component) for every vertex (id) of the undirected `edges`
+    graph (component_map); vertices on no edge keep themselves."""
+    return vertices.join(component_map(edges), "id", "left").select(
+        "id", F.coalesce("component", "id").alias("component")
+    )
+
+
 def canonical_name():
     """Aggregate picking an alias cluster's canonical display name from its
     `name` column: shortest, then lexicographic (deterministic analogue of
@@ -396,32 +389,107 @@ def canonical_name():
     return F.min_by("name", F.concat(F.lpad(F.length("name"), 4, "0"), F.col("name")))
 
 
-def resolve_entities(ents: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Resolve the distinct-entity table (distinct_entities; read by the
-    exact block, the LSH bands, CC and the final join, so callers pass it
-    cached). Returns (nodes, uuid_map).
+@dataclass
+class EntityIndex:
+    """The standing state of entity resolution, all skinny and columnar:
+    what new entities resolve against, so no resolution re-blocks the
+    entities already resolved."""
 
-    nodes: canonical entity table (uuid, name, group_id, labels, n_aliases,
-           n_mentions, created_at-free — timestamps added at materialize).
-    uuid_map: (group_id, name, uuid, canon_uuid) for pointer resolution.
-    """
-    star = match_edges_exact(ents).union(match_edges_lsh(ents))
-    comp = connected_components(star, ents.select(F.col("uuid").alias("id")))
-    mapped = ents.join(
-        comp.withColumnRenamed("id", "uuid"), "uuid", "left"
-    ).withColumn("canon_uuid", F.coalesce("component", "uuid"))
+    ents: DataFrame  # (group_id, name, norm_name, uuid) distinct entities
+    canon: DataFrame  # (uuid, canon_uuid): min uuid of its alias cluster
+    bands: DataFrame  # LSH index rows (lsh_band_rows shape)
+    bucket_n: DataFrame  # (group_id, band, bkey, n) bucket populations
 
-    uuid_map = mapped.select("group_id", "name", "norm_name", "uuid", "canon_uuid")
-    nodes = (
-        mapped.groupBy("group_id", "canon_uuid")
-        .agg(
-            canonical_name().alias("name"),
-            F.array_sort(F.collect_set("label")).alias("labels"),
-            F.count(F.lit(1)).alias("n_aliases"),
+    @staticmethod
+    def empty(spark) -> EntityIndex:
+        """The index of an empty graph: JVM-local relations without rows,
+        which the optimizer prunes from every plan that reads them (a
+        build's resolution plan has no join against them)."""
+        return EntityIndex(
+            ents=local_frame(
+                spark, [], "group_id string, name string, norm_name string, uuid string"
+            ),
+            canon=local_frame(spark, [], "uuid string, canon_uuid string"),
+            bands=local_frame(
+                spark, [],
+                "uuid string, group_id string, _sh array<string>, band int, bkey string",
+            ),
+            bucket_n=local_frame(spark, [], "group_id string, band int, bkey string, n bigint"),
         )
-        .withColumnRenamed("canon_uuid", "uuid")
+
+
+def resolve_entities(
+    index: EntityIndex, new: DataFrame
+) -> tuple[EntityIndex, DataFrame]:
+    """The one entity resolver: resolve `new` — distinct entities
+    (distinct_entities shape) none of which is in `index` — against the
+    standing index. A build passes EntityIndex.empty; a merge passes the
+    standing graph. `new` is read by the exact block, the LSH bands and
+    the assignment, so callers pass it cached or committed.
+
+    Candidates must involve >= 1 new entity: standing pairs are already
+    connected by the standing assignment. Each candidate endpoint is
+    contracted through that assignment, so connected components run on
+    O(new) supernodes. A standing canon id is the min uuid of its
+    cluster, so min-label CC over contracted ids yields the min uuid of
+    each merged cluster: the assignment equals a resolution of all
+    entities at once, uuid for uuid.
+
+    Returns (index', delta_map): the index with `new` folded in, and
+    (id, component) for each contracted id (a standing canon uuid or a new
+    uuid) whose canonical uuid is now `component` — O(merged clusters)."""
+    new = new.select("group_id", "name", "norm_name", "uuid")
+    exact = (
+        new.alias("n")
+        .join(index.ents.alias("p"), ["group_id", "norm_name"])
+        .groupBy(F.col("n.uuid").alias("src"))
+        .agg(F.min(F.col("p.uuid")).alias("dst"))
+        .union(match_edges_exact(new))
     )
-    return nodes, uuid_map
+    # bucket populations accumulate across batches: the cap sees the
+    # standing members of a bucket as well as the new ones
+    new_bands = lsh_band_rows(new)
+    bucket_n = (
+        index.bucket_n.unionByName(bucket_sizes(new_bands))
+        .groupBy(*BUCKET_KEY)
+        .agg(F.sum("n").alias("n"))
+    )
+    bands = index.bands.withColumn("_new", F.lit(False)).unionByName(
+        new_bands.withColumn("_new", F.lit(True))
+    )
+    pairs = exact.union(lsh_pairs(bands, bucket_n, LSH_BUCKET_CAP))
+
+    def canon_of(col: str) -> DataFrame:
+        return index.canon.select(
+            F.col("uuid").alias(col), F.col("canon_uuid").alias(f"c{col}")
+        )
+
+    # a missing assignment = the endpoint is new
+    contracted = (
+        pairs.join(canon_of("src"), "src", "left")
+        .join(canon_of("dst"), "dst", "left")
+        .select(
+            F.coalesce("csrc", "src").alias("src"),
+            F.coalesce("cdst", "dst").alias("dst"),
+        )
+        .where(F.col("src") != F.col("dst"))
+    )
+    delta_map = component_map(contracted).where(F.col("id") != F.col("component"))
+    canon = (
+        new.select("uuid", F.col("uuid").alias("canon_uuid"))
+        .unionByName(index.canon)
+        .join(delta_map.withColumnRenamed("id", "canon_uuid"), "canon_uuid", "left")
+        .select("uuid", F.coalesce("component", "canon_uuid").alias("canon_uuid"))
+    )
+    return (
+        EntityIndex(
+            ents=index.ents.unionByName(new),
+            canon=canon,
+            bands=index.bands.unionByName(new_bands),
+            bucket_n=bucket_n,
+        ),
+        delta_map,
+    )
 
 
 def er_pair_metrics(truth: DataFrame, engine: DataFrame) -> DataFrame:

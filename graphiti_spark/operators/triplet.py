@@ -14,17 +14,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.text import normalize_entity_name
+from .extract import norm_sql
 from .materialize import invalidate_edges
 
 
-def _norm_udf_col(col):
-    # normalization is tiny-string work on a tiny input; stay JVM-side
-    # with the same semantics as functions.text.normalize_entity_name for
-    # the honorific/suffix forms the engine produces
-    lowered = F.lower(F.trim(col))
-    no_honor = F.regexp_replace(lowered, r"^(professor |dr\. |dr |mr\. |ms\. |mrs\. )", "")
-    return F.regexp_replace(no_honor, r" (inc|llc|ltd)$", "")
+def _norm(col: str):
+    # the build's exact-block normalization (extract.norm_sql), so a name
+    # keys to the node the build made of it
+    return F.expr(norm_sql(f"trim({col})"))
 
 
 def add_triplets(
@@ -36,8 +33,8 @@ def add_triplets(
     """new_triplets: (group_id, subj_name, pred, obj_name, fact, valid_at,
     episode_uuid). Returns (nodes', edges'); invalidation reads the
     contradiction table of `ontology`, the one the graph was built with."""
-    t = new_triplets.withColumn("subj_norm", _norm_udf_col(F.col("subj_name"))).withColumn(
-        "obj_norm", _norm_udf_col(F.col("obj_name"))
+    t = new_triplets.withColumn("subj_norm", _norm("subj_name")).withColumn(
+        "obj_norm", _norm("obj_name")
     )
 
     # resolve endpoints against existing canonical nodes by normalized name
@@ -45,7 +42,7 @@ def add_triplets(
         "group_id",
         F.col("uuid").alias("node_uuid"),
         F.col("name").alias("node_name"),
-        _norm_udf_col(F.col("name")).alias("node_norm"),
+        _norm("name").alias("node_norm"),
     )
 
     def attach(side: str) -> DataFrame:

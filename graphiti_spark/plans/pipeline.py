@@ -30,7 +30,12 @@ from ..operators.materialize import (
     materialize_edges,
     resolve_edge_pointers,
 )
-from ..operators.resolve import distinct_entities, resolve_entities
+from ..operators.resolve import (
+    EntityIndex,
+    canonical_name,
+    distinct_entities,
+    resolve_entities,
+)
 from ..sources.pages import build_pages
 
 
@@ -100,12 +105,28 @@ class GraphTables:
         # (no job of its own) and released with the graph
         return distinct_entities(self.mentions_raw).cache()
 
-    def _resolve(self) -> tuple[DataFrame, DataFrame]:
-        """Entity resolution — runs once; caches BOTH outputs."""
-        nodes, uuid_map = resolve_entities(self.entities)
-        self.uuid_map = uuid_map
-        self._base_nodes = nodes
-        return nodes, uuid_map
+    def _resolve(self) -> None:
+        """Entity resolution — runs once; caches BOTH outputs. A build
+        resolves its entities as a merge into an empty graph (the
+        optimizer prunes the empty index from the plan).
+
+        _base_nodes: canonical entity table (group_id, uuid, name, labels,
+        n_aliases).
+        uuid_map: (group_id, name, norm_name, uuid, canon_uuid) for
+        pointer resolution."""
+        ents = self.entities
+        index, _ = resolve_entities(EntityIndex.empty(ents.sparkSession), ents)
+        mapped = ents.join(index.canon, "uuid")
+        self.uuid_map = mapped.select("group_id", "name", "norm_name", "uuid", "canon_uuid")
+        self._base_nodes = (
+            mapped.groupBy("group_id", "canon_uuid")
+            .agg(
+                canonical_name().alias("name"),
+                F.array_sort(F.collect_set("label")).alias("labels"),
+                F.count(F.lit(1)).alias("n_aliases"),
+            )
+            .withColumnRenamed("canon_uuid", "uuid")
+        )
 
     def _build_uuid_map(self) -> DataFrame:
         self._resolve()
@@ -117,8 +138,7 @@ class GraphTables:
 
     def _build_edges_raw(self) -> DataFrame:
         # raw triples with canonical endpoint uuids: read once by the edge
-        # build, so not committed here (the incremental bootstrap commits
-        # it as its standing triple log)
+        # build, so not committed
         return resolve_edge_pointers(self.triples_raw, self.uuid_map)
 
     def _build_edges(self) -> DataFrame:

@@ -550,16 +550,11 @@ def q_doc_embcos_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs -> drop-list story that doc_dup_clusters provides for MinHash.
     The pair graph is tiny relative to the corpus (only planted twins
     pass the 0.9 gate), so the CC runs on the skinny edge list only."""
-    from ..operators.resolve import connected_components
+    from ..operators.resolve import component_map
 
     pairs = q_doc_embcos_dedup(spark, sf_dir)
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    comp = connected_components(edges, verts)
+    comp = component_map(edges)
     return comp.select(
         F.col("id").cast("long").alias("vec_id"),
         F.col("component").cast("long").alias("canonical_id"),
@@ -856,19 +851,14 @@ def q_doc_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every affected doc gets a (canonical_doc_id, keep) assignment —
     the step that turns pairwise similarity into the actual drop list a
     training-data pipeline executes. Reuses the engine's
-    connected_components (F16) over the pair list; at crawl scale the
+    component_map (F16) over the pair list; at crawl scale the
     pair graph is tiny relative to the corpus (only near-dups appear)."""
     from ..operators.dedup import minhash_dedup_pairs
-    from ..operators.resolve import connected_components
+    from ..operators.resolve import component_map
 
     pairs = minhash_dedup_pairs(_docs_with_near_dups(spark, sf_dir))
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    verts = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    comp = connected_components(edges, verts)
+    comp = component_map(edges)
     return comp.select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("component").cast("long").alias("canonical_doc_id"),

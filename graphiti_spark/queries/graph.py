@@ -335,9 +335,9 @@ def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     group, with component sizes — the graph-hygiene diagnostic (one
     giant component = healthy coverage; many shards = extraction gaps).
     Reuses the engine's adaptive connected-components (local union-find
-    cutover under 1M edges, distributed min-label fixpoint above);
+    cutover under 100k edges, distributed min-label fixpoint above);
     per-group isolation via a group-prefixed vertex key."""
-    from ..operators.resolve import connected_components
+    from ..operators.resolve import component_map
 
     tv = q_kg_triples(spark, sf_dir)
     und = (
@@ -353,10 +353,7 @@ def q_kg_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws("|", "group_id", "a").alias("src"),
         F.concat_ws("|", "group_id", "b").alias("dst"),
     )
-    v = e.select(F.col("src").alias("id")).union(
-        e.select(F.col("dst").alias("id"))
-    ).distinct()
-    comp = connected_components(e, v)
+    comp = component_map(e)
     out = comp.select(
         F.expr("substring_index(id, '|', 1)").alias("group_id"),
         F.expr("substr(id, length(substring_index(id, '|', 1)) + 2)").alias(

@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .. import corpus
 from ..operators import docs as docs_mod
+from ..operators.extract import norm_sql
 from ..operators.materialize import JOB_TS
 from ..plans.pipeline import kg_triples, triples_view
 from ..session import local_frame
@@ -1070,7 +1071,6 @@ def q_kg_global_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     resolution, extract.norm_sql) into one global entity row with its
     domain spread. One partial-agg'd groupBy on the normalized key —
     entity-count cardinality, no joins."""
-    from ..operators.extract import norm_sql
 
     t = _graph(spark, sf_dir)
     return (
@@ -1108,7 +1108,6 @@ def q_kg_global_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent domains). Plan: one partial-agg'd groupBy over the final
     triples table — fact-cardinality input, no joins, no window."""
     from ..ontology import DEFAULT
-    from ..operators.extract import norm_sql
 
     tri = q_kg_triples(spark, sf_dir)
     return (
@@ -1154,7 +1153,6 @@ def q_kg_global_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-partitioned groupBy (same keys, shuffle reused) for the vote and
     the disagreement stats — fact-cardinality input, no self-join."""
     from ..ontology import DEFAULT
-    from ..operators.extract import norm_sql
 
     tri = q_kg_triples(spark, sf_dir)
     valid = (
@@ -1211,7 +1209,6 @@ def q_kg_source_trust(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-sized join majority->claims, one final groupBy on
     group_id — no self-joins, no windows."""
     from ..ontology import DEFAULT
-    from ..operators.extract import norm_sql
 
     tri = q_kg_triples(spark, sf_dir)
     valid = (
@@ -1591,16 +1588,6 @@ WHERE s.n_left > 0"""
     return _kg_sql(body, with_eds=True)
 
 
-def _norm_name_sql(col: str) -> str:
-    """SQL mirror of operators/triplet._norm_udf_col (honorific/suffix
-    strip) in the Java/RE2 common subset."""
-    return (
-        f"regexp_replace(regexp_replace(trim(lower({col})), "
-        f"'^(professor |dr\\. |dr |mr\\. |ms\\. |mrs\\. )', ''), "
-        f"' (inc|llc|ltd)$', '')"
-    )
-
-
 _CONTRA_CLASS_SQL = (
     "CASE {x} WHEN 'WORKS_AT' THEN 'WORKS_AT' WHEN 'EMPLOYED_AT' THEN 'WORKS_AT' "
     "WHEN 'NO_LONGER_WORKS_AT' THEN 'WORKS_AT' "
@@ -1628,7 +1615,7 @@ def _sql_kg_add_triplet() -> str:
   GROUP BY 1, 2
 ),
 normmap AS (
-  SELECT group_id, {_norm_name_sql('name')} AS norm,
+  SELECT group_id, {norm_sql('trim(name)', duck=True)} AS norm,
          min(uuid) AS uuid, arg_min(name, uuid) AS name
   FROM canonu GROUP BY 1, 2
 ),
@@ -1644,8 +1631,8 @@ resolved AS (
          coalesce(mo.name, n.obj_in) AS obj,
          n.fact, n.valid_at, n.episode_uuid
   FROM new_rows n
-  LEFT JOIN normmap ms ON ms.group_id = n.group_id AND ms.norm = {_norm_name_sql('n.subj_in')}
-  LEFT JOIN normmap mo ON mo.group_id = n.group_id AND mo.norm = {_norm_name_sql('n.obj_in')}
+  LEFT JOIN normmap ms ON ms.group_id = n.group_id AND ms.norm = {norm_sql('trim(n.subj_in)', duck=True)}
+  LEFT JOIN normmap mo ON mo.group_id = n.group_id AND mo.norm = {norm_sql('trim(n.obj_in)', duck=True)}
 ),
 merged AS (
   SELECT group_id, src_uuid, dst_uuid, pred,
@@ -1984,8 +1971,6 @@ LEFT JOIN csize cs ON cs.group_id = b.group_id AND cs.name = b.name"""
 
 
 def _sql_kg_global_entities() -> str:
-    from ..operators.extract import norm_sql
-
     norm = norm_sql("canon_name", duck=True)
     body = f"""
 , al AS (
@@ -2010,7 +1995,6 @@ FROM keyed GROUP BY global_key"""
 
 def _sql_kg_global_triples() -> str:
     from ..ontology import DEFAULT
-    from ..operators.extract import norm_sql
 
     def norm(col: str) -> str:
         return norm_sql(col, duck=True)
@@ -2041,7 +2025,6 @@ FROM keyed GROUP BY subj_key, pred_class, obj_key"""
 
 def _sql_kg_global_conflicts() -> str:
     from ..ontology import DEFAULT
-    from ..operators.extract import norm_sql
 
     funcs = ", ".join(f"'{p}'" for p in sorted(DEFAULT.functional))
     # majority vote tiebreak mirrors the Spark min_by struct(-n_obs,
@@ -2088,7 +2071,6 @@ WHERE v.n_objs >= 2 AND s.n_groups >= 2"""
 
 def _sql_kg_source_trust() -> str:
     from ..ontology import DEFAULT
-    from ..operators.extract import norm_sql
 
     funcs = ", ".join(f"'{p}'" for p in sorted(DEFAULT.functional))
     vote_key = "lpad(CAST(1000000000 - n_obs AS VARCHAR), 10, '0') || '|' || obj_key"

@@ -92,12 +92,8 @@ class IncrementalMaintainer:
 
         if batch_df.isEmpty():
             return
-        if self.state is None:
-            self.state = incremental.initial_state(batch_df, self.ontology)
-        else:
-            self.state = incremental.merge_batch(
-                self.state, batch_df, self.ontology
-            )
+        state = self.state or incremental.GraphState.empty(batch_df.sparkSession)
+        self.state = incremental.merge_batch(state, batch_df, self.ontology)
 
 
 def run_incremental(

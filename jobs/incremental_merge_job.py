@@ -11,8 +11,8 @@ Cluster launch (same --py-files shape as build_graph_job.py):
         --batch-filter "doc_id % 2 = 1"
 
 State layout under --state (parquet; Iceberg tables on a real cluster):
-    ents/ canon/ raw/ edges/
-First run (no state yet) bootstraps via initial_state; later runs load
+    ents/ canon/ bands/ bucket_n/ raw/ edges/
+First run (no state yet) merges into the empty graph; later runs load
 the state tables, merge the batch, and overwrite the state dirs — only
 delta work runs (contracted-CC resolution over the batch's new names,
 touched-pair edge recompaction). Deterministic uuids make redelivered
@@ -96,10 +96,8 @@ def main() -> None:
 
     state = load_state(spark, args.state)
     bootstrap = state is None
-    state = (
-        incremental.initial_state(pages)
-        if bootstrap
-        else incremental.merge_batch(state, pages)
+    state = incremental.merge_batch(
+        state or incremental.GraphState.empty(spark), pages
     )
     save_state(state, args.state)
 

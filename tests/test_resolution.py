@@ -8,14 +8,15 @@ from __future__ import annotations
 import pandas as pd
 
 from graphiti_spark.operators.resolve import (
+    EntityIndex,
     char_shingles,
     connected_components,
     distinct_entities,
     jaccard,
-    match_edges_lsh,
     minhash_signature,
     resolve_entities,
 )
+from graphiti_spark.plans.pipeline import GraphTables
 
 
 def test_alias_groups_merge(graph):
@@ -59,13 +60,13 @@ def test_jaccard_shingles():
 
 
 def test_lsh_equals_exact_on_corpus(spark, graph):
-    """On this corpus all true aliases share a normalized name, so the LSH
-    path must produce the same canonicalization as exact blocking."""
-    nodes_lsh, um_lsh = resolve_entities(distinct_entities(graph.mentions_raw))
-    um_exact = graph.uuid_map.toPandas()
-    lsh = um_lsh.toPandas()
-    a = um_exact.set_index("uuid")["canon_uuid"]
-    b = lsh.set_index("uuid")["canon_uuid"]
+    """The resolver (exact + LSH blocking) called on an empty index gives
+    the build's canonical assignment, entity for entity."""
+    index, _ = resolve_entities(
+        EntityIndex.empty(spark), distinct_entities(graph.mentions_raw)
+    )
+    a = graph.uuid_map.toPandas().set_index("uuid")["canon_uuid"]
+    b = index.canon.toPandas().set_index("uuid")["canon_uuid"]
     assert a.sort_index().equals(b.sort_index())
 
 
@@ -99,7 +100,9 @@ def test_lsh_finds_typo_variants(spark):
         "episode_uuid string, group_id string, name string, norm_name string,"
         " label string, valid_at timestamp",
     )
-    nodes, um = resolve_entities(distinct_entities(mentions))
+    t = GraphTables(None)
+    t.mentions_raw = mentions
+    nodes, um = t._base_nodes, t.uuid_map
     m = um.toPandas().set_index("name")["canon_uuid"]
     assert m["Alice Johnson"] == m["Alice Johnsonn"]
     assert m["Bob Hartley"] != m["Alice Johnson"]

@@ -153,3 +153,46 @@ def test_lsh_bucket_cap_drops_pathological_bucket(spark):
     # uncapped, the hot bucket floods the candidate set quadratically
     flood = match_edges_lsh(ents, max_bucket=100_000)
     assert flood.count() == capped.count() + 60 * 59 // 2
+
+
+def test_lsh_bucket_cap_through_the_merge(spark, monkeypatch):
+    """Bucket populations accumulate across batches: a hot template bucket
+    split over a standing and a new batch is dropped by the merge as by
+    the one-shot resolution, and the alias pair still merges. Each
+    unordered pair is one delta candidate."""
+    from pyspark.sql import functions as F
+
+    from graphiti_spark.operators import resolve as R
+
+    monkeypatch.setattr(R, "LSH_BUCKET_CAP", 10)
+    # 16 distinct names with ONE shingle set {^la, 'la ', 'a l', ' la',
+    # la$}: one hot bucket in every band that exact blocking never sees
+    templates = [(" ".join(["la"] * k), f"t{k:02d}") for k in range(2, 18)]
+
+    def ents(rows):
+        return spark.createDataFrame(
+            [("g", n, n, "Place", u) for n, u in rows],
+            "group_id string, name string, norm_name string, label string, uuid string",
+        )
+
+    # 12 standing members are over the cap already; the 4 new ones alone
+    # are not — only the accumulated count (16) drops them
+    standing = ents(templates[:12] + [("alice johnson", "ua")])
+    batch = ents(templates[12:] + [("alice johnsonn", "ub"),
+                                   ("bob hartley", "uc"), ("bob hartleyy", "ud")])
+    empty = R.EntityIndex.empty(spark)
+    one_shot, _ = R.resolve_entities(empty, standing.unionByName(batch))
+    index, _ = R.resolve_entities(empty, standing)
+    merged, delta = R.resolve_entities(index, batch)
+
+    canon = dict(merged.canon.collect())
+    assert canon == dict(one_shot.canon.collect())
+    assert all(canon[u] == u for _, u in templates)  # no template pair merged
+    assert canon["ub"] == "ua" and canon["ud"] == "uc"
+    assert dict(delta.collect()) == {"ub": "ua", "ud": "uc"}
+
+    bands = index.bands.withColumn("_new", F.lit(False)).unionByName(
+        R.lsh_band_rows(batch).withColumn("_new", F.lit(True))
+    )
+    pairs = [(r["src"], r["dst"]) for r in R.lsh_pairs(bands, merged.bucket_n, 10).collect()]
+    assert sorted(pairs) == [("ub", "ua"), ("uc", "ud")]

@@ -79,3 +79,33 @@ def test_insert_triggers_invalidation(spark):
     e = edges2.toPandas().set_index("name")
     assert e.loc["WORKS_AT", "invalid_at"] == T1  # the old fact gets closed
     assert pd.isna(e.loc["NO_LONGER_WORKS_AT", "invalid_at"])
+
+
+def test_suffix_chain_resolves_to_built_node(spark):
+    """add_triplet keys a name as the build does (extract.norm_sql strips
+    every trailing corporate suffix): 'Acme Corp Inc Ltd' is the node the
+    build made of 'Acme Corp', not a new one."""
+    from graphiti_spark.plans.pipeline import build_graph
+
+    pages = spark.createDataFrame(
+        [
+            ("https://src0.example.com/doc/0", T0, None,
+             "title zero\n\nnoise\n\nAlice Johnson works at Acme Corp.",
+             "en", "src0", 0),
+        ],
+        "url string, warc_ts timestamp, html binary, text string,"
+        " lang string, group_id string, doc_id long",
+    )
+    t = build_graph(spark, sf_dir="", pages=pages)
+    built = {r["name"]: r["uuid"] for r in t.nodes.select("name", "uuid").collect()}
+    assert "Acme Corp" in built
+    trip = spark.createDataFrame(
+        [("src0", "Alice Johnson", "LIKES", "Acme Corp Inc Ltd",
+          "Alice likes Acme.", T1, "ep1")],
+        "group_id string, subj_name string, pred string, obj_name string,"
+        " fact string, valid_at timestamp, episode_uuid string",
+    )
+    nodes2, edges2 = add_triplets(t.nodes, t.edges, trip)
+    assert nodes2.count() == len(built)  # no node minted for the suffix chain
+    liked = edges2.where(F.col("name") == "LIKES").collect()
+    assert [r["target_node_uuid"] for r in liked] == [built["Acme Corp"]]
