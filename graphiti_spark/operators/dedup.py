@@ -178,11 +178,6 @@ _CHUNK_EXPRS = [
     " + ".join(f"IF(s{16 * c + j} > 0, {1 << j}, 0)" for j in range(16))
     for c in range(4)
 ]
-# signed 64-bit two's-complement pack of the bit vector
-_PACK_EXPR = (
-    " + ".join(f"IF(s{b} > 0, {1 << b}, 0)" for b in range(63))
-    + f" - IF(s63 > 0, {1 << 63}, 0)"
-)
 
 
 def _simhash_chunks(docs: DataFrame) -> DataFrame:
@@ -199,19 +194,6 @@ def _simhash_chunks(docs: DataFrame) -> DataFrame:
         "doc_id",
         *[F.expr(_CHUNK_EXPRS[c]).cast("long").alias(f"c{c}") for c in range(4)],
     )
-
-
-def simhash_fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash) — signed 64-bit SimHash, JVM-side."""
-    toks = docs.select(
-        "doc_id", F.explode(F.expr(_TOKS)).alias("token")
-    ).select(
-        "doc_id",
-        F.expr(_H32_LO.format(x="token")).alias("hlo"),
-        F.expr(_H32_HI.format(x="token")).alias("hhi"),
-    )
-    sums = toks.groupBy("doc_id").agg(*_bit_sum_aggs())
-    return sums.select("doc_id", F.expr(_PACK_EXPR).cast("long").alias("simhash"))
 
 
 def simhash_near_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:

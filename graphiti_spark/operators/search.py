@@ -75,33 +75,55 @@ def bm25_topk(
     inverted-index-as-DataFrame; at 100 TB the postings table is the
     thing you persist, not recompute per query batch.
     """
+    tf, dfreq, stats = _postings(corpus, id_col, text_col)
+    return _bm25_rank(tf, dfreq, stats, _query_terms(queries), k).withColumnRenamed(
+        "doc", id_col
+    )
+
+
+def _postings(
+    corpus: DataFrame, id_col: str, text_col: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The BM25 inverted index of `corpus`: postings (doc, dl, term, tf),
+    document frequencies (term, df) and the one-row corpus stats (n,
+    avgdl)."""
     docs = corpus.select(
         F.col(id_col).alias("doc"), tokens(text_col).alias("toks")
     ).withColumn("dl", F.size("toks"))
-    n_docs_avg = docs.agg(
-        F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl")
-    )
-
+    stats = docs.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
     tf = (
         docs.select("doc", "dl", F.explode("toks").alias("term"))
         .groupBy("doc", "dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+    return tf, dfreq, stats
 
-    qterms = queries.select(
+
+def _query_terms(queries: DataFrame) -> DataFrame:
+    """(query_id, term): the distinct tokens of each query."""
+    return queries.select(
         "query_id", F.explode(F.array_distinct(tokens("query"))).alias("term")
     )
 
+
+def _idf() -> F.Column:
+    """BM25 idf over joined `n` / `df` columns."""
+    return F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
+
+
+def _bm25_rank(
+    tf: DataFrame, dfreq: DataFrame, stats: DataFrame, qterms: DataFrame, k: int
+) -> DataFrame:
+    """(query_id, rank, doc, score_u): the top-k docs per query of
+    `qterms` (query_id, term) over the postings."""
     scored = (
         tf.join(F.broadcast(qterms), "term")
         # dfreq is vocabulary-scaled (no forced broadcast; AQE decides) —
         # after the qterms semi-restriction it is usually tiny at runtime
         .join(dfreq, "term")
-        .crossJoin(F.broadcast(n_docs_avg))
-        .withColumn(
-            "idf", F.log(F.lit(1.0) + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
+        .crossJoin(F.broadcast(stats))
+        .withColumn("idf", _idf())
         .withColumn(
             "w",
             F.col("idf")
@@ -117,8 +139,7 @@ def bm25_topk(
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
-        .select("query_id", F.col("rank").cast("long").alias("rank"),
-                F.col("doc").alias(id_col), "score_u")
+        .select("query_id", F.col("rank").cast("long").alias("rank"), "doc", "score_u")
     )
 
 
@@ -605,53 +626,11 @@ def bm25_prf_topk(
     whole point of PRF being cheap); pass-1/expansion/pass-2 each add
     only skinny query-keyed joins and bounded per-query top-k windows.
     """
-    docs = corpus.select(
-        F.col(id_col).alias("doc"), tokens(text_col).alias("toks")
-    ).withColumn("dl", F.size("toks"))
-    stats = docs.agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-    tf = (
-        docs.select("doc", "dl", F.explode("toks").alias("term"))
-        .groupBy("doc", "dl", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
-    )
-    dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df")).persist()
-    qterms = queries.select(
-        "query_id", F.explode(F.array_distinct(tokens("query"))).alias("term")
-    )
+    tf, dfreq, stats = _postings(corpus, id_col, text_col)
+    tf, dfreq = tf.persist(), dfreq.persist()
+    qterms = _query_terms(queries)
 
-    def _score(qt: DataFrame, topk: int) -> DataFrame:
-        scored = (
-            tf.join(F.broadcast(qt), "term")
-            .join(dfreq, "term")
-            .crossJoin(F.broadcast(stats))
-            .withColumn(
-                "idf",
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                ),
-            )
-            .withColumn(
-                "w",
-                F.col("idf")
-                * (F.col("tf") * (BM25_K1 + 1))
-                / (
-                    F.col("tf")
-                    + BM25_K1
-                    * (1 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))
-                ),
-            )
-            .withColumn("w_u", F.floor(F.col("w") * 1000000).cast("long"))
-            .groupBy("query_id", "doc")
-            .agg(F.sum("w_u").alias("score_u"))
-        )
-        w = Window.partitionBy("query_id").orderBy(F.desc("score_u"), F.asc("doc"))
-        return scored.withColumn("rank", F.row_number().over(w)).where(
-            F.col("rank") <= topk
-        )
-
-    fb = _score(qterms, fb_k).select("query_id", "doc")
+    fb = _bm25_rank(tf, dfreq, stats, qterms, fb_k).select("query_id", "doc")
     # expansion term weight: total feedback tf x integer idf, original
     # query terms excluded; deterministic top-n_exp per query
     exp = (
@@ -660,16 +639,7 @@ def bm25_prf_topk(
         .agg(F.sum("tf").alias("tsum"))
         .join(dfreq, "term")
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "idf_u",
-            F.floor(
-                F.log(
-                    F.lit(1.0)
-                    + (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-                )
-                * 1000000
-            ).cast("long"),
-        )
+        .withColumn("idf_u", F.floor(_idf() * 1000000).cast("long"))
         .withColumn("rel_u", F.col("tsum") * F.col("idf_u"))
         .join(qterms, ["query_id", "term"], "left_anti")
     )
@@ -680,12 +650,7 @@ def bm25_prf_topk(
         .select("query_id", "term")
     )
     q2 = qterms.unionByName(exp_terms).distinct()
-    out = _score(q2, k).select(
-        "query_id",
-        F.col("rank").cast("long").alias("rank"),
-        F.col("doc").alias(id_col),
-        "score_u",
-    )
+    out = _bm25_rank(tf, dfreq, stats, q2, k).withColumnRenamed("doc", id_col)
     # materialize the skinny result (<= k rows per query) while the
     # postings index is still cached, then release it — otherwise each
     # invocation leaves tf/dfreq pinned in executor storage for the

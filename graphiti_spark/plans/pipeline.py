@@ -20,6 +20,8 @@ the committed upstream output; nothing runs until a stage is consumed.
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.episodes import build_episodes
@@ -36,7 +38,36 @@ from ..operators.resolve import (
     distinct_entities,
     resolve_entities,
 )
+from ..session import local_frame
 from ..sources.pages import build_pages
+
+_PAIR = ["group_id", "source_node_uuid", "target_node_uuid"]
+
+
+@dataclass
+class GraphState(EntityIndex):
+    """A standing graph: the entity index (ents, canon, bands, bucket_n)
+    plus the edge side. GraphTables compacts a page batch onto one."""
+
+    raw: DataFrame  # resolved raw triple log under current canon
+    edges: DataFrame  # final canonical edge table (invalidated)
+
+    @staticmethod
+    def empty(spark) -> GraphState:
+        """The state of an empty graph. Its triple log and edge table carry
+        only the pair key; the stages take their other columns from the
+        batch."""
+        pairs = local_frame(spark, [], ", ".join(f"{c} string" for c in _PAIR))
+        return GraphState(**vars(EntityIndex.empty(spark)), raw=pairs, edges=pairs)
+
+    def names(self) -> DataFrame:
+        """(uuid, name): canonical display name per canon uuid over the
+        alias cluster (the same rule as the build's node table)."""
+        return (
+            self.ents.join(self.canon, "uuid")
+            .groupBy(F.col("canon_uuid").alias("uuid"))
+            .agg(canonical_name().alias("name"))
+        )
 
 
 class GraphTables:
@@ -45,23 +76,37 @@ class GraphTables:
     Attribute access materializes (and caches) the stage:
 
         pages -> episodes -> extracted -> {triples_raw, mentions_raw}
-              -> entities -> {nodes, uuid_map} -> edges_raw -> edges
-              -> mention_edges
+              -> entities -> {index, delta_map} -> {nodes, uuid_map}
+              -> edges_raw -> edges -> mention_edges
+
+    The stages compact the batch onto `prior`, the standing graph
+    (GraphState; None is the empty graph). A build is the case of the
+    empty prior: every prior term is an empty JVM-local relation that the
+    optimizer prunes, so its plans read the batch alone. A merge
+    (plans/incremental.merge_batch) passes the standing graph: `index`,
+    `uuid_map`, `edges_raw` and `edges` then cover the whole graph, while
+    `episodes`, `mentions_raw`, `nodes` and `mention_edges` cover only the
+    batch (the gap an `add_pages` on the merge still has to close: node
+    labels over the whole graph and the retraction of re-ingested urls).
 
     Assigning to a stage attribute overrides it: the API mutation paths
-    (remove_episodes / add_triplet) rewrite tables in place, and the
-    staged entry paths (the resumable lineage job, the streaming ingest,
-    the incremental merge) hand in a committed `extracted` table with
-    `pages=None`. Every entry path thus compacts through the same stage
-    builders under the same ontology. Stages that are never read are
-    never computed, so e.g. `t.episodes` runs one page scan, not the full
-    resolution."""
+    (remove_episodes / add_triplet) rewrite tables in place, the staged
+    entry paths (the resumable lineage job, the streaming ingest) hand in
+    a committed `extracted` table with `pages=None`, and the merge hands
+    in its committed `index`. Every entry path thus compacts through the
+    same stage builders under the same ontology. Stages that are never
+    read are never computed, so e.g. `t.episodes` runs one page scan, not
+    the full resolution."""
 
-    def __init__(self, pages: DataFrame | None, ontology=None):
+    def __init__(
+        self, pages: DataFrame | None, ontology=None, prior: GraphState | None = None
+    ):
         from ..ontology import DEFAULT
 
         self.pages = pages
         self.ontology = ontology or DEFAULT
+        if prior is not None:
+            self.prior = prior  # else the `prior` stage is the empty graph
 
     # -- stage builders (each runs at most once per instance) --------------
 
@@ -100,26 +145,50 @@ class GraphTables:
         triples_raw, spans = split_extracted(self.extracted)
         return self._commit(attach_labels(spans, triples_raw, self.ontology))
 
+    def _build_prior(self) -> GraphState:
+        return GraphState.empty(self.entities.sparkSession)
+
     def _build_entities(self) -> DataFrame:
-        # the distinct-entity table every resolution step reads; cached
-        # (no job of its own) and released with the graph
+        # the batch's distinct-entity table every resolution step reads;
+        # cached (no job of its own) and released with the graph
         return distinct_entities(self.mentions_raw).cache()
 
     def _resolve(self) -> None:
-        """Entity resolution — runs once; caches BOTH outputs. A build
-        resolves its entities as a merge into an empty graph (the
-        optimizer prunes the empty index from the plan).
+        """Entity resolution — runs once; sets BOTH outputs. The batch's
+        entities that the prior graph does not hold yet resolve against
+        its index (a build's left-anti join against the empty prior
+        returns the cached entities).
 
-        _base_nodes: canonical entity table (group_id, uuid, name, labels,
-        n_aliases).
-        uuid_map: (group_id, name, norm_name, uuid, canon_uuid) for
-        pointer resolution."""
-        ents = self.entities
-        index, _ = resolve_entities(EntityIndex.empty(ents.sparkSession), ents)
-        mapped = ents.join(index.canon, "uuid")
-        self.uuid_map = mapped.select("group_id", "name", "norm_name", "uuid", "canon_uuid")
-        self._base_nodes = (
-            mapped.groupBy("group_id", "canon_uuid")
+        index: the prior's entity index with the batch folded in.
+        delta_map: (id, component) for each prior canon or new uuid whose
+        canonical uuid is now `component` — O(merged clusters)."""
+        ents, prior = self.entities, self.prior
+        new = ents.join(prior.ents.select("uuid"), "uuid", "left_anti")
+        self.index, self.delta_map = resolve_entities(prior, new)
+
+    def _build_index(self) -> EntityIndex:
+        self._resolve()
+        return self.index
+
+    def _build_delta_map(self) -> DataFrame:
+        self._resolve()
+        return self.delta_map
+
+    def _build_uuid_map(self) -> DataFrame:
+        # (group_id, name, norm_name, uuid, canon_uuid) for pointer
+        # resolution over every entity of the graph, so a batch triple
+        # whose endpoint was seen only in an earlier batch still resolves
+        index = self.index
+        return index.ents.join(index.canon, "uuid").select(
+            "group_id", "name", "norm_name", "uuid", "canon_uuid"
+        )
+
+    def _build__base_nodes(self) -> DataFrame:
+        # canonical entity table (group_id, uuid, name, labels, n_aliases)
+        # of the batch's entities
+        return (
+            self.entities.join(self.index.canon, "uuid")
+            .groupBy("group_id", "canon_uuid")
             .agg(
                 canonical_name().alias("name"),
                 F.array_sort(F.collect_set("label")).alias("labels"),
@@ -128,28 +197,73 @@ class GraphTables:
             .withColumnRenamed("canon_uuid", "uuid")
         )
 
-    def _build_uuid_map(self) -> DataFrame:
-        self._resolve()
-        return self.uuid_map
+    def _remap(self, df: DataFrame) -> DataFrame:
+        """`df` (a prior table) with its pair endpoints under the current
+        canon: a prior canon that this batch merged into another cluster
+        is replaced through delta_map (tiny, broadcast)."""
+        remap = F.broadcast(self.delta_map)
+        for col in ("source_node_uuid", "target_node_uuid"):
+            df = (
+                df.join(remap.withColumnRenamed("id", col), col, "left")
+                .withColumn(col, F.coalesce("component", col))
+                .drop("component")
+            )
+        return df
 
-    def _build__base_nodes(self) -> DataFrame:
-        self._resolve()
-        return self._base_nodes
-
-    def _build_edges_raw(self) -> DataFrame:
-        # raw triples with canonical endpoint uuids: read once by the edge
-        # build, so not committed
+    def _build__batch_raw(self) -> DataFrame:
+        # the batch's raw triples with canonical endpoint uuids
         return resolve_edge_pointers(self.triples_raw, self.uuid_map)
 
+    def _build_edges_raw(self) -> DataFrame:
+        # the resolved raw triple log: the batch's triples plus the prior
+        # log under the current canon (a merge commits it as its state's
+        # `raw`; a build never reads it: its edge stage reads the batch
+        # half). allowMissingColumns: the empty graph's log carries only
+        # the pair key
+        return self._batch_raw.unionByName(
+            self._remap(self.prior.raw), allowMissingColumns=True
+        )
+
     def _build_edges(self) -> DataFrame:
-        # two-step commit: invalidate_edges references its input THREE
-        # times (the contradiction self-join plus the final left join) and
-        # physical-plan exchange reuse does NOT dedup the aggregation
-        # under the differing filter/alias subtrees — uncommitted, the
-        # 425k-row materialize groupBy executed ~3x (measured 7.2s -> 3.7s
-        # at sf0.1 x20 with the intermediate commit)
-        mat = self._commit(materialize_edges(self.edges_raw, self.ontology))
-        return self._commit(invalidate_edges(mat, self.ontology))
+        """Touched-pair recompaction. Edge dedup (materialize_edges) is a
+        pure per-key fold and invalidation (invalidate_edges) is
+        pair-local, so only pairs that receive batch triples or contain a
+        canon this batch merged are recomputed, from the batch's rows plus
+        the prior rows on those pairs. The prior's other edges pass
+        through, with their invalid_at/expired_at intact. Over the empty
+        prior every prior term is pruned: a build materializes and
+        invalidates its batch triples.
+
+        Two-step commit: invalidate_edges references its input THREE
+        times (the contradiction self-join plus the final left join) and
+        physical-plan exchange reuse does NOT dedup the aggregation under
+        the differing filter/alias subtrees — uncommitted, the 425k-row
+        materialize groupBy executed ~3x (measured 7.2s -> 3.7s at sf0.1
+        x20 with the intermediate commit)."""
+        batch, prior_raw = self._batch_raw, self._remap(self.prior.raw)
+        # prior_raw endpoints are remapped, so a pair a cluster merge
+        # affects is one whose CURRENT endpoint is a merged canon
+        merged = F.broadcast(self.delta_map.select(F.col("component").alias("_c")).distinct())
+        touched = (
+            batch.select(*_PAIR)
+            .union(
+                prior_raw.join(
+                    merged,
+                    (F.col("source_node_uuid") == F.col("_c"))
+                    | (F.col("target_node_uuid") == F.col("_c")),
+                    "left_semi",
+                ).select(*_PAIR)
+            )
+            .distinct()
+        )
+        raw = batch.unionByName(
+            prior_raw.join(touched, _PAIR, "left_semi"), allowMissingColumns=True
+        )
+        mat = self._commit(materialize_edges(raw, self.ontology))
+        kept = self._remap(self.prior.edges).join(touched, _PAIR, "left_anti")
+        return self._commit(
+            invalidate_edges(mat, self.ontology).unionByName(kept, allowMissingColumns=True)
+        )
 
     def _build_nodes(self) -> DataFrame:
         # final node table: content-derived summary (X15 — identity
@@ -219,9 +333,13 @@ class GraphTables:
             "extracted",
             "triples_raw",
             "mentions_raw",
+            "prior",
             "entities",
+            "index",
+            "delta_map",
             "uuid_map",
             "_base_nodes",
+            "_batch_raw",
             "edges_raw",
             "edges",
             "nodes",

@@ -11,7 +11,7 @@ from .. import corpus
 from ..operators import docs as docs_mod
 from ..operators.extract import norm_sql
 from ..operators.materialize import JOB_TS
-from ..plans.pipeline import kg_triples, triples_view
+from ..plans.pipeline import kg_triples, named_triples, triples_view
 from ..session import local_frame
 from .shared import (
     LPA_ORACLE_ROUNDS,
@@ -296,22 +296,12 @@ def q_kg_remove_episode(spark: SparkSession, sf_dir: str) -> DataFrame:
     _eps, edges2, _men, _nodes = remove_episodes_tables(
         t.episodes, t.edges, t.mention_edges, t.nodes, removed
     )
-    subj = t.nodes.select(
-        F.col("uuid").alias("source_node_uuid"), F.col("name").alias("subj")
-    )
-    obj = t.nodes.select(
-        F.col("uuid").alias("target_node_uuid"), F.col("name").alias("obj")
-    )
-    return (
-        edges2.join(subj, "source_node_uuid")
-        .join(obj, "target_node_uuid")
-        .select(
-            "group_id",
-            "subj",
-            F.col("name").alias("pred"),
-            "obj",
-            F.size("episodes").cast("long").alias("n_episodes_left"),
-        )
+    return named_triples(edges2, t.nodes).select(
+        "group_id",
+        "subj",
+        "pred",
+        "obj",
+        F.size("episodes").cast("long").alias("n_episodes_left"),
     )
 
 
@@ -347,29 +337,9 @@ def q_kg_add_triplet(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fact string, valid_at string, episode_uuid string",
     ).withColumn("valid_at", F.to_timestamp("valid_at"))
     nodes2, edges2 = add_triplets(t.nodes, t.edges, trip, t.ontology)
-    subj = nodes2.select(
-        F.col("uuid").alias("source_node_uuid"), F.col("name").alias("subj")
-    )
-    obj = nodes2.select(
-        F.col("uuid").alias("target_node_uuid"), F.col("name").alias("obj")
-    )
-    return (
-        edges2.join(subj, "source_node_uuid")
-        .join(obj, "target_node_uuid")
-        .where(
-            (F.col("group_id") == "src0")
-            & F.col("subj").isin("Test Alpha Labs", "Test Person")
-        )
-        .select(
-            "group_id",
-            "subj",
-            F.col("name").alias("pred"),
-            "obj",
-            "fact",
-            "valid_at",
-            "invalid_at",
-            F.size("episodes").cast("long").alias("n_episodes"),
-        )
+    return kg_triples(edges2, nodes2).where(
+        (F.col("group_id") == "src0")
+        & F.col("subj").isin("Test Alpha Labs", "Test Person")
     )
 
 
